@@ -22,6 +22,9 @@ oracle:
 driver-sim:
 	$(PY) tools/driver_sim.py $(SF01)
 
+# plan-pin gate: rows, shuffle bytes, spill and exchange count per
+# headline query, portable across core counts; walls are reported only.
+# Wall statistics and per-layer splits come from perfbench/.
 bench:
 	$(PY) bench.py
 

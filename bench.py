@@ -1,32 +1,30 @@
-"""Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...}.
+"""Plan-pin gate: run the headline queries at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test data) and check each plan's output rows, shuffle bytes,
+spill and exchange count against pins that hold at any core count;
+print ONE JSON line {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {...}, "sf": ...}.
 
-Methodology: each query is fully executed twice against the NOOP sink
-(`df.write.format("noop")` — forces every output column to be computed;
-a count() sink lets Catalyst prune projection-only queries down to a
-row count and under-measured every narrow query, found in r3 when a
-projection that "benched" 0.3s cost 12s once materialized). The
-reported per-query number is the SECOND (steady-state) run; the first
-run's time is recorded separately under "cold_queries". At sf0.1 the first run is
-dominated by one-time costs that are independent of data volume —
-Catalyst analysis, whole-stage-codegen Janino compilation, parquet footer
-reads, broadcast-job spin-up (measured 1-4s per distinct plan, identical
-at sf0.001 and sf0.1) — and at the 100 TB design point those constants
-amortize to zero, so steady-state is the scale-representative number.
-Both are printed for transparency.
+The pins are the gate. Shuffle bytes, rows and exchanges are a property
+of (plan, data, partitioning), and `gate_session` fixes the partitioning
+from one constant, PLAN_WIDTH, whatever the host's core count. Walls are
+reported, never gated: each query is executed against the NOOP sink
+(`df.write.format("noop")` forces every output column; a count() sink
+lets Catalyst prune projection-only queries to a row count) once cold
+and once steady, and both walls go into the JSON. Wall statistics
+(seeded closed-loop runs, medians, per-layer splits) come from
+`perfbench/` (BENCHMARK.json), not from here.
+
+Options: SPARK_GRAFT_BENCH_STRICT=1 exits 1 on any pin violation;
+SPARK_GRAFT_NO_STRESS=1 skips the sf1+ stress and extra tiers;
+SPARK_GRAFT_NO_SF10=1 skips only the sf10/sf100 tiers.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
-
-import pandas as pd  # module-level so pandas_udf type hints resolve
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -63,14 +61,12 @@ HEADLINE = [
     "q112_grouped_heavy_hitters",
     "q113_forecast_revenue",
     "q119_min_cost_supplier",
-    # r3 additions (first measurement becomes the r4 anchor)
     "q43_jaccard_prefix",
     "q126_multimodal_decode",
     "q127_lm_quality",
     "q128_gopher_filter",
     "q129_curation_pipeline",
     "q130_grouped_cdf",
-    # r5 additions (first measurement becomes the r6 anchor)
     "q138_kmeans_semantic_dedup",
     "q139_term_stats",
     "q140_logreg_quality",
@@ -78,592 +74,141 @@ HEADLINE = [
     "q142_audio_decode",
     "q143_video_container",
     "q144_url_dedup",
-    "q145_modern_curation",  # the r5 capstone composition
-    # r9 addition (first measurement = the anchor, probe-normalized)
+    "q145_modern_curation",
     "q152_jpeg_decode",
-    # r9 session-2 additions (first measurement = the anchor,
-    # probe-normalized): the GIF decoder, CDC dedup, and the
-    # web-ingest composition capstone
     "q156_gif_decode",
     "q157_cdc_dedup",
     "q158_web_ingest_curation",
-    # r10 additions (first measurement = the anchor, probe-normalized):
-    # the WARC->pack end-to-end capstone and the multi-host robots
-    # rules-table gate
     "q166_commoncrawl_capstone",
     "q167_robots_multihost",
-    # r11 additions (first measurement = the anchor, probe-normalized):
-    # the int8-rerank + IVFxint8 ANN paths, animated-GIF compositing,
-    # and the trained Unigram-LM fit+segment
     "q170_ann_quantized_rerank",
     "q171_ann_ivf_int8",
     "q172_gif_animation",
     "q173_unigram_trained",
-    # r12 additions (first measurement = the anchor, probe-normalized):
-    # cross-document exact substring dedup (ExactSubstr family) —
-    # detection (maximal shared spans) and removal (mask + audit)
     "q175_cross_doc_spans",
     "q176_strip_cross_doc",
 ]
 
-# Steady-state seconds at sf0.1 on local[32] — the regression anchor.
-# RE-ANCHORED in r3: the sink changed from count() (Catalyst pruned
-# projection-only queries to a bare row count — under-measured every
-# narrow query) to the noop writer, which forces full column
-# evaluation; every value below is a noop-sink measurement. r1/r2
-# count-sink numbers are not comparable. A query >25% slower than its
-# anchor (after one damping re-run) is reported under "regressions";
-# set SPARK_GRAFT_BENCH_STRICT=1 to also fail the script.
-ANCHOR_SF = 0.1
-#: Core count every anchor (wall, shuffle-byte, stress) was pinned at.
-#: r13 (VERDICT r12 ask #2): when the driver re-runs the bench at a
-#: LOWER core count to measure scaling, the 32-core anchors are
-#: meaningless bars — every query "regresses", and the deferred
-#: re-adjudication pass (2 extra runs + 6 probes per candidate) plus
-#: the stress/recall/lifecycle tiers blew the driver's window (the r12
-#: 8-core run died rc=124 mid-collect). A non-anchor core count now
-#: auto-selects SUBSET mode: headline cold/steady/count only — the
-#: same queries, same sink, same methodology, same JSON line the
-#: scaling channel needs — with the anchor gates and extra tiers
-#: skipped. SPARK_GRAFT_BENCH_SUBSET=1 forces subset mode at any core
-#: count; SPARK_GRAFT_BENCH_SUBSET=0 forces the full run.
-ANCHOR_CPUS = 32
-ANCHOR = {
-    "q01_pricing_summary": 0.641,
-    "q03_join_topk": 1.083,
-    "q05_dedup_keep_first": 0.778,
-    "q11_window_rank": 0.32,
-    "q12_cumsum": 0.426,
-    "q16_event_windows": 0.295,
-    "q17_sessionize": 0.471,
-    "q18_exact_dedup": 0.289,
-    # RE-ANCHORED r7 twice. First (1.858 -> 2.4): r6's election
-    # machinery re-anchored q19's BYTES (+26%, the __sck__ full-
-    # signature class key on every bucket member) but never the wall.
-    # Then DOWN (2.4 -> 1.75) with the r7 spread_narrow_source change:
-    # the sf0.1 table is one row group, so shingling+md5 previously ran
-    # fused into a single scan task; spreading the narrow source cut
-    # the wall 33% (2.61 -> 1.76 measured) for one small text-bytes
-    # exchange (byte anchor re-pinned below). Text-family anchors
-    # q21/q24/q86/q127/q128/q141 re-pinned downward for the same
-    # change, ~10% above the r7 normalized measurement each.
-    # RE-PINNED r13 (was 1.75): pair-emitter Column-tree memo + the
-    # scan-handle registry removed ~1 s of per-build driver cost;
-    # measured 1.425 s at machine factor 1.006, pinned +9%. Byte pin
-    # unchanged (2271686 B exactly) — pure driver-side.
-    "q19_minhash_pairs": 1.55,
-    "q21_ngram_jaccard": 1.6,
-    "q22_ann_brute_force": 0.454,
-    "q23_ann_lsh": 0.912,
-    # RE-PINNED r11 (was 0.52) after the VERDICT r10 ask-#1 same-JVM
-    # A/B adjudication: one SparkSession imported the r9 tree
-    # (3cac6ba) and the r10 tree alternately (module purge + sys.path
-    # flip), 5 interleaved samples each with bracketing CPU + string
-    # probes. Result: r10/r9 median ratio 0.83x — THE TREES MEASURE
-    # EQUAL, no code regression on this untouched-since-r9 path; the
-    # r10 2.04x drift-adjusted flag was anchor rot from a faster
-    # string-throughput era (the regexp-chain is this query's whole
-    # cost, and the r11 string probe reads 1.2-1.5x the CPU probe's
-    # factor on the same windows). Quietest-window decomposition:
-    # 0.769 s at CPU probe factor 1.30 => 0.59 anchor-era; pinned +2%.
-    # RE-PINNED r13 (was 0.60): the token/quality/language stats
-    # builders are generated SQL text (one F.expr per output column,
-    # ~0.5 s less construction per build); measured 0.348 s at machine
-    # factor 1.006, pinned +9%. Plan shape unchanged (Exchange 2->2).
-    "q24_text_stats": 0.38,
-    "q27_rec_ops": 0.734,
-    "q37_asof_join": 0.336,
-    "q41_bpe_tokenize": 0.917,
-    # RE-ANCHORED r8 (was 1.561): n_planes='auto' (VERDICT r7 ask #3)
-    # resolves inside the timed region — one bounded count() job on the
-    # 2k-row embeddings table. The job itself is ~0.1 s; same-JVM A/B
-    # (best-of-3, auto vs pinned-4 on the byte-identical resolved plan)
-    # measured the full delta at 0.40 s normalized — count + one extra
-    # job-scheduling round-trip, a fixed cost that is invisible at any
-    # real corpus (the resolved plan and its bytes are identical:
-    # vs_shuffle_anchor 1.00). Decomposition: 1.561 + 0.40 = 1.96.
-    # RE-PINNED r13-s5 (was 1.96): the Arrow pair-cosine kernel
-    # (pair stage 1.88 -> 0.66 s same-JVM A/B). Measured steady
-    # 0.787 s in the driver-format subset run (machine factor 0.929)
-    # and 0.80 s qbench (probe 0.90x); pinned +25%.
-    "q42_cosine_dedup": 1.0,
-    # RE-PINNED r13 (was 0.869): the lang re-attach self-join is gone
-    # (text_stats keep_cols — doc_id unique, projection proven equal)
-    # and the stats construction is SQL text; Exchange 14 -> 8
-    # (plans/r13). Measured 0.569 s at machine factor 1.006, +9%.
-    "q45_llm_pipeline": 0.62,
-    "q80_hll_distinct": 0.462,
-    "q81_local_supplier_volume": 0.913,
-    "q82_funnel": 0.49,
-    "q86_strip_duplicate_spans": 0.57,
-    "q92_order_priority_exists": 0.517,
-    # RE-PINNED r13 (was 0.979): no plan/code change on this path
-    # (plans/r13 before/after identical modulo expr ids) — the win is
-    # the session scan-handle registry + spread-decision memo cutting
-    # fixed per-build driver cost every query paid. Measured 0.578 s
-    # at machine factor 1.006, pinned +9%.
-    "q98_market_share": 0.63,
-    "q100_returned_top_customers": 0.568,
-    "q102_waiting_suppliers": 0.944,
-    "q105_heavy_hitters": 0.541,
-    "q107_resample_ffill": 0.358,
-    "q110_grouped_quantiles": 0.299,
-    "q112_grouped_heavy_hitters": 0.707,
-    "q113_forecast_revenue": 0.164,
-    "q119_min_cost_supplier": 1.116,
-    # RE-ANCHORED r4 (was 2.513): shingle document frequency moved from
-    # a WindowExec count (one straggler task per hot boilerplate
-    # shingle at scale, unsplittable by AQE) to a partial-aggregating
-    # groupBy + join-back. The extra shuffle + recomputed probe branch
-    # cost ~0.8s at sf0.1 and buy the only plan shape that survives a
-    # 10^9-doc boilerplate shingle — a deliberate scale trade, see
-    # VERDICT r3 item 1 and tests/test_plans.py (no-WindowExec pin).
-    # RE-ANCHORED r7 (was 3.3, pre-election): r6's election rewrite
-    # prices the per-bucket (key, member) sort + star-list slicing into
-    # the prefix plan's bucket rows (see the q43 byte re-anchor below);
-    # r7 measured 5.081 s at factor 1.169 = 4.35 anchor-era seconds,
-    # byte-stable vs r6. The trade bounds a duplicated text's total
-    # pair work (VERDICT r5 ask #1) — deliberate work, not drift.
-    # RE-ANCHORED r8 (was 4.35): the verify pass now rides 32-bit hash
-    # arrays with a survivor-sized exact re-verify (VERDICT r7 ask #4)
-    # — at sf0.1 the fixed additions (localCheckpoint of the survivor
-    # pairs, the pass-2 stages) cost ~0.6 s while the candidate volume
-    # is too small to repay them; the same change is -24% wall at sf1
-    # and -37% shuffle bytes at sf10, where the candidate volume
-    # dominates. Measured 8.498 s at factor 1.721 = 4.94 anchor-era.
-    "q43_jaccard_prefix": 4.95,
-    "q126_multimodal_decode": 0.898,
-    "q127_lm_quality": 1.05,
-    # RE-PINNED r13 (was 0.55): gopher_filter's signal block + CASE
-    # ladder ride as generated SQL text (~0.2 s less construction);
-    # measured 0.257 s at machine factor 1.006, pinned +9%.
-    "q128_gopher_filter": 0.28,
-    "q129_curation_pipeline": 2.185,
-    # RE-PINNED r12 (was 0.342, an r3-era first measurement) closing
-    # the r11 drift-adjusted flag the VERDICT graded `weak`: the r12
-    # quiet-window adjudication (two sessions, 8 samples) measured
-    # 0.743-1.039 s with ALL THREE probes (CPU-spin, string/regex,
-    # and the new python-worker probe) reading 0.83-1.33x, on shuffle
-    # bytes exactly at the 915 B pin and a query body git-identical
-    # r10->r12. Quietest-window decomposition: 0.743 s at CPU 0.83x
-    # => ~0.75 anchor-era. The 0.342 pin is from a faster host era;
-    # nothing in the plan or code moved — anchor rot, the q24/q144
-    # closure pattern.
-    # RE-TIGHTENED r13 (VERDICT r12 ask #8: "if the next run lands
-    # <=0.6 again, move the pin to ~0.6"): the r12 DRIVER run measured
-    # 0.54 s and this round's quiet-window qbench (probe in 0.94x
-    # after) measured 0.415 s steady best-of-5 on the same 915 B byte
-    # pin — corroborated twice, and the r13 scan-handle registry cut
-    # ~0.2 s of per-build table resolution from every query besides.
-    "q130_grouped_cdf": 0.6,
-    # r5 additions: first (r5) measurement normalized to anchor-era
-    # seconds via the calibration factor of the measuring run (1.182)
-    # RE-ANCHORED r6 (was 4.155): q138 now runs a SECOND Lloyd
-    # iteration in the trained-cell kmeans (verdict r5 ask #5 —
-    # kmeans++ D^2 seeding + multi-iteration training, oracle replays
-    # both steps in SQL) — one more full corpus scan + k x dim decimal
-    # aggregate is new WORK, not a regression (bytes re-pinned +1.6%
-    # alongside; measured 7.66 s at factor 1.396 = 5.49 anchor-era)
-    # RE-PINNED r13 (was 5.49): the Lloyd centroid-update aggregate is
-    # two F.expr calls (count + one array-of-decimal-sums) instead of
-    # dim+1 Column-API calls per iteration (~0.6 s/iter of py4j at
-    # dim 64); fit A/B ~2x, bit-identical centroids. Measured 4.256 s
-    # at machine factor 1.006, pinned +8%.
-    # RE-PINNED r13-s5 (was 4.6): the Arrow pair kernel replaced the
-    # C(m,2) pair explosion + interpreted cosine folds in
-    # semantic_dedup (3.44 -> 0.78 s on the dedup stage; the fit's
-    # ~1.8 s of aggregate jobs is the rest). Measured steady 2.18 s
-    # (probe 1.07x) / 2.72 s (0.94x) qbench; pinned with margin for
-    # the fit's job-latency variance.
-    "q138_kmeans_semantic_dedup": 2.9,
-    "q139_term_stats": 0.337,
-    # RE-PINNED r13 (was 0.716): logreg gradient aggregates ride as
-    # generated SQL text per iteration (fit equality pinned exact);
-    # measured 0.455 s at machine factor 1.006, pinned +10%.
-    "q140_logreg_quality": 0.50,
-    "q141_decontaminate": 0.77,
-    "q142_audio_decode": 0.277,
-    "q143_video_container": 0.241,
-    # RE-PINNED r11 (was 0.187) by the same A/B run as q24 above:
-    # r10/r9 median ratio 1.08x — trees equal, and even the QUIETEST
-    # r11 window (CPU probe factor 1.30) measures 0.653 s = 0.50
-    # anchor-era on BOTH trees, 2.7x the old pin. The 0.187 pin
-    # predates the r8 url_dedup fixture/normalization surface and a
-    # faster string era; shuffle bytes sit exactly on the 7372 B
-    # anchor in every run, so the plan never changed — the pin did
-    # not survive the host's string-throughput decay. q144's r10
-    # 1.93x flag is closed as anchor rot with this decomposition.
-    "q144_url_dedup": 0.50,
-    # RE-PINNED r13 (was 4.551): two rejoin cuts — d2/d3 re-anchor
-    # their semi-joins on the base docs frame (k3/g id-subset proof in
-    # OPTIMIZATION_r13.md), so the final action stops re-executing the
-    # url-dedup + gopher chain; Exchange 42 -> 18 (plans/r13), byte
-    # pin re-pinned DOWN alongside (42098). Measured 2.684 s at
-    # machine factor 1.006, pinned +8%.
-    "q145_modern_curation": 2.9,
-    # r9 first measurement: 1.501 s steady best-of-3 at probe factor
-    # 1.240 -> 1.211 normalized (synth + baseline JPEG decode of 5k
-    # documents' streams through the Arrow batch path)
-    # RE-PINNED r13 (was 1.211): T.81 K.3 Huffman tables and code maps
-    # are memoized by (bits, values) content — 8 identical rebuilds per
-    # document gone (kernel A/B 1.3 -> 0.88 s per 2000 docs, bit-exact,
-    # r12 implementations kept as in-test references). Measured 0.890 s
-    # at machine factor 1.006, pinned +8%.
-    "q152_jpeg_decode": 0.96,
-    # r9 session-2 first measurements, steady best-of-3, probe factor
-    # recorded per run (1.623-1.792 on this host):
-    # q156: GIF synth (real LZW encode) + decode of 5k streams, sized
-    # so every stream crosses the 512-entry code-width boundary.
-    # q157: CDC chunking + two md5-keyed sharing exchanges over ~430k
-    # chunk instances.
-    # q158: extract -> repair -> score -> gate composition; wall is
-    # parse-dominated (html.parser per page), exchanges tiny.
-    "q156_gif_decode": 1.633,
-    # RE-PINNED r12 (was 1.174) for two chunker optimizations, wall
-    # only (byte pin UNCHANGED at 7535289 — the plan's exchanges are
-    # untouched): (1) the instance frame is lineage-cut before its two
-    # consumers, so the per-character Python chunker runs ONCE per
-    # action instead of twice (same-session A/B: 2.08 -> 1.32 s);
-    # (2) the stateless cut computation is vectorized (2.1x on the
-    # kernel at sf0.1 doc lengths). Quiet-window measurement post-fix:
-    # 1.197 s steady inside a 1.0-1.86x probe bracket => ~0.85
-    # anchor-era; pinned there.
-    # RE-PINNED r13 (was 0.85): measured 0.723 s at machine factor
-    # 1.006 with the overflow-safe vectorized cuts (ADVICE r12 fix)
-    # and the scan-handle registry; pinned +8%. Byte pin unchanged
-    # at 7535289.
-    "q157_cdc_dedup": 0.78,
-    # RE-PINNED r12 (was 1.017, the r9-session-2 first measurement)
-    # closing the r11 drift-adjusted flag graded `weak`: the r12
-    # quiet-window adjudication measured 1.524-1.701 s across SIX
-    # samples in two sessions whose CPU/string/python probes ALL read
-    # 0.70-1.16x (certified quiet), bytes exactly on the 958462 pin,
-    # chain code git-identical r9->r12. The wall is html.parser-bound
-    # Python; the python-worker probe (added this round for exactly
-    # this family) read anchor-era, so the residual vs the r9 pin is
-    # a host decay mode no probe tracks or an unusually fast pin
-    # window — either way the plan never changed: anchor rot.
-    # Re-pinned to the quiet-window median.
-    # RE-PINNED r13 (was 1.55, itself an r12 anchor-rot loosening the
-    # VERDICT kept on watch): the textstats/gopher SQL-text builders
-    # cut ~0.5 s of per-build construction on this composition;
-    # measured 1.068 s at machine factor 1.006, pinned +8% — back
-    # UNDER the pre-r12 1.017 pin, closing the watch.
-    "q158_web_ingest_curation": 1.15,
-    # r10 first measurements. q166: the WARC->pack capstone — wall is
-    # stage-count overhead + Python parse (synth + WARC + charset +
-    # extract + repair), measured 23.5 s steady on a quiet host
-    # (probes ~1.0x) and 35.3 s inside the official run's 1.9x slow
-    # window; pinned at the quiet-host value so the gate has teeth.
-    # r11 synth-share attribution (VERDICT r10 ask #5): the PARSE path
-    # alone — same record count off materialized .warc.gz files —
-    # measures ~1.45 anchor-era seconds (run_warc_file_ingest tier),
-    # so the front door's remaining cost is the per-run Python WARC
-    # synthesis + per-record gzip COMPRESSION q166 deliberately keeps
-    # as fixture generation; the downstream 12-stage chain owns the
-    # rest of the 23.5 s.
-    # q167: rules-table robots gate — broadcast hash join + HOF
-    # verdict, sub-second at 5k pages / 19 policies.
-    # RE-ANCHORED r12 (was 23.5 for the synth+chain all-in wall): the
-    # headline row now times the FIXTURE-BACKED chain (VERDICT r11 ask
-    # #3 — q166_warc_frame materialized once, q166_chain timed), which
-    # measured 18.3-19.5 s in the r12 certified-quiet window (all
-    # three probes 0.6-1.1x). Byte pin UNCHANGED at 11155284 — the
-    # synthesis never shuffled, so removing it from the timed region
-    # moves zero bytes. Honest decomposition this finally gives: the
-    # per-run Python synthesis+gzip was ~5 s (~21%) of the old 23.5 s,
-    # and the 12-stage chain (MinHash CC, logreg train, CDC, packing)
-    # owns ~18.5 s — NOT the ~1 s the r11 note extrapolated from the
-    # parse-only tier.
-    # RE-PINNED r12-opt (was 18.5): connected_components now cuts its
-    # symmetric edge list from the lineage, so the MinHash-CC stage's
-    # label iterations stop re-executing the band/bucket/emission
-    # exchanges (each iteration re-ran them before — the same class of
-    # repeated-lineage waste the feat/d5 cuts removed), and the CDC
-    # audit stage runs its chunker once (see q157). Measured post-fix:
-    # 13.32 s steady inside a 1.0-1.86x probe bracket => ~9.5
-    # anchor-era; pinned +2%. Byte pin re-pinned alongside (8910716,
-    # -3.2% — the re-executed CC-iteration exchanges are gone).
-    # RE-PINNED r13 (was 9.7): the d2/d3 rejoin cut (see q145) keeps
-    # the probe side from re-executing the domain filter + robots
-    # join; byte pin re-pinned +7.3% alongside (9565514, the probe-
-    # side swap moves slightly more rows through the d3 semi-join).
-    # Measured 7.712 s median-of-3 in the deferred-adjudication quiet
-    # window at machine factor 1.006, pinned +8%.
-    # RE-PINNED r13-s5 (was 8.3): connected_components' one-job
-    # rounds shave the CC stage (~0.3-0.5 s on the near-dup chain);
-    # measured 7.348 s in the driver-format subset run (machine
-    # factor 0.929).
-    "q166_commoncrawl_capstone": 7.9,
-    "q167_robots_multihost": 0.72,
-    # r11 first measurements, probe-bracketed on an oscillating host
-    # (factors 1.0x-29x within minutes; pins use the quietest
-    # bracketing probe of 3-5 samples each). q170/q171: int8 coarse
-    # algebra walls; q171 adds the cell-assignment HashAggregate.
-    # q172: after its narrow-source spread (8.8 s single-task ->
-    # 1.24 s spread). q173: fit (2 corpus scans + enumeration-free
-    # E-step UDF) + held-out segmentation.
-    "q170_ann_quantized_rerank": 1.9,
-    "q171_ann_ivf_int8": 1.75,
-    # RE-PINNED r13 (was 0.9): int-keyed LZW tables + numpy palette
-    # pack (see q156 kernel A/B); measured 0.691 s at machine factor
-    # 1.006, pinned +9%.
-    "q172_gif_animation": 0.75,
-    # RE-PINNED r12-opt (was 2.85): unigram_train's word-type table is
-    # lineage-cut, so the fit's seed collects and E-step stop
-    # re-scanning the corpus (3+ scans -> 1; same-session A/B on the
-    # fit alone: 1.39 -> 0.93 s). Measured post-fix: 2.195 s steady in
-    # a 1.0-1.86x probe bracket => ~1.57 anchor-era; pinned +2%. Byte
-    # pin re-pinned alongside (16187, -21% — the word-count exchange
-    # now executes once per fit).
-    "q173_unigram_trained": 1.6,
-    # r12 first measurements (probe-bracketed, factors 1.15-1.49x
-    # across CPU/string/python; quietest normalization ~1.3x):
-    # q175 steady 2.04-2.38 s, q176 1.90-2.03 s
-    "q175_cross_doc_spans": 1.6,
-    "q176_strip_cross_doc": 1.6,
-}
+#: Scale factor the headline pins were measured at; other scales report
+#: walls and pins without gating them.
+PIN_SF = 0.1
+
+#: The one width every plan-shaping setting of the gate's session derives
+#: from. Core count reaches a plan in four places, and gate_session fixes
+#: each of them from this constant instead of the host:
+#:   * spark.sql.shuffle.partitions (tune() re-applies it from
+#:     SPARK_GRAFT_CPUS on every queries._load);
+#:   * AQE initialPartitionNum = 8 x SPARK_GRAFT_CPUS (read when
+#:     torcharrow_spark.session is imported);
+#:   * sparkContext.defaultParallelism (dedup's bucket widths,
+#:     spread_narrow_source, file-split packing, spark.range) via
+#:     spark.default.parallelism;
+#:   * the master width, which stays local[nproc]: with the three above
+#:     fixed it only decides how many tasks run at once.
+#: 32 keeps the pins comparable with every earlier 32-core capture.
+PLAN_WIDTH = 32
 
 
-# r5: headline shuffle-write byte anchors (one steady noop-sink run at
-# sf0.1) — byte-identical across repeated runs on this host (verified
-# twice, an hour apart, while the wall-time machine factor drifted
-# 1.305 -> 1.669), so a >25% byte growth is a PLAN/volume change, not
-# noise. Reported per run; asserted alongside the calibrated wall gate.
-# r6: q16/q80/q100/q112/q127/q144/q145 re-anchored (+30-90% relative,
-# 8-80 KB absolute) for the AQE initialPartitionNum=8x-cores change
-# (session.py): shuffles now START at 256 buckets before byte-targeted
-# coalescing, so KB-scale exchanges pay more per-partition compression
-# framing. The same change cut headline wall 62.0 -> 49.8 s (15
-# queries >20% faster, none slower) and removes the sf10 sort-spill
-# cliff — bytes remain deterministic per (plan, data, conf).
-# r7: q19/q21/q24/q43/q45/q86/q128/q141 re-anchored for
-# spread_narrow_source (operators/preprocess.py): text/decode
-# operators now widen a narrow (single-row-group) file source before
-# scan-fused per-row compute — one extra exchange of the source's
-# text bytes (tens of KB to ~2 MB here) buys 7-56% wall on every
-# text-family query; a no-op at any healthy layout, so 100 TB plans
-# carry zero of these bytes. q126's byte anchor re-pins in the same
-# round (multimodal decode spread landed after the capture run).
-HEADLINE_SHUFFLE_ANCHOR: dict[str, int] = {
-    "q01_pricing_summary": 756,
-    # RE-PINNED r9 (VERDICT r8 "what's wrong" #2): eight anchors below
-    # (q03/q05/q18/q22/q23/q45/q105/q129) carried 11-24% of STALE
-    # drift from the r6 wide-start-shuffle change
-    # (initialPartitionNum=8x cores; the bb23804 commit re-pinned
-    # seven anchors "+8-80 KB absolute for the extra per-partition
-    # compression framing" and MISSED these eight because they sat
-    # under the 25% gate — leaving q129 1% from a phantom flag and a
-    # real +20% defect on q05 invisible). Decomposition, per anchor:
-    #   old pin (r5 era) + r6 compression-framing delta = today's
-    #   bytes, judge-verified BIT-IDENTICAL r6->r7->r8 from the
-    #   BENCH_full history and re-measured identical this round
-    #   (q03 616294, q22 500, q105 4153 reproduced to the byte).
-    # q129 has a second, conf-isolated component — see its entry.
-    "q03_join_topk": 616294,       # was 534878; +81416 r6 framing
-    "q05_dedup_keep_first": 1625319,  # was 1464317; +161002 r6 framing
-    "q11_window_rank": 761238,   # r9 re-pin (was 716638, +6.2% r6 framing; bit-identical r7->r8)
-    "q12_cumsum": 6114217,       # r9 re-pin (was 6448897, -5.2%: the r6 era REDUCED this one; bit-identical r7->r8)
-    "q16_event_windows": 155475,
-    "q17_sessionize": 1973684,   # r9 re-pin (was 2070362, -4.7%; bit-identical r7->r8)
-    "q18_exact_dedup": 177135,     # was 157440; +19695 r6 framing
-    # RE-ANCHORED r6 (was 875550): band-bucket members widened from a
-    # bare id to an (id, full-signature-hash) struct — the election
-    # class key that bounds a pathological bucket's total pair work
-    # (_emit_pairs elect_key; VERDICT r5 ask #1). +8 bytes/member on
-    # the one bucket shuffle, a deliberate scale trade.
-    "q19_minhash_pairs": 2271686,
-    "q21_ngram_jaccard": 17965944,
-    "q22_ann_brute_force": 500,    # was 448; +52 r6 framing (tiny
-                                   # final-agg exchange, framing-
-                                   # dominated)
-    "q23_ann_lsh": 496,            # was 446; +50, same shape as q22
-    "q24_text_stats": 851481,
-    "q27_rec_ops": 263,
-    "q37_asof_join": 850008,     # r9 re-pin (was 806733, +5.4% r6 framing; bit-identical r7->r8)
-    "q41_bpe_tokenize": 0,
-    # RE-PINNED r13-s5 (+3.6%, was 557556): the Arrow pair-cosine
-    # kernel ships the xxhash64(v) election class key in the bucket
-    # struct (+8 B/member on the bucket exchange) so the kernel can
-    # replay the legacy election exactly; buys the pair stage 1.88 ->
-    # 0.66 s at sf0.1 (driver_sim hash-clean sf0.001+sf0.01).
-    "q42_cosine_dedup": 577897,
-    # RE-PINNED r13-s2 (was 854218 = 713249 + 140969 r6 framing; the
-    # r13 keep_cols self-join cut had already brought the measured
-    # value back to 713680 — BENCH_full_r13.json — leaving the dict
-    # pin stale-high). New decomposition: 713680 (r13 measured) +
-    # 289414 (textstats pushdown_barrier: the stop-ratio gate filter
-    # no longer sinks below the narrow-source spread, so the spread
-    # exchange carries the PRE-gate rows' text — the price of running
-    # the quality gate in 32 tasks instead of the scan's one; same
-    # mechanism as q129's exact decomposition) = 1003094 measured at
-    # sf0.1, oracle hash-clean at sf0.001+sf0.01.
-    "q45_llm_pipeline": 1003094,
-    "q80_hll_distinct": 146270,
-    "q81_local_supplier_volume": 531,
-    "q82_funnel": 1885026,       # r9 re-pin (was 1932570, -2.5%; bit-identical r7->r8)
-    "q86_strip_duplicate_spans": 8353868,
-    "q92_order_priority_exists": 373,
-    "q98_market_share": 2257007,
-    "q100_returned_top_customers": 247667,
-    "q102_waiting_suppliers": 9675194,  # r9 re-pin (was 9802621, -1.3%; bit-identical r7->r8)
-    "q105_heavy_hitters": 4153,   # was 3498; +655 r6 framing (small
-                                  # exchange, framing-dominated like
-                                  # q22/q23)
-    "q107_resample_ffill": 2464959,
-    "q110_grouped_quantiles": 810,
-    "q112_grouped_heavy_hitters": 20356,
-    "q113_forecast_revenue": 222,
-    "q119_min_cost_supplier": 18812039,
-    # RE-ANCHORED r6 (was 15205163, +11%): prefix rows carry the
-    # doc's shingle-set hash (__ck__) — the election class key (same
-    # trade as q19; stars verify to jaccard exactly 1.0).
-    # RE-ANCHORED r7 (was 16924567, an r5-era pin): r6's election-in-
-    # _emit_pairs landed the __ck__ full-signature class key + aligned
-    # star columns on the prefix-bucket shuffle (the policy that bounds
-    # a pathologically duplicated text's TOTAL pair work — same trade
-    # as q19's r6 re-anchor above), and r6's 1-turn round measured the
-    # new volume (24265816, flagged in BENCH_full_r06.byte_regressions)
-    # without re-pinning. r7 re-measures BIT-IDENTICAL bytes.
-    # RE-PINNED r8 (was 29805475, +1.2%): decomposition — the 32-bit
-    # verify pass (VERDICT r7 ask #4) REMOVES bytes from the candidate
-    # intermediates (4 B/hash instead of 8) but ADDS the survivor-sized
-    # pass-2 exchanges (exact 64-bit arrays for ~2x25 surviving docs +
-    # the survivor-pair localCheckpoint-adjacent broadcast); at sf0.1
-    # the candidate volume is tiny, so the additions (+369 KB) outweigh
-    # the 32-bit savings. At sf10 the same plan is -37% total bytes
-    # (see STRESS_SF10_SHUFFLE_ANCHOR).
-    "q43_jaccard_prefix": 30174718,
-    # r9 re-pin (was 0, an r5-era pin that predates the r7 narrow-
-    # source spread): decode_image_stats spreads its scan-shaped input
-    # with ONE round-robin exchange carrying (doc_id, synthesized PNG
-    # bytes) — 457928 B at sf0.1, stable r7->r8->r9 in the BENCH_full
-    # history. It never flagged because a 0-anchor only alarms past
-    # 1 MB ("appeared" threshold); pinning the real value restores
-    # sub-MB sensitivity for the decode family.
-    "q126_multimodal_decode": 457928,
-    # r9 first measurement: the same decode-family spread exchange,
-    # JPEG payloads (q145 anchor discipline — the spread component is
-    # the whole number; the decode itself shuffles nothing).
-    "q152_jpeg_decode": 210188,
-    # r9 session-2 first measurements:
-    # q156: the decode-family spread exchange, GIF payloads (LZW-
-    # compressed index grids are larger per doc than q152's JPEG
-    # blocks — whole number is the spread, decode shuffles nothing).
-    "q156_gif_decode": 1019132,
-    # q157: chunk instances (doc_id, md5, len) through the freq
-    # groupBy + join-back — BOTH exchanges keyed on the chunk md5;
-    # volume = instances x ~44 B, linear in corpus bytes / modulus.
-    "q157_cdc_dedup": 7535289,
-    # q158: the narrow-source spread of the synthesized pages feeding
-    # the parse UDF (same component as q126/q152); extraction, repair,
-    # scoring, and the gate add ZERO keyed exchanges.
-    "q158_web_ingest_curation": 958462,
-    # r10. q166: the capstone's exchanges = narrow-source spreads
-    # feeding the parse UDFs + the dedup stages' md5/band keys + the
-    # pack shuffle + two lazy localCheckpoint materializations — the
-    # text never rides a keyed exchange. q167: ONE broadcast of the
-    # packed per-host rules array (19 rows); the page side is
-    # exchange-free.
-    # RE-PINNED r12 (was 11155284): the feat/d5 lineage cuts in
-    # q166_chain stop three output branches re-running the MinHash-CC
-    # exchanges and the logreg iterations re-running the gopher-gate
-    # joins — repeated shuffles are gone, -17% bytes on an identical
-    # logical result (driver_sim hash-clean; fixture identity test).
-    # RE-PINNED r12-opt (was 9209936, -3.2%): connected_components now
-    # lineage-cuts its edge list, so the CC label iterations stop
-    # re-executing the pair pipeline's exchanges (measured 8910716,
-    # driver_sim hash-clean).
-    # RE-PINNED r13 (+7.3%): the d2/d3 rejoin cut moves slightly more
-    # rows through the d3 semi-join (see the wall-anchor entry, which
-    # recorded this value; the dict entry was missed — fixed r13-s2).
-    # RE-PINNED r13-s5 (-0.05%): connected_components' per-round
-    # convergence check no longer re-joins the label sets (the __chg__
-    # flag rides the checkpointed frame), removing the tiny per-round
-    # label exchange (9565514 -> 9561054, qbench; driver_sim
-    # hash-clean at sf0.001+sf0.01).
-    "q166_commoncrawl_capstone": 9561054,
-    "q167_robots_multihost": 3315,
-    # r11 pins. q170: broadcast query side + bounded candidate window
-    # only. q171: + the cell-assignment HashAggregate carrying int8
-    # codes (the persisted-index shuffle). q172: the narrow-source
-    # spread of 5k doc_ids. q173: word-type + piece-count aggregates
-    # (vocab-bounded by construction). q173 RE-PINNED r12-opt (was
-    # 20543, -21%): the fit's word-type table is lineage-cut, so its
-    # count exchange executes once per fit instead of once per collect.
-    "q170_ann_quantized_rerank": 1739,
-    "q171_ann_ivf_int8": 472506,
-    "q172_gif_animation": 31545,
-    "q173_unigram_trained": 16187,
-    "q127_lm_quality": 240651,
-    "q128_gopher_filter": 851481,
-    # RE-PINNED r9, TWO decomposed components (measured this round by
-    # conf isolation, not inferred): 121646 (r5 pin) + 15097 (r6
-    # compression framing — lands r5->r6 in the BENCH_full history,
-    # same round as q18's move and q129 CONTAINS q18's exact-dedup
-    # stage) + 14147 (r7 narrow-source spread: ONE round-robin
-    # exchange of the gated document columns before the composite's
-    # per-row compute — spark.torcharrow.spreadNarrowSource=false
-    # reproduces EXACTLY the r6 value 136743, re-measured this round)
-    # = 150890, bit-identical r7->r8->r9 (superseded below).
-    # RE-PINNED r13-s2, exact two-component decomposition: the
-    # pushdown_barrier (operators/preprocess.py) stops the Gopher
-    # keep-filter from sinking below the narrow-source spread, so the
-    # spread's round-robin exchange now carries the PRE-gate
-    # (doc_id, text) rows — measured 851481 B, byte-identical to
-    # q128_gopher_filter's pin (the same ungated spread) — plus the
-    # unchanged conf-isolated no-spread components 136743 B
-    # (spreadNarrowSource=false reproduces it) = 988224. The win this
-    # buys: the gate's signal battery runs in 32 tasks instead of the
-    # scan's one (2.03 -> 0.87 s steady at sf0.1).
-    "q129_curation_pipeline": 988224,
-    "q130_grouped_cdf": 915,
-    # r6: +1.6% from the election branch plan shape (zero rows on
-    # organic data) + the second Lloyd step
-    # RE-PINNED r13-s5 (was 588954): qbench measured 605766 (+2.9%,
-    # under the gate — stale drift predating this session) BEFORE the
-    # Arrow pair kernel and 605751 after it; the kernel replaces the
-    # pair-explosion branch with a mapInArrow drop-id frame (wall
-    # 4.16 -> 2.72 s steady; driver_sim hash-clean sf0.001+sf0.01).
-    "q138_kmeans_semantic_dedup": 605751,
-    # RE-PINNED r13-s2 (was 1641449, +3.7%): stale-pin correction, NOT
-    # barrier-caused — the r13 final driver-format bench already
-    # measured 1702472 (BENCH_full_r13.json) on a plan this session's
-    # normalized sweep shows UNCHANGED, and the same value reproduces
-    # after the barrier. The +3.7% dates to the r13 textstats SQL-text
-    # re-form and sat under the 25% gate unflagged.
-    "q139_term_stats": 1702472,
-    "q140_logreg_quality": 380,
-    "q141_decontaminate": 1776788,
-    "q142_audio_decode": 0,
-    "q143_video_container": 0,
-    "q144_url_dedup": 7372,
-    # RE-PINNED r8 (was 61465 — the one byte flag in the driver's
-    # official BENCH_r07 artifact; VERDICT r7 "what's wrong" #2): the r7
-    # narrow-source spread re-pinned the text-family byte anchors but
-    # MISSED q145's. Decomposition (the ADVICE r7 re-pin discipline —
-    # justify as anchor_old + expected delta, not a wholesale re-pin):
-    # q145's first stage is URL dedup over documents, whose scan is now
-    # widened by ONE round-robin spread exchange carrying the gated
-    # source columns (~28 KB of url+text bytes at sf0.1) before any
-    # per-row compute. 61465 + 27932 (measured spread-exchange write,
-    # matching the source's column bytes) = 89397, bit-identical across
-    # the r7 driver run and two local re-measurements of the unchanged
-    # plan.
-    # RE-PINNED r13 to 42098 (the d2/d3 rejoin cuts dropped the
-    # url-dedup exchange from the probe path; the wall-anchor comment
-    # recorded the value but this dict entry was missed — fixed
-    # r13-s2). RE-PINNED AGAIN r13-s2: the textstats pushdown_barrier
-    # moves the PRE-gate document columns through the gopher spread
-    # exchange (+71185 B vs the post-gate subset — same mechanism and
-    # exact-decomposition discipline as q129's entry) = 113283
-    # measured at sf0.1, oracle hash-clean at sf0.001+sf0.01.
-    "q145_modern_curation": 113283,
-    # r12 first measurements: four fixed-width hash exchanges
-    # (per-doc-distinct, per-gram count, join-back, run merge); the
-    # strip row adds the per-doc span collect + mask join
-    "q175_cross_doc_spans": 7599726,
-    "q176_strip_cross_doc": 8465882,
+def gate_session(app: str = "bench", master_width: int | None = None):
+    """The gate's Spark session: local[master_width] (default: the cores
+    this process may use) with every plan-shaping width set from
+    PLAN_WIDTH. Must run before anything in the process imports
+    torcharrow_spark, because session.py reads SPARK_GRAFT_CPUS at
+    import; a session built any other way fails loudly here."""
+    os.environ["SPARK_GRAFT_CPUS"] = str(PLAN_WIDTH)
+    from pyspark.sql import SparkSession
+
+    import torcharrow_spark as ts
+
+    width = master_width or len(os.sched_getaffinity(0))
+    spark = (
+        SparkSession.builder.master(f"local[{width}]")
+        .appName(app)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.default.parallelism", str(PLAN_WIDTH))
+        .getOrCreate()
+    )
+    ts.tune(spark)
+    ipn = spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    par = spark.sparkContext.defaultParallelism
+    if par != PLAN_WIDTH or ipn != str(PLAN_WIDTH * 8):
+        raise RuntimeError(
+            f"gate session is not pinned to PLAN_WIDTH={PLAN_WIDTH} "
+            f"(defaultParallelism {par}, initialPartitionNum {ipn}): call "
+            "gate_session before importing torcharrow_spark or creating "
+            "another session"
+        )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+# Headline pins at sf0.1: (output rows, shuffle-write bytes of one steady
+# run, Exchange count of the built plan as plans.plan_stats reports it —
+# the formatted plan names each shuffle exchange twice, tree and detail).
+# All measured at PLAN_WIDTH 32 on local[4]; the comment compares the bytes
+# with the local[32] r13 run (BENCH_full_r13.json) and its pin. Rows and
+# exchanges are first pins.
+HEADLINE_PINS: dict[str, tuple[int, int, int | None]] = {
+    "q01_pricing_summary": (6, 756, 2),  # = r13 pin
+    "q03_join_topk": (10, 616294, 2),  # = r13 pin
+    "q05_dedup_keep_first": (147236, 1625319, 2),  # = r13 pin
+    "q11_window_rank": (44953, 761238, 2),  # = r13 pin
+    "q12_cumsum": (600000, 6114217, 2),  # = r13 pin
+    "q16_event_windows": (3600, 155475, 2),  # = r13 pin
+    "q17_sessionize": (95465, 1973684, 2),  # = r13 pin
+    "q18_exact_dedup": (4992, 177135, 2),  # = r13 pin
+    "q19_minhash_pairs": (759, 2271686, 24),  # = r13 pin
+    "q21_ngram_jaccard": (256, 17965944, 8),  # = r13 pin
+    "q22_ann_brute_force": (15, 500, 2),  # = r13 pin
+    "q23_ann_lsh": (15, 496, 2),  # = r13 pin
+    "q24_text_stats": (5000, 851481, 2),  # = r13 pin
+    "q27_rec_ops": (85672, 263, 2),  # = r13 pin
+    "q37_asof_join": (20084, 850008, 2),  # = r13 pin
+    "q41_bpe_tokenize": (5000, 0, 0),  # = r13 pin
+    "q42_cosine_dedup": (12053, 577897, 2),  # = r13 pin
+    "q45_llm_pipeline": (5, 1003094, 6),  # = r13 pin
+    "q80_hll_distinct": (5, 146270, 8),  # = r13 pin
+    "q81_local_supplier_volume": (5, 531, 2),  # = r13 pin
+    "q82_funnel": (4, 1885026, 4),  # = r13 pin
+    "q86_strip_duplicate_spans": (5000, 8353868, 8),  # = r13 pin
+    "q92_order_priority_exists": (5, 373, 2),  # = r13 pin
+    "q98_market_share": (7, 2286715, 6),  # = r13 capture; r13 pin was 2257007
+    "q100_returned_top_customers": (20, 247667, 2),  # = r13 pin
+    "q102_waiting_suppliers": (10, 9675194, 4),  # = r13 pin
+    "q105_heavy_hitters": (30, 4153, 6),  # = r13 pin
+    "q107_resample_ffill": (43145, 2578017, 4),  # = r13 capture; r13 pin was 2464959
+    "q110_grouped_quantiles": (10, 810, 4),  # = r13 pin
+    "q112_grouped_heavy_hitters": (150, 20356, 6),  # = r13 pin
+    "q113_forecast_revenue": (1, 222, 2),  # = r13 pin
+    "q119_min_cost_supplier": (25, 19323297, 10),  # = r13 capture; r13 pin was 18812039
+    "q43_jaccard_prefix": (256, 30148224, 12),  # = r13 capture; r13 pin was 30174718
+    "q126_multimodal_decode": (5000, 457928, 2),  # = r13 pin
+    "q127_lm_quality": (5000, 240651, 12),  # = r13 pin
+    "q128_gopher_filter": (5000, 851481, 2),  # = r13 pin
+    "q129_curation_pipeline": (1749, 988224, 8),  # = r13 pin
+    "q130_grouped_cdf": (5000, 915, 4),  # = r13 pin
+    "q138_kmeans_semantic_dedup": (2000, 605751, 4),  # = r13 pin
+    "q139_term_stats": (31, 1702472, 4),  # = r13 pin
+    "q140_logreg_quality": (5000, 380, 0),  # = r13 pin
+    "q141_decontaminate": (4454, 1776788, 14),  # = r13 pin
+    "q142_audio_decode": (5000, 0, 0),  # = r13 pin
+    "q143_video_container": (5000, 0, 0),  # = r13 pin
+    "q144_url_dedup": (100, 7372, 2),  # = r13 pin
+    "q145_modern_curation": (142, 113283, 8),  # = r13 pin
+    "q152_jpeg_decode": (5000, 210188, 2),  # = r13 pin
+    "q156_gif_decode": (5000, 1019132, 2),  # = r13 pin
+    "q157_cdc_dedup": (5000, 7535289, 6),  # = r13 pin
+    "q158_web_ingest_curation": (3414, 958462, 2),  # = r13 pin
+    "q166_commoncrawl_capstone": (443, 9561054, 8),  # = r13 pin
+    "q167_robots_multihost": (5000, 3315, 4),  # = r13 pin
+    "q170_ann_quantized_rerank": (15, 1739, 2),  # = r13 pin
+    "q171_ann_ivf_int8": (15, 472506, 6),  # = r13 pin
+    "q172_gif_animation": (14999, 31545, 2),  # = r13 pin
+    "q173_unigram_trained": (2500, 16187, 0),  # = r13 pin
+    "q175_cross_doc_spans": (355, 7599726, 10),  # = r13 pin
+    "q176_strip_cross_doc": (5000, 8465882, 12),  # = r13 pin
 }
 
 
@@ -674,145 +219,9 @@ def _sink(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-#: minimum absolute wall delta (sec) before a wall "regression" is
-#: reported when the byte gate vouches for the plan — sub-second
-#: queries on a shared host jitter by ~0.1-0.2s, so a 0.31s query on a
-#: 0.187s anchor is noise, not a regression (BENCH_r05's one flagged
-#: entry, disproved by its own empty byte_regressions)
-WALL_NOISE_FLOOR_SEC = 0.25
-
-
-def median_drift(clean_ratios) -> float:
-    """Median wall ratio (measured / normalized anchor) across
-    byte-clean queries — a plan-vouched second estimate of host drift
-    (see the diagnostic block in main). 1.0 when nothing is clean."""
-    rs = sorted(clean_ratios)
-    return round(rs[len(rs) // 2], 3) if rs else 1.0
-
-
-def drift_adjust(regressions: dict, drift: float) -> dict:
-    """Raw wall regressions re-judged against the uniform-drift
-    envelope: only entries still >25% past `drift` survive, reported
-    as their drift-normalized ratio. Supplementary — never replaces
-    the raw gate."""
-    d = max(1.0, drift)
-    return {
-        name: round(ratio / d, 2)
-        for name, ratio in regressions.items()
-        if ratio > d * 1.25
-    }
-
-
-def probe_envelope(probes: list) -> dict:
-    """min/median/max machine factors from the interleaved calibration
-    probes (r9, VERDICT r8 ask #4) — each floored at 0.25 like the
-    gating scalar, so one probe fluke can't manufacture an impossible
-    'host got 10x faster' normalization."""
-    factors = sorted(max(p / CAL_ANCHOR_SEC, 0.25) for p in probes)
-    return {
-        "min": round(factors[0], 3),
-        "median": round(factors[len(factors) // 2], 3),
-        "max": round(factors[-1], 3),
-    }
-
-
-def envelope_agrees(raw_wall_drift: float, env: dict) -> bool:
-    """Does the plan-vouched drift estimate (median wall ratio of
-    byte-clean queries against UN-normalized anchors) fall inside the
-    probe envelope, with 25% slack for the queries' own noise? False
-    means the artifact's two host-speed estimates disagree — flagged,
-    not silently resolved."""
-    return bool(
-        env["min"] / 1.25 <= raw_wall_drift <= env["max"] * 1.25
-    )
-
-
-def damped_wall(first: float, rerun) -> float:
-    """Noise damping for a wall that exceeded its bar: take BOTH extra
-    samples and return the median of the three (r9, ADVICE r8 — the
-    old best-of-3-with-early-stop kept the min, so an intermittent
-    regression that reproduces ~50% of runs almost always found one
-    fast run and never flagged; the median flags it ~75% of the time
-    while still absorbing a single noisy sample)."""
-    samples = [first, rerun(), rerun()]
-    return round(statistics.median(samples), 3)
-
-
-def paired_window_wall(first: float, damped: float) -> float:
-    """The r11 paired-window gate input: damped/first is a paired
-    SAME-PLAN host-speed reading — the re-runs execute the
-    byte-identical plan in a later window, so damped >> first says
-    the tail window is slower, which code cannot cause (a code
-    regression multiplies both windows equally). Windows disagreeing
-    by >1.5x -> judge the quieter window's measurement; agreeing ->
-    judge the damped median-of-3 (the r9 intermittent-detection
-    property, kept wherever the windows are comparable). Measured
-    need: r11's first two bench runs flagged DISJOINT sets of
-    byte-clean, code-untouched queries, every flag carrying damped
-    ~2x first while both probes read 0.9-2.0x."""
-    return damped if damped <= first * 1.5 else min(first, damped)
-
-
-def wall_regression(wall: float, bar: float, byte_clean: bool) -> bool:
-    """Wall-gate decision: a query regresses when it exceeds the
-    machine-normalized anchor by >25% — UNLESS the machine-independent
-    byte gate is clean for this query (same plan, same shuffle bytes)
-    AND the absolute excess is under WALL_NOISE_FLOOR_SEC, in which
-    case the excess is host noise on a sub-second constant, not a plan
-    change. A dirty/absent byte gate keeps the strict wall-only rule."""
-    if wall <= bar * 1.25:
-        return False
-    if byte_clean and (wall - bar) < WALL_NOISE_FLOOR_SEC:
-        return False
-    return True
-
-
-#: a re-adjudication window counts as QUIET when neither the CPU-spin
-#: nor the string/regex probe read above this factor — the r11 GATES
-#: A/B pins used windows at 1.30x, and every disproven phantom flag
-#: carried fresh probes >=1.5x (the probes under-read the workload's
-#: slowness exactly when the host oscillates).
-QUIET_PROBE_FACTOR = 1.35
-
-
-def wall_channel_verdict(
-    flagged: bool,
-    byte_clean: bool,
-    fresh_factor: float,
-    windows_agree: bool,
-) -> str | None:
-    """r12 (VERDICT r11 ask #2): byte/row/spill are the PRIMARY bench
-    gate; a wall excess becomes a gating ``regression`` only when a
-    machine-independent channel or a trustworthy measurement backs it:
-
-    * byte pin moved (``byte_clean`` False) — the plan itself changed,
-      the wall flag rides the primary channel: **gate**;
-    * byte-clean but measured in a certified-QUIET window (all fresh
-      bracketing probes <= QUIET_PROBE_FACTOR and the first-pass /
-      re-run windows agree) — a real CPU-side regression the probes
-      could actually see: **gate**;
-    * byte-clean in a noisy or oscillating window: **watch** — full
-      decomposition in the artifact, never a gating flag. Three r11
-      same-tree runs produced DISJOINT flag sets in exactly this
-      state (GATES r11 "wall-weather adjudication"); each round since
-      r9 spent a re-adjudication cycle disproving them one by one.
-
-    Returns "gate", "watch", or None (not flagged)."""
-    if not flagged:
-        return None
-    if not byte_clean:
-        return "gate"
-    if fresh_factor <= QUIET_PROBE_FACTOR and windows_agree:
-        return "gate"
-    return "watch"
-
-
 class StageMetrics:
     """Per-query shuffle/spill bytes from the live AppStatusStore (the
-    same numbers the Spark UI's stage table shows) — the r5
-    noise-proofing: wall time moves with host load, but a plan's
-    SHUFFLE BYTES are a property of (plan, data) alone, so regression
-    claims anchor on bytes, not on a noisy minute. Reads stages by id
+    same numbers the Spark UI's stage table shows). Reads stages by id
     watermark (sum over stageId > snapshot), so eviction of OLD stages
     from the store between snapshots cannot skew a diff."""
 
@@ -850,539 +259,143 @@ class StageMetrics:
                 "spill": int(sp), "disk_spill": int(dsp)}
 
 
-# Machine-speed calibration (added r4): the container's absolute speed
-# SHIFTS BETWEEN ROUNDS — r4's host ran the UNTOUCHED r3 code ~1.9x
-# slower than r3's own anchors (verified by checking out the r3 commit
-# in a worktree and re-timing q12/q82/q110 — same slowdown with zero
-# code delta). Absolute cross-round seconds are therefore meaningless
-# without a code-independent probe: a fixed CPU-bound Spark job whose
-# cost no repo change can affect. Regressions are judged against
-# anchor * (cal_now / CAL_ANCHOR_SEC), so a slow host doesn't produce
-# phantom regressions and a fast host doesn't mask real ones.
-CAL_ANCHOR_SEC = 0.154  # r4 environment, best-of-3
+def measure(build, metrics: StageMetrics, best_of: int = 1) -> dict:
+    """One cold run and `best_of` steady runs (walls, reported only: the
+    cold one and the best steady one), then the pinned quantities:
+    shuffle and spill bytes of the first steady run, output rows, and
+    the built plan's Exchange count."""
+    from torcharrow_spark.plans import plan_stats
 
-
-# r11 (VERDICT r10 ask #1/#3): the CPU-spin probe is integer
-# arithmetic inside whole-stage codegen — it cannot track JVM
-# string/regex throughput, which is exactly the workload of the two
-# r10 wall flags (q24_text_stats, q144_url_dedup: regexp-chain-heavy
-# string projections). This second probe is a fixed regexp_replace
-# micro-query (same shape as those queries' hot loop: synthesize a
-# string per row, run two chained regexes, reduce) so string-bound
-# walls have a probe that co-varies with them. Report-only this
-# round: recorded per block alongside the CPU probe; the adjudication
-# note in GATES.md uses it for attribution.
-#
-# Pin derivation (r11): steady best 0.543-0.661 s measured on the r11
-# host at a concurrent CPU-probe factor of 2.1-2.2x, normalized to the
-# CAL_ANCHOR_SEC era by dividing out that factor => ~0.26-0.30
-# anchor-era seconds. Pinned mid-range so reported string factors and
-# CPU factors share a scale (string_factor / cpu_factor >> 1 on some
-# future host means string-bound walls are inflated beyond what the
-# arithmetic probe can see — exactly the r10 q24/q144 ambiguity).
-STRING_CAL_ANCHOR_SEC = 0.27
-
-
-def measure_string_calibration(spark, n: int = 2) -> float:
-    """Best-of-n steady time of a fixed JVM string/regex job: 2M rows,
-    per-row string synthesis + two chained regexp_replace + length
-    sum. 32 fixed partitions, no IO, no repo code."""
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        spark.range(0, 2_000_000, 1, 32).selectExpr(
-            "sum(length(regexp_replace(regexp_replace("
-            "concat('u', cast(id as string), '-', repeat('ab', 20)),"
-            " '[0-9]+', 'N'), '(ab)+', 'B')))"
-        ).collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
-def measure_python_calibration(spark, n: int = 2) -> float:
-    """Best-of-n steady time of a fixed PYTHON-worker job: 64k rows x
-    32 fixed partitions through an Arrow-batched pandas UDF running a
-    pure-Python loop (hash of a formatted string per row). Third probe
-    mode (r12): the CPU-spin probe is JVM integer ALU, the string
-    probe JVM regex — neither co-varies with Python-worker throughput,
-    which is the ENTIRE wall of the decode/parse family (q158's
-    html.parser, q126/q152/q156 codecs, q166's chain stages). The
-    r12 q130/q158 adjudication measured both queries 1.5-2x their
-    pins inside windows BOTH JVM probes certified quiet (0.7-1.1x) on
-    byte-exact plans of git-identical code — Python-side host decay
-    is invisible without this probe. Includes Python-worker reuse,
-    Arrow transfer, and interpreter throughput, as the workload does."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _spin(s: pd.Series) -> pd.Series:
-        import hashlib
-
-        out = []
-        for v in s:
-            h = 0
-            for i in range(40):
-                h ^= int.from_bytes(
-                    hashlib.md5(f"{v}-{i}".encode()).digest()[:4], "big"
-                )
-            out.append(h)
-        return pd.Series(out)
-
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        spark.range(0, 64_000, 1, 32).select(
-            _spin("id").alias("h")
-        ).selectExpr("sum(h)").collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
-#: pinned from the r12 adjudication session's quiet windows (JVM
-#: probes 0.7-1.2x): best-of-2 python-probe readings 0.558-0.705 s,
-#: median ~0.62.
-PYTHON_CAL_ANCHOR_SEC = 0.62
-
-
-def measure_calibration(spark, n: int = 3) -> float:
-    """Best-of-n steady time of a fixed whole-stage-codegen job
-    (500M-row modular sum, 32 fixed partitions — pure JVM CPU, no IO,
-    no repo code). The in-loop block probes use n=2 to cap overhead;
-    the gating scalars stay best-of-3."""
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        spark.range(0, 500_000_000, 1, 32).selectExpr(
-            "sum(id % 1000003)"
-        ).collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
-STRESS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".stress_sf1")
-STRESS10_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".stress_sf10"
-)
-
-# sf1 steady-state anchors (seconds, local[32], r3 noop-sink
-# measurement) for the pair machinery — the quadratic-creep canary
-# sf0.1 cannot see. All ratios vs sf0.1 at 10x rows were sublinear
-# (q19 7.2, q18 2.7, q46 6.6, q86 7.0, q21-auto 4.9, q42 3.1,
-# q105 5.6); a later round whose ratio jumps past ~10 has
-# reintroduced superlinear pair work. The harness already earned its
-# keep twice in r3: it caught an executor OOM in simhash's
-# small-key-space buckets and the count()-sink under-measurement.
-STRESS_ANCHOR: dict[str, float] = {
-    "q19_minhash_pairs": 13.454,
-    "q18_exact_dedup": 0.774,
-    "q46_simhash_pairs": 33.446,
-    "q86_strip_spans": 6.852,
-    # RE-ANCHORED r5 (was 7.838, an r3-era value): auto mode is the
-    # PPJoin prefix plan, and r4 moved its shingle document frequency
-    # from a WindowExec count to a partial-aggregating groupBy +
-    # join-back — the deliberate extra shuffle that lets AQE split a
-    # hot boilerplate shingle (same trade as the q43 headline
-    # re-anchor, bench.py ANCHOR comment). The r4 judge re-measured
-    # 17.9s at machine factor ~1.86 => ~9.6 anchor-era seconds; r5
-    # best-of-3 measurement confirms (see BENCH_r5). Without this the
-    # stress gate cries wolf at ~1.4x every round.
-    # RE-ANCHORED r8 (was 9.6): the 32-bit verify pass-1 shrinks the
-    # candidate-join sorts; measured 12.615 s at factor 1.721 = 7.33
-    # anchor-era (-24% vs the r5 pin). Re-pinned DOWNWARD so the gate
-    # keeps teeth — a later round regressing back to 9.6-era cost
-    # should flag.
-    "q21_ngram_jaccard_auto": 7.5,
-    # RE-PINNED r13-s5 (was 4.774): the Arrow pair-cosine kernel at
-    # sf1 (256 buckets x ~78 members — still the few-and-fat shape);
-    # measured 1.139 s at machine factor 1.156 (~0.99 anchor-era).
-    "q42_cosine_dedup": 1.4,
-    "q105_heavy_hitters": 3.052,
-    # r9 session-2 first measurement (best-of-2 steady 4.537 at probe
-    # factor ~0.916 => anchor-era seconds below); chunking is map work,
-    # the cost is the two md5-keyed sharing exchanges
-    "q157_cdc_dedup": 4.95,
-    # r12 first measurement: best 3.698 s at probes 1.1-1.47x
-    "q175_cross_doc_spans": 3.0,
-}
-
-# r5: machine-INDEPENDENT stress anchors — total shuffle-write bytes of
-# one steady run (a property of plan + data, immune to host-speed
-# drift; the r4 phantom "2.58x q86 regression" was wall-time noise that
-# byte anchors cannot produce). A stress query whose shuffle bytes grow
-# >25% over anchor has CHANGED ITS PLAN or its pair-emission volume —
-# that, not a slow minute, is the regression trigger for stress.
-# Values: r5 first instrumented run (local[32], sf1 stress corpus).
-STRESS_SHUFFLE_ANCHOR: dict[str, int] = {
-    # q19/q46 RE-ANCHORED r6 (were 8598298 / 36738739): the emission
-    # chunk dropped 8192 -> 1024 (DEFAULT_EMIT_CHUNK — sized by the
-    # stage-boundary buffer bound: an 8k-member bucket's C(8k,2)
-    # fanout buffers ~2.5 GB per task before the consumer sees a row,
-    # measured OOM at 4 concurrent), so organic 1k-8k buckets now ride
-    # the salted chunk-pair path: +26% / +52% shuffle on these two
-    # already-small exchanges (2.3 MB / 19 MB at sf1) buys bounded
-    # per-task memory at ANY duplication level. Bytes scale linearly;
-    # wall was flat (q19 12.1 s, q46 30.4 s vs 28-33 s anchors).
-    # q18/q21/q105 (and smaller drifts on the rest) RE-ANCHORED r7 for
-    # the corpus-v3 multi-file layout (see _build_stress_sf1): byte
-    # anchors are a property of (plan, data, PARTITIONING) — with 32
-    # scan partitions instead of one file's row-group splits,
-    # partial-aggregate map-side combines see fewer rows per task (more
-    # partial-state rows cross the wire: q18 +42%, q21 +30%) and
-    # heavy_hitters' per-partition candidate superset grows with the
-    # partition count by design (q105 30x on an 872 KB absolute —
-    # the pigeonhole candidate bound is per-partition). Volumes
-    # re-measured stable on the new layout; walls dropped across the
-    # tier (the single-file corpus scan-gated every stress query on
-    # one straggler task).
-    "q19_minhash_pairs": 11349750,
-    "q18_exact_dedup": 2196089,
-    "q46_simhash_pairs": 67760383,
-    "q86_strip_spans": 71474498,
-    # RE-PINNED r8 (was 213110089, +1.2%): same decomposition as the
-    # q43 headline byte re-pin — 32-bit candidate arrays save less at
-    # sf1 than the survivor-sized pass-2 exchanges add (candidates are
-    # few on the election-bounded corpus); the sf10 decade is where the
-    # intermediate dominates and the same plan measures -37%.
-    "q21_ngram_jaccard_auto": 215683097,
-    # RE-PINNED r13-s5 (+3.2%, was 6135460): the xxhash64(v) election
-    # class key rides the bucket exchange (8 B/member; see the
-    # headline q42 pin).
-    "q42_cosine_dedup": 6331168,
-    "q105_heavy_hitters": 871654,
-    # r9 session-2 first measurement: 3.80 B shuffle per corpus char at
-    # sf1 (19.7M chars) — instance rows (id, md5, ln) through the freq
-    # groupBy + join-back, linear in corpus bytes / modulus
-    "q157_cdc_dedup": 74892916,
-    # r12 first measurement: 60.5 MB at sf1 vs 7.6 MB at sf0.1 = 7.96x
-    # bytes on 10x docs — the anchor-gram fanout is linear in corpus
-    # tokens and every exchange is 16-byte hash rows (the
-    # shuffle-linearity proof VERDICT r11 ask #4 requires)
-    "q175_cross_doc_spans": 60489744,
-}
-
-# Spill bytes at the bench scales are expected to be ZERO everywhere
-# (partitions are sized to fit); any nonzero spill on a stress query is
-# reported as a regression signal in its own right.
-
-
-def _build_stress_sf1(spark, sf01_dir: str) -> None:
-    """Materialize a 10x 'sf1' stress corpus from sf0.1 (documents,
-    embeddings) — deterministic, built once, gitignored.
-
-    The scaling is designed so TRUE near-dup structure grows exactly
-    linearly, making 'within linear scaling' a meaningful assertion:
-    every word in copy i>0 gets a copy tag, so each copy reproduces the
-    original corpus's intra-copy dup structure verbatim while sharing
-    ZERO shingles across copies (a partial mutation was tried first and
-    rejected: any unchanged rare shingle appears in all 10 copies, its
-    document frequency grows 10x, and prefix-filter candidates grow
-    quadratically — an artifact of replication, not of corpus growth);
-    embeddings get a per-copy Rademacher sign pattern (cos(x*s, y*s) ==
-    cos(x, y) exactly within a copy, while cross-copy cosines collapse
-    to ~0)."""
-    from pyspark.sql import functions as F
-
-    # v3 (r7): corpora are REPARTITIONED before write. v2 wrote ONE
-    # parquet file per table; Spark then capped the scan stage at its
-    # row-group split count with heavily skewed splits — profiling q19
-    # at sf10 showed ONE straggler scan task owning ~90 of the 107
-    # wall seconds (total executor time across all stages was ~143 s,
-    # i.e. the box ran 35% utilized). A multi-file corpus is also the
-    # honest shape: no 100 TB table is one file.
-    done = os.path.join(STRESS_DIR, "_BUILT_v3")
-    if os.path.exists(done):
-        return
-    docs = spark.read.parquet(f"{sf01_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
-    copies = spark.range(10).select(F.col("id").cast("int").alias("copy"))
-
-    d = (
-        docs.crossJoin(copies)
-        .select(
-            (F.col("doc_id") + F.col("copy") * F.lit(10_000_000)).alias("doc_id"),
-            F.when(F.col("copy") == 0, F.col("text"))
-            .otherwise(
-                F.array_join(
-                    F.expr(
-                        "transform(split(text, ' '), w -> concat(w, 'x', copy))"
-                    ),
-                    " ",
-                )
-            )
-            .alias("text"),
-            *[c for c in docs.columns if c not in ("doc_id", "text")],
-        )
-    )
-    d.repartition(32, "doc_id").write.mode("overwrite").parquet(
-        f"{STRESS_DIR}/documents.parquet"
-    )
-
-    e = (
-        emb.crossJoin(copies)
-        .select(
-            (F.col("vec_id") + F.col("copy") * F.lit(10_000_000)).alias("vec_id"),
-            F.when(F.col("copy") == 0, F.col("embedding"))
-            .otherwise(
-                F.expr(
-                    "transform(embedding, (x, d) -> CAST(x * "
-                    "(CASE WHEN pmod(xxhash64(concat(copy, ',', d)), 2) = 0 "
-                    "THEN 1.0 ELSE -1.0 END) AS FLOAT))"
-                )
-            )
-            .alias("embedding"),
-            *[c for c in emb.columns if c not in ("vec_id", "embedding")],
-        )
-    )
-    e.repartition(32, "vec_id").write.mode("overwrite").parquet(
-        f"{STRESS_DIR}/embeddings.parquet"
-    )
-    with open(done, "w") as fh:
-        fh.write("ok\n")
-
-
-def _build_stress_sf10(spark) -> None:
-    """Second scale decade (r6, r5 verdict ask #2): 10x the sf1 stress
-    corpus = 100x sf0.1 (500k docs / 200k vectors), built from sf1 by
-    the SAME copy-tagging scheme — copy tag 'y{copy}' composes with
-    sf1's 'x{copy}' so no shingle crosses any of the 100 effective
-    copies and true near-dup structure stays exactly linear; embeddings
-    get a second independent Rademacher sign pattern (within-copy
-    cosines exact, cross-copy ~0). Built once, gitignored."""
-    from pyspark.sql import functions as F
-
-    # v2 (r7): multi-file write — see _build_stress_sf1's v3 note (the
-    # single-file v1 corpus scan-gated every sf10 stress query on one
-    # straggler task)
-    done = os.path.join(STRESS10_DIR, "_BUILT_v2")
-    if os.path.exists(done):
-        return
-    docs = spark.read.parquet(f"{STRESS_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{STRESS_DIR}/embeddings.parquet")
-    copies = spark.range(10).select(F.col("id").cast("int").alias("copy"))
-
-    d = (
-        docs.crossJoin(copies)
-        .select(
-            (F.col("doc_id") + F.col("copy") * F.lit(1_000_000_000)).alias(
-                "doc_id"
-            ),
-            F.when(F.col("copy") == 0, F.col("text"))
-            .otherwise(
-                F.array_join(
-                    F.expr(
-                        "transform(split(text, ' '), w -> concat(w, 'y', copy))"
-                    ),
-                    " ",
-                )
-            )
-            .alias("text"),
-            *[c for c in docs.columns if c not in ("doc_id", "text")],
-        )
-    )
-    d.repartition(64, "doc_id").write.mode("overwrite").parquet(
-        f"{STRESS10_DIR}/documents.parquet"
-    )
-
-    e = (
-        emb.crossJoin(copies)
-        .select(
-            (F.col("vec_id") + F.col("copy") * F.lit(1_000_000_000)).alias(
-                "vec_id"
-            ),
-            F.when(F.col("copy") == 0, F.col("embedding"))
-            .otherwise(
-                F.expr(
-                    "transform(embedding, (x, d) -> CAST(x * "
-                    "(CASE WHEN pmod(xxhash64(concat('t2:', copy, ',', d)), 2) = 0 "
-                    "THEN 1.0 ELSE -1.0 END) AS FLOAT))"
-                )
-            )
-            .alias("embedding"),
-            *[c for c in emb.columns if c not in ("vec_id", "embedding")],
-        )
-    )
-    e.repartition(64, "vec_id").write.mode("overwrite").parquet(
-        f"{STRESS10_DIR}/embeddings.parquet"
-    )
-    with open(done, "w") as fh:
-        fh.write("ok\n")
-
-
-# r6: sf10 machine-independent byte anchors (first r6 measurement;
-# property of plan + data). Wall at this tier is informational — one
-# steady run after a cold warmup (the byte gate, not wall, is the
-# trigger, and bytes are deterministic in one capture).
-# Populated r7 from the driver's r6 capture (BENCH_full_r06.json
-# stress_sf10.*.shuffle_bytes) so the gate is live, per ADVICE r6.
-STRESS_SF10_SHUFFLE_ANCHOR: dict[str, int] = {
-    "q19_minhash_pairs": 116_348_489,
-    # RE-PINNED r8 (was 579_481_965, -84%): simhash_auto_bits was
-    # CLAMPED at 32 bits by the single-md5 construction, so the sf10
-    # tier ran 8-bit blocks whose (block, value) buckets grow linearly
-    # with the corpus — the quadratic-candidate cliff the sizing rule
-    # exists to prevent, frozen exactly where it started to matter
-    # (found preparing the r8 sf100 evidence run). The two-digest
-    # 64-bit simhash lets auto pick 44 bits at 500k docs (11-bit
-    # blocks, ~244 docs/bucket): candidate volume drops 84% and the
-    # sf100 decade stays linear (SCALE_SF100.md). Output pairs are a
-    # different (finer) hamming granularity than the clamped 32-bit
-    # run — the sizing rule's intended behavior, verified exact vs the
-    # pure-python fingerprint in pytest.
-    "q46_simhash_pairs": 95_475_855,
-    "q86_strip_spans": 943_221_883,
-    # RE-PINNED r8 (was 17_435_942_041, -37.4%): the verify
-    # intermediate owned ~86% of the old volume (~15.0 GB — one full
-    # 64-bit sorted hash array per surviving candidate riding the
-    # second verify join); the 32-bit pass-1 (VERDICT r7 ask #4)
-    # halves that array payload (expected ~-7 GB -> ~10.4 GB total)
-    # and the survivor-sized exact pass-2 adds back only output-scale
-    # bytes. Measured 10_911_099_791 — within 5% of the decomposition
-    # estimate, zero spill, oracle output identical (pinned vs direct
-    # mode incl. forced 32-bit collisions in pytest).
-    "q21_ngram_jaccard_auto": 10_911_099_791,
-    # RE-PINNED r13-s5 (+9%, was 54_983_694): the class key's
-    # 8 B/member on the sf10 bucket exchange (duplicate-heavier
-    # corpus, more members per bucket — same cause as sf1).
-    "q42_cosine_dedup": 59_918_395,
-    # r9 session-2 first measurement: 4.14 B/char at sf10 (246M corpus
-    # chars, 12.47x sf1's) — the +9% per-char vs sf1 is the sharing
-    # join-back on a deliberately duplicate-heavier corpus, not plan
-    # drift; zero spill, walls ~4x at 12.5x bytes (sublinear)
-    "q157_cdc_dedup": 1_019_480_207,
-}
-
-
-def run_stress_sf10(spark, sf1_out: dict, cal_ratio: float = 1.0,
-                    metrics=None) -> dict:
-    """sf10 tier over the five pair-machinery queries whose 100x claims
-    previously extrapolated from one measured decade: vs_sf1_ratio ~10
-    = linear across the SECOND decade too (this is where the salted
-    emitter and AQE skew handling first see organic data at 500k docs).
-    Regression trigger = STRESS_SF10_SHUFFLE_ANCHOR growth or any
-    spill. Wall is BEST-OF-2 steady (cold warmup first) — r6 recorded
-    q21 at vs_sf1_ratio 19.9 from one noisy steady run; a clean-host
-    r7 re-measurement of the identical plan (byte-identical shuffle)
-    put it at 9.9, i.e. linear. One extra steady run per query keeps a
-    single host hiccup from fabricating a superlinearity claim. Opt
-    out with SPARK_GRAFT_NO_SF10 when iterating locally."""
-    from torcharrow_spark.operators import (
-        cosine_pairs,
-        minhash_pairs,
-        ngram_jaccard_pairs,
-        simhash_pairs,
-        strip_duplicate_spans,
-    )
-    from torcharrow_spark.operators import cdc_dedup_stats as _cdc_stats10
-
-    _build_stress_sf10(spark)
-    sdir = STRESS10_DIR
-
-    def docs():
-        return spark.read.parquet(f"{sdir}/documents.parquet")
-
-    def emb():
-        return spark.read.parquet(f"{sdir}/embeddings.parquet")
-
-    cases = {
-        "q19_minhash_pairs": lambda: minhash_pairs(
-            docs(), shingle_k=3, num_hashes=8, bands=4
-        ),
-        # auto picks 44 bits at 500k docs since r8 (the 32-bit clamp is
-        # gone); vs_sf1_ratio compares against the 32-bit sf1 tier, so
-        # it reads LOW by design — the byte anchor is the gate
-        "q46_simhash_pairs": lambda: simhash_pairs(
-            docs(), bits="auto", max_hamming=3
-        ),
-        "q86_strip_spans": lambda: strip_duplicate_spans(docs(), k=8),
-        "q21_ngram_jaccard_auto": lambda: ngram_jaccard_pairs(
-            docs(), shingle_k=3, threshold=0.3, mode="auto"
-        ),
-        # r8: auto sizing picks 11 planes at 200k vectors — the pre-r8
-        # manual pin, byte anchor carries over
-        "q42_cosine_dedup": lambda: cosine_pairs(
-            emb(), threshold=0.2, n_planes="auto"
-        ),
-        # r9 session-2: the second CDC decade (246M corpus chars,
-        # 12.47x sf1's) — bytes must stay ~linear per corpus char
-        "q157_cdc_dedup": lambda: _cdc_stats10(docs()),
-    }
-    out: dict[str, dict] = {}
-    for name, build in cases.items():
-        _sink(build())  # cold: codegen/broadcast spin-up
-        wm = metrics.snapshot() if metrics else None
-        t0 = time.perf_counter()
-        _sink(build())
-        sec = round(time.perf_counter() - t0, 3)
-        bytes_ = metrics.since(wm) if metrics else None
+    t0 = time.perf_counter()
+    _sink(build())
+    cold = round(time.perf_counter() - t0, 3)
+    sec, b = float("inf"), None
+    for _ in range(best_of):
+        wm = metrics.snapshot()
         t0 = time.perf_counter()
         _sink(build())
         sec = min(sec, round(time.perf_counter() - t0, 3))
-        n = build().count()
-        b1 = (sf1_out.get(name) or {}).get("sec")
-        out[name] = {
-            "sec": sec,
-            "best_of": 2,
-            "rows": n,
-            "vs_sf1_ratio": round(sec / b1, 2) if b1 else None,
-        }
-        if bytes_ is not None:
-            out[name]["shuffle_bytes"] = bytes_["shuffle_write"]
-            out[name]["spill_bytes"] = bytes_["spill"]
-            byte_anchor = STRESS_SF10_SHUFFLE_ANCHOR.get(name)
-            ratio = None
-            if byte_anchor:
-                ratio = round(bytes_["shuffle_write"] / byte_anchor, 2)
-                out[name]["vs_shuffle_anchor"] = ratio
-            # spill check runs regardless of anchor availability: any
-            # spill at this tier is a sizing regression on its own
-            # (ADVICE r6: this was nested under `if byte_anchor` and
-            # could never fire while the anchor dict was empty)
-            if (ratio is not None and ratio > 1.25) or bytes_["spill"] > 0:
-                out[name]["regression"] = True
-                vs = (
-                    f"vs anchor {byte_anchor}B ({ratio}x)"
-                    if byte_anchor
-                    else "(no anchor yet)"
-                )
-                print(
-                    f"# STRESS-SF10 REGRESSION {name}: shuffle "
-                    f"{bytes_['shuffle_write']}B {vs}, "
-                    f"spill {bytes_['spill']}B",
-                    file=sys.stderr,
-                )
-        print(
-            f"# stress sf10 {name}: {sec:.3f}s ({n} rows, "
-            f"shuffle {bytes_['shuffle_write'] if bytes_ else '?'}B, "
-            f"vs_sf1 {out[name]['vs_sf1_ratio']}x)",
-            file=sys.stderr,
+        if b is None:
+            b = metrics.since(wm)
+    df = build()
+    return {
+        "sec": sec,
+        "cold_sec": cold,
+        "rows": df.count(),
+        "shuffle_bytes": b["shuffle_write"],
+        "spill_bytes": b["spill"],
+        "exchanges": plan_stats(df)["exchanges"],
+    }
+
+
+def pin_violations(got: dict, pin: tuple) -> dict:
+    """The pins `got` breaks, as {field: pinned value}: rows differ,
+    exchanges differ (None = not pinned), shuffle bytes grew more than
+    25% (past a zero pin: a new shuffle over 1 MB), or anything spilled."""
+    rows, shuffle, exchanges = pin
+    bad: dict = {}
+    if got["rows"] != rows:
+        bad["rows"] = rows
+    if exchanges is not None and got.get("exchanges") != exchanges:
+        bad["exchanges"] = exchanges
+    if got["shuffle_bytes"] > (shuffle * 1.25 if shuffle else 1 << 20):
+        bad["shuffle_bytes"] = shuffle
+    if got["spill_bytes"]:
+        bad["spill_bytes"] = 0
+    return bad
+
+
+REPO = os.path.dirname(os.path.abspath(__file__))
+STRESS_DIR = os.path.join(REPO, ".stress_sf1")
+STRESS10_DIR = os.path.join(REPO, ".stress_sf10")
+SF100_DIR = os.path.join(REPO, ".stress_sf100")
+
+
+def _build_tagged(spark, src: str, dest: str, marker: str, tag: str,
+                  stride: int, files: int, emb_salt: str | None) -> None:
+    """Materialize a 10x corpus from `src` once (marker-guarded,
+    gitignored). Every word in copy i>0 gets the tag f"{tag}{i}", so each
+    copy reproduces the source's intra-copy near-dup structure verbatim
+    while sharing ZERO shingles across copies — true near-dup structure
+    grows exactly linearly (a partial mutation was rejected: an unchanged
+    rare shingle's document frequency grows 10x and prefix candidates
+    quadratically). Embeddings (when `emb_salt` is given) get a per-copy
+    Rademacher sign pattern: within-copy cosines exact, cross-copy ~0.
+    Written as `files` hash-partitioned files (a one-file corpus
+    scan-gated every stress query on one straggler task)."""
+    from pyspark.sql import functions as F
+
+    done = os.path.join(dest, marker)
+    if os.path.exists(done):
+        return
+    docs = spark.read.parquet(f"{src}/documents.parquet")
+    copies = spark.range(10).select(F.col("id").cast("int").alias("copy"))
+    docs.crossJoin(copies).select(
+        (F.col("doc_id") + F.col("copy") * F.lit(stride)).alias("doc_id"),
+        F.when(F.col("copy") == 0, F.col("text"))
+        .otherwise(
+            F.array_join(
+                F.expr(
+                    "transform(split(text, ' '), "
+                    f"w -> concat(w, '{tag}', copy))"
+                ),
+                " ",
+            )
         )
-    return out
+        .alias("text"),
+        *[c for c in docs.columns if c not in ("doc_id", "text")],
+    ).repartition(files, "doc_id").write.mode("overwrite").parquet(
+        f"{dest}/documents.parquet"
+    )
+    if emb_salt is not None:
+        emb = spark.read.parquet(f"{src}/embeddings.parquet")
+        emb.crossJoin(copies).select(
+            (F.col("vec_id") + F.col("copy") * F.lit(stride)).alias("vec_id"),
+            F.when(F.col("copy") == 0, F.col("embedding"))
+            .otherwise(
+                F.expr(
+                    "transform(embedding, (x, d) -> CAST(x * "
+                    f"(CASE WHEN pmod(xxhash64(concat({emb_salt}copy, ',', d)), 2) = 0 "
+                    "THEN 1.0 ELSE -1.0 END) AS FLOAT))"
+                )
+            )
+            .alias("embedding"),
+            *[c for c in emb.columns if c not in ("vec_id", "embedding")],
+        ).repartition(files, "vec_id").write.mode("overwrite").parquet(
+            f"{dest}/embeddings.parquet"
+        )
+    with open(done, "w") as fh:
+        fh.write("ok\n")
 
 
-def run_stress(
-    spark, warm: dict, sf01_dir: str, cal_ratio: float = 1.0, metrics=None
-) -> dict:
-    """sf1 (10x docs/embeddings) anchors for the pair machinery: the
-    operators whose cost could creep quadratically with corpus size.
-    Reported per query: BEST-OF-3 steady seconds (r5: single-shot
-    stress timings let one GC pause / host hiccup fabricate a
-    regression — BENCH_r04 recorded q86 at 2.58x that controlled
-    re-measurement put at 0.39x) + shuffle/spill bytes from the status
-    store + ratio vs its own sf0.1 steady time (rows grew 10x;
-    candidate/sizing rules should keep the ratio near-linear, i.e.
-    ~O(10), not O(100)). The REGRESSION TRIGGER for stress is the
-    machine-independent shuffle-byte anchor (STRESS_SHUFFLE_ANCHOR) or
-    nonzero spill, never wall time."""
+def _build_stress_sf1(spark, sf01_dir: str) -> None:
+    """The 10x 'sf1' stress corpus (50k docs / 20k vectors) from sf0.1."""
+    _build_tagged(spark, sf01_dir, STRESS_DIR, "_BUILT_v3", "x",
+                  10_000_000, 32, "")
+
+
+def _build_stress_sf10(spark) -> None:
+    """The 100x 'sf10' corpus (500k docs / 200k vectors) from sf1; tag
+    'y{copy}' composes with sf1's 'x{copy}', and a second independent
+    sign pattern keeps cross-copy cosines ~0."""
+    _build_tagged(spark, STRESS_DIR, STRESS10_DIR, "_BUILT_v2", "y",
+                  1_000_000_000, 64, "'t2:', ")
+
+
+def _stress_cases(spark, sdir: str) -> dict:
+    """The pair-machinery operators whose cost could creep quadratically
+    with corpus size, as builders over the stress corpus at `sdir`."""
     from torcharrow_spark.operators import (
+        cdc_dedup_stats,
         cosine_pairs,
+        cross_doc_spans,
+        exact_dedup_ids,
         minhash_pairs,
         ngram_jaccard_pairs,
+        simhash_pairs,
+        strip_duplicate_spans,
     )
-    from torcharrow_spark.operators import cdc_dedup_stats as _cdc_stats
     from torcharrow_spark.queries import QUERIES
-
-    _build_stress_sf1(spark, sf01_dir)
-    sdir = STRESS_DIR
 
     def docs():
         return spark.read.parquet(f"{sdir}/documents.parquet")
@@ -1390,24 +403,15 @@ def run_stress(
     def emb():
         return spark.read.parquet(f"{sdir}/embeddings.parquet")
 
-    from torcharrow_spark.operators import (
-        cross_doc_spans as _cross_doc_spans,
-        exact_dedup_ids,
-        simhash_pairs,
-        strip_duplicate_spans,
-    )
-
-    cases = {
+    return {
         # same params as q19 (banded pair growth tracks true dups)
         "q19_minhash_pairs": lambda: minhash_pairs(
             docs(), shingle_k=3, num_hashes=8, bands=4
         ),
         # one 120-bit-key shuffle; scales with rows
         "q18_exact_dedup": lambda: exact_dedup_ids(docs()),
-        # block-permutation pigeonhole, sizing rule now SELF-APPLIED:
-        # bits='auto' counts the corpus and picks
-        # (k+1) * log2(corpus/256) clamped to [16, 64] — 32 at 50k docs,
-        # keeping (block,value) bucket occupancy constant at 10x rows
+        # bits='auto' sizes (k+1) * log2(corpus/256), clamped to [16, 64],
+        # keeping (block, value) bucket occupancy constant as rows grow
         "q46_simhash_pairs": lambda: simhash_pairs(
             docs(), bits="auto", max_hamming=3
         ),
@@ -1417,96 +421,88 @@ def run_stress(
         "q21_ngram_jaccard_auto": lambda: ngram_jaccard_pairs(
             docs(), shingle_k=3, threshold=0.3, mode="auto"
         ),
-        # sizing rule SELF-APPLIED since r8 (VERDICT r7 ask #3):
-        # n_planes='auto' counts the corpus and picks ceil(log2(n/128))
-        # — 8 planes at 20k vectors, exactly the pre-r8 manual pin, so
-        # the byte anchor carries over (+ one count-job exchange, bytes
-        # negligible); the manual +log2(10) bump per decade is gone
+        # n_planes='auto' = ceil(log2(n/128)) planes
         "q42_cosine_dedup": lambda: cosine_pairs(
             emb(), threshold=0.2, n_planes="auto"
         ),
         "q105_heavy_hitters": lambda: QUERIES["q105_heavy_hitters"](
             spark, sdir
         ),
-        # r9 session-2: CDC sharing stats — byte-driven, so the anchor
-        # tracks corpus CHARS (19.7M at sf1), not doc count
-        "q157_cdc_dedup": lambda: _cdc_stats(docs()),
-        # r12: cross-doc exact substring dedup — the anchor-gram fanout
-        # is linear in corpus tokens and every exchange is fixed-width
-        # hash rows; the byte pin is the shuffle-linearity proof
-        # (VERDICT r11 ask #4)
-        "q175_cross_doc_spans": lambda: _cross_doc_spans(docs(), k=30),
+        # byte-driven: bytes track corpus CHARS, not doc count
+        "q157_cdc_dedup": lambda: cdc_dedup_stats(docs()),
+        # anchor-gram fanout is linear in corpus tokens; every exchange
+        # is fixed-width hash rows
+        "q175_cross_doc_spans": lambda: cross_doc_spans(docs(), k=30),
     }
-    base = {
-        "q21_ngram_jaccard_auto": warm.get("q21_ngram_jaccard"),
-        "q86_strip_spans": warm.get("q86_strip_duplicate_spans"),
-    }
-    if "q46_simhash_pairs" not in warm:
-        # not a headline query: measure its sf0.1 steady time here so
-        # the stress ratio has a denominator
-        b = spark.read.parquet(f"{sf01_dir}/documents.parquet")
-        _sink(simhash_pairs(b, max_hamming=3))
-        t0 = time.perf_counter()
-        _sink(simhash_pairs(b, max_hamming=3))
-        base["q46_simhash_pairs"] = time.perf_counter() - t0
+
+
+# sf1 stress pins (rows, shuffle-write bytes, exchanges), one steady run
+# on the sf1 corpus; any spill is a regression on its own. Measured at
+# PLAN_WIDTH 32 on local[4] (corpus built there too); the comment compares
+# the bytes with the local[32] r13 run and its pin.
+STRESS_PINS: dict[str, tuple[int, int, int | None]] = {
+    "q19_minhash_pairs": (7177, 11349750, 18),  # = r13 pin
+    "q18_exact_dedup": (49920, 2196089, 2),  # = r13 pin
+    "q46_simhash_pairs": (3119839, 67760383, 12),  # = r13 pin
+    "q86_strip_spans": (50000, 71474498, 4),  # = r13 pin
+    "q21_ngram_jaccard_auto": (2560, 215444450, 8),  # = r13 capture; r13 pin was 215683097
+    "q42_cosine_dedup": (144985, 6331168, 2),  # = r13 pin
+    "q105_heavy_hitters": (300, 871654, 6),  # = r13 pin
+    "q157_cdc_dedup": (50000, 74892916, 6),  # = r13 pin
+    "q175_cross_doc_spans": (3550, 60489744, 6),  # = r13 pin
+}
+
+# sf10 pins (rows, shuffle-write bytes, exchanges), not re-measured at
+# PLAN_WIDTH on local[4] (the tier needs the 500k-doc corpus): rows from
+# the local[32] BENCH_full_r13 run, bytes the earlier local[32] pins,
+# which that run matched within 4%. PLAN_WIDTH 32 keeps their partitioning.
+STRESS_SF10_PINS: dict[str, tuple[int, int, int | None]] = {
+    "q19_minhash_pairs": (72529, 116_348_489, None),
+    "q46_simhash_pairs": (2325687, 95_475_855, None),
+    "q86_strip_spans": (500000, 943_221_883, None),
+    "q21_ngram_jaccard_auto": (25600, 10_911_099_791, None),
+    "q42_cosine_dedup": (2939128, 59_918_395, None),
+    "q157_cdc_dedup": (500000, 1_019_480_207, None),
+}
+
+
+def run_stress_tier(spark, sdir: str, pins: dict, best_of: int,
+                    metrics: StageMetrics, label: str,
+                    lower: dict | None = None) -> dict:
+    """Measure the pinned stress cases on the corpus at `sdir`. Each row
+    reports best-of steady seconds, its ratio to the same case one
+    decade down (`lower`, sec by name; ~10 = linear), and the pins; a
+    moved pin puts its violations under "regression"."""
+    cases = _stress_cases(spark, sdir)
     out: dict[str, dict] = {}
-    best_of = 3
-    for name, build in cases.items():
-        _sink(build())  # cold run: codegen/broadcast spin-up
-        sec = float("inf")
-        bytes_ = None
-        for rep in range(best_of):
-            wm = metrics.snapshot() if metrics else None
-            t0 = time.perf_counter()
-            _sink(build())
-            sec = min(sec, round(time.perf_counter() - t0, 3))
-            if metrics and bytes_ is None:
-                # bytes are (plan, data)-deterministic: one capture
-                bytes_ = metrics.since(wm)
-        n = build().count()  # row count (untimed)
-        b = base.get(name, warm.get(name))
-        anchor = STRESS_ANCHOR.get(name)
-        if anchor is not None:
-            anchor = anchor * cal_ratio  # machine-normalized (see CAL_ANCHOR_SEC)
-        out[name] = {
-            "sec": sec,
-            "best_of": best_of,
-            "rows": n,
-            "vs_sf01_ratio": round(sec / b, 2) if b else None,
-            "vs_anchor": round(sec / anchor, 2) if anchor else None,
-        }
-        if bytes_ is not None:
-            out[name]["shuffle_bytes"] = bytes_["shuffle_write"]
-            out[name]["spill_bytes"] = bytes_["spill"]
-            byte_anchor = STRESS_SHUFFLE_ANCHOR.get(name)
-            if byte_anchor:
-                ratio = round(bytes_["shuffle_write"] / byte_anchor, 2)
-                out[name]["vs_shuffle_anchor"] = ratio
-                if ratio > 1.25 or bytes_["spill"] > 0:
-                    out[name]["regression"] = True
-                    print(
-                        f"# STRESS REGRESSION {name}: shuffle "
-                        f"{bytes_['shuffle_write']}B vs anchor {byte_anchor}B "
-                        f"({ratio}x), spill {bytes_['spill']}B",
-                        file=sys.stderr,
-                    )
+    for name, pin in pins.items():
+        m = measure(cases[name], metrics, best_of)
+        m["best_of"] = best_of
+        b = (lower or {}).get(name)
+        m["vs_lower_tier_ratio"] = round(m["sec"] / b, 2) if b else None
+        bad = pin_violations(m, pin)
+        if bad:
+            m["regression"] = bad
+            print(f"# STRESS {label} REGRESSION {name}: {m} vs pin {pin}",
+                  file=sys.stderr)
+        out[name] = m
         print(
-            f"# stress sf1 {name}: {sec:.3f}s best-of-{best_of} ({n} rows, "
-            f"shuffle {bytes_['shuffle_write'] if bytes_ else '?'}B)",
+            f"# stress {label} {name}: {m['sec']:.3f}s best-of-{best_of} "
+            f"({m['rows']} rows, shuffle {m['shuffle_bytes']}B, "
+            f"{m['exchanges']} exchanges)",
             file=sys.stderr,
         )
-    # r13 (VERDICT r12 ask #9): pair-stage SKEW EVIDENCE at stress scale
-    # for the q42 cosine family — measurement-only, additions to the
-    # stress payload, no timed region touched. The quantified "no skew
-    # by construction" argument this row evidences: (1) election caps a
-    # bucket at min(DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND /
-    # member_bytes) members (~116k at dim 64); (2) the salted emitter
-    # splits a bucket of m members into ceil(m/chunk)^2 chunk-pair
-    # tasks of <= chunk^2 candidate pairs each — so bucket skew
-    # becomes MORE tasks, never BIGGER tasks, and the max-task
-    # candidate count is min(C(m_max,2), chunk^2) regardless of the
-    # key distribution. The histogram shows where organic sf1 buckets
-    # actually sit relative to both bounds.
+    return out
+
+
+def pair_skew_q42(spark) -> dict:
+    """Pair-stage skew evidence for the q42 cosine family on the sf1
+    corpus (measurement only). Election caps a bucket at
+    min(DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND / member_bytes)
+    members, and the salted emitter splits a bucket of m members into
+    ceil(m/chunk)^2 chunk-pair tasks of <= chunk^2 candidate pairs — so
+    bucket skew becomes MORE tasks, never BIGGER tasks. The histogram
+    shows where organic sf1 buckets sit relative to both bounds."""
     from pyspark.sql import functions as F
 
     from torcharrow_spark.operators.dedup import (
@@ -1520,7 +516,7 @@ def run_stress(
         lsh_bucket,
     )
 
-    e = emb()
+    e = spark.read.parquet(f"{STRESS_DIR}/embeddings.parquet")
     n_planes = _resolve_n_planes(e, "auto", "cosine_pairs")
     dim = _infer_dim(e, "embedding")
     sizes = (
@@ -1538,27 +534,19 @@ def run_stress(
     elect_cap = min(DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND // member_bytes)
     m_max = int(h["max_members"])
     chunk = DEFAULT_EMIT_CHUNK
-    max_task_pairs = min(m_max * (m_max - 1) // 2, chunk * chunk)
-    med = float(h["p50_members"])
-    out["pair_skew_q42"] = {
+    out = {
         "n_planes": n_planes,
         "n_buckets": int(h["n_buckets"]),
         "max_members": m_max,
-        "p50_members": med,
+        "p50_members": float(h["p50_members"]),
         "p99_members": float(h["p99_members"]),
         "elect_cap_members": int(elect_cap),
         "emit_chunk": chunk,
         "per_task_candidate_cap": chunk * chunk,
-        "max_task_candidate_pairs": max_task_pairs,
+        "max_task_candidate_pairs": min(m_max * (m_max - 1) // 2, chunk * chunk),
         "max_bucket_under_elect_cap": m_max <= elect_cap,
     }
-    print(
-        f"# stress sf1 pair-skew q42: {h['n_buckets']} buckets, members "
-        f"max {m_max} / p99 {h['p99_members']} / p50 {med} "
-        f"(elect cap {elect_cap}); max task candidates {max_task_pairs} "
-        f"(hard cap {chunk * chunk})",
-        file=sys.stderr,
-    )
+    print(f"# stress sf1 pair-skew q42: {out}", file=sys.stderr)
     return out
 
 
@@ -1753,34 +741,12 @@ def run_recall_curves(spark, sf01_dir: str, n_queries: int = 24) -> dict:
     return out
 
 
-# sf0.1 steady seconds for the Arrow-native bulk tensor bridge — the
-# reference's raison d'être (§2.12) and, until r5, the only surface
-# with no scale measurement (r4 verdict ask #3). Workload: ALL sf0.1
-# lineitem rows (600k x 7 numeric columns) streamed through
-# interop_torch.batched_tensors — executor-side Arrow IPC serialize
-# (mapInArrow), driver-side re-chunk to exact 65536-row tensor dicts.
-# Measured r5 first run = anchor; throughput reported as rows/s and
-# MB/s of Arrow payload crossing the bridge.
-# RE-ANCHORED within r5 after the bridge was profiled against raw
-# toArrow (4.8x overhead found): prefetchPartitions on toLocalIterator
-# overlaps JVM partition compute with driver conversion, and the
-# per-yield re-chunk now combines only the HEAD slice (the old code
-# combine_chunks'd head+tail every yield, re-copying the carried tail
-# O(batches) times). 1.57 s -> 1.005 s best-of-3 (597k rows/s).
-# Anchor = mean of three post-fix measurements normalized by their
-# runs' calibration factors (0.727, 0.90, 0.84 — the bridge is a
-# driver-side loop, noisier than executor queries, hence best-of-3 in
-# the measurement loop below and a mean anchor rather than a
-# single-run pin).
-TENSOR_EXPORT_ANCHOR_SEC = 0.82
-
-
-def run_tensor_export(spark, sf_dir: str, cal_ratio: float = 1.0) -> dict:
-    """Throughput anchor for `interop_torch.batched_tensors`: rows/s
-    and MB/s over the full sf lineitem numeric projection. The loop
-    consumes every yielded batch and checks exact batch sizing, so the
-    measurement covers executor IPC serialize + driver IPC parse +
-    numpy conversion — the whole bridge, nothing skipped."""
+def run_tensor_export(spark, sf_dir: str) -> dict:
+    """Throughput of `interop_torch.batched_tensors` (rows/s, MB/s) over
+    ALL sf lineitem rows x 7 numeric columns: executor-side Arrow IPC
+    serialize (mapInArrow), driver-side re-chunk to exact 65536-row
+    tensor dicts, numpy conversion of every yielded batch — the whole
+    bridge, nothing skipped. Best-of-3 steady (a driver-side loop)."""
     import numpy as np
 
     from torcharrow_spark.interop_torch import batched_tensors
@@ -1805,7 +771,7 @@ def run_tensor_export(spark, sf_dir: str, cal_ratio: float = 1.0) -> dict:
 
     consume()  # cold: codegen + Arrow path warm-up
     sec = float("inf")
-    for _ in range(3):  # best-of-3: driver-side loop, host-noise prone
+    for _ in range(3):
         t0 = time.perf_counter()
         rows, nbytes = consume()
         sec = min(sec, round(time.perf_counter() - t0, 3))
@@ -1817,54 +783,25 @@ def run_tensor_export(spark, sf_dir: str, cal_ratio: float = 1.0) -> dict:
         "rows_per_sec": int(rows / sec),
         "mb_per_sec": round(nbytes / 1e6 / sec, 1),
         "batch_size": batch,
-        "vs_anchor": round(sec / (TENSOR_EXPORT_ANCHOR_SEC * cal_ratio), 2)
-        if TENSOR_EXPORT_ANCHOR_SEC
-        else None,
     }
-    print(
-        f"# tensor_export: {sec:.3f}s steady, {rows} rows "
-        f"({out['rows_per_sec']}/s, {out['mb_per_sec']} MB/s)",
-        file=sys.stderr,
-    )
+    print(f"# tensor_export: {out}", file=sys.stderr)
     return out
 
 
 GPT2_ENCODER = "/root/reference/torcharrow/test/asset/gpt2_bpe_encoder.json"
 GPT2_VOCAB = "/root/reference/torcharrow/test/asset/gpt2_bpe_vocab.bpe"
 
-# sf0.1 steady seconds for the REAL 50k-merge GPT-2 vocab (r4 first
-# measurement = anchor): q41's toy vocab exercises the merge loop shape
-# but a 15-merge vocab terminates each word in a couple of iterations —
-# the real vocab is the only honest measure of the one Python-heavy
-# headline operator. Measured r4: 0.897s steady / 271k tokens
-# (302k tokens/s on local[32]) — within noise of the toy-vocab q41
-# anchor (0.917s): per-batch cost is dominated by Arrow transfer + the
-# pretokenizer regex, and the per-token-TYPE merge cache amortizes the
-# 50k-rank merge loop across repeated words. Gated on the public
-# reference asset.
-BPE_ANCHOR_SEC = 0.897
 
-
-# r11 (VERDICT r10 ask #5): the real-file WARC tier. q166 synthesizes
-# its WARC bytes in Python EVERY run, so its wall measures synth+parse
-# together; this tier materializes the sf0.1 synthetic crawl ONCE as
-# .warc.gz files (q166's exact page/encoding shape, 32 files of
-# per-record gzip members — the Common Crawl layout) and anchors the
-# PARSE PATH alone: binaryFile scan -> warc_records -> charset decode
-# -> html_extract, noop sink.
-WARC_FIXTURE_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".warc_fixture_sf01"
-)
-# r11 first measurement: steady 1.8 s at bracketing probe factor 1.24
-# => ~1.45 anchor-era seconds (5000 docs / 20k records off disk; the
-# quietest of three probe-bracketed windows — the r11 host oscillated
-# 1.2x-33x during pinning, see GATES r11). Byte pin: ZERO — the whole
-# chain (binaryFile scan -> warc_records -> decode -> extract) is
-# shuffle-free; 32 files = full local[32] parallelism, so the
-# narrow-source spread correctly never fires. Any nonzero shuffle
-# appearing here is a plan regression.
-WARC_INGEST_ANCHOR_SEC = 1.45
-WARC_INGEST_SHUFFLE_ANCHOR = 0
+# The real-file WARC tier: the sf0.1 synthetic crawl materialized ONCE
+# as .warc.gz files (q166's page/encoding shape, 32 files of per-record
+# gzip members — the Common Crawl layout), timing the PARSE PATH alone:
+# binaryFile scan -> warc_records -> charset decode -> html_extract.
+WARC_FIXTURE_DIR = os.path.join(REPO, ".warc_fixture_sf01")
+# (rows, shuffle-write bytes, exchanges): the whole chain is
+# shuffle-free and 32 files give full width, so the narrow-source spread
+# never fires. Measured at PLAN_WIDTH 32 on local[4]; r13 (local[32])
+# recorded the same rows and bytes.
+WARC_INGEST_PIN = (5000, 0, 0)
 
 
 def _build_warc_fixture(spark, sf_dir: str) -> None:
@@ -1876,7 +813,6 @@ def _build_warc_fixture(spark, sf_dir: str) -> None:
     marker = os.path.join(WARC_FIXTURE_DIR, "_SUCCESS")
     if os.path.exists(marker):
         return
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from torcharrow_spark.sources import write_warc
@@ -1958,21 +894,16 @@ def _build_warc_fixture(spark, sf_dir: str) -> None:
         fh.write(str(n))
 
 
-# r12 (VERDICT r11 ask #3): q166's headline row now measures the
-# ENGINE — the synthesized crawl is materialized ONCE per sf_dir as a
-# (doc_id, warc<binary>) parquet fixture (the exact q166_warc_frame
-# output: charset quarters, mojibake, dup-bait path classes) and the
-# timed region runs q166_chain off those bytes. The per-run Python
-# WARC synthesis + per-record gzip COMPRESSION that was ~97% of the
-# r10/r11 23.5 s headline wall is now fixture-build cost, paid once
-# and marker-guarded. A parquet blob column (not .warc.gz files via
-# read_warc) because the chain is keyed by doc_id and the /exact
-# dup-bait path class makes doc_id unrecoverable from a record's URI
-# by design — the warc_file_ingest tier already prices the
-# .warc.gz-file front door separately.
-Q166_FIXTURE_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".q166_fixture"
-)
+# q166's headline row times the ENGINE: the synthesized crawl is
+# materialized ONCE per sf_dir as a (doc_id, warc<binary>) parquet
+# fixture (the exact q166_warc_frame output) and the timed region runs
+# q166_chain off those bytes, so per-run Python WARC synthesis and gzip
+# compression are fixture-build cost, paid once and marker-guarded. A
+# parquet blob column (not .warc.gz files) because the chain is keyed by
+# doc_id, which the /exact dup-bait path class makes unrecoverable from
+# a record's URI; the warc_file_ingest tier prices the .warc.gz front
+# door separately.
+Q166_FIXTURE_DIR = os.path.join(REPO, ".q166_fixture")
 
 
 def _build_q166_fixture(spark, sf_dir: str) -> str:
@@ -2008,13 +939,10 @@ HEADLINE_OVERRIDES = {
 }
 
 
-def run_warc_file_ingest(spark, sf_dir: str, cal_ratio: float = 1.0,
-                         metrics=None) -> dict:
-    """Parse-path-only WARC anchor: read the materialized .warc.gz
-    fixture from disk (one task per file), explode records, decode
-    charsets, extract text — the q166 front door WITHOUT the per-run
-    Python synthesis whose cost dominated its wall (BENCH_r10 plan
-    audit). Reports steady seconds, rows, shuffle bytes vs pin."""
+def run_warc_file_ingest(spark, sf_dir: str, metrics: StageMetrics) -> dict:
+    """Parse-path-only WARC tier: read the materialized .warc.gz fixture
+    from disk (one task per file), explode records, decode charsets,
+    extract text. Best-of-2 steady seconds and the pins."""
     from pyspark.sql import functions as F
 
     from torcharrow_spark.operators import html_extract
@@ -2037,107 +965,47 @@ def run_warc_file_ingest(spark, sf_dir: str, cal_ratio: float = 1.0,
             passthrough=("encoding", "target_uri"),
         )
 
-    rows = build().count()  # cold pass doubles as the row count
-    wm = metrics.snapshot() if metrics else None
-    sec = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _sink(build())
-        sec = min(sec, round(time.perf_counter() - t0, 3))
-    b = metrics.since(wm) if metrics else {}
-    out = {
-        "sec": sec,
-        "rows": int(rows),
-        "shuffle_bytes": b.get("shuffle_write"),
-        "spill_bytes": b.get("spill", 0),
-        "anchor_sec": WARC_INGEST_ANCHOR_SEC,
-        "vs_anchor_normalized": round(
-            sec / (WARC_INGEST_ANCHOR_SEC * cal_ratio), 2
-        ),
-        "shuffle_anchor": WARC_INGEST_SHUFFLE_ANCHOR,
-    }
+    out = measure(build, metrics, best_of=2)
+    bad = pin_violations(out, WARC_INGEST_PIN)
+    if bad:
+        out["regression"] = bad
     print(f"# warc_file_ingest: {out}", file=sys.stderr)
     return out
 
 
-SF100_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".stress_sf100"
-)
-
-#: r12 first measurement with THIS builder/partitioning (one-shot
-#: count sink, 5M docs in 128 files): 1,168,758,597 B, 727,097 output
-#: rows — the row count matches the r7 SCALE_SF100.md evidence run
-#: EXACTLY and the bytes sit 1.2% from its 1154.9 MB under a
-#: different file layout (byte anchors are a property of (plan,
-#: data, partitioning), so the per-round row pins its own build).
-#: Zero spill.
-SF100_Q19_SHUFFLE_ANCHOR = 1_168_758_597
+#: (rows, shuffle-write bytes, exchanges) of one count-sink execution
+#: of q19's minhash_pairs on the 5M-doc corpus (128 files): the r12
+#: capture on local[32], not re-measured since.
+SF100_Q19_PIN = (727097, 1_168_758_597, None)
 
 
-def run_stress_sf100_bytes(spark) -> dict:
-    """r12 (VERDICT r11 ask #8): fold the sf100 evidence into the
-    per-round gate CHEAPLY — one byte-only assertion for one pair
-    family at the third decade, so 50k -> 5M docs shuffle linearity
-    cannot silently rot between one-off evidence runs. The 5M-doc
-    corpus is built ONCE per machine from the sf10 corpus by the
-    SCALE_SF100.md copy-tagging scheme ('z{copy}' word tags — no
-    shingle crosses any effective copy, so true near-dup structure is
-    exactly linear by construction); the measurement is a SINGLE
-    count-sink execution of q19's minhash_pairs with shuffle/spill
-    captured — no steady re-run, no wall claim (walls at this tier
-    are scan-layout noise, see SCALE_SF100.md's straggler analysis).
-    The gate: bytes within 25% of the pin and ZERO spill."""
-    from pyspark.sql import functions as F
-
+def run_stress_sf100_bytes(spark, metrics: StageMetrics) -> dict:
+    """One byte-only assertion for one pair family at the third decade,
+    so 50k -> 5M docs shuffle linearity cannot silently rot between
+    one-off evidence runs. The 5M-doc corpus is built ONCE per machine
+    from the sf10 corpus by the SCALE_SF100.md copy-tagging scheme
+    ('z{copy}' word tags); the measurement is a SINGLE count-sink
+    execution of q19's minhash_pairs — no steady re-run, no wall claim.
+    The gate: rows equal, bytes within 25% of the pin, zero spill."""
     from torcharrow_spark.operators import minhash_pairs
 
     _build_stress_sf10(spark)
-    done = os.path.join(SF100_DIR, "_BUILT_v1")
-    if not os.path.exists(done):
-        docs = spark.read.parquet(f"{STRESS10_DIR}/documents.parquet")
-        copies = spark.range(10).select(
-            F.col("id").cast("int").alias("copy")
-        )
-        d = docs.crossJoin(copies).select(
-            (F.col("doc_id") + F.col("copy") * F.lit(10_000_000_000))
-            .alias("doc_id"),
-            F.when(F.col("copy") == 0, F.col("text"))
-            .otherwise(
-                F.array_join(
-                    F.expr(
-                        "transform(split(text, ' '), "
-                        "w -> concat(w, 'z', copy))"
-                    ),
-                    " ",
-                )
-            )
-            .alias("text"),
-            *[c for c in docs.columns if c not in ("doc_id", "text")],
-        )
-        d.repartition(128, "doc_id").write.mode("overwrite").parquet(
-            f"{SF100_DIR}/documents.parquet"
-        )
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    try:
-        m = StageMetrics(spark)
-    except Exception:
-        m = None
+    _build_tagged(spark, STRESS10_DIR, SF100_DIR, "_BUILT_v1", "z",
+                  10_000_000_000, 128, None)
     docs100 = spark.read.parquet(f"{SF100_DIR}/documents.parquet")
-    wm = m.snapshot() if m else None
+    wm = metrics.snapshot()
     t0 = time.perf_counter()
-    rows = minhash_pairs(
-        docs100, shingle_k=3, num_hashes=8, bands=4
-    ).count()
-    wall = round(time.perf_counter() - t0, 1)
-    out: dict = {"rows": rows, "oneshot_wall_sec_unanchored": wall}
-    if m:
-        b = m.since(wm)
-        out["shuffle_bytes"] = b["shuffle_write"]
-        out["spill_bytes"] = b["spill"]
-        ratio = round(b["shuffle_write"] / SF100_Q19_SHUFFLE_ANCHOR, 3)
-        out["vs_shuffle_anchor"] = ratio
-        out["regression"] = bool(ratio > 1.25 or b["spill"] > 0)
+    rows = minhash_pairs(docs100, shingle_k=3, num_hashes=8, bands=4).count()
+    b = metrics.since(wm)
+    out: dict = {
+        "rows": rows,
+        "oneshot_wall_sec": round(time.perf_counter() - t0, 1),
+        "shuffle_bytes": b["shuffle_write"],
+        "spill_bytes": b["spill"],
+    }
+    bad = pin_violations(out, SF100_Q19_PIN)
+    if bad:
+        out["regression"] = bad
     print(f"# stress_sf100 q19 bytes: {out}", file=sys.stderr)
     return out
 
@@ -2301,15 +1169,13 @@ def run_ann_index_lifecycle(spark, sf01_dir: str) -> dict:
     return out
 
 
-def run_bpe_real_vocab(spark, sf_dir: str, cal_ratio: float = 1.0) -> dict:
+def run_bpe_real_vocab(spark, sf_dir: str) -> dict:
     """Tokenize every sf document with the full GPT-2 vocabulary
     (50,257 tokens / 50,000 merges, the PUBLIC asset shipped in the
     reference repo) through the production path — Arrow-batched
     pandas_udf, tokenizer in the task closure — and report steady
     seconds + tokens/sec. Skipped (empty dict) when the asset isn't
     mounted."""
-    import json as _json
-
     if not (os.path.exists(GPT2_ENCODER) and os.path.exists(GPT2_VOCAB)):
         return {}
     from pyspark.sql import functions as F
@@ -2318,7 +1184,7 @@ def run_bpe_real_vocab(spark, sf_dir: str, cal_ratio: float = 1.0) -> dict:
     from torcharrow_spark.functions.bpe import bpe_tokenize
 
     with open(GPT2_ENCODER, encoding="utf-8") as f:
-        encoder = _json.load(f)
+        encoder = json.load(f)
     with open(GPT2_VOCAB, encoding="utf-8") as f:
         merges = [tuple(l.split()) for l in f.read().split("\n")[1:-1]]
     tok = BPETokenizer(encoder, merges)
@@ -2339,16 +1205,9 @@ def run_bpe_real_vocab(spark, sf_dir: str, cal_ratio: float = 1.0) -> dict:
         "docs": int(row["docs"]),
         "tokens": int(row["toks"]),
         "tokens_per_sec": int(row["toks"] / sec),
-        "vs_anchor": round(sec / (BPE_ANCHOR_SEC * cal_ratio), 2)
-        if BPE_ANCHOR_SEC
-        else None,
         "n_merges": len(merges),
     }
-    print(
-        f"# bpe_real_vocab: {sec:.3f}s steady, {out['tokens']} tokens "
-        f"({out['tokens_per_sec']}/s, {len(merges)} merges)",
-        file=sys.stderr,
-    )
+    print(f"# bpe_real_vocab: {out}", file=sys.stderr)
     return out
 
 
@@ -2357,9 +1216,9 @@ def compact_line(payload: dict, full_name: str | None) -> str:
     (metric/value/unit/queries/sf) + one-number rollups of everything
     else, with the detail living in BENCH_full_r{N}.json. The driver
     keeps only the LAST 2000 chars of stdout and json-parses the final
-    line — r6 printed the full payload (~12 kB) and the round recorded
-    `parsed: null`, losing every bench number. Guaranteed <= 1900 chars
-    by progressive field-dropping (never drops the required five)."""
+    line, so the line is kept <= 1900 chars by dropping the optional
+    byte_regressions list, then compressing `queries` (never the
+    required five)."""
     stress = payload.get("stress_sf1") or {}
     stress10 = payload.get("stress_sf10") or {}
     compact = {
@@ -2369,12 +1228,7 @@ def compact_line(payload: dict, full_name: str | None) -> str:
         "queries": {k: round(v, 2) for k, v in payload["queries"].items()},
         "sf": payload["sf"],
         "spill_bytes_total": sum(payload.get("spill_bytes", {}).values()),
-        "regressions": payload.get("regressions", {}),
-        "regressions_drift_adjusted": payload.get(
-            "regressions_drift_adjusted", {}
-        ),
         "byte_regressions": sorted(payload.get("byte_regressions", {})),
-        "wall_watch": payload.get("wall_watch", {}),
         "stress_sf1_sec": round(
             sum(v.get("sec", 0) for v in stress.values()), 1
         ),
@@ -2387,34 +1241,15 @@ def compact_line(payload: dict, full_name: str | None) -> str:
         ),
         # per-tier names: five queries exist in BOTH tiers, and a
         # {**a, **b} merge would let a clean sf10 entry mask its sf1
-        # twin's flag on the one channel the driver records (r7 review)
-        "stress_regressions": sorted(
-            [k for k, v in stress.items() if v.get("regression")]
-            + [f"{k}@sf10" for k, v in stress10.items() if v.get("regression")]
-            + (
-                ["q19_minhash_pairs@sf100"]
-                if (payload.get("stress_sf100_bytes") or {}).get("regression")
-                else []
-            )
-        ),
+        # twin's flag
+        "stress_regressions": stress_regressions(payload),
         "cpus": payload.get("cpus"),
-        "bench_subset": payload.get("bench_subset"),
-        "machine_factor": payload.get("machine_factor"),
-        # r9: the interleaved-probe envelope (min/median/max factors) —
-        # the artifact's own wall-uncertainty quantification
-        "probe_factors": (payload.get("probe_spread") or {}).get("factors"),
+        "plan_width": payload.get("plan_width"),
         "full": full_name,
     }
     line = json.dumps(compact, separators=(",", ":"))
-    for drop in (
-        "wall_watch",
-        "regressions_drift_adjusted",
-        "byte_regressions",
-        "regressions",
-    ):
-        if len(line) <= 1900:
-            break
-        compact.pop(drop, None)
+    if len(line) > 1900:
+        compact.pop("byte_regressions")
         line = json.dumps(compact, separators=(",", ":"))
     # `queries` is driver-required — never dropped; if the line still
     # overflows, compress it (1-decimal, then slowest-N) instead
@@ -2432,119 +1267,27 @@ def compact_line(payload: dict, full_name: str | None) -> str:
     return line
 
 
+def stress_regressions(payload: dict) -> list:
+    """Names of every stress-tier row whose pins moved, tier-suffixed."""
+    sf1 = payload.get("stress_sf1") or {}
+    sf10 = payload.get("stress_sf10") or {}
+    out = [k for k, v in sf1.items() if v.get("regression")]
+    out += [f"{k}@sf10" for k, v in sf10.items() if v.get("regression")]
+    out += [k for k in ("warc_file_ingest", "stress_sf100_bytes")
+            if (payload.get(k) or {}).get("regression")]
+    return sorted(out)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import torcharrow_spark as ts
+    spark = gate_session("bench")
     from torcharrow_spark.queries import QUERIES
 
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(ANCHOR_CPUS)))
-    except ValueError:
-        cpus = ANCHOR_CPUS
-    subset_env = os.environ.get("SPARK_GRAFT_BENCH_SUBSET")
-    if subset_env == "1":
-        subset = True
-    elif subset_env == "0":
-        subset = False
-    else:
-        subset = cpus != ANCHOR_CPUS
-    if subset:
-        print(
-            f"# SUBSET mode (cpus={cpus}, anchor cpus={ANCHOR_CPUS}): "
-            "headline cold/steady/count only; anchor gates and "
-            "stress/recall/lifecycle tiers skipped (see ANCHOR_CPUS "
-            "note) so a low-core scaling run fits the driver window",
-            file=sys.stderr,
-        )
-
-    spark = ts.get_session("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
+    metrics = StageMetrics(spark)
     # warm the JVM + parquet footers once so timings measure the queries
     _sink(QUERIES["q01_pricing_summary"](spark, sf_dir))
     # materialize fixture-backed front doors OUTSIDE any timed region
     _build_q166_fixture(spark, sf_dir)
-
-    cal = measure_calibration(spark)
-    cal_ratio = max(cal / CAL_ANCHOR_SEC, 0.25)  # floor guards a probe fluke
-    print(
-        f"# calibration: {cal:.3f}s (anchor {CAL_ANCHOR_SEC}s, "
-        f"machine factor {cal_ratio:.2f}x)",
-        file=sys.stderr,
-    )
-
-    try:
-        metrics = StageMetrics(spark)
-    except Exception as e:  # py4j surface drift: bytes are best-effort
-        print(f"# stage metrics unavailable: {e}", file=sys.stderr)
-        metrics = None
-
-    # r10 (VERDICT r9 ask #4): probes interleave INSIDE the headline
-    # loop — one best-of-2 probe after every PROBE_BLOCK queries — so
-    # every wall has a nearest-in-time host-speed reading. r9's gate
-    # normalized by the start probe alone; that round the start probe
-    # read 3.03x while the loop ran ~1.8x, the bar sat at ~3.8x anchors
-    # and a true 3x CPU-side regression on a byte-clean plan (the
-    # decode-family failure mode) could not flag.
-    PROBE_BLOCK = 10
-    scal = measure_string_calibration(spark)
-    print(
-        f"# string calibration: {scal:.3f}s (anchor "
-        f"{STRING_CAL_ANCHOR_SEC}s, string factor "
-        f"{max(scal / STRING_CAL_ANCHOR_SEC, 0.25):.2f}x)",
-        file=sys.stderr,
-    )
-    pycal = measure_python_calibration(spark)
-    print(
-        f"# python calibration: {pycal:.3f}s (anchor "
-        f"{PYTHON_CAL_ANCHOR_SEC}s, python factor "
-        f"{max(pycal / PYTHON_CAL_ANCHOR_SEC, 0.25):.2f}x)",
-        file=sys.stderr,
-    )
-    python_probe_timeline: list[float] = [pycal]
-    string_probe_timeline: list[float] = [scal]
-    probe_timeline: list[float] = [cal]
-    probe_by_query: dict[str, int] = {}
-    warm: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    shuffle_bytes: dict[str, int] = {}
-    spill_bytes: dict[str, int] = {}
-    for qi, name in enumerate(HEADLINE):
-        qfn = HEADLINE_OVERRIDES.get(name, QUERIES[name])
-        probe_by_query[name] = len(probe_timeline) - 1
-        t0 = time.perf_counter()
-        _sink(qfn(spark, sf_dir))
-        cold[name] = round(time.perf_counter() - t0, 3)
-        wm = metrics.snapshot() if metrics else None
-        t0 = time.perf_counter()
-        _sink(qfn(spark, sf_dir))
-        warm[name] = round(time.perf_counter() - t0, 3)
-        if metrics:
-            b = metrics.since(wm)
-            shuffle_bytes[name] = b["shuffle_write"]
-            spill_bytes[name] = b["spill"]
-        n = qfn(spark, sf_dir).count()  # row count (untimed)
-        print(
-            f"# {name}: cold {cold[name]:.3f}s / steady {warm[name]:.3f}s "
-            f"({n} rows, shuffle {shuffle_bytes.get(name, '?')}B)",
-            file=sys.stderr,
-        )
-        if (qi + 1) % PROBE_BLOCK == 0 and qi + 1 < len(HEADLINE):
-            p = measure_calibration(spark, n=2)
-            probe_timeline.append(p)
-            sp = measure_string_calibration(spark, n=2)
-            string_probe_timeline.append(sp)
-            pp = measure_python_calibration(spark, n=2)
-            python_probe_timeline.append(pp)
-            print(
-                f"# block probe after {qi + 1} queries: {p:.3f}s "
-                f"(factor {max(p / CAL_ANCHOR_SEC, 0.25):.2f}x), "
-                f"string {sp:.3f}s (factor "
-                f"{max(sp / STRING_CAL_ANCHOR_SEC, 0.25):.2f}x), "
-                f"python {pp:.3f}s (factor "
-                f"{max(pp / PYTHON_CAL_ANCHOR_SEC, 0.25):.2f}x)",
-                file=sys.stderr,
-            )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -2552,434 +1295,91 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    # r5: machine-INDEPENDENT byte gate — shuffle bytes are a property
-    # of (plan, data), reproduced exactly across runs, so a >25% growth
-    # (or any nonzero spill) is a real plan/volume change even when the
-    # host is too noisy for the wall gate to say anything.
+    results: dict[str, dict] = {}
     byte_regressions: dict[str, dict] = {}
-    # subset mode: AQE partition counts shift with the core count, so
-    # even the byte channel is only anchor-comparable at ANCHOR_CPUS
-    byte_gate_ran = (
-        sf_val == ANCHOR_SF and bool(shuffle_bytes) and not subset
-    )
-    if byte_gate_ran:
-        for name, anchor_b in HEADLINE_SHUFFLE_ANCHOR.items():
-            got = shuffle_bytes.get(name)
-            if got is None:
-                continue
-            grew = anchor_b > 0 and got > anchor_b * 1.25
-            appeared = anchor_b == 0 and got > 1 << 20  # new >1MB shuffle
-            spilled = spill_bytes.get(name, 0) > 0
-            if grew or appeared or spilled:
-                byte_regressions[name] = {
-                    "shuffle_bytes": got,
-                    "anchor": anchor_b,
-                    "spill_bytes": spill_bytes.get(name, 0),
-                }
-                print(
-                    f"# BYTE REGRESSION {name}: shuffle {got}B vs anchor "
-                    f"{anchor_b}B, spill {spill_bytes.get(name, 0)}B",
-                    file=sys.stderr,
-                )
-
-    delta_vs_r1: dict[str, float] = {}
-    regressions: dict[str, float] = {}
-    if sf_val == ANCHOR_SF and not subset:
-        for name, anchor in ANCHOR.items():
-            if name not in warm:
-                continue
-            # anchors are machine-normalized: the bar scales with the
-            # calibration probe so host-speed shifts between rounds
-            # don't fabricate (or hide) regressions
-            bar = anchor * cal_ratio
-            # r10: flagged walls are NOT damped here — re-runs now
-            # happen in the deferred re-adjudication pass below,
-            # against a FRESH probe measured immediately before each
-            # re-run. Rationale (this round's own measurement): the
-            # host ran two multi-minute slow windows that the block
-            # probes read at 1.9-2.6x while the rest of the loop ran
-            # ~1.0x; in-loop damping re-ran flagged queries INSIDE the
-            # same window and confirmed phantom walls on byte-clean,
-            # code-untouched plans (q143 4.6x, q144 3.3x vs their own
-            # r9 walls). Deferred damping keeps the r9 median-of-3
-            # intermittent-detection property — a real regression
-            # reproduces at the end of the run too — while a transient
-            # window clears.
-            delta_vs_r1[name] = round(warm[name] - anchor, 3)
-            if wall_regression(
-                warm[name],
-                bar,
-                byte_clean=(
-                    byte_gate_ran
-                    and name in HEADLINE_SHUFFLE_ANCHOR
-                    and name not in byte_regressions
-                ),
-            ):
-                regressions[name] = round(warm[name] / bar, 2)
-                print(
-                    f"# wall candidate {name}: {warm[name]:.3f}s vs "
-                    f"start-probe bar {bar:.3f}s ({regressions[name]}x)"
-                    " — re-adjudicated below",
-                    file=sys.stderr,
-                )
-
-    # Supplementary drift diagnostic (r6): the calibration probe is one
-    # CPU-bound job — it can under-read host slowness that hits real
-    # queries (memory-bandwidth contention, GC pressure from a noisy
-    # neighbor). The median wall ratio across BYTE-CLEAN anchored
-    # queries is a second, plan-vouched estimate of host drift: if ten
-    # unrelated byte-identical queries all read ~1.3x, that is the
-    # host, not ten independent regressions. Reported alongside the raw
-    # gate (never replacing it) so the artifact separates "uniform
-    # inflation" from "this one query regressed": entries in
-    # `regressions` that vanish in `regressions_drift_adjusted` are
-    # within the uniform-drift envelope.
-    wall_drift_median = 1.0
-    regressions_drift_adjusted: dict[str, float] = {}
-    if sf_val == ANCHOR_SF and not subset:
-        clean_ratios = sorted(
-            warm[name] / (anchor * cal_ratio)
-            for name, anchor in ANCHOR.items()
-            if name in warm
-            and anchor * cal_ratio > 0
-            and byte_gate_ran
-            and name in HEADLINE_SHUFFLE_ANCHOR
-            and name not in byte_regressions
+    for name in HEADLINE:
+        qfn = HEADLINE_OVERRIDES.get(name, QUERIES[name])
+        m = results[name] = measure(lambda: qfn(spark, sf_dir), metrics)
+        print(
+            f"# {name}: cold {m['cold_sec']:.3f}s / steady {m['sec']:.3f}s "
+            f"({m['rows']} rows, shuffle {m['shuffle_bytes']}B, "
+            f"{m['exchanges']} exchanges)",
+            file=sys.stderr,
         )
-        wall_drift_median = median_drift(clean_ratios)
-        regressions_drift_adjusted = drift_adjust(
-            regressions, wall_drift_median
-        )
-
-    # r9 (VERDICT r8 ask #4): the one-shot start probe is itself noisy
-    # (r8 recorded machine_factor 2.195 against a measured
-    # wall_drift_median of 0.664 — the artifact's wall claims depended
-    # on which scalar you believed). Probes run INTERLEAVED — start,
-    # inside the headline loop every 10 queries, after the loop, and
-    # after the stress tiers — and the artifact records the whole
-    # envelope so it quantifies its own wall uncertainty.
-    cal_mid = measure_calibration(spark)
-    string_probe_timeline.append(measure_string_calibration(spark))
-    python_probe_timeline.append(measure_python_calibration(spark))
-    probes_pre = probe_timeline + [cal_mid]
-    env_pre = probe_envelope(probes_pre)
-    raw_wall_drift = round(wall_drift_median * cal_ratio, 3)
-
-    # r10 (VERDICT r9 ask #4): DEFERRED re-adjudication with
-    # nearest-in-time attribution, run IMMEDIATELY after the headline
-    # loop — before the stress tiers, whose 10 GB shuffles leave the
-    # host (page cache, IO pressure) in a measurably slower state
-    # than the first pass saw; this round's first attempt re-ran
-    # candidates post-stress and watched byte-clean 1.0 s walls
-    # re-measure at 5 s. Candidates come from BOTH gates — the
-    # start-probe gate above (which a slow start probe can make
-    # toothless: r9's 3.03x probe hid a would-be 3.46x q126) and an
-    # envelope-MEDIAN gate (wall > anchor * median-probe * 1.5, which
-    # a slow HOST WINDOW can trip on a byte-clean plan: untouched
-    # q143/q144 read 3-4.6x inside a window the block probes measured
-    # at 1.9-2.6x). Every candidate re-runs bracketed by fresh probes;
-    # the flag requires the median-of-3 wall to exceed the bar at
-    # max(envelope median, bracketing probes, THIS RUN's plan-vouched
-    # raw wall drift) — the drift term is the byte-clean median wall
-    # ratio, so uniform host slowness the CPU-spin probe under-reads
-    # (memory-bandwidth contention) cannot fabricate a fleet of
-    # flags, while a single query that sticks out above the round's
-    # own drift still does. Transient weather clears; real and
-    # intermittent regressions reproduce (the r9 median-of-3
-    # property, kept).
-    block_factors = [max(p / CAL_ANCHOR_SEC, 0.25) for p in probes_pre]
-    readjudicated: dict[str, dict] = {}
-    regressions_within_probe_envelope: dict[str, float] = {}
-    wall_watch: dict[str, float] = {}
-    if sf_val == ANCHOR_SF and not subset:
-        candidates = set(regressions)
-        for name, anchor in ANCHOR.items():
-            if name in warm and warm[name] > anchor * env_pre["median"] * 1.5:
-                candidates.add(name)
-        regressions = {}
-        for name in sorted(candidates):
-            anchor = ANCHOR[name]
-            first = warm[name]
-            b = probe_by_query.get(name, 0)
-            bracket = max(
-                block_factors[b],
-                block_factors[min(b + 1, len(block_factors) - 1)],
-            )
-
-            def _rerun(q=name):
-                t0 = time.perf_counter()
-                _sink(HEADLINE_OVERRIDES.get(q, QUERIES[q])(spark, sf_dir))
-                return round(time.perf_counter() - t0, 3)
-
-            fresh_before = measure_calibration(spark, n=2)
-            sfresh_before = measure_string_calibration(spark, n=2)
-            pfresh_before = measure_python_calibration(spark, n=2)
-            damped = damped_wall(first, _rerun)
-            fresh_after = measure_calibration(spark, n=2)
-            sfresh_after = measure_string_calibration(spark, n=2)
-            pfresh_after = measure_python_calibration(spark, n=2)
-            # r11 (VERDICT r10 ask #3): the PUBLISHED steady wall is
-            # min(first_pass, damped) — r10 recorded five walls whose
-            # re-runs landed in a 1.5-3.8x probe window, and the
-            # inflated damped max became the headline number a future
-            # round diffs against. The full decomposition stays in
-            # `readjudicated`. delta_vs_r1 follows the published wall
-            # so the artifact's channels can't contradict each other.
-            warm[name] = min(first, damped)
-            delta_vs_r1[name] = round(warm[name] - anchor, 3)
-            # r11 paired-window rule — see paired_window_wall's
-            # docstring for the rationale and this round's measured
-            # need (pinned in tests/test_bench_gate.py).
-            gate_wall = paired_window_wall(first, damped)
-            # r11: the fresh bracket takes the MAX of the CPU-spin and
-            # the string/regex probes — this round's first run put 9
-            # byte-clean, code-untouched queries over their bars with
-            # fresh CPU probes reading 0.94-1.9x while the re-run
-            # walls doubled (the exact "probe can't see the workload's
-            # slowness" mode VERDICT r10 ask #1 added the string probe
-            # for; most headline queries are string/UDF-bound, not
-            # integer-ALU-bound).
-            # r12: the python-worker probe joins the bracket — the
-            # decode/parse family's walls co-vary with Python worker
-            # throughput, which neither JVM probe tracks (q130/q158
-            # adjudication, GATES r12).
-            fresh_factor = max(
-                max(fresh_before, fresh_after) / CAL_ANCHOR_SEC,
-                max(sfresh_before, sfresh_after) / STRING_CAL_ANCHOR_SEC,
-                max(pfresh_before, pfresh_after) / PYTHON_CAL_ANCHOR_SEC,
-                0.25,
-            )
-            # r11 (ADVICE r10 medium): raw_wall_drift is capped at the
-            # probe-envelope MAX before entering the bar. The drift term
-            # exists so memory-bandwidth contention the CPU-spin probe
-            # under-reads can't fabricate a fleet of flags — but
-            # uncapped, a genuine fleet-wide CPU-side regression on
-            # byte-clean plans (a slower shared UDF/decode path) inflates
-            # raw_wall_drift and raises every bar with it, self-masking.
-            # Host-measured speed now bounds the normalization: drift
-            # above what ANY probe saw is attributed to code, not host.
-            bar = anchor * max(
-                env_pre["median"],
-                fresh_factor,
-                min(raw_wall_drift, env_pre["max"]),
-            )
-            clean = (
-                byte_gate_ran
-                and name in HEADLINE_SHUFFLE_ANCHOR
-                and name not in byte_regressions
-            )
-            entry = {
-                "first_pass_wall": first,
-                "damped_wall": damped,
-                "gate_wall": gate_wall,
-                "published_wall": warm[name],
-                "bracket_probe_factor": round(bracket, 3),
-                "fresh_probe_factor": round(fresh_factor, 3),
-                "fresh_cpu_probes_sec": [fresh_before, fresh_after],
-                "fresh_string_probes_sec": [sfresh_before, sfresh_after],
-                "fresh_python_probes_sec": [pfresh_before, pfresh_after],
-                "raw_wall_drift": raw_wall_drift,
-                "bar_sec": round(bar, 3),
+        bad = pin_violations(m, HEADLINE_PINS[name]) if sf_val == PIN_SF else {}
+        if bad:
+            byte_regressions[name] = {
+                k: {"got": m[k], "pin": v} for k, v in bad.items()
             }
-            readjudicated[name] = entry
-            # r12 (VERDICT r11 ask #2): the wall channel gates only
-            # when the byte pin moved or the measurement came from a
-            # certified-quiet window; byte-clean noisy-window excesses
-            # are recorded in wall_watch (report-only) with the full
-            # decomposition above, ending the every-round
-            # re-adjudication of weather flags.
-            verdict = wall_channel_verdict(
-                wall_regression(gate_wall, bar, byte_clean=clean),
-                byte_clean=clean,
-                fresh_factor=fresh_factor,
-                windows_agree=damped <= first * 1.5,
+            print(f"# PIN REGRESSION {name}: {byte_regressions[name]}",
+                  file=sys.stderr)
+
+    tiers: dict = {}
+    if sf_val == PIN_SF and not os.environ.get("SPARK_GRAFT_NO_STRESS"):
+        _build_stress_sf1(spark, sf_dir)
+        lower = {
+            "q21_ngram_jaccard_auto": results["q21_ngram_jaccard"]["sec"],
+            "q86_strip_spans": results["q86_strip_duplicate_spans"]["sec"],
+            **{n: results[n]["sec"] for n in STRESS_PINS if n in results},
+        }
+        tiers["stress_sf1"] = run_stress_tier(
+            spark, STRESS_DIR, STRESS_PINS, 3, metrics, "sf1", lower
+        )
+        tiers["stress_sf1"]["pair_skew_q42"] = pair_skew_q42(spark)
+        if not os.environ.get("SPARK_GRAFT_NO_SF10"):
+            _build_stress_sf10(spark)
+            tiers["stress_sf10"] = run_stress_tier(
+                spark, STRESS10_DIR, STRESS_SF10_PINS, 2, metrics, "sf10",
+                {n: v["sec"] for n, v in tiers["stress_sf1"].items()
+                 if "sec" in v},
             )
-            entry["wall_channel"] = verdict
-            if verdict == "gate":
-                regressions[name] = round(gate_wall / bar, 2)
-                print(
-                    f"# REGRESSION (re-adjudicated) {name}: "
-                    f"{gate_wall:.3f}s vs bar {bar:.3f}s "
-                    f"(first pass {first:.3f}s, bracket probe "
-                    f"{bracket:.2f}x, fresh probe {fresh_factor:.2f}x, "
-                    f"raw drift {raw_wall_drift:.2f}x)",
-                    file=sys.stderr,
-                )
-            elif verdict == "watch":
-                wall_watch[name] = round(gate_wall / bar, 2)
-                print(
-                    f"# wall WATCH (byte-clean, noisy window) {name}: "
-                    f"{gate_wall:.3f}s vs bar {bar:.3f}s — fresh probe "
-                    f"{fresh_factor:.2f}x > {QUIET_PROBE_FACTOR}x or "
-                    f"windows disagree; report-only",
-                    file=sys.stderr,
-                )
-            else:
-                regressions_within_probe_envelope[name] = round(
-                    first / max(bar, 1e-9), 2
-                )
-                print(
-                    f"# cleared on re-adjudication {name}: first pass "
-                    f"{first:.3f}s -> damped {damped:.3f}s vs bar "
-                    f"{bar:.3f}s (published {warm[name]:.3f}s)",
-                    file=sys.stderr,
-                )
-
-    # r11: the drift-adjusted view is computed from FIRST-PASS walls;
-    # an entry the deferred re-adjudication just cleared (fresh-probe
-    # bracketed median-of-3 under the capped bar) is weather by direct
-    # measurement, so it must not survive into the supplementary
-    # channel either — keep only entries the final gate still flags.
-    regressions_drift_adjusted = {
-        k: v for k, v in regressions_drift_adjusted.items()
-        if k in regressions
-    }
-
-    stress: dict = {}
-    stress10: dict = {}
-    if (
-        sf_val == 0.1
-        and not subset
-        and not os.environ.get("SPARK_GRAFT_NO_STRESS")
-    ):
-        stress = run_stress(spark, warm, sf_dir, cal_ratio, metrics)
+        tiers["bpe_real_vocab"] = run_bpe_real_vocab(spark, sf_dir)
+        tiers["recall_sf1"] = run_recall_curves(spark, sf_dir)
+        tiers["ann_index_lifecycle"] = run_ann_index_lifecycle(spark, sf_dir)
         if not os.environ.get("SPARK_GRAFT_NO_SF10"):
-            stress10 = run_stress_sf10(spark, stress, cal_ratio, metrics)
+            tiers["recall_sf10"] = run_recall_sf10(spark)
+            tiers["stress_sf100_bytes"] = run_stress_sf100_bytes(spark, metrics)
+        tiers["tensor_export"] = run_tensor_export(spark, sf_dir)
+        tiers["warc_file_ingest"] = run_warc_file_ingest(spark, sf_dir, metrics)
 
-    bpe_real: dict = {}
-    recall: dict = {}
-    recall10: dict = {}
-    sf100_bytes: dict = {}
-    ann_lifecycle: dict = {}
-    tensor_export: dict = {}
-    warc_ingest: dict = {}
-    if (
-        sf_val == 0.1
-        and not subset
-        and not os.environ.get("SPARK_GRAFT_NO_STRESS")
-    ):
-        bpe_real = run_bpe_real_vocab(spark, sf_dir, cal_ratio)
-        recall = run_recall_curves(spark, sf_dir)
-        ann_lifecycle = run_ann_index_lifecycle(spark, sf_dir)
-        if not os.environ.get("SPARK_GRAFT_NO_SF10"):
-            recall10 = run_recall_sf10(spark)
-            sf100_bytes = run_stress_sf100_bytes(spark)
-        tensor_export = run_tensor_export(spark, sf_dir, cal_ratio)
-        warc_ingest = run_warc_file_ingest(spark, sf_dir, cal_ratio, metrics)
-
-    cal_end = measure_calibration(spark)
-    string_probe_timeline.append(measure_string_calibration(spark))
-    python_probe_timeline.append(measure_python_calibration(spark))
-    probes = probes_pre + [cal_end]
-    factor_env = probe_envelope(probes)
-    string_factors = sorted(
-        max(p / STRING_CAL_ANCHOR_SEC, 0.25) for p in string_probe_timeline
-    )
-    python_factors = sorted(
-        max(p / PYTHON_CAL_ANCHOR_SEC, 0.25) for p in python_probe_timeline
-    )
-    python_probe_spread = {
-        "probes_sec": python_probe_timeline,
-        "factors": {
-            "min": round(python_factors[0], 3),
-            "median": round(
-                python_factors[len(python_factors) // 2], 3
-            ),
-            "max": round(python_factors[-1], 3),
-        },
-    }
-    string_probe_spread = {
-        "probes_sec": string_probe_timeline,
-        "factors": {
-            "min": round(string_factors[0], 3),
-            "median": round(
-                string_factors[len(string_factors) // 2], 3
-            ),
-            "max": round(string_factors[-1], 3),
-        },
-    }
-    # raw wall drift (walls / unnormalized anchors) is the plan-vouched
-    # third estimate; agreement means it falls inside the probe
-    # envelope — a disagreement is flagged in the artifact rather than
-    # silently resolved in favor of either scalar
-    probe_spread = {
-        "probes_sec": probes,
-        "factors": factor_env,
-        "raw_wall_drift_median": raw_wall_drift,
-        "agrees_with_envelope": envelope_agrees(raw_wall_drift, factor_env),
-    }
-
+    warm = {n: m["sec"] for n, m in results.items()}
+    cold = {n: m["cold_sec"] for n, m in results.items()}
     payload = {
-                "metric": "headline_queries_total_steady_state",
-                "value": round(sum(warm.values()), 3),
-                "unit": "sec",
-                "queries": warm,
-                "cold_queries": cold,
-                "cold_total": round(sum(cold.values()), 3),
-                "shuffle_bytes": shuffle_bytes,
-                "spill_bytes": spill_bytes,
-                "delta_vs_r1": delta_vs_r1,
-                "regressions": regressions,
-                "wall_drift_median": wall_drift_median,
-                "regressions_drift_adjusted": regressions_drift_adjusted,
-                "byte_regressions": byte_regressions,
-                "stress_sf1": stress,
-                "stress_sf10": stress10,
-                "bpe_real_vocab": bpe_real,
-                "recall_sf1": recall,
-                "ann_index_lifecycle": ann_lifecycle,
-                "recall_sf10": recall10,
-                "stress_sf100_bytes": sf100_bytes,
-                "tensor_export": tensor_export,
-                "warc_file_ingest": warc_ingest,
-                "regressions_within_probe_envelope":
-                    regressions_within_probe_envelope,
-                "wall_watch": wall_watch,
-                "readjudicated": readjudicated,
-                "block_probes_sec": probe_timeline,
-                "probe_by_query": probe_by_query,
-                "calibration_sec": cal,
-                # r9: the recorded factor is the MEDIAN of the
-                # interleaved probes; the start-probe scalar that
-                # normalized the in-flight gates is kept alongside
-                "machine_factor": factor_env["median"],
-                "machine_factor_start": round(cal_ratio, 3),
-                "probe_spread": probe_spread,
-                "string_probe_spread": string_probe_spread,
-                "python_probe_spread": python_probe_spread,
-                "sf": sf_val,
-                "cpus": cpus,
-                "bench_subset": subset,
-            }
-    # The driver's BENCH_r{N} artifact keeps only the LAST 2000 chars of
-    # stdout and json-parses the final line — r6's full payload blew past
-    # that and the round recorded `parsed: null`. So: persist the FULL
-    # payload to a repo file, and print a COMPACT line (required driver
-    # fields + one-number summaries) guaranteed to fit the tail window.
+        "metric": "headline_queries_total_steady_state",
+        "value": round(sum(warm.values()), 3),
+        "unit": "sec",
+        "queries": warm,
+        "cold_queries": cold,
+        "cold_total": round(sum(cold.values()), 3),
+        "rows": {n: m["rows"] for n, m in results.items()},
+        "shuffle_bytes": {n: m["shuffle_bytes"] for n, m in results.items()},
+        "spill_bytes": {n: m["spill_bytes"] for n, m in results.items()},
+        "exchanges": {n: m["exchanges"] for n, m in results.items()},
+        "byte_regressions": byte_regressions,
+        **tiers,
+        "sf": sf_val,
+        "cpus": len(os.sched_getaffinity(0)),
+        "plan_width": PLAN_WIDTH,
+    }
+    # Only the LAST 2000 chars of stdout are kept by the recorder, so the
+    # FULL payload goes to a repo file and stdout gets the compact line.
     full_name = None
     try:
-        repo = os.path.dirname(os.path.abspath(__file__))
         rounds = [
             int(f[7:-5].lstrip("0") or 0)
-            for f in os.listdir(repo)
+            for f in os.listdir(REPO)
             if f.startswith("BENCH_r") and f.endswith(".json") and f[7:-5].isdigit()
         ]
         n = (max(rounds) + 1) if rounds else 0
-        # subset (scaling) runs get their own file so they never
-        # clobber the same round's full-run payload
-        full_name = (
-            f"BENCH_full_r{n:02d}_c{cpus}.json"
-            if subset
-            else f"BENCH_full_r{n:02d}.json"
-        )
-        with open(os.path.join(repo, full_name), "w") as fh:
+        full_name = f"BENCH_full_r{n:02d}.json"
+        with open(os.path.join(REPO, full_name), "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
     except OSError as e:  # read-only checkout: stderr note, no full copy
         full_name = None
         print(f"# BENCH_full write skipped: {e}", file=sys.stderr)
 
     print(compact_line(payload, full_name))
-    if (regressions or byte_regressions) and os.environ.get(
+    if (byte_regressions or stress_regressions(payload)) and os.environ.get(
         "SPARK_GRAFT_BENCH_STRICT"
     ):
         sys.exit(1)

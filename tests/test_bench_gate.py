@@ -1,112 +1,18 @@
-"""Bench regression-gate logic (pure functions, no Spark session)."""
+"""bench.py's plan-pin gate: the compact stdout line (pure) and the pins'
+independence from the master width (two Spark subprocesses)."""
 
-from bench import WALL_NOISE_FLOOR_SEC, wall_regression
+import json
+import os
+import subprocess
+import sys
 
-
-def test_under_bar_never_regresses():
-    assert not wall_regression(1.0, 1.0, byte_clean=True)
-    assert not wall_regression(1.24, 1.0, byte_clean=False)
-
-
-def test_subsecond_noise_suppressed_when_bytes_clean():
-    # BENCH_r05's phantom: 0.31s wall on a 0.187s normalized bar
-    # (1.29x) with an empty byte gate — must NOT be reported
-    assert not wall_regression(0.31, 0.187, byte_clean=True)
-    assert 0.31 - 0.187 < WALL_NOISE_FLOOR_SEC
-
-
-def test_subsecond_excess_still_flagged_when_bytes_dirty():
-    assert wall_regression(0.31, 0.187, byte_clean=False)
-
-
-def test_large_excess_flagged_regardless_of_bytes():
-    # a real 2x on a multi-second query exceeds the noise floor
-    assert wall_regression(8.0, 4.0, byte_clean=True)
-    assert wall_regression(8.0, 4.0, byte_clean=False)
-
-
-def test_floor_is_absolute_not_relative():
-    # 1.3x on a tiny bar but absolute delta under the floor: suppressed
-    assert not wall_regression(0.13, 0.1, byte_clean=True)
-    # same ratio on a big bar: delta 3s >> floor, flagged
-    assert wall_regression(13.0, 10.0, byte_clean=True)
-
-
-def test_damped_wall_median_catches_intermittent():
-    """r9 (ADVICE r8): a flagged wall re-runs BOTH extra samples and
-    gates on the median — one-off noise is still absorbed (median of
-    {noisy, fast, fast} = fast), but an intermittent regression can no
-    longer hide behind a single lucky fast run the way best-of-3 with
-    early stop allowed."""
-    from bench import damped_wall
-
-    # one-off noise: first sample noisy, both re-runs fast -> damped
-    fast = iter([1.0, 1.05])
-    assert damped_wall(5.0, lambda: next(fast)) == 1.05
-    # intermittent: one re-run also slow -> the median REPORTS slow
-    # (old min-keeping logic would have returned 1.0 and never flagged)
-    mixed = iter([4.8, 1.0])
-    assert damped_wall(5.0, lambda: next(mixed)) == 4.8
-    # persistent regression: slow on every run -> reported
-    slow = iter([4.9, 5.1])
-    assert damped_wall(5.0, lambda: next(slow)) == 5.0
-
-
-def test_probe_envelope_and_agreement():
-    """r9 (VERDICT r8 ask #4): the artifact quantifies its own wall
-    uncertainty — interleaved probes -> min/median/max factor envelope,
-    and the plan-vouched raw wall drift either agrees with it or the
-    disagreement is flagged."""
-    from bench import CAL_ANCHOR_SEC, envelope_agrees, probe_envelope
-
-    # the r8 failure mode: a 2.195x start probe amid ~0.66x-drift
-    # queries — the median of interleaved probes absorbs the outlier
-    env = probe_envelope([2.195 * CAL_ANCHOR_SEC, 0.9 * CAL_ANCHOR_SEC,
-                          1.0 * CAL_ANCHOR_SEC])
-    assert env == {"min": 0.9, "median": 1.0, "max": 2.195}
-    assert envelope_agrees(1.05, env)        # inside
-    assert envelope_agrees(0.75, env)        # within the 25% slack
-    assert not envelope_agrees(0.5, env)     # genuinely outside -> flag
-    assert not envelope_agrees(3.2, env)
-    # probe-fluke floor matches the gating scalar's
-    assert probe_envelope([0.001, 0.001, 0.001])["median"] == 0.25
-
-
-def test_median_drift_empty_and_odd():
-    from bench import median_drift
-
-    assert median_drift([]) == 1.0
-    assert median_drift([1.3, 1.28, 1.35, 0.9, 1.31]) == 1.3
-
-
-def test_drift_adjust_uniform_inflation_vanishes():
-    # BENCH_r06 first run: ten unrelated byte-clean queries at
-    # 1.26-1.68x with machine_factor 1.13 — uniform host inflation.
-    # Entries within 25% of the median drift are absorbed; genuine
-    # outliers survive, re-normalized.
-    from bench import drift_adjust
-
-    raw = {"q102": 1.29, "q23": 1.32, "q43": 1.33, "q45": 1.68}
-    adj = drift_adjust(raw, 1.31)
-    assert "q102" not in adj and "q23" not in adj and "q43" not in adj
-    assert adj == {"q45": 1.28}
-
-
-def test_drift_adjust_no_drift_keeps_raw():
-    from bench import drift_adjust
-
-    # drift at/below 1.0 never weakens the raw gate
-    assert drift_adjust({"q1": 1.3}, 1.0) == {"q1": 1.3}
-    assert drift_adjust({"q1": 1.3}, 0.8) == {"q1": 1.3}
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_compact_line_fits_driver_tail_window():
-    """r7: the driver json-parses the LAST line of the LAST 2000 chars
-    of bench stdout — r6's full-payload print blew past that and the
-    round recorded parsed:null. The compact line must always fit and
-    always keep the five driver-required fields."""
-    import json
-
+    """Bench output is recorded as the LAST 2000 chars of stdout, whose
+    last line is json-parsed. The compact line must always fit and
+    always keep the five required fields."""
     from bench import compact_line
 
     payload = {
@@ -116,15 +22,14 @@ def test_compact_line_fits_driver_tail_window():
         "queries": {f"q{i:03d}_some_longish_query_name": i * 1.234
                     for i in range(46)},
         "sf": 0.1,
-        "spill_bytes_total": 0,
         "spill_bytes": {f"q{i:03d}": 0 for i in range(46)},
-        "regressions": {},
-        "regressions_drift_adjusted": {},
         "byte_regressions": {},
-        "stress_sf1": {"q19": {"sec": 10.0, "spill_bytes": 0}},
+        "stress_sf1": {"q19": {"sec": 10.0, "spill_bytes": 0},
+                       "pair_skew_q42": {"n_buckets": 256}},
         "stress_sf10": {"q19": {"sec": 100.0, "spill_bytes": 7,
-                                "regression": True}},
-        "machine_factor": 5.1,
+                                "regression": {"spill_bytes": 0}}},
+        "cpus": 4,
+        "plan_width": 32,
     }
     line = compact_line(payload, "BENCH_full_r07.json")
     assert len(line) <= 1900
@@ -134,59 +39,69 @@ def test_compact_line_fits_driver_tail_window():
     assert d["stress_regressions"] == ["q19@sf10"]
     assert d["stress_spill_bytes"] == 7
     assert d["stress_sf10_sec"] == 100.0
+    assert d["plan_width"] == 32
+    for gone in ("machine_factor", "probe_factors",
+                 "regressions_drift_adjusted", "wall_watch"):
+        assert gone not in d
 
-    # adversarial: huge regressions dicts must be dropped before the
+    # adversarial: a huge byte_regressions dict is dropped before the
     # required fields ever are
-    payload["regressions"] = {f"q{i}_padpadpadpadpad": 1.5
-                              for i in range(200)}
-    payload["regressions_drift_adjusted"] = dict(payload["regressions"])
+    payload["byte_regressions"] = {f"q{i}_padpadpadpadpad": {}
+                                   for i in range(200)}
     line = compact_line(payload, None)
     assert len(line) <= 1900
     d = json.loads(line)
     assert "queries" in d and "metric" in d
 
 
-def test_paired_window_rule():
-    """r11: disagreeing windows (damped >> first on the SAME
-    byte-pinned plan) judge the quieter window; agreeing windows keep
-    the damped median-of-3 so intermittent regressions still flag."""
-    from bench import paired_window_wall
-
-    # tail window 2x slower than first-pass window -> host, use first
-    assert paired_window_wall(1.0, 2.0) == 1.0
-    # windows agree (intermittent or real regression reproduced in
-    # re-runs at comparable speed) -> damped median gates, even when
-    # it is above first
-    assert paired_window_wall(1.0, 1.4) == 1.4
-    # damped BELOW first (first pass was the slow window) -> damped
-    assert paired_window_wall(2.0, 0.9) == 0.9
-    # boundary: exactly 1.5x still counts as agreeing
-    assert paired_window_wall(1.0, 1.5) == 1.5
-    # a real 2x code regression present in BOTH windows: first 2.0,
-    # damped 2.1 (agreeing) -> 2.1 gates; the rule cannot be used to
-    # hide a regression that reproduces across windows
-    assert paired_window_wall(2.0, 2.1) == 2.1
+_PIN_PROBE = """
+import json
+import bench
+spark = bench.gate_session("pin-probe", master_width={width})
+from torcharrow_spark.queries import QUERIES
+q, sf = QUERIES["q86_strip_duplicate_spans"], {sf!r}
+metrics = bench.StageMetrics(spark)
+print(json.dumps({{
+    "pins": bench.measure(lambda: q(spark, sf), metrics),
+    "wide": bench.measure(lambda: q(spark, sf).repartition(64), metrics),
+}}))
+"""
 
 
-def test_wall_channel_verdict_byte_primary():
-    """r12 (VERDICT r11 ask #2): byte/row/spill are the primary gate;
-    a wall excess gates only when the byte pin moved or the window was
-    certified quiet — byte-clean noisy-window excesses are watch-only
-    (three r11 same-tree runs flagged disjoint sets in that state)."""
-    from bench import QUIET_PROBE_FACTOR, wall_channel_verdict
+def test_pins_hold_across_master_widths(sf_dir):
+    """The gate's pins are the same at local[4] and local[32], because
+    gate_session derives every plan-shaping width from PLAN_WIDTH; and a
+    deliberately added repartition exchange trips the gate at both
+    widths against the pins measured at the other one. q86 reaches both
+    core-count channels: its hash exchanges start at initialPartitionNum
+    and its narrow-source spread repartitions to defaultParallelism."""
+    procs = {
+        w: subprocess.Popen(
+            [sys.executable, "-c",
+             _PIN_PROBE.format(width=w, sf=sf_dir)],
+            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, cwd=REPO,
+            # as on a w-core host: the gate must override this
+            env=dict(os.environ, SPARK_GRAFT_CPUS=str(w),
+                     SPARK_DRIVER_MEMORY="1g"),
+            text=True,
+        )
+        for w in (4, 32)
+    }
+    got = {}
+    for w, p in procs.items():
+        out, _ = p.communicate(timeout=600)
+        assert p.returncode == 0, f"local[{w}] probe failed"
+        got[w] = json.loads(out.strip().splitlines()[-1])
 
-    # not flagged at all -> no verdict
-    assert wall_channel_verdict(False, True, 1.0, True) is None
-    # byte pin moved -> the wall flag rides the primary channel
-    assert wall_channel_verdict(True, False, 3.0, False) == "gate"
-    # byte-clean + quiet agreeing window -> a real CPU-side regression
-    # the probes could see: gates
-    assert wall_channel_verdict(True, True, 1.0, True) == "gate"
-    assert (
-        wall_channel_verdict(True, True, QUIET_PROBE_FACTOR, True) == "gate"
-    )
-    # byte-clean + noisy window -> watch (the r11 weather mode)
-    assert wall_channel_verdict(True, True, 1.9, True) == "watch"
-    # byte-clean + quiet probes but windows disagree (oscillating
-    # host the probes missed) -> watch
-    assert wall_channel_verdict(True, True, 1.0, False) == "watch"
+    pinned = ("rows", "shuffle_bytes", "spill_bytes", "exchanges")
+    a, b = got[4]["pins"], got[32]["pins"]
+    assert {k: a[k] for k in pinned} == {k: b[k] for k in pinned}
+    assert a["shuffle_bytes"] > 0 and a["exchanges"] > 0
+
+    from bench import pin_violations
+
+    for w, other in ((4, 32), (32, 4)):
+        p = got[other]["pins"]
+        pin = (p["rows"], p["shuffle_bytes"], p["exchanges"])
+        assert pin_violations(got[w]["pins"], pin) == {}
+        assert "exchanges" in pin_violations(got[w]["wide"], pin)

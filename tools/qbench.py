@@ -1,15 +1,16 @@
-"""Single-query micro-bench matching bench.py's methodology exactly
+"""Single-query micro-bench on bench.py's gate session and methodology
 (noop sink, cold + steady runs, per-query shuffle/spill bytes from the
-status store, CPU probe bracketing) — so a change can be measured
-without the full bench run.
+status store, exchange count), so a change can be measured and checked
+against bench.py's pins without the full bench run.
 
 Usage: python tools/qbench.py q138_kmeans_semantic_dedup [q43_... ...]
-       [--reps N] (default 3 steady reps, min reported)
+       [--reps N] (default 3 steady reps; median and every wall reported)
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -24,45 +25,45 @@ def main() -> None:
             reps = int(a.split("=", 1)[1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    import torcharrow_spark as ts
     from bench import (
-        CAL_ANCHOR_SEC,
         HEADLINE_OVERRIDES,
+        HEADLINE_PINS,
         StageMetrics,
         _sink,
-        measure_calibration,
+        gate_session,
     )
+
+    spark = gate_session("qbench")
+    from torcharrow_spark.plans import plan_stats
     from torcharrow_spark.queries import QUERIES
 
-    spark = ts.get_session("qbench")
-    spark.sparkContext.setLogLevel("ERROR")
     _sink(QUERIES["q01_pricing_summary"](spark, sf_dir))  # warm the JVM
     metrics = StageMetrics(spark)
-
-    cal = measure_calibration(spark, n=2)
-    print(f"# probe before: {cal:.3f}s (factor {cal / CAL_ANCHOR_SEC:.2f}x)")
     for name in args:
         qfn = HEADLINE_OVERRIDES.get(name, QUERIES[name])
         spark.sparkContext.setJobDescription(f"qbench:{name}:cold")
         t0 = time.perf_counter()
         _sink(qfn(spark, sf_dir))
         cold = time.perf_counter() - t0
-        best, bytes_ = float("inf"), None
+        walls, bytes_ = [], None
         for r in range(reps):
             spark.sparkContext.setJobDescription(f"qbench:{name}:steady{r}")
             wm = metrics.snapshot()
             t0 = time.perf_counter()
             _sink(qfn(spark, sf_dir))
-            sec = time.perf_counter() - t0
+            walls.append(time.perf_counter() - t0)
             if bytes_ is None:
                 bytes_ = metrics.since(wm)
-            best = min(best, sec)
+        df = qfn(spark, sf_dir)
         print(
-            f"{name}: cold {cold:.3f}s steady(best-of-{reps}) {best:.3f}s "
-            f"shuffle {bytes_['shuffle_write']}B spill {bytes_['spill']}B"
+            f"{name}: cold {cold:.3f}s steady median "
+            f"{statistics.median(walls):.3f}s of "
+            f"{sorted(round(w, 3) for w in walls)} "
+            f"rows {df.count()} shuffle {bytes_['shuffle_write']}B "
+            f"spill {bytes_['spill']}B "
+            f"exchanges {plan_stats(df)['exchanges']} "
+            f"(pin {HEADLINE_PINS.get(name)})"
         )
-    cal = measure_calibration(spark, n=2)
-    print(f"# probe after: {cal:.3f}s (factor {cal / CAL_ANCHOR_SEC:.2f}x)")
 
 
 if __name__ == "__main__":

@@ -14,8 +14,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import torcharrow_spark as ts
 from pyspark.sql import functions as F
 
-from bench import (CAL_ANCHOR_SEC, STRESS10_DIR, StageMetrics, _build_stress_sf1,
-                   _build_stress_sf10, _sink, measure_calibration)
+from bench import (STRESS10_DIR, StageMetrics, _build_stress_sf1,
+                   _build_stress_sf10, _sink)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF100_DIR = os.path.join(REPO, ".stress_sf100")
@@ -59,11 +59,8 @@ def measure(spark, name, build, reps=2):
         n = build().count()
         wall = time.perf_counter() - t0
         by = m.since(wm)
-        cal = measure_calibration(spark)
-        ratio = cal / CAL_ANCHOR_SEC
         print(
-            f"RESULT {name}: COLD oneshot {wall:.3f}s (factor {ratio:.3f}, "
-            f"norm {wall / ratio:.3f}s), rows {n}, shuffle "
+            f"RESULT {name}: COLD oneshot {wall:.3f}s, rows {n}, shuffle "
             f"{by['shuffle_write']}B, spill {by['spill']}B "
             f"(disk {by.get('disk_spill', 'n/a')}B)",
             flush=True,
@@ -80,11 +77,9 @@ def measure(spark, name, build, reps=2):
         if by is None:
             by = m.since(wm)
     n = build().count()
-    cal = measure_calibration(spark)
-    ratio = cal / CAL_ANCHOR_SEC
     print(
-        f"RESULT {name}: steady {best:.3f}s (factor {ratio:.3f}, norm "
-        f"{best / ratio:.3f}s), rows {n}, shuffle {by['shuffle_write']}B, "
+        f"RESULT {name}: steady {best:.3f}s, rows {n}, "
+        f"shuffle {by['shuffle_write']}B, "
         f"spill {by['spill']}B",
         flush=True,
     )

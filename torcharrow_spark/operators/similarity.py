@@ -138,7 +138,9 @@ def _pair_kernel_enabled(spark) -> bool:
     """Arrow pair kernel opt-out: `spark.torcharrow.arrowPairKernels`
     (default true) + numpy/pyarrow importable. The kill switch exists so
     the legacy all-JVM pair plan stays one conf away (plan-pin tests and
-    the bit-identity pin flip it)."""
+    the bit-identity pin flip it). The import check runs on the DRIVER
+    only: a driver without numpy/pyarrow gets the JVM plan, but a worker
+    without them fails the job with the worker's ImportError."""
     try:
         if spark.conf.get(
             "spark.torcharrow.arrowPairKernels", "true"

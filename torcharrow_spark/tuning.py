@@ -135,8 +135,9 @@ REGISTRY: list[dict] = [
             "move-the-small-side rule; measured-REJECTED for q43's "
             "prefix candidate stage, whose ~100k tiny buckets make "
             "the boundary cost match the JVM emission). Requires "
-            "numpy + pyarrow on the workers; silently falls back to "
-            "the JVM plan without them."
+            "numpy + pyarrow on the workers. The availability check "
+            "runs on the driver only: a driver without them gets the "
+            "JVM plan, but a worker without them fails the job."
         ),
         "override": (
             "spark.conf.set('spark.torcharrow.arrowPairKernels', "
