@@ -167,7 +167,7 @@ HEADLINE_PINS: dict[str, tuple[int, int, int | None]] = {
     "q27_rec_ops": (85672, 263, 2),  # = r13 pin
     "q37_asof_join": (20084, 850008, 2),  # = r13 pin
     "q41_bpe_tokenize": (5000, 0, 0),  # = r13 pin
-    "q42_cosine_dedup": (12053, 577897, 2),  # = r13 pin
+    "q42_cosine_dedup": (12053, 557978, 2),  # r13 pin 577897; the bucket struct no longer carries an xxhash64 class key
     "q45_llm_pipeline": (5, 1003094, 6),  # = r13 pin
     "q80_hll_distinct": (5, 146270, 8),  # = r13 pin
     "q81_local_supplier_volume": (5, 531, 2),  # = r13 pin
@@ -446,7 +446,7 @@ STRESS_PINS: dict[str, tuple[int, int, int | None]] = {
     "q46_simhash_pairs": (3119839, 67760383, 12),  # = r13 pin
     "q86_strip_spans": (50000, 71474498, 4),  # = r13 pin
     "q21_ngram_jaccard_auto": (2560, 215444450, 8),  # = r13 capture; r13 pin was 215683097
-    "q42_cosine_dedup": (144985, 6331168, 2),  # = r13 pin
+    "q42_cosine_dedup": (144985, 6137348, 2),  # r13 pin 6331168; the bucket struct no longer carries an xxhash64 class key
     "q105_heavy_hitters": (300, 871654, 6),  # = r13 pin
     "q157_cdc_dedup": (50000, 74892916, 6),  # = r13 pin
     "q175_cross_doc_spans": (3550, 60489744, 6),  # = r13 pin
@@ -497,20 +497,15 @@ def run_stress_tier(spark, sdir: str, pins: dict, best_of: int,
 
 def pair_skew_q42(spark) -> dict:
     """Pair-stage skew evidence for the q42 cosine family on the sf1
-    corpus (measurement only). Election caps a bucket at
-    min(DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND / member_bytes)
-    members, and the salted emitter splits a bucket of m members into
-    ceil(m/chunk)^2 chunk-pair tasks of <= chunk^2 candidate pairs — so
-    bucket skew becomes MORE tasks, never BIGGER tasks. The histogram
-    shows where organic sf1 buckets sit relative to both bounds."""
+    corpus (measurement only). The pair kernel evaluates each bucket in
+    one task, in bounded-memory tiles, and elects a bucket above
+    `_elect_onset(dim)` members — so the largest bucket's C(m, 2) pairs are the longest
+    task. The histogram shows where organic sf1 buckets sit relative to
+    the election cap."""
     from pyspark.sql import functions as F
 
-    from torcharrow_spark.operators.dedup import (
-        DEFAULT_ELECT_THRESHOLD,
-        DEFAULT_EMIT_CHUNK,
-        ELECT_BYTES_BOUND,
-    )
     from torcharrow_spark.operators.similarity import (
+        _elect_onset,
         _infer_dim,
         _resolve_n_planes,
         lsh_bucket,
@@ -530,10 +525,8 @@ def pair_skew_q42(spark) -> dict:
         F.expr("percentile(count, 0.5)").alias("p50_members"),
         F.expr("percentile(count, 0.99)").alias("p99_members"),
     ).collect()[0]
-    member_bytes = 32 + 4 * dim
-    elect_cap = min(DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND // member_bytes)
+    elect_cap = _elect_onset(dim)
     m_max = int(h["max_members"])
-    chunk = DEFAULT_EMIT_CHUNK
     out = {
         "n_planes": n_planes,
         "n_buckets": int(h["n_buckets"]),
@@ -541,9 +534,7 @@ def pair_skew_q42(spark) -> dict:
         "p50_members": float(h["p50_members"]),
         "p99_members": float(h["p99_members"]),
         "elect_cap_members": int(elect_cap),
-        "emit_chunk": chunk,
-        "per_task_candidate_cap": chunk * chunk,
-        "max_task_candidate_pairs": min(m_max * (m_max - 1) // 2, chunk * chunk),
+        "max_bucket_pairs": m_max * (m_max - 1) // 2,
         "max_bucket_under_elect_cap": m_max <= elect_cap,
     }
     print(f"# stress sf1 pair-skew q42: {out}", file=sys.stderr)

@@ -3477,13 +3477,118 @@ def test_semantic_dedup_election_output_identical(spark, monkeypatch):
     assert got[1000] and not got[1001] and got[1002]
 
 
+def _jvm_member_buckets(df, key, id_col, vec_col, norm_col):
+    return (
+        df.groupBy(key)
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct(F.col(id_col).alias("i"), F.col(vec_col).alias("v"), F.col(norm_col).alias("n")))
+            ).alias("ms")
+        )
+        .where(F.size("ms") >= 2)
+    )
+
+
+def _jvm_pairs(buckets, dim):
+    """The all-JVM pair plan the pair kernel replaced, verbatim:
+    memory-bounded `_emit_pairs` with xxhash64 vector-class election."""
+    import torcharrow_spark.operators.dedup as dd
+
+    return dd._emit_pairs(
+        buckets, "ms", elect_key=lambda x: F.xxhash64(x["v"]),
+        elect_threshold=dd.DEFAULT_ELECT_THRESHOLD,
+        member_bytes=32 + 4 * dim,
+    )
+
+
+def _semantic_dedup_jvm(corpus, threshold, centroids, id_col="vec_id",
+                        vec_col="embedding"):
+    """semantic_dedup (given centroids) on the all-JVM pair plan —
+    the reference the Arrow pair kernel is pinned against."""
+    from torcharrow_spark.operators.similarity import (
+        _cell_sims,
+        _cosine_from,
+        _dot,
+        _infer_dim,
+        _norm,
+    )
+
+    cents = [(i, [float(x) for x in v]) for i, v in enumerate(centroids)]
+    assigned = corpus.select(
+        F.col(id_col),
+        F.col(vec_col),
+        _norm(F.col(vec_col)).alias("__n__"),
+        F.array_max(_cell_sims(vec_col, cents))["c"].alias("cluster"),
+    )
+    buckets = _jvm_member_buckets(assigned, "cluster", id_col, vec_col, "__n__")
+    pairs = _jvm_pairs(buckets, _infer_dim(corpus, vec_col)).select(
+        F.col("__b__.i").alias(id_col),
+        _cosine_from(
+            _dot(F.col("__a__.v"), F.col("__b__.v")),
+            F.col("__a__.n"),
+            F.col("__b__.n"),
+        ).alias("__cos__"),
+    )
+    dropped = (
+        pairs.where(F.col("__cos__") >= threshold)
+        .select(id_col)
+        .distinct()
+        .withColumn("__dropped__", F.lit(True))
+    )
+    return (
+        assigned.select(id_col, "cluster")
+        .join(dropped, id_col, "left")
+        .select(
+            id_col,
+            "cluster",
+            F.coalesce(~F.col("__dropped__"), F.lit(True)).alias("keep"),
+        )
+    )
+
+
+def _cosine_pairs_jvm(corpus, threshold, n_planes, id_col="vec_id",
+                      vec_col="embedding"):
+    """cosine_pairs (given n_planes) on the all-JVM pair plan — the
+    reference the Arrow pair kernel is pinned against."""
+    from torcharrow_spark.operators.similarity import (
+        _cosine_from,
+        _dot,
+        _infer_dim,
+        _norm,
+        lsh_bucket,
+    )
+
+    dim = _infer_dim(corpus, vec_col)
+    c = corpus.select(
+        F.col(id_col),
+        F.col(vec_col),
+        _norm(F.col(vec_col)).alias("__norm__"),
+        lsh_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
+    )
+    buckets = _jvm_member_buckets(c, "bucket", id_col, vec_col, "__norm__")
+    exploded = _jvm_pairs(buckets, dim).select(
+        F.col("__a__.i").alias("id_a"),
+        F.col("__b__.i").alias("id_b"),
+        F.col("__a__.v").alias("__va__"),
+        F.col("__b__.v").alias("__vb__"),
+        F.col("__a__.n").alias("__na__"),
+        F.col("__b__.n").alias("__nb__"),
+    )
+    cos = _cosine_from(
+        _dot(F.col("__va__"), F.col("__vb__")), F.col("__na__"), F.col("__nb__")
+    )
+    return (
+        exploded.select("id_a", "id_b", cos.alias("cosine"))
+        .where(F.col("cosine") >= threshold)
+    )
+
+
 def test_semantic_dedup_kernel_matches_jvm_path(spark):
-    """r13 optimization pin: the Arrow pair kernel
-    (similarity._bucket_drop_ids) computes the EXACT output of the
-    legacy all-JVM pair plan — including Spark's NaN-compares-greatest
-    semantics, zip_with null padding on ragged/null vectors, and the
-    when() 0.0 fallback for non-positive norms. The conf flip keeps
-    both paths permanently comparable."""
+    """The Arrow pair kernel (similarity._bucket_drop_ids) computes the
+    EXACT output of the all-JVM pair plan (rebuilt above as the
+    reference) — including Spark's NaN-compares-greatest semantics,
+    zip_with null padding on ragged/null vectors, and the when() 0.0
+    fallback for non-positive norms."""
     from torcharrow_spark.operators.similarity import semantic_dedup
 
     nan, inf = float("nan"), float("inf")
@@ -3504,19 +3609,13 @@ def test_semantic_dedup_kernel_matches_jvm_path(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
 
-    def run():
-        out = semantic_dedup(df, threshold=0.5, centroids=cents)
+    def rows_of(out):
         return sorted(
             (r["vec_id"], r["cluster"], r["keep"]) for r in out.collect()
         )
 
-    kernel = run()
-    spark.conf.set("spark.torcharrow.arrowPairKernels", "false")
-    try:
-        legacy = run()
-    finally:
-        spark.conf.unset("spark.torcharrow.arrowPairKernels")
-    assert kernel == legacy
+    kernel = rows_of(semantic_dedup(df, threshold=0.5, centroids=cents))
+    assert kernel == rows_of(_semantic_dedup_jvm(df, 0.5, cents))
     keep = {i: k for i, _c, k in kernel}
     assert keep[0] and not keep[1] and not keep[2]  # dup class collapses
     assert keep[3] and keep[4] and keep[7]          # null cos never drops
@@ -3525,13 +3624,13 @@ def test_semantic_dedup_kernel_matches_jvm_path(spark):
 
 
 def test_cosine_pairs_kernel_matches_jvm_path(spark, monkeypatch):
-    """r13 optimization pin: the Arrow pair-cosine kernel
-    (similarity._bucket_pair_cosines) emits the EXACT rows of the
-    legacy JVM pair plan — same pair set (including the election's
-    thinned C(reps,2)+stars list when a duplicated class crosses the
-    onset), bit-identical cosine doubles, and the same hostile-input
-    semantics (null/ragged vectors never pass the threshold filter,
-    NaN cosines always do)."""
+    """The Arrow pair-cosine kernel (similarity._bucket_pair_cosines)
+    emits the EXACT rows of the all-JVM pair plan (rebuilt above as the
+    reference) — same pair set (including the election's thinned
+    C(reps,2)+stars list when a duplicated class crosses the onset),
+    bit-identical cosine doubles, and the same hostile-input semantics
+    (null/ragged vectors never pass the threshold filter, NaN cosines
+    always do)."""
     import math
 
     import torcharrow_spark.operators.dedup as dd
@@ -3551,19 +3650,14 @@ def test_cosine_pairs_kernel_matches_jvm_path(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    def run():
-        out = cosine_pairs(df, threshold=0.5, n_planes=2)
+    def rows_of(out):
         return sorted(
             (r["id_a"], r["id_b"], r["cosine"]) for r in out.collect()
         )
 
     def check_equal():
-        kern = run()
-        spark.conf.set("spark.torcharrow.arrowPairKernels", "false")
-        try:
-            legacy = run()
-        finally:
-            spark.conf.unset("spark.torcharrow.arrowPairKernels")
+        kern = rows_of(cosine_pairs(df, threshold=0.5, n_planes=2))
+        legacy = rows_of(_cosine_pairs_jvm(df, 0.5, n_planes=2))
         assert len(kern) == len(legacy)
         for (a, b, c), (la, lb, lc) in zip(kern, legacy):
             assert (a, b) == (la, lb)
@@ -4256,6 +4350,34 @@ def test_unigram_canonical_tie_break():
     # proof the canonical flag changes behavior only where ties exist
     assert UnigramTokenizer(v).encode_word("ab") == ["ab"]
     assert tok.encode_word("ab") == ["a", "b"]
+
+
+def test_unigram_tokenizer_state_is_read_only():
+    """encode_word memoizes per word, so the state a segmentation
+    depends on (vocab, canonical_ties) is read-only: mutating it raises
+    instead of silently serving stale memoized segmentations."""
+    import pickle
+
+    from torcharrow_spark.functions.unigram import UnigramTokenizer
+
+    v = {"a": 5, "b": 5, "ab": 10}
+    tok = UnigramTokenizer(v, canonical_ties=True)
+    before = {w: tok.encode_word(w) for w in ("ab", "ba", "abab")}
+    with pytest.raises(TypeError):
+        tok.vocab["ab"] = 1
+    with pytest.raises(TypeError):
+        del tok.vocab["a"]
+    with pytest.raises(AttributeError):
+        tok.canonical_ties = False
+    with pytest.raises(AttributeError):
+        tok.vocab = {"a": 1, "b": 1}
+    v["ab"] = 1  # the caller's dict is copied, not aliased
+    assert dict(tok.vocab) == {"a": 5, "b": 5, "ab": 10}
+    assert tok.canonical_ties is True
+    assert {w: tok.encode_word(w) for w in before} == before
+    # the tokenizer still ships to workers
+    clone = pickle.loads(pickle.dumps(tok))
+    assert {w: clone.encode_word(w) for w in before} == before
 
 
 def test_unigram_train_fit_properties(spark):

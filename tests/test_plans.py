@@ -355,17 +355,10 @@ def test_pair_sites_use_bounded_emission(spark, sf_dir):
     for q in ("q19_minhash_pairs", "q46_simhash_pairs"):
         text = formatted_plan(QUERIES[q](spark, sf_dir))
         assert "posexplode" in text, q
-    # q42 (cosine pairs): the r13 default sweeps pairs inside an Arrow
-    # kernel (no explosion at all — the memory bound is the kernel's
-    # tiling); the legacy bounded emission is pinned under the conf
+    # q42 (cosine pairs) sweeps pairs inside an Arrow kernel (no
+    # explosion at all — the memory bound is the kernel's tiling)
     text = formatted_plan(QUERIES["q42_cosine_dedup"](spark, sf_dir))
     assert "MapInArrow" in text, "q42_cosine_dedup (kernel node)"
-    spark.conf.set("spark.torcharrow.arrowPairKernels", "false")
-    try:
-        text = formatted_plan(QUERIES["q42_cosine_dedup"](spark, sf_dir))
-        assert "posexplode" in text, "q42_cosine_dedup (legacy)"
-    finally:
-        spark.conf.unset("spark.torcharrow.arrowPairKernels")
     # q43 (prefix jaccard): the r8 survivor localCheckpoint truncates
     # the final DF's plan text at the checkpoint boundary, hiding the
     # emission subplan — inspect the un-checkpointed form instead

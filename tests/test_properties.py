@@ -6,7 +6,7 @@ batched into a single frame) to keep runtime bounded."""
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 
 # deterministic examples: the driver runs this suite as a gate, so a
 # fresh random counterexample should surface in development, not there
@@ -386,3 +386,228 @@ def test_unigram_viterbi_optimal_on_random_vocabs(seed, word):
     got = tok.encode_word(word)
     assert "".join(got) == word
     assert tok.cost(got) == best_cost(word)
+
+
+# -- embedding-pair kernel core, fuzzed without Spark ---------------------
+
+_NAN = float("nan")
+_PAIR_ELEMS = [0.0, -0.0, 1.0, -1.0, 0.5, 2.0, 3.0e38, 1.0e-30, 0.1,
+               _NAN, float("inf"), float("-inf"), None]
+
+
+def _jvm_pair_cos(a, b):
+    """cosine of two (id, v, n) members as Spark's
+    `_cosine_from(_dot(va, vb), na, nb)` evaluates it; None is NULL."""
+    (_, va, na), (_, vb, nb) = a, b
+
+    def positive(n):  # Spark's `n > 0`: NULL false, NaN greatest
+        return n is not None and (math.isnan(n) or n > 0)
+
+    if not (positive(na) and positive(nb)):
+        return 0.0
+    if va is None or vb is None:
+        return None
+    dot = 0.0
+    for ix in range(max(len(va), len(vb))):
+        x = va[ix] if ix < len(va) else None
+        y = vb[ix] if ix < len(vb) else None
+        if x is None or y is None:
+            return None
+        dot = dot + x * y
+    if na * nb == 0:
+        return None
+    return dot / (na * nb)
+
+
+def _jvm_norm(v):
+    """sqrt(_dot(v, v)) in Spark's NULL semantics."""
+    if v is None or any(x is None for x in v):
+        return None
+    dot = 0.0
+    for x in v:
+        dot = dot + x * x
+    return math.sqrt(dot)
+
+
+def _pair_survives(cos, thr):
+    return cos is not None and (math.isnan(cos) or cos >= thr)
+
+
+def _elected_pair_set(members):
+    """The pair set an elected bucket emits: hostile members (NULL id,
+    vector, element or norm, or a length other than the most common
+    clean one) stay single; clean members collapse into classes of
+    byte-identical (vector, norm), rep = first member; pairs are all
+    (a<b) among reps and hostile members plus (rep, member) stars."""
+    import collections
+    import struct
+
+    def shaped(mem):
+        i, v, n = mem
+        return None not in (i, v, n) and None not in v
+
+    lens = collections.Counter(len(mem[1]) for mem in members if shaped(mem))
+    dim = min(lens, key=lambda ln: (-lens[ln], ln)) if lens else 0
+    single, rep_of = [], {}
+    for k, (i, v, n) in enumerate(members):
+        if not shaped(members[k]) or len(v) != dim:
+            single.append(k)
+            continue
+        key = struct.pack(f"<{len(v) + 1}d", *v, n)
+        if key in rep_of:
+            rep_of[k] = rep_of[key]
+        else:
+            rep_of[key] = rep_of[k] = k
+            single.append(k)
+    single.sort()
+    pairs = {(a, b) for x, a in enumerate(single) for b in single[x + 1:]}
+    pairs |= {(r, k) for k, r in rep_of.items()
+              if isinstance(k, int) and r != k}
+    return pairs
+
+
+@st.composite
+def _pair_buckets(draw):
+    """(id, vector, norm kind) members; "dup" repeats an earlier
+    member's vector and norm kind, so election finds classes."""
+    dim = draw(st.integers(0, 4))
+    pool, members = [], []
+    for k in range(draw(st.integers(0, 14))):
+        kind = draw(st.sampled_from(
+            ["fresh", "fresh", "dup", "dup", "null_vec", "ragged"]))
+        if kind == "dup" and pool:
+            v, norm = draw(st.sampled_from(pool))
+        else:
+            v = None
+            if kind != "null_vec":
+                ln = dim if kind == "fresh" else draw(st.integers(0, dim + 2))
+                v = draw(st.lists(st.sampled_from(_PAIR_ELEMS),
+                                  min_size=ln, max_size=ln))
+            norm = draw(st.sampled_from(["spark", "spark", "null", "tiny"]))
+            pool.append((v, norm))
+        i = None if draw(st.integers(0, 12)) == 0 else 10 * k
+        members.append((i, v, norm))
+    return members
+
+
+@settings(max_examples=200, deadline=None, derandomize=True)
+@given(
+    members=_pair_buckets(),
+    thr=st.sampled_from([-0.5, 0.0, 0.5, 0.99, 1.0, 1.5]),
+    tile=st.sampled_from([2, 3, 512]),
+)
+# an elected duplicate whose star cosine is NULL (its norm squared
+# underflows) is still dropped through a NaN partner after its rep ...
+@example(members=[(0, [1.0, 0.0], "tiny"), (10, [_NAN, 0.0], "spark"),
+                  (20, [1.0, 0.0], "tiny")], thr=0.5, tile=512)
+# ... or before its rep
+@example(members=[(0, [_NAN, 0.0], "spark"), (10, [1.0, 0.0], "tiny"),
+                  (20, [1.0, 0.0], "tiny")], thr=0.5, tile=512)
+def test_pair_kernel_core_vs_exact_reference(members, thr, tile):
+    """The embedding-pair kernel core (similarity._bucket_tiles) and
+    both of its consumers, called directly on generated pyarrow buckets
+    — NaN, +-inf, NULL vectors/elements/norms/ids, ragged lengths, zero
+    norms, empty buckets, duplicate classes — against a pure-Python
+    per-pair replay of the JVM expression, with election forced on and
+    off and tiles small enough to cut every bucket."""
+    import pyarrow as pa
+
+    from torcharrow_spark.operators import similarity as sim
+
+    ty = pa.struct([("i", pa.int64()), ("v", pa.list_(pa.float32())),
+                    ("n", pa.float64())])
+    # the bucket arrives as a slice of a batch (non-zero offsets), its
+    # elements rounded to float32 exactly as the Arrow batch holds them
+    rounded = pa.array([{"i": i, "v": v, "n": None} for i, v, _ in members],
+                       type=ty).to_pylist()
+    # norms as Spark computes them, or NULL, or one whose square
+    # underflows (Spark's `/` is NULL on a zero divisor)
+    norms = {"null": lambda v: None, "tiny": lambda v: 1e-200,
+             "spark": _jvm_norm}
+    rows = [{"i": r["i"], "v": r["v"], "n": norms[norm](r["v"])}
+            for r, (_, _, norm) in zip(rounded, members)]
+    filler = [{"i": 1, "v": [1.0] * 3, "n": 1.0}]
+    sa = pa.array([filler, rows], type=pa.list_(ty))[1].values
+    ref = [(r["i"], r["v"], r["n"]) for r in rows]
+    m = len(ref)
+    full = {}
+    for b in range(m):
+        for a in range(b):
+            cos = _jvm_pair_cos(ref[a], ref[b])
+            if _pair_survives(cos, thr):
+                full[(a, b)] = cos
+    want_drops = sorted({b for _a, b in full})
+    elected_set = _elected_pair_set(ref)
+
+    def same(x, y):
+        return x == y or (math.isnan(x) and math.isnan(y))
+
+    old_tile = sim._TILE
+    sim._TILE = tile
+    try:
+        for onset in (10 ** 6, 1):  # election off, then forced on
+            assert sim._bucket_drops(sa, thr, onset).tolist() == want_drops
+            a, b, cos = sim._bucket_pairs(sa, thr, onset)
+            got = {}
+            for key, c in zip(zip(a.tolist(), b.tolist()), cos.tolist()):
+                assert key not in got, key
+                got[key] = c
+            want = full if onset > m else {
+                k: c for k, c in full.items() if k in elected_set}
+            assert set(got) == set(want)
+            assert all(same(got[k], want[k]) for k in want)
+    finally:
+        sim._TILE = old_tile
+
+
+def test_pair_kernel_core_one_null_member_in_10k_bucket():
+    """One NULL-vector member must not send a 10k-member bucket down a
+    per-pair Python loop: only its own pairs run the exact path, so
+    both consumers give the clean bucket's result (a NULL vector's
+    cosine is 0.0, below any positive threshold) within 2x of its
+    wall."""
+    import time
+
+    import numpy as np
+    import pyarrow as pa
+
+    from torcharrow_spark.operators.similarity import (
+        _bucket_drops,
+        _bucket_pairs,
+    )
+
+    rng = np.random.default_rng(7)
+    m, dim, thr = 10_000, 16, 0.9
+    vecs = rng.standard_normal((m - 1, dim)).astype(np.float32)
+    norms = np.sqrt((vecs.astype(np.float64) ** 2).sum(axis=1))
+    ids = np.arange(m - 1) * 2  # the NULL member slots in as id 9999
+
+    def bucket(with_null):
+        vs = [v.tolist() for v in vecs]
+        ns, ix = norms.tolist(), ids.tolist()
+        if with_null:
+            at = int(np.searchsorted(ids, 9999))
+            vs.insert(at, None)
+            ns.insert(at, None)
+            ix.insert(at, 9999)
+        return pa.StructArray.from_arrays(
+            [pa.array(ix, pa.int64()), pa.array(vs, pa.list_(pa.float32())),
+             pa.array(ns, pa.float64())],
+            names=["i", "v", "n"],
+        )
+
+    def run(sa):
+        i = sa.field("i").to_numpy()
+        t0 = time.perf_counter()
+        drops = i[_bucket_drops(sa, thr, 10 ** 6)].tolist()
+        a, b, cos = _bucket_pairs(sa, thr, 10 ** 6)
+        wall = time.perf_counter() - t0
+        return wall, drops, sorted(zip(i[a].tolist(), i[b].tolist(),
+                                       cos.tolist()))
+
+    clean_wall, clean_drops, clean_pairs = run(bucket(False))
+    wall, drops, pairs = run(bucket(True))
+    assert clean_pairs, "the bucket must have surviving pairs"
+    assert drops == clean_drops
+    assert pairs == clean_pairs  # ids and cosine doubles identical
+    assert wall < 2 * clean_wall, (wall, clean_wall)

@@ -343,9 +343,17 @@ def test_spread_decision_cache_skips_repeat_probe(spark, monkeypatch):
     )
 
 
+def _margin(feature_cols, w):
+    """w·x as a left-associated chain — the same addition order an
+    external SQL replay writes, so the double result is bit-identical."""
+    z = F.col(feature_cols[0]).cast("double") * F.lit(float(w[0]))
+    for c, wi in zip(feature_cols[1:], list(w)[1:]):
+        z = z + F.col(c).cast("double") * F.lit(float(wi))
+    return z
+
+
 def _logreg_train_ref(df, feature_cols, label_col, lr=1.0, iters=3):
     """pre-r13 Column-API training loop, verbatim."""
-    from torcharrow_spark.operators.classifier import _margin
     from torcharrow_spark.operators.relevance import _round8
 
     cols = list(feature_cols)
@@ -398,10 +406,7 @@ def test_logreg_sqltext_fit_matches_column_api(spark):
 
 
 def test_logreg_sqltext_score_matches_column_api(spark):
-    from torcharrow_spark.operators.classifier import (
-        _margin,
-        logreg_score,
-    )
+    from torcharrow_spark.operators.classifier import logreg_score
     from torcharrow_spark.operators.relevance import _round6
 
     df = spark.createDataFrame(
@@ -418,13 +423,17 @@ def test_logreg_sqltext_score_matches_column_api(spark):
     new = logreg_score(df, ["x0", "x1"], w)
     assert old.schema.json() == new.schema.json()
     assert old.collect() == new.collect()
-    # non-finite weights take the legacy path and still work
-    winf = [float("inf"), 0.0]
-    a = df.withColumn(
-        "score",
-        _round6(
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(["x0", "x1"], winf)))
-        ),
-    )
-    b = logreg_score(df, ["x0", "x1"], winf)
-    assert a.collect() == b.collect()
+    # non-finite weights ride as CAST('NaN'/'Infinity' AS DOUBLE)
+    # literals and still match the Column-API construction
+    for wbad in ([float("inf"), 0.0], [0.5, float("-inf")],
+                 [float("nan"), 1.0]):
+        a = df.withColumn(
+            "score",
+            _round6(
+                F.lit(1.0)
+                / (F.lit(1.0) + F.exp(-_margin(["x0", "x1"], wbad)))
+            ),
+        )
+        b = logreg_score(df, ["x0", "x1"], wbad)
+        assert a.schema.json() == b.schema.json()
+        assert repr(a.collect()) == repr(b.collect()), wbad

@@ -38,6 +38,7 @@ deterministic self-contained instance.
 
 from __future__ import annotations
 
+import types
 import typing as _ty
 
 import pandas as pd
@@ -61,8 +62,8 @@ class UnigramTokenizer:
         bad = [p for p, c in vocab.items() if not p or int(c) <= 0]
         if bad:
             raise ValueError(f"unigram: empty piece or non-positive cost: {bad[:3]}")
-        self.vocab = {p: int(c) for p, c in vocab.items()}
-        self.max_len = max(len(p) for p in self.vocab)
+        self._vocab = {p: int(c) for p, c in vocab.items()}
+        self.max_len = max(len(p) for p in self._vocab)
         #: canonical_ties=True resolves equal-cost segmentations to the
         #: LEXICOGRAPHICALLY SMALLEST piece list — the total order a SQL
         #: replay can state (``ORDER BY cost, pieces``). TRAINED vocabs
@@ -73,15 +74,26 @@ class UnigramTokenizer:
         #: other (pieces are nonempty), so comparing prefix piece-lists
         #: decides the full-sequence comparison regardless of the
         #: (shared-suffix) remainder.
-        self.canonical_ties = bool(canonical_ties)
+        self._canonical_ties = bool(canonical_ties)
         # stable piece ids: cost ascending, then piece — the id table a
         # downstream embedding matrix would be built against
         self.ids = {
             p: i
             for i, (p, _) in enumerate(
-                sorted(self.vocab.items(), key=lambda kv: (kv[1], kv[0]))
+                sorted(self._vocab.items(), key=lambda kv: (kv[1], kv[0]))
             )
         }
+
+    # read-only: segmentations are memoized per word, so a mutable
+    # table or tie rule would serve stale results — build a new
+    # tokenizer instead
+    @property
+    def vocab(self) -> _ty.Mapping[str, int]:
+        return types.MappingProxyType(self._vocab)
+
+    @property
+    def canonical_ties(self) -> bool:
+        return self._canonical_ties
 
     @classmethod
     def toy(cls) -> "UnigramTokenizer":
@@ -138,7 +150,7 @@ class UnigramTokenizer:
         memo = self.__dict__.setdefault("_memo", {})
         hit = memo.get(w)
         if hit is None:
-            if self.canonical_ties:
+            if self._canonical_ties:
                 hit = self._encode_word_canonical(w)
             else:
                 hit = self._encode_word_min(w)
@@ -159,7 +171,7 @@ class UnigramTokenizer:
                 if best[j] == INF:
                     continue
                 piece = w[j:i]
-                c = self.vocab.get(piece)
+                c = self._vocab.get(piece)
                 if c is None:
                     continue
                 cand = best[j] + c
@@ -193,7 +205,7 @@ class UnigramTokenizer:
                 bj = best[j]
                 if bj is None:
                     continue
-                c = self.vocab.get(w[j:i])
+                c = self._vocab.get(w[j:i])
                 if c is None:
                     continue
                 cand = (bj[0] + c, bj[1] + (w[j:i],))
@@ -215,7 +227,7 @@ class UnigramTokenizer:
         return [self.ids[p] for p in self.encode(text)]
 
     def cost(self, pieces: _ty.Iterable[str]) -> int:
-        return sum(self.vocab[p] for p in pieces)
+        return sum(self._vocab[p] for p in pieces)
 
 
 def encode_udf(tokenizer: UnigramTokenizer):

@@ -24,6 +24,7 @@ features and scores every document with it.
 
 from __future__ import annotations
 
+import math
 import typing as _ty
 
 from pyspark.sql import DataFrame as SDF
@@ -38,40 +39,35 @@ __all__ = [
 ]
 
 # the engine-determinism rounding primitives live in ONE place
-from .relevance import _round6, _round8  # noqa: E402
+from .relevance import _round8  # noqa: E402
 
 
-def _margin(feature_cols: _ty.Sequence[str], w: _ty.Sequence[float]) -> F.Column:
-    """w·x as a left-associated chain — the same addition order an
-    external SQL replay writes, so the double result is bit-identical."""
-    z = F.col(feature_cols[0]).cast("double") * F.lit(float(w[0]))
-    for c, wi in zip(feature_cols[1:], list(w)[1:]):
-        z = z + F.col(c).cast("double") * F.lit(float(wi))
-    return z
+def _double_sqltext(x: float) -> str:
+    """A double as SQL text that parses back to the identical value:
+    the D-suffixed shortest round-trip repr, or a CAST of 'NaN' /
+    'Infinity' / '-Infinity', which have no numeric literal."""
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
 
 
 def _margin_sqltext(
     feature_cols: _ty.Sequence[str], w: _ty.Sequence[float]
-) -> str | None:
-    """SQL-text mirror of ``_margin`` (r13, guide §5.4): the sigmoid +
-    per-feature gradient expressions were rebuilt through ~40 Column-API
-    py4j round trips on EVERY training iteration; one generated string
-    per aggregate keeps the tree identical (left-associated adds,
-    D-suffixed shortest-roundtrip double literals) at a fraction of the
-    driver cost. Returns None when any weight is non-finite — inf/nan
-    have no SQL double literal, so those (already-degenerate) fits keep
-    the legacy Column construction. Equality pinned by
+) -> str:
+    """w·x as SQL text (r13): a left-associated chain, the
+    same addition order an external SQL replay writes, so the double
+    result is bit-identical. The sigmoid + per-feature gradient
+    expressions were rebuilt through ~40 Column-API py4j round trips on
+    EVERY training iteration; one generated string per aggregate is a
+    fraction of that driver cost. Equality with the Column-API
+    construction is pinned by
     tests/test_textstats_sqltext.py::test_logreg_sqltext_*."""
-    import math
-
-    ws = [float(wi) for wi in w]
-    if not all(math.isfinite(wi) for wi in ws):
-        return None
     from .textstats import _qid
 
     parts = [
-        f"cast({_qid(c)} as double) * {wi!r}D"
-        for c, wi in zip(feature_cols, ws)
+        f"cast({_qid(c)} as double) * {_double_sqltext(float(wi))}"
+        for c, wi in zip(feature_cols, w)
     ]
     return "(" + " + ".join(parts) + ")"
 
@@ -105,6 +101,8 @@ def logreg_train(
     still inflating the mean's denominator — silently shrinking every
     gradient); an empty or fully-null training frame raises.
     Returns plain Python floats."""
+    from .textstats import _qid
+
     cols = list(feature_cols)
     feat = df.select(
         *[F.col(c).cast("double").alias(c) for c in cols],
@@ -115,34 +113,18 @@ def logreg_train(
     try:
         w = [0.0] * len(cols)
         for _ in range(iters):
-            m = _margin_sqltext(cols, w)
-            if m is None:  # non-finite weight: exact legacy construction
-                p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(cols, w)))
-                err = p - F.col("__y__")
-                aggs = [
-                    F.count(F.lit(1)).alias("__n__"),
-                    *[
-                        F.sum(
-                            _round8(err * F.col(c)).cast("decimal(28,8)")
-                        ).alias(f"__g{i}__")
-                        for i, c in enumerate(cols)
-                    ],
-                ]
-            else:
-                from .textstats import _qid
-
-                err = f"(1.0D / (1.0D + exp(-{m})) - `__y__`)"
-                aggs = [
-                    F.expr("count(1) AS __n__"),
-                    *[
-                        F.expr(
-                            "sum(cast("
-                            + _round8_sqltext(f"{err} * {_qid(c)}")
-                            + f" as decimal(28,8))) AS __g{i}__"
-                        )
-                        for i, c in enumerate(cols)
-                    ],
-                ]
+            err = f"(1.0D / (1.0D + exp(-{_margin_sqltext(cols, w)})) - `__y__`)"
+            aggs = [
+                F.expr("count(1) AS __n__"),
+                *[
+                    F.expr(
+                        "sum(cast("
+                        + _round8_sqltext(f"{err} * {_qid(c)}")
+                        + f" as decimal(28,8))) AS __g{i}__"
+                    )
+                    for i, c in enumerate(cols)
+                ],
+            ]
             row = feat.agg(*aggs).collect()[0]
             n = float(row["__n__"])
             if n == 0:
@@ -170,15 +152,7 @@ def logreg_score(
     """Score every row with a trained model: adds ``out_col`` =
     sigmoid(w·x), rounded half-up to 6 decimals by default (cross-engine
     `exp` ulp policy — same as BM25 scores). Zero-shuffle projection."""
-    m = _margin_sqltext(list(feature_cols), weights)
-    if m is None:  # non-finite weight: exact legacy construction
-        p = F.lit(1.0) / (
-            F.lit(1.0) + F.exp(-_margin(list(feature_cols), weights))
-        )
-        if round6:
-            p = _round6(p)
-        return df.withColumn(out_col, p)
-    p = f"1.0D / (1.0D + exp(-{m}))"
+    p = f"1.0D / (1.0D + exp(-{_margin_sqltext(feature_cols, weights)}))"
     if round6:
         p = f"(floor(({p}) * 1000000.0D + 0.5D) / 1000000.0D)"
     return df.withColumn(out_col, F.expr(p))

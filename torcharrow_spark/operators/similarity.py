@@ -22,12 +22,22 @@ from __future__ import annotations
 import hashlib
 import logging
 import math
+import sys
 
+import numpy as np
+import pyarrow as pa
+import pyspark.sql.types as T
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame as SDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 _log = logging.getLogger("torcharrow_spark.similarity")
+
+# the pair kernel ships to Python workers by value: a fresh worker then
+# unpickles it without importing the whole operators package (~0.25 s
+# per worker, measured on q42's first passes at sf0.01)
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # Fallback weight-table size when a dimension probe finds no rows.
 _DEFAULT_DIM = 64
@@ -134,225 +144,299 @@ def _cosine_from(dot, na, nb):
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
-def _pair_kernel_enabled(spark) -> bool:
-    """Arrow pair kernel opt-out: `spark.torcharrow.arrowPairKernels`
-    (default true) + numpy/pyarrow importable. The kill switch exists so
-    the legacy all-JVM pair plan stays one conf away (plan-pin tests and
-    the bit-identity pin flip it). The import check runs on the DRIVER
-    only: a driver without numpy/pyarrow gets the JVM plan, but a worker
-    without them fails the job with the worker's ImportError."""
-    try:
-        if spark.conf.get(
-            "spark.torcharrow.arrowPairKernels", "true"
-        ).lower() == "false":
-            return False
-    except Exception:
-        pass
-    try:
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError:
-        return False
-    return True
+#: tile edge of the pair kernel's clean sweep: one TILE x TILE block of
+#: float64 accumulators (2 MB) per step bounds memory at any bucket
+#: size while amortizing numpy's per-call dispatch
+_TILE = 512
+
+
+def _elect_onset(dim: int) -> int:
+    """Member count above which the pair kernel elects a bucket: the
+    `_emit_pairs` onset rule with member_bytes = id(8) + norm(8) + dim
+    floats(4d) + struct overhead, so wide vectors elect early enough
+    that the collect_list buffer stays bounded at any dim (r8)."""
+    from .dedup import DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND
+
+    return min(
+        DEFAULT_ELECT_THRESHOLD, max(2, ELECT_BYTES_BOUND // (32 + 4 * dim))
+    )
+
+
+def _norm_ok(n) -> bool:
+    # Spark's `n > 0`: NULL is false, NaN orders greatest
+    return n is not None and (n > 0 or math.isnan(n))
+
+
+def _exact_cos(va, na, vb, nb):
+    """One pair through the JVM expression
+    ``_cosine_from(_dot(va, vb), na, nb)``; None is SQL NULL. The when()
+    fallback gives exactly 0.0 unless both norms pass `> 0`; zip_with
+    pads the shorter vector with NULL, and any NULL product makes the
+    fold NULL; Spark's `/` is NULL on a zero divisor."""
+    if not (_norm_ok(na) and _norm_ok(nb)):
+        return 0.0
+    if va is None or vb is None or len(va) != len(vb):
+        return None
+    dot = 0.0
+    for x, y in zip(va, vb):
+        if x is None or y is None:
+            return None
+        dot = dot + x * y
+    den = na * nb
+    return None if den == 0 else dot / den
+
+
+def _survives(cos, null, thr: float):
+    """`cosine >= thr` as Spark's filter reads it: NULL never passes,
+    NaN orders greatest."""
+    return ~null & ((cos >= thr) | np.isnan(cos))
+
+
+def _cos_tile(AT, na, BT, nb, thr: float):
+    """`_exact_cos` over every (a, b) pair of the columns of AT x BT
+    (vectors stored dimension-major, so each step reads contiguous
+    rows), vectorized: the strict left fold of `_dot` runs one
+    dimension at a time, so each product and each add is the same
+    correctly rounded float64 op the JVM performs (f32 -> f64 widening
+    is exact) and every cosine is bit-identical. Returns (cosines,
+    survivor mask)."""
+    acc = np.zeros((AT.shape[1], BT.shape[1]))
+    with np.errstate(all="ignore"):
+        for d in range(len(AT)):
+            acc += np.multiply.outer(AT[d], BT[d])
+        den = np.multiply.outer(na, nb)
+        ok = np.logical_and.outer(
+            (na > 0) | np.isnan(na), (nb > 0) | np.isnan(nb)
+        )
+        cos = np.where(ok, acc / den, 0.0)
+        return cos, _survives(cos, ok & (den == 0), thr)
+
+
+def _nulls(arr):
+    return arr.is_null().to_numpy(zero_copy_only=False)
+
+
+def _bucket_tiles(sa, thr: float, onset: int):
+    """The embedding-pair kernel core over ONE bucket: ``sa`` is the
+    bucket's Arrow struct array of (i id, v vector, n norm) members in
+    sorted order. Returns ``(rep_of, tiles)``; ``tiles`` yields
+    ``(a, b, cos, hit)`` — member positions a and b, the cosine of every
+    (a[x], b[y]) pair and its survivor mask (`_survives`), pairs outside
+    the a<b set masked off. `_bucket_drops` and `_bucket_pairs` consume
+    it; the SQL oracles replay the same semantics.
+
+    * Hostile members — a NULL id, vector, element or norm, or a length
+      other than the bucket's clean dimension (the most common clean
+      length) — are split off: clean x clean pairs run the vectorized
+      `_cos_tile` sweep, and only the pairs that touch a hostile member
+      run `_exact_cos`, O(h*m) calls for h hostile members.
+    * Election: a bucket above ``onset`` members collapses its clean
+      members into exact-byte classes of (vector, norm) — members the
+      cosine cannot tell apart, a strict refinement of the xxhash64
+      vector classes `_emit_pairs` elects by. The class's first member
+      is its rep; the pair set becomes C(reps, 2) + one (rep, member)
+      star per other class member, with real cosines. Hostile members
+      are never collapsed. ``rep_of`` maps every position to its rep
+      (itself when not elected)."""
+    m = len(sa)
+    iv, vv, nv = sa.flatten()
+    offs = np.asarray(vv.offsets, dtype=np.int64)
+    rel, lens = offs - offs[0], np.diff(offs)
+    elems = vv.values.slice(offs[0], rel[-1])
+    base = ~_nulls(iv) & ~_nulls(vv) & ~_nulls(nv)
+    if elems.null_count:
+        run = np.concatenate(([0], np.cumsum(_nulls(elems))))
+        base &= run[rel[1:]] == run[rel[:-1]]
+    dim = 0
+    if base.any():
+        ls, counts = np.unique(lens[base], return_counts=True)
+        dim = int(ls[counts.argmax()])
+    clean = base & (lens == dim)
+    C = np.nonzero(clean)[0]
+    col = np.cumsum(clean) - 1  # position -> column of VT
+    VT = np.asarray(elems.to_numpy(zero_copy_only=False), dtype=np.float64)[
+        np.arange(dim)[:, None] + rel[C]
+    ]
+    ns = np.asarray(nv.to_numpy(zero_copy_only=False), dtype=np.float64)
+    rep_of, reps = np.arange(m), C
+    if m > onset and len(C):
+        key = np.ascontiguousarray(np.column_stack([VT.T, ns[C]]))
+        _, first, inv = np.unique(
+            key.view(np.dtype((np.void, key.strides[0]))).ravel(),
+            return_index=True,
+            return_inverse=True,
+        )
+        rep_of[C] = C[first[inv]]
+        reps = C[np.sort(first)]
+
+    def tiles():
+        Vr, nr = VT.take(col[reps], axis=1), ns[reps]
+        for a0 in range(0, len(reps), _TILE):
+            a = reps[a0:a0 + _TILE]
+            for b0 in range(a0, len(reps), _TILE):
+                b = reps[b0:b0 + _TILE]
+                cos, hit = _cos_tile(
+                    Vr[:, a0:a0 + _TILE], nr[a0:a0 + _TILE],
+                    Vr[:, b0:b0 + _TILE], nr[b0:b0 + _TILE], thr,
+                )
+                yield a, b, cos, hit & (a[:, None] < b[None, :])
+        tails = np.nonzero(rep_of != np.arange(m))[0]
+        by_rep = tails[np.argsort(rep_of[tails], kind="stable")]
+        cuts = np.nonzero(np.diff(rep_of[by_rep]))[0] + 1
+        for star in np.split(by_rep, cuts):
+            if len(star):
+                r = rep_of[star[:1]]
+                cos, hit = _cos_tile(
+                    VT.take(col[r], axis=1), ns[r],
+                    VT.take(col[star], axis=1), ns[star], thr,
+                )
+                yield r, star, cos, hit
+        H = np.nonzero(~clean)[0]
+        hostile = {h: (vv[h].as_py(), nv[h].as_py()) for h in H}
+
+        def exact(others, h):
+            with np.errstate(all="ignore"):
+                got = [
+                    _exact_cos(
+                        *(hostile.get(k) or (VT[:, col[k]], ns[k])), *hostile[h]
+                    )
+                    for k in others
+                ]
+            null = np.array([c is None for c in got], dtype=bool)
+            cos = np.array([0.0 if c is None else c for c in got])
+            return cos, _survives(cos, null, thr)
+
+        for h in H:
+            # clean reps on either side, later hostile members after:
+            # every pair touching a hostile member runs exactly once
+            lo = reps[reps < h]
+            hi = np.union1d(reps[reps > h], H[H > h])
+            if len(lo):
+                cos, hit = exact(lo, h)
+                yield lo, np.array([h]), cos[:, None], hit[:, None]
+            if len(hi):
+                cos, hit = exact(hi, h)
+                yield np.array([h]), hi, cos[None, :], hit[None, :]
+
+    return rep_of, tiles()
+
+
+def _bucket_drops(sa, thr: float, onset: int):
+    """Positions `semantic_dedup` drops in one bucket: every member with
+    an earlier member at cosine >= thr, over the FULL pair set even
+    when the core elected. Each tile is ORed column-wise into the drop
+    mask; an elected member t is byte-identical to its rep r, so full
+    emission drops t iff r is dropped or r has a survivor partner
+    before t (partners inside the class come through the star)."""
+    rep_of, tiles = _bucket_tiles(sa, thr, onset)
+    m = len(rep_of)
+    drop = np.zeros(m, dtype=bool)
+    first = np.full(m, m)  # each member's earliest later survivor partner
+    for a, b, _cos, hit in tiles:
+        drop[b[hit.any(axis=0)]] = True
+        rows = hit.any(axis=1)
+        first[a[rows]] = np.minimum(
+            first[a[rows]], b[hit[rows].argmax(axis=1)]
+        )
+    drop |= drop[rep_of] | (first[rep_of] < np.arange(m))
+    return np.nonzero(drop)[0]
+
+
+def _bucket_pairs(sa, thr: float, onset: int):
+    """(a, b, cosine) of every surviving pair `cosine_pairs` emits for
+    one bucket — member positions, a before b."""
+    _rep_of, tiles = _bucket_tiles(sa, thr, onset)
+    out = [[np.empty(0, int)], [np.empty(0, int)], [np.empty(0)]]
+    for a, b, cos, hit in tiles:
+        ai, bi = np.nonzero(hit)
+        for part, arr in zip(out, (a[ai], b[bi], cos[ai, bi])):
+            part.append(arr)
+    return tuple(np.concatenate(part) for part in out)
+
+
+def _map_buckets(buckets: SDF, schema, bucket_rows) -> SDF:
+    """One mapInArrow kernel over the ``ms`` bucket arrays (r13: LSH
+    and cluster buckets are few and fat, so the boundary crossing ships
+    ~300 B/vector once, where a JVM pair plan explodes C(m, 2) rows each
+    carrying two dim-float arrays and folds every dot through an
+    interpreted aggregate() lambda). ``bucket_rows(sa)`` returns one
+    bucket's output columns; ``schema`` is the output."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def kern(batches):
+        for batch in batches:
+            col = batch.column(0)
+            parts = [[pa.array([], type=f.type)] for f in arrow_schema]
+            for r in range(batch.num_rows):
+                if col[r].is_valid:
+                    for part, arr in zip(parts, bucket_rows(col[r].values)):
+                        part.append(arr)
+            yield pa.RecordBatch.from_arrays(
+                [pa.concat_arrays(p) for p in parts], schema=arrow_schema
+            )
+
+    return buckets.select("ms").mapInArrow(kern, schema)
+
+
+def _member_buckets(
+    df: SDF, key: str, id_col: str, vec_col: str, norm_col: str
+) -> SDF:
+    """One row per ``key`` group of 2+ members: ``ms`` = the sorted
+    array of (i id, v vector, n norm) structs the pair kernel reads."""
+    members = F.struct(
+        F.col(id_col).alias("i"),
+        F.col(vec_col).alias("v"),
+        F.col(norm_col).alias("n"),
+    )
+    return (
+        df.groupBy(key)
+        .agg(F.sort_array(F.collect_list(members)).alias("ms"))
+        .where(F.size("ms") >= 2)
+    )
 
 
 def _bucket_drop_ids(
-    buckets: SDF,
-    threshold: float,
-    id_col: str,
-    elect_threshold: int,
-    member_bytes: int,
+    buckets: SDF, threshold: float, id_col: str, onset: int
 ) -> SDF:
-    """semantic_dedup's within-bucket drop set — (id,) of every member
-    with an earlier (lower-sort-order) member at cosine >= threshold —
-    computed by ONE vectorized Arrow kernel over the bucket arrays
-    instead of the JVM pair explosion (r13, guide §4.2/§8: the buckets
-    frame is ~300 B/vector; the exploded pair frame the legacy plan
-    materializes carries TWO dim-float arrays per pair, ~250k pairs per
-    250-member bucket, each folded by an interpreted `aggregate`
-    lambda. Moving the decision into one numpy kernel crosses the
-    Python boundary with the SMALL side — measured 3.1 -> 0.8 s on
-    q138's dedup stage at sf0.1, output identical).
-
-    Bit-identity argument (pinned by
-    test_semantic_dedup_kernel_matches_jvm_path):
-
-    * dot: the JVM form is a strict left fold acc + x_i*y_i (doubles,
-      0.0 seed). The kernel accumulates `acc += A[:,d] * B[:,d]` per
-      dimension d ascending — each product and each add is the same
-      correctly-rounded float64 op on the same values (f32 -> f64
-      widening is exact), so every partial sum is bit-identical.
-    * cosine: dot/(na*nb) when na>0 AND nb>0 (Spark semantics: NaN > 0
-      is TRUE — NaN orders greatest), else exactly 0.0; the `>=
-      threshold` comparison likewise treats NaN as greatest, so the
-      kernel drops on `(cos >= t) | isnan(cos)` and accepts norms on
-      `(n > 0) | isnan(n)`.
-    * drop set: the kernel enumerates the FULL a<b pair set per bucket
-      (tiled, never materialized) — the reference semantics the SQL
-      oracles replay; the legacy plan's election collapse is drop-set
-      preserving (the `_emit_pairs` proof), so both paths agree.
-    * hostile rows (null/ragged vectors, null norms, null ids) route
-      the whole bucket through an exact per-pair Python loop that
-      mirrors zip_with null-padding (any null product -> dot null ->
-      pair never drops) and the when() 0.0 fallback.
-
-    Memory/cost bound: buckets above the legacy election onset
-    (min(elect_threshold, ELECT_BYTES_BOUND/member_bytes)) collapse to
-    one representative per EXACT-BYTE vector class + (rep, member)
-    stars before the tile sweep — the same linear-in-duplication
-    escape hatch `_emit_pairs` applies, with byte equality instead of
-    xxhash64 classes (a strict refinement: no collision risk, same
-    drop set by the same proof)."""
-    import pyspark.sql.types as T
-
-    from .dedup import ELECT_BYTES_BOUND
-
-    onset = min(
-        int(elect_threshold),
-        max(2, ELECT_BYTES_BOUND // max(int(member_bytes), 1)),
-    )
+    """semantic_dedup's within-bucket drop set: (id,) of every member
+    `_bucket_drops` drops. Measured 3.1 -> 0.8 s on q138's dedup stage
+    at sf0.1 against the JVM pair plan, output identical (r13)."""
     thr = float(threshold)
     id_t = buckets.schema["ms"].dataType.elementType["i"].dataType
-    out_schema = T.StructType([T.StructField(id_col, id_t, True)])
 
-    def kern(batches):
-        import math
+    def drops(sa):
+        return [sa.flatten()[0].take(pa.array(_bucket_drops(sa, thr, onset)))]
 
-        import numpy as np
-        import pyarrow as pa
+    return _map_buckets(
+        buckets, T.StructType([T.StructField(id_col, id_t, True)]), drops
+    )
 
-        def tile_sweep(V, ns, drop, a_idx=None):
-            """Mark drop[k] for members with an earlier tile witness.
-            a_idx selects the candidate 'a' rows (reps only after a
-            collapse); pair order is position order = sorted-id order."""
-            m, dim = V.shape
-            arange = np.arange(m)
-            a_rows = arange if a_idx is None else a_idx
-            na_ok = (ns > 0) | np.isnan(ns)
-            TILE = 512
-            with np.errstate(all="ignore"):
-                for a0 in range(0, len(a_rows), TILE):
-                    asel = a_rows[a0:a0 + TILE]
-                    A, nsa = V[asel], ns[asel]
-                    for b0 in range(0, m, TILE):
-                        b1 = min(b0 + TILE, m)
-                        if b1 <= asel[0]:
-                            continue
-                        B = V[b0:b1]
-                        acc = np.zeros((len(asel), b1 - b0))
-                        for d in range(dim):
-                            acc += np.outer(A[:, d], B[:, d])
-                        nn = np.outer(nsa, ns[b0:b1])
-                        cos = acc / nn
-                        ok = na_ok[asel][:, None] & na_ok[None, b0:b1]
-                        cos = np.where(ok, cos, 0.0)
-                        dm = (cos >= thr) | np.isnan(cos)
-                        dm &= asel[:, None] < np.arange(b0, b1)[None, :]
-                        drop[b0:b1] |= dm.any(axis=0)
 
-        def exact_pair_cos(a, b):
-            """One pair through the exact JVM semantics (hostile path)."""
-            na, nb = a["n"], b["n"]
-            na_ok = na is not None and (na > 0 or math.isnan(na))
-            nb_ok = nb is not None and (nb > 0 or math.isnan(nb))
-            if not (na_ok and nb_ok):
-                return 0.0
-            va, vb = a["v"], b["v"]
-            if va is None or vb is None:
-                return None
-            dot = 0.0
-            for ix in range(max(len(va), len(vb))):
-                x = va[ix] if ix < len(va) else None
-                y = vb[ix] if ix < len(vb) else None
-                if x is None or y is None:
-                    return None
-                dot = dot + x * y
-            return dot / (na * nb)
+def _bucket_pair_cosines(buckets: SDF, threshold: float, onset: int) -> SDF:
+    """cosine_pairs' pair stage: (id_a, id_b, cosine) of every pair
+    `_bucket_pairs` emits. Measured 1.27 -> 0.52 s on q42's pair stage
+    at sf0.1 against the JVM pair plan, identical rows (r13)."""
+    thr = float(threshold)
+    id_t = buckets.schema["ms"].dataType.elementType["i"].dataType
 
-        out_type = None
-        for batch in batches:
-            col = batch.column(0)
-            if out_type is None:
-                out_type = (
-                    batch.schema.field(0).type.value_type.field("i").type
-                )
-            dropped = []
-            for r in range(batch.num_rows):
-                row = col[r]
-                if not row.is_valid:
-                    continue
-                sa = row.values
-                m = len(sa)
-                iv, vv, nv = sa.field("i"), sa.field("v"), sa.field("n")
-                hostile = (
-                    iv.null_count > 0
-                    or vv.null_count > 0
-                    or nv.null_count > 0
-                )
-                if not hostile:
-                    flat = vv.flatten()
-                    lens = np.diff(np.asarray(vv.offsets))
-                    hostile = flat.null_count > 0 or (
-                        m > 0 and lens.min() != lens.max()
-                    )
-                if hostile:
-                    members = row.as_py()
-                    dropset = set()
-                    for k in range(1, m):
-                        b = members[k]
-                        if b["i"] in dropset:
-                            continue
-                        for j in range(k):
-                            cos = exact_pair_cos(members[j], b)
-                            if cos is not None and (
-                                cos >= thr or math.isnan(cos)
-                            ):
-                                dropset.add(b["i"])
-                                break
-                    dropped.extend(dropset)
-                    continue
-                dim = int(lens[0]) if m else 0
-                ids = iv.to_pylist()
-                ns = np.asarray(
-                    nv.to_numpy(zero_copy_only=False), dtype=np.float64
-                )
-                V = np.asarray(
-                    flat.to_numpy(zero_copy_only=False), dtype=np.float64
-                ).reshape(m, dim)
-                drop = np.zeros(m, dtype=bool)
-                if m > onset and dim > 0:
-                    # exact-byte election: rep = first (min-id) member
-                    # of each identical-vector class; stars drop the
-                    # rest of a class iff cos(v, v) clears the bar
-                    _, rep_idx, inv = np.unique(
-                        V.view([("", V.dtype)] * dim).ravel(),
-                        return_index=True,
-                        return_inverse=True,
-                    )
-                    with np.errstate(all="ignore"):
-                        self_dot = np.zeros(m)
-                        for d in range(dim):
-                            self_dot += V[:, d] * V[:, d]
-                        rep_of = rep_idx[inv]
-                        star_cos = np.where(
-                            ((ns > 0) | np.isnan(ns))
-                            & ((ns[rep_of] > 0) | np.isnan(ns[rep_of])),
-                            self_dot / (ns[rep_of] * ns),
-                            0.0,
-                        )
-                        star = (star_cos >= thr) | np.isnan(star_cos)
-                        star &= rep_of < np.arange(m)
-                        drop |= star
-                    tile_sweep(V, ns, drop, a_idx=np.sort(rep_idx))
-                else:
-                    tile_sweep(V, ns, drop)
-                for k in np.nonzero(drop)[0]:
-                    dropped.append(ids[int(k)])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(dropped, type=out_type)], [id_col]
-            )
+    def pairs(sa):
+        a, b, cos = _bucket_pairs(sa, thr, onset)
+        ids = sa.flatten()[0]
+        return [ids.take(pa.array(a)), ids.take(pa.array(b)), pa.array(cos)]
 
-    return buckets.select("ms").mapInArrow(kern, out_schema)
+    return _map_buckets(
+        buckets,
+        T.StructType(
+            [
+                T.StructField("id_a", id_t, True),
+                T.StructField("id_b", id_t, True),
+                T.StructField("cosine", T.DoubleType(), True),
+            ]
+        ),
+        pairs,
+    )
 
 
 def brute_force_topk(
@@ -710,259 +794,6 @@ def lsh_topk_multitable(
     )
 
 
-def _bucket_pair_cosines(
-    buckets: SDF, threshold: float, onset: int
-) -> SDF:
-    """cosine_pairs' pair stage — within-bucket pair emission, exact
-    cosine, threshold filter — as ONE vectorized Arrow kernel over the
-    bucket arrays (r13, guide §4.2: LSH buckets are FEW and FAT —
-    2^n_planes rows each carrying ~corpus/2^n_planes vectors — so the
-    boundary crossing ships ~300 B/vector once, where the legacy plan
-    exploded C(m,2) pair rows each carrying two dim-float arrays and
-    folded every dot through an interpreted aggregate() lambda).
-
-    Exactness (pinned by test_cosine_pairs_kernel_matches_jvm_path):
-
-    * arithmetic: the identical strict left-fold/når-ok/NaN rules as
-      `_bucket_drop_ids` (see its docstring) — the emitted `cosine`
-      doubles are bit-identical to the JVM expression's;
-    * pair set: members arrive pre-sorted (sort_array); under the
-      election onset all ordered pairs are swept. Above it, the legacy
-      election is replayed EXACTLY: the struct carries the same
-      ``xxhash64(v)`` class key (``ck``) the legacy elect_key computes,
-      a STABLE sort by ck reproduces the (key, member) sort (ck is a
-      function of v, so the received member order already tie-breaks
-      identically), reps are run heads (class min member), and the
-      emitted list is C(reps, 2) + (rep, member) stars with REAL
-      per-pair cosines (ck classes are hash classes, so star vectors
-      are only almost-surely identical — the kernel never assumes it);
-    * hostile rows (null/ragged vectors, null norms) take the exact
-      per-pair Python loop; null cosines are filtered exactly like the
-      JVM's null-compares-false `where`."""
-    import pyspark.sql.types as T
-
-    thr = float(threshold)
-    el = buckets.schema["ms"].dataType.elementType
-    id_t = el["i"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_t, True),
-            T.StructField("id_b", id_t, True),
-            T.StructField("cosine", T.DoubleType(), True),
-        ]
-    )
-
-    def kern(batches):
-        import math
-
-        import numpy as np
-        import pyarrow as pa
-
-        def pair_cos_exact(a, b):
-            na, nb = a["n"], b["n"]
-            na_ok = na is not None and (na > 0 or math.isnan(na))
-            nb_ok = nb is not None and (nb > 0 or math.isnan(nb))
-            if not (na_ok and nb_ok):
-                return 0.0
-            va, vb = a["v"], b["v"]
-            if va is None or vb is None:
-                return None
-            dot = 0.0
-            for ix in range(max(len(va), len(vb))):
-                x = va[ix] if ix < len(va) else None
-                y = vb[ix] if ix < len(vb) else None
-                if x is None or y is None:
-                    return None
-                dot = dot + x * y
-            return dot / (na * nb)
-
-        def slow_bucket(members, oa, ob, oc):
-            m = len(members)
-            if m > onset:
-                order = sorted(range(m), key=lambda ix: members[ix]["ck"])
-                runs, i = [], 0
-                while i < m:
-                    j = i
-                    while (
-                        j < m
-                        and members[order[j]]["ck"] == members[order[i]]["ck"]
-                    ):
-                        j += 1
-                    runs.append([order[k] for k in range(i, j)])
-                    i = j
-                reps = sorted(r[0] for r in runs)
-                pairs = [
-                    (reps[x], reps[y])
-                    for x in range(len(reps))
-                    for y in range(x + 1, len(reps))
-                ]
-                for r in runs:
-                    pairs.extend((r[0], mem) for mem in r[1:])
-            else:
-                pairs = [
-                    (j, k) for j in range(m) for k in range(j + 1, m)
-                ]
-            for j, k in pairs:
-                cos = pair_cos_exact(members[j], members[k])
-                if cos is not None and (cos >= thr or math.isnan(cos)):
-                    oa.append(members[j]["i"])
-                    ob.append(members[k]["i"])
-                    oc.append(cos)
-
-        def fold_cos(V, ns, na_ok, ai, bi):
-            """Exact cosines for index-pair vectors (1-D index arrays):
-            per-dimension fold, then the when() 0.0 fallback."""
-            acc = np.zeros(len(ai))
-            for d in range(V.shape[1]):
-                acc += V[ai, d] * V[bi, d]
-            with np.errstate(all="ignore"):
-                cos = acc / (ns[ai] * ns[bi])
-            return np.where(na_ok[ai] & na_ok[bi], cos, 0.0)
-
-        def tile_pairs(V, ns, na_ok, ids, sel, col_a, col_b, col_c):
-            """All ordered pairs within the `sel` subset (positions in
-            ascending member order), tiled; emit survivors."""
-            TILE = 512
-            n = len(sel)
-            for a0 in range(0, n, TILE):
-                asel = sel[a0:a0 + TILE]
-                for b0 in range(a0, n, TILE):
-                    bsel = sel[b0:min(b0 + TILE, n)]
-                    acc = np.zeros((len(asel), len(bsel)))
-                    for d in range(V.shape[1]):
-                        acc += np.outer(V[asel, d], V[bsel, d])
-                    with np.errstate(all="ignore"):
-                        cos = acc / np.outer(ns[asel], ns[bsel])
-                    cos = np.where(
-                        na_ok[asel][:, None] & na_ok[None, bsel], cos, 0.0
-                    )
-                    keep = (cos >= thr) | np.isnan(cos)
-                    keep &= asel[:, None] < bsel[None, :]
-                    ai, bi = np.nonzero(keep)
-                    if len(ai):
-                        col_a.append(
-                            np.asarray([ids[int(asel[x])] for x in ai])
-                        )
-                        col_b.append(
-                            np.asarray([ids[int(bsel[x])] for x in bi])
-                        )
-                        col_c.append(cos[ai, bi])
-
-        out_type = None
-        for batch in batches:
-            col = batch.column(0)
-            if out_type is None:
-                out_type = (
-                    batch.schema.field(0).type.value_type.field("i").type
-                )
-            oa, ob, oc = [], [], []
-            ka, kb, kc = [], [], []
-            for r in range(batch.num_rows):
-                row = col[r]
-                if not row.is_valid:
-                    continue
-                sa = row.values
-                m = len(sa)
-                iv, vv = sa.field("i"), sa.field("v")
-                nv, cv = sa.field("n"), sa.field("ck")
-                hostile = (
-                    iv.null_count > 0
-                    or vv.null_count > 0
-                    or nv.null_count > 0
-                    or cv.null_count > 0
-                )
-                if not hostile:
-                    flat = vv.flatten()
-                    lens = np.diff(np.asarray(vv.offsets))
-                    hostile = flat.null_count > 0 or (
-                        m > 0 and lens.min() != lens.max()
-                    )
-                if not hostile:
-                    try:
-                        ids = iv.to_pylist()
-                        ns = np.asarray(
-                            nv.to_numpy(zero_copy_only=False),
-                            dtype=np.float64,
-                        )
-                        V = np.asarray(
-                            flat.to_numpy(zero_copy_only=False),
-                            dtype=np.float64,
-                        ).reshape(m, int(lens[0]) if m else 0)
-                    except Exception:
-                        hostile = True
-                if hostile:
-                    slow_bucket(row.as_py(), oa, ob, oc)
-                    continue
-                na_ok = (ns > 0) | np.isnan(ns)
-                if m > onset:
-                    ck = np.asarray(
-                        cv.to_numpy(zero_copy_only=False), dtype=np.int64
-                    )
-                    order = np.argsort(ck, kind="stable")
-                    ck_s = ck[order]
-                    run_start = np.ones(m, dtype=bool)
-                    run_start[1:] = ck_s[1:] != ck_s[:-1]
-                    rep_idx = np.sort(order[run_start])
-                    tile_pairs(V, ns, na_ok, ids, rep_idx, ka, kb, kc)
-                    rep_of_sorted = order[run_start][
-                        np.cumsum(run_start) - 1
-                    ]
-                    tails = order[~run_start]
-                    reps_for_tails = rep_of_sorted[~run_start]
-                    if len(tails):
-                        cosv = fold_cos(
-                            V, ns, na_ok, reps_for_tails, tails
-                        )
-                        keep = (cosv >= thr) | np.isnan(cosv)
-                        sel = np.nonzero(keep)[0]
-                        if len(sel):
-                            ka.append(
-                                np.asarray(
-                                    [
-                                        ids[int(reps_for_tails[x])]
-                                        for x in sel
-                                    ]
-                                )
-                            )
-                            kb.append(
-                                np.asarray(
-                                    [ids[int(tails[x])] for x in sel]
-                                )
-                            )
-                            kc.append(cosv[sel])
-                else:
-                    tile_pairs(
-                        V, ns, na_ok, ids, np.arange(m), ka, kb, kc
-                    )
-            arrs_a = [pa.array(x, type=out_type) for x in ka]
-            arrs_b = [pa.array(x, type=out_type) for x in kb]
-            arrs_c = [pa.array(x, type=pa.float64()) for x in kc]
-            if oa:
-                arrs_a.append(pa.array(oa, type=out_type))
-                arrs_b.append(pa.array(ob, type=out_type))
-                arrs_c.append(pa.array(oc, type=pa.float64()))
-            if arrs_a:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.concat_arrays(arrs_a),
-                        pa.concat_arrays(arrs_b),
-                        pa.concat_arrays(arrs_c),
-                    ],
-                    ["id_a", "id_b", "cosine"],
-                )
-            else:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([], type=out_type),
-                        pa.array([], type=out_type),
-                        pa.array([], type=pa.float64()),
-                    ],
-                    ["id_a", "id_b", "cosine"],
-                )
-
-    return buckets.select("ms").mapInArrow(kern, out_schema)
-
-
 def cosine_pairs(
     corpus: SDF,
     threshold: float = 0.95,
@@ -999,76 +830,12 @@ def cosine_pairs(
         _norm(F.col(vec_col)).alias("__norm__"),
         lsh_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
     )
-    from .dedup import DEFAULT_ELECT_THRESHOLD, ELECT_BYTES_BOUND, _emit_pairs
-
-    # election class key = xxhash64 of the raw vector (free: the vector
-    # already rides the bucket shuffle): byte-identical embeddings are
-    # cosine-1.0 duplicates, so a pathological bucket collapses to
-    # per-vector-class representatives + linear stars (cosine exactly
-    # 1.0 in the projection below, so stars survive any threshold <= 1).
-    # member_bytes: id(8) + norm(8) + dim floats(4d) + struct overhead —
-    # the bytes-based onset (dedup.ELECT_BYTES_BOUND) makes these
-    # wide-payload buckets elect early enough that the collect_list
-    # buffer stays bounded at any dim (r8, VERDICT r7 ask #5)
-    member_bytes = 32 + 4 * dim
-    if _pair_kernel_enabled(corpus.sparkSession):
-        # r13 (guide §4.2): pair emission + exact cosine + threshold in
-        # one Arrow kernel over the bucket arrays; the class key rides
-        # the struct so the kernel replays the election with the SAME
-        # ck values the legacy elect_key computes (exactness argument
-        # in _bucket_pair_cosines). Measured 1.27 -> 0.52 s on the q42
-        # pair stage at sf0.1, identical rows.
-        buckets = (
-            c.groupBy("bucket")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col(id_col).alias("i"),
-                            F.col(vec_col).alias("v"),
-                            F.col("__norm__").alias("n"),
-                            F.xxhash64(F.col(vec_col)).alias("ck"),
-                        )
-                    )
-                ).alias("ms")
-            )
-            .where(F.size("ms") >= 2)
-        )
-        onset = min(
-            DEFAULT_ELECT_THRESHOLD,
-            max(2, ELECT_BYTES_BOUND // member_bytes),
-        )
-        return _bucket_pair_cosines(buckets, threshold, onset)
-    buckets = (
-        c.groupBy("bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col(id_col).alias("i"), F.col(vec_col).alias("v"), F.col("__norm__").alias("n")))
-            ).alias("ms")
-        )
-        .where(F.size("ms") >= 2)
-    )
-    # memory-bounded pair emission (dedup._emit_pairs): a hot bucket of
-    # m vectors would otherwise materialize C(m, 2) struct pairs — each
-    # carrying TWO dim-float arrays — in a single flatten() value
-    exploded = _emit_pairs(
-        buckets, "ms", elect_key=lambda x: F.xxhash64(x["v"]),
-        elect_threshold=DEFAULT_ELECT_THRESHOLD,
-        member_bytes=member_bytes,
-    ).select(
-        F.col("__a__.i").alias("id_a"),
-        F.col("__b__.i").alias("id_b"),
-        F.col("__a__.v").alias("__va__"),
-        F.col("__b__.v").alias("__vb__"),
-        F.col("__a__.n").alias("__na__"),
-        F.col("__b__.n").alias("__nb__"),
-    )
-    cos = _cosine_from(
-        _dot(F.col("__va__"), F.col("__vb__")), F.col("__na__"), F.col("__nb__")
-    )
-    return (
-        exploded.select("id_a", "id_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+    # pair emission + exact cosine + threshold in one Arrow kernel over
+    # the bucket arrays (r13)
+    return _bucket_pair_cosines(
+        _member_buckets(c, "bucket", id_col, vec_col, "__norm__"),
+        threshold,
+        _elect_onset(dim),
     )
 
 
@@ -1100,7 +867,7 @@ def semantic_dedup(
 
     Scale design: the quadratic step is confined per cluster (size
     n_clusters ~ sqrt(corpus) like IVF so cluster populations stay a
-    few thousand); pair emission is memory-bounded (`_emit_pairs`);
+    few thousand); the pair kernel's tiles bound its memory;
     cross-cluster near-dups are missed by design — SemDeDup's own
     approximation, priced against never comparing across cells.
     Returns ``(id, cluster, keep)`` for every input vector.
@@ -1140,66 +907,18 @@ def semantic_dedup(
         _norm(F.col(vec_col)).alias("__n__"),
         F.array_max(sims)["c"].alias("cluster"),
     )
-    buckets = (
-        assigned.groupBy("cluster")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("i"),
-                        F.col(vec_col).alias("v"),
-                        F.col("__n__").alias("n"),
-                    )
-                )
-            ).alias("ms")
+    # the drop decision is the ONLY consumer of the pair cosines, so it
+    # runs inside the pair kernel (r13)
+    dropped = (
+        _bucket_drop_ids(
+            _member_buckets(assigned, "cluster", id_col, vec_col, "__n__"),
+            threshold,
+            id_col,
+            _elect_onset(_infer_dim(corpus, vec_col)),
         )
-        .where(F.size("ms") >= 2)
+        .distinct()
+        .withColumn("__dropped__", F.lit(True))
     )
-    from .dedup import DEFAULT_ELECT_THRESHOLD, _emit_pairs
-
-    member_bytes = 32 + 4 * _infer_dim(corpus, vec_col)
-    if _pair_kernel_enabled(corpus.sparkSession):
-        # r13 (guide §4.2/§8): the drop decision is the ONLY consumer
-        # of the pair cosines here, so compute it inside one Arrow
-        # kernel over the bucket arrays instead of exploding C(m,2)
-        # vector-pair rows through interpreted aggregate() folds —
-        # bit-identity argument and hostile-input handling in
-        # _bucket_drop_ids. Measured 3.1 -> 0.8 s on q138's dedup
-        # stage at sf0.1, output identical (pinned).
-        dropped = (
-            _bucket_drop_ids(
-                buckets, threshold, id_col,
-                DEFAULT_ELECT_THRESHOLD, member_bytes,
-            )
-            .distinct()
-            .withColumn("__dropped__", F.lit(True))
-        )
-    else:
-        # legacy all-JVM pair plan (kill switch / no numpy).
-        # election (see cosine_pairs): a member's rep is its class MIN
-        # id with an IDENTICAL vector, so every "earlier similar doc"
-        # witness full emission finds survives the collapse — the
-        # keep-first drop set below is exactly unchanged (proof in
-        # _emit_pairs docstring); member_bytes makes the onset
-        # bytes-aware for the wide vector payload (r8)
-        pairs = _emit_pairs(
-            buckets, "ms", elect_key=lambda x: F.xxhash64(x["v"]),
-            elect_threshold=DEFAULT_ELECT_THRESHOLD,
-            member_bytes=member_bytes,
-        ).select(
-            F.col("__b__.i").alias(id_col),
-            _cosine_from(
-                _dot(F.col("__a__.v"), F.col("__b__.v")),
-                F.col("__a__.n"),
-                F.col("__b__.n"),
-            ).alias("__cos__"),
-        )
-        dropped = (
-            pairs.where(F.col("__cos__") >= threshold)
-            .select(id_col)
-            .distinct()
-            .withColumn("__dropped__", F.lit(True))
-        )
     return (
         assigned.select(id_col, "cluster")
         .join(dropped, id_col, "left")

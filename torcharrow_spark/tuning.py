@@ -109,45 +109,6 @@ REGISTRY: list[dict] = [
         ),
     },
     {
-        "name": "Arrow pair kernels",
-        "kind": "session-conf",
-        "location": "spark.torcharrow.arrowPairKernels",
-        "default": "true",
-        "effect": (
-            "The embedding pair stages — semantic_dedup's "
-            "within-bucket drop set (similarity._bucket_drop_ids) and "
-            "cosine_pairs' pair emission + exact cosine "
-            "(similarity._bucket_pair_cosines) — run as one "
-            "vectorized Arrow kernel over the bucket arrays instead "
-            "of exploding C(m,2) vector-pair rows through interpreted "
-            "aggregate() folds. Bit-identical to the JVM pair plans "
-            "by construction (strict left-fold arithmetic replayed "
-            "per-dimension in numpy; Spark NaN-compares-greatest "
-            "semantics mirrored; the election replayed with the same "
-            "JVM-computed class keys; hostile rows take an exact "
-            "per-pair Python loop)."
-        ),
-        "trade": (
-            "Measured 3.1 -> 0.8 s on q138's dedup stage and 1.88 -> "
-            "0.66 s on q42's pair stage at sf0.1 (LSH buckets are few "
-            "and fat, so the boundary crossing ships ~300 B/vector "
-            "once vs two dim-float arrays per pair — guide §8's "
-            "move-the-small-side rule; measured-REJECTED for q43's "
-            "prefix candidate stage, whose ~100k tiny buckets make "
-            "the boundary cost match the JVM emission). Requires "
-            "numpy + pyarrow on the workers. The availability check "
-            "runs on the driver only: a driver without them gets the "
-            "JVM plan, but a worker without them fails the job."
-        ),
-        "override": (
-            "spark.conf.set('spark.torcharrow.arrowPairKernels', "
-            "'false') restores the all-JVM pair plans "
-            "(test_semantic_dedup_kernel_matches_jvm_path and "
-            "test_cosine_pairs_kernel_matches_jvm_path flip it to "
-            "pin both paths equal)."
-        ),
-    },
-    {
         "name": "pair-emission chunk / salting onset",
         "kind": "module-constant",
         "location": "operators.dedup.DEFAULT_EMIT_CHUNK",
@@ -221,8 +182,9 @@ REGISTRY: list[dict] = [
             "alone could not give (VERDICT r7 ask #5)."
         ),
         "override": (
-            "Per call: member_bytes=/elect_threshold= on "
-            "cosine_pairs/semantic_dedup (_emit_pairs parameters)."
+            "Per call: _emit_pairs(member_bytes=, elect_threshold=); "
+            "cosine_pairs/semantic_dedup derive the onset from the "
+            "vector dim (similarity._elect_onset)."
         ),
     },
     {
