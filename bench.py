@@ -112,31 +112,40 @@ PLAN_WIDTH = 32
 def gate_session(app: str = "bench", master_width: int | None = None):
     """The gate's Spark session: local[master_width] (default: the cores
     this process may use) with every plan-shaping width set from
-    PLAN_WIDTH. Must run before anything in the process imports
-    torcharrow_spark, because session.py reads SPARK_GRAFT_CPUS at
-    import; a session built any other way fails loudly here."""
+    PLAN_WIDTH and get_session's Python worker confs, so reported walls
+    measure the engine's own worker path. Must run before anything in the
+    process imports torcharrow_spark, because session.py reads
+    SPARK_GRAFT_CPUS at import; a session built any other way fails
+    loudly here."""
     os.environ["SPARK_GRAFT_CPUS"] = str(PLAN_WIDTH)
     from pyspark.sql import SparkSession
 
     import torcharrow_spark as ts
+    from torcharrow_spark.session import worker_confs
 
     width = master_width or len(os.sched_getaffinity(0))
-    spark = (
+    confs = worker_confs()  # the engine's Python worker path
+    builder = (
         SparkSession.builder.master(f"local[{width}]")
         .appName(app)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.default.parallelism", str(PLAN_WIDTH))
-        .getOrCreate()
     )
+    for k, v in confs.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
     ts.tune(spark)
     ipn = spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     par = spark.sparkContext.defaultParallelism
-    if par != PLAN_WIDTH or ipn != str(PLAN_WIDTH * 8):
+    daemon = spark.sparkContext.getConf().get("spark.python.daemon.module", None)
+    if (par != PLAN_WIDTH or ipn != str(PLAN_WIDTH * 8)
+            or daemon != confs["spark.python.daemon.module"]):
         raise RuntimeError(
             f"gate session is not pinned to PLAN_WIDTH={PLAN_WIDTH} "
-            f"(defaultParallelism {par}, initialPartitionNum {ipn}): call "
+            f"(defaultParallelism {par}, initialPartitionNum {ipn}) or does "
+            f"not run the engine's worker daemon ({daemon}): call "
             "gate_session before importing torcharrow_spark or creating "
             "another session"
         )
