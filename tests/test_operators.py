@@ -4102,8 +4102,7 @@ def test_cap_amplified_scan(spark, tmp_path):
     assert cp is not proj and cp.columns == proj.columns
 
     # deliberate no-ops: a Filter cannot be reproduced by a re-read;
-    # in-memory plans have no file splits; a STRICTER manual conf wins;
-    # and the kill switch disables everything
+    # in-memory plans have no file splits; a STRICTER manual conf wins
     filt = scan.where("doc_id > 5")
     assert cap_amplified_scan(filt, rows_budget=1 << 17) is filt
     mem = spark.range(10)
@@ -4113,11 +4112,6 @@ def test_cap_amplified_scan(spark, tmp_path):
         assert cap_amplified_scan(scan, rows_budget=1 << 21) is scan
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", before)
-    spark.conf.set("spark.torcharrow.amplifiedScanCap", "false")
-    try:
-        assert cap_amplified_scan(scan, rows_budget=1 << 17) is scan
-    finally:
-        spark.conf.unset("spark.torcharrow.amplifiedScanCap")
 
 
 def test_spread_narrow_source_adaptive(spark, sf_dir):

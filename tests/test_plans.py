@@ -322,12 +322,12 @@ def test_ngrams_lambda_reads_bound_array(spark):
     n-grams as a zip_with chain over shifted slices of it."""
     from pyspark.sql import functions as F
 
-    from torcharrow_spark.operators.textstats import _ngrams
+    from torcharrow_spark.operators.textstats import _ngrams_sqltext
 
     df = (
         spark.createDataFrame([("a b c d e",)], "text string")
         .withColumn("__w__", F.split("text", " "))
-        .select(_ngrams(F.col("__w__"), 3).alias("g3"))
+        .select(F.expr(f"{_ngrams_sqltext('__w__', 3)} AS g3"))
     )
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "zip_with" in plan, plan

@@ -13,12 +13,106 @@ from pyspark.sql import functions as F
 from torcharrow_spark.operators.textstats import (
     STOPWORDS,
     _language_exprs,
-    _ngrams,
     _quality_exprs,
     _token_count_exprs,
     _with_words,
     gopher_filter,
+    repetition_stats,
 )
+
+
+def _ngrams(words: F.Column, n: int) -> F.Column:
+    """Space-joined token n-grams as a zip_with chain over n shifted
+    slices. CRITICAL shape: ``words`` appears only as an HOF *input*
+    (each slice evaluates it once per row); the earlier
+    transform-over-indices form referenced ``words`` INSIDE its lambda,
+    and an outer computed expression in an interpreted lambda re-evaluates
+    per element — O(len²) splits per document, measured 120x slower on
+    the quality gate once the projection was actually materialized
+    (count() benchmarks prune projections and had hidden it)."""
+    cnt = F.greatest(F.size(words) - (n - 1), F.lit(0))
+    acc = F.slice(words, 1, cnt)
+    for j in range(1, n):
+        acc = F.zip_with(
+            acc,
+            F.slice(words, j + 1, cnt),
+            lambda a, b: F.concat(a, F.lit(" "), b),
+        )
+    return acc
+
+
+def _repetition_stats_ref(df, text_col="text", id_col="doc_id"):
+    # pre-SQL-text Column-API construction, verbatim
+    df = _with_words(df, text_col, id_col)
+    words = F.col("__w__")
+    base = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.size(words).cast("long").alias("nw"),
+        (
+            F.lit(1.0)
+            - F.size(F.array_distinct(words)).cast("double")
+            / F.size(words).cast("double")
+        ).alias("dup_word_frac"),
+        (
+            F.when(
+                F.size(_ngrams(words, 5)) > 0,
+                F.lit(1.0)
+                - F.size(F.array_distinct(_ngrams(words, 5))).cast("double")
+                / F.size(_ngrams(words, 5)).cast("double"),
+            ).otherwise(F.lit(0.0))
+        ).alias("dup5_frac"),
+        _ngrams(words, 2).alias("g2"),
+        _ngrams(words, 3).alias("g3"),
+    )
+    tagged = base.select(
+        "doc_id",
+        F.explode(
+            F.concat(
+                F.transform(F.col("g2"), lambda g: F.concat(F.lit("2\x01"), g)),
+                F.transform(F.col("g3"), lambda g: F.concat(F.lit("3\x01"), g)),
+            )
+        ).alias("g"),
+    )
+    mx = (
+        tagged.groupBy("doc_id", "g")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("doc_id")
+        .agg(
+            F.max(F.when(F.substring("g", 1, 1) == "2", F.col("c"))).alias("mx2"),
+            F.max(F.when(F.substring("g", 1, 1) == "3", F.col("c"))).alias("mx3"),
+        )
+    )
+    out = base.drop("g2", "g3").join(mx, "doc_id", "left")
+    # a gram occurring once is not repetition: coverage counts only when
+    # the most frequent gram actually repeats (otherwise every short doc
+    # would trip the 0.2 threshold at 2/n_tokens)
+    top2 = F.coalesce(
+        F.when(
+            F.col("mx2") >= 2,
+            F.least(F.lit(1.0), F.col("mx2").cast("double") * 2 / F.col("nw")),
+        ),
+        F.lit(0.0),
+    )
+    top3 = F.coalesce(
+        F.when(
+            F.col("mx3") >= 2,
+            F.least(F.lit(1.0), F.col("mx3").cast("double") * 3 / F.col("nw")),
+        ),
+        F.lit(0.0),
+    )
+    return out.select(
+        "doc_id",
+        "dup_word_frac",
+        top2.alias("top2_frac"),
+        top3.alias("top3_frac"),
+        "dup5_frac",
+        (
+            (F.col("dup_word_frac") > 0.95)
+            | (top2 > 0.20)
+            | (top3 > 0.18)
+            | (F.col("dup5_frac") > 0.15)
+        ).alias("is_repetitive"),
+    )
 
 
 def _round4_ref(col):
@@ -270,6 +364,18 @@ def test_gopher_filter_sqltext_nondefault_params(spark):
     )
 
 
+def test_repetition_stats_sqltext_matches_column_api(spark):
+    df = spark.createDataFrame(_GATE_DOCS, "doc_id long, text string")
+    old = _repetition_stats_ref(df)
+    new = repetition_stats(df)
+    assert old.schema.json() == new.schema.json()
+    a = sorted(map(tuple, old.collect()))
+    assert a == sorted(map(tuple, new.collect()))
+    # the fixture must exercise both verdicts and nonzero 5-gram repeats
+    assert {True, False} <= {r[-1] for r in a}
+    assert any(r[4] and r[4] > 0 for r in a)
+
+
 def test_gopher_filter_keep_columns_shape(spark):
     text = "the of " + " ".join(f"alpha{chr(97 + i % 26)}{i}" for i in range(58))
     df = spark.createDataFrame(
@@ -283,44 +389,33 @@ def test_gopher_filter_keep_columns_shape(spark):
 
 
 def test_scan_handle_cache_is_metadata_only(spark):
-    """r13 (guide §5.4): _load registers each bench table once per
-    session — a lazy scan handle (plan + schema), never rows. Pins:
-    (a) repeat loads reuse the handle, (b) the kill switch bypasses it,
-    (c) the handle is keyed by applicationId so a different session id
-    never sees it."""
+    """_load resolves each bench table once per session and file
+    identity: repeat loads reuse one lazy scan handle (plan + schema),
+    and the memo holds plans, never rows."""
+    from torcharrow_spark import memo as M
     from torcharrow_spark import queries as Q
 
     sf_dir = "/root/testdata/sf0.001"
-    Q._SCAN_HANDLES.clear()
+    M.clear()
     a = Q._load(spark, sf_dir, "documents").to_spark()
-    key = (spark.sparkContext.applicationId, sf_dir, "documents")
-    assert key in Q._SCAN_HANDLES
     b = Q._load(spark, sf_dir, "documents").to_spark()
     # same underlying handle object — no second listing/footer pass
     assert a is b
-    # still a LAZY plan: no rows held anywhere in the cache
-    assert all(
-        hasattr(v, "queryExecution") or hasattr(v, "_jdf")
-        for v in Q._SCAN_HANDLES.values()
-    )
-    spark.conf.set("spark.torcharrow.scanRelationCache", "false")
-    try:
-        Q._SCAN_HANDLES.clear()
-        Q._load(spark, sf_dir, "documents")
-        assert Q._SCAN_HANDLES == {}
-    finally:
-        spark.conf.set("spark.torcharrow.scanRelationCache", "true")
+    assert len(M._STORE) == 1
+    assert all(hasattr(v, "_jdf") for v in M._STORE.values())
 
 
 def test_spread_decision_cache_skips_repeat_probe(spark, monkeypatch):
     """r13: spread_narrow_source memoizes its split-count decision per
-    normalized plan — the df.rdd probe (~0.45 s of driver-side physical
-    planning) must run at most once per plan shape per session."""
+    normalized plan and file identity — the df.rdd probe (~0.45 s of
+    driver-side physical planning) must run at most once per plan shape
+    per session."""
     from pyspark.sql.classic import dataframe as _cdf
 
+    from torcharrow_spark import memo as M
     from torcharrow_spark.operators import preprocess as P
 
-    P._SPREAD_DECISIONS.clear()
+    M.clear()
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     calls = {"n": 0}
     real_rdd = _cdf.DataFrame.rdd  # a functools.cached_property

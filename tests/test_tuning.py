@@ -26,6 +26,23 @@ def test_registry_structure():
         assert e["name"] in text
 
 
+def test_every_engine_conf_is_registered():
+    """Every ``spark.torcharrow.*`` conf the package source names is a
+    REGISTRY ``location``, so an undocumented knob cannot come back."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(tuning.__file__).parent
+    named = {
+        m
+        for f in root.rglob("*.py")
+        for m in re.findall(r"spark\.torcharrow\.[A-Za-z0-9_]+", f.read_text())
+    }
+    registered = {e["location"] for e in tuning.REGISTRY}
+    assert named, "no engine conf found: the source scan is broken"
+    assert named <= registered, sorted(named - registered)
+
+
 def test_constants_match_their_modules():
     """The registry imports defaults instead of transcribing them, so a
     drift here means a knob moved without its docs."""

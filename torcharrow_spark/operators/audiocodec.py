@@ -22,6 +22,8 @@ import typing as _ty
 
 import numpy as np
 
+from .imagecodec import named_errors
+
 __all__ = [
     "encode_wav",
     "decode_wav",
@@ -121,6 +123,7 @@ def encode_wav_g711(
     return hdr + payload
 
 
+@named_errors("wav")
 def decode_wav(data: bytes) -> _ty.Tuple[int, int, "np.ndarray"]:
     """Parse a RIFF/WAVE byte string -> (sample_rate, channels, samples)
     with samples as int16 (8-bit PCM is widened, offset-binary -> signed).

@@ -23,6 +23,7 @@ import logging
 from pyspark.sql import DataFrame as SDF
 from pyspark.sql import functions as F
 
+from torcharrow_spark.memo import memo
 from torcharrow_spark.operators.preprocess import lineage_cut
 
 _log = logging.getLogger("torcharrow_spark.dedup")
@@ -88,29 +89,6 @@ DEFAULT_EMIT_CHUNK = 1024
 #: handful of buckets (r3 stress finding).
 SIMHASH_MIN_BITS = 16
 SIMHASH_MAX_BITS = 64
-
-
-#: memo of CONSTRUCTED Column expression trees (r13, guide §5.4).
-#: PySpark Columns are immutable unresolved-expression holders — the
-#: same object is freely reusable across DataFrames and queries — but
-#: BUILDING one costs a py4j round trip per operator (~1-4 ms on this
-#: host), and the emission machinery below assembles hundreds of
-#: operators on every call (measured ~2 s of the q43 build; shared by
-#: q19/q21/q42/q43/q46 and near_dup_clusters). The memo stores only
-#: expression metadata — never rows, never anything bound to data or a
-#: path — keyed by the pure construction parameters, so a hit IS the
-#: identical expression tree the miss would have built.
-_COLMEMO: dict = {}
-
-
-def _colmemo(key, build):
-    c = _COLMEMO.get(key)
-    if c is None:
-        c = build()
-        if len(_COLMEMO) > 512:
-            _COLMEMO.clear()
-        _COLMEMO[key] = c
-    return c
 
 
 def _emit_pairs(
@@ -266,7 +244,7 @@ def _emit_pairs(
             arr_col, elect_key, elect_threshold, link_reps
         )
 
-    g0_cols, g1_cols = _colmemo(
+    g0_cols, g1_cols = memo(
         ("emit_ub", arr_col, elect_threshold, bool(link_reps), _fp),
         _build_election_cols,
     )
@@ -276,9 +254,12 @@ def _emit_pairs(
 
 def _build_emit_election_cols(arr_col, elect_key, elect_threshold, link_reps):
     """Column construction for `_emit_pairs`' election rewrite —
-    extracted so `_colmemo` can reuse the (immutable) trees across
-    calls. Body unchanged from the in-line r6 form; see the block
-    comments in `_emit_pairs` for why the structure is what it is."""
+    extracted so `memo` can reuse the (immutable) trees across
+    calls: a Column is an unresolved expression bound to no data or
+    path, keyed by its pure construction parameters, so a hit is the
+    tree the miss would have built. Body unchanged from the in-line r6
+    form; see the block comments in `_emit_pairs` for why the structure
+    is what it is."""
     arr = F.col(arr_col)
 
     def _units_of(kd_):
@@ -395,9 +376,9 @@ def _emit_pairs_units(grouped: SDF, stars_col: str, bare_col: str,
     branches do. Returns ``__a__``/``__b__`` (bare element type).
 
     r13: every Column below is a pure function of (bare_col, stars_col,
-    chunk), so the whole set is built once per shape via `_colmemo`
+    chunk), so the whole set is built once per shape via `memo`
     (same trees, a fraction of the py4j cost)."""
-    c = _colmemo(
+    c = memo(
         ("emit_units", bare_col, stars_col, chunk),
         lambda: _build_emit_units_cols(bare_col, stars_col, chunk),
     )
@@ -430,7 +411,7 @@ def _emit_pairs_units(grouped: SDF, stars_col: str, bare_col: str,
 
 def _build_emit_units_cols(bare_col: str, stars_col: str, chunk: int) -> dict:
     """Column construction for `_emit_pairs_units`, extracted verbatim
-    for `_colmemo` reuse (see the docstring above for the plan shape)."""
+    for `memo` reuse (see the docstring above for the plan shape)."""
     bare = F.col(bare_col)
     inline_ok = lambda s: s.isNotNull() & (F.size(s) > 0) & (  # noqa: E731
         F.size(s) <= F.lit(chunk)
@@ -573,8 +554,8 @@ def _emit_pairs_impl(grouped: SDF, arr_col: str, chunk: int) -> SDF:
     """The r5 emission machinery (small zero-shuffle path + salted
     chunk-pair path) — see `_emit_pairs` for the contract. r13: the
     Column set is pure in (arr_col, chunk) and memoized via
-    `_colmemo`."""
-    c = _colmemo(
+    `memo`."""
+    c = memo(
         ("emit_impl", arr_col, chunk),
         lambda: _build_emit_impl_cols(arr_col, chunk),
     )
@@ -604,7 +585,7 @@ def _emit_pairs_impl(grouped: SDF, arr_col: str, chunk: int) -> SDF:
 
 def _build_emit_impl_cols(arr_col: str, chunk: int) -> dict:
     """Column construction for `_emit_pairs_impl`, extracted verbatim
-    for `_colmemo` reuse."""
+    for `memo` reuse."""
     arr = F.col(arr_col)
 
     small_pred = F.size(arr) <= chunk
@@ -1571,12 +1552,13 @@ def ngram_jaccard_pairs_prefix(
     # diamond, relation dedup would clone the whole lambda-heavy
     # emission pipeline with fresh lambda ids, ReuseExchange would miss
     # (SURVEY §4.3 case studies #4/#5) and the candidate stage would
-    # execute twice. A LAZY lineage cut (same device
-    # connected_components uses for its iteration frontier)
-    # materializes the tiny pair table once per action and both
-    # consumers read the stored blocks; laziness keeps the operator's
-    # build side-effect-free (bench cold/steady timings stay honest —
-    # every action still pays pass 1 exactly once).
+    # execute twice. A lineage cut (same device connected_components
+    # uses for its iteration frontier) materializes the tiny pair
+    # table once and both consumers read the stored blocks. The cut is
+    # NOT free of side effects at build time: under AQE
+    # ``localCheckpoint(eager=False)`` plans the RDD, which runs the
+    # upstream shuffle stages while the query is being built, so pass 1
+    # executes here rather than at the sink.
     # ``checkpoint_survivors=False`` opts out (plan-inspection tests:
     # the checkpoint boundary hides the emission subplan from the
     # final DF's physical plan text — the double-execution cost is

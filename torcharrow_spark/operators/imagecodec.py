@@ -21,11 +21,37 @@ All decoders return ``(width, height, pixels)`` with ``pixels`` an
 
 from __future__ import annotations
 
+import functools
 import struct
 import typing as _ty
 import zlib
 
 import numpy as np
+
+
+def named_errors(fmt: str):
+    """Decoder decorator: any error a malformed stream raises surfaces as
+    a ValueError whose message names ``fmt``."""
+
+    def deco(decode):
+        @functools.wraps(decode)
+        def wrapped(data):
+            try:
+                return decode(data)
+            except ValueError as e:
+                if fmt in str(e).lower():
+                    raise
+                raise ValueError(f"{fmt}: {e}") from e
+            except (IndexError, KeyError, OverflowError, ZeroDivisionError,
+                    struct.error, zlib.error) as e:
+                raise ValueError(
+                    f"{fmt}: malformed stream ({type(e).__name__}: {e})"
+                ) from e
+
+        return wrapped
+
+    return deco
+
 
 # ---------------------------------------------------------------------------
 # PNG
@@ -42,6 +68,7 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
+@named_errors("png")
 def decode_png(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
     """Decode an 8-bit non-interlaced PNG (color types 0/2/4/6) per the
     public spec: chunk walk -> zlib inflate -> per-scanline unfilter
@@ -159,6 +186,7 @@ def encode_png(pixels: np.ndarray, filter_type: int = 0) -> bytes:
 # ---------------------------------------------------------------------------
 # BMP
 
+@named_errors("bmp")
 def decode_bmp(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
     """Decode an uncompressed (BI_RGB) 24/32-bit BITMAPINFOHEADER BMP:
     bottom-up rows (top-down when height < 0), 4-byte row padding, BGR(A)
@@ -177,6 +205,8 @@ def decode_bmp(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
     h = abs(h_signed)
     nch = bpp // 8
     stride = (w * nch + 3) & ~3
+    if w < 0 or (h and offset + (h - 1) * stride + w * nch > len(data)):
+        raise ValueError(f"BMP declares {w}x{h} pixels, beyond its {len(data)} bytes")
     px = np.zeros((h, w, 3), dtype=np.uint8)
     for row in range(h):
         src = offset + row * stride
@@ -209,6 +239,7 @@ def encode_bmp(pixels: np.ndarray) -> bytes:
 # ---------------------------------------------------------------------------
 # PPM (netpbm)
 
+@named_errors("ppm")
 def decode_ppm(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
     """Decode P6 (binary) or P3 (ascii) PPM, maxval 255."""
     magic = data[:2]
@@ -232,6 +263,8 @@ def decode_ppm(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
     w, h, maxval = int(tokens[0]), int(tokens[1]), int(tokens[2])
     if maxval != 255:
         raise ValueError("only maxval 255 PPM supported")
+    if w < 0 or h < 0 or w * h * 3 > len(data) - pos:
+        raise ValueError(f"PPM declares {w}x{h} pixels, beyond its {len(data)} bytes")
     if magic == b"P6":
         pos += 1  # exactly one whitespace after maxval
         px = np.frombuffer(data[pos : pos + w * h * 3], dtype=np.uint8)
@@ -454,6 +487,7 @@ def encode_gif(
     return bytes(out)
 
 
+@named_errors("gif")
 def decode_gif(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
     """GIF87a/89a decoder: global/local color table, extensions skipped,
     full LZW with code-width growth + KwKwK + mid-stream clear, four-pass
@@ -617,6 +651,7 @@ def encode_gif_animated(
     return bytes(out)
 
 
+@named_errors("gif")
 def decode_gif_frames(
     data: bytes,
 ) -> _ty.Tuple[int, int, np.ndarray]:

@@ -44,6 +44,8 @@ import typing as _ty
 
 import numpy as np
 
+from .imagecodec import named_errors
+
 # T.81 Figure A.6 zigzag scan order: index k -> (row v, col u)
 ZIGZAG: _ty.Tuple[_ty.Tuple[int, int], ...] = (
     (0, 0), (0, 1), (1, 0), (2, 0), (1, 1), (0, 2), (0, 3), (1, 2),
@@ -237,6 +239,7 @@ def _extend(v: int, s: int) -> int:
     return v
 
 
+@named_errors("jpeg")
 def decode_jpeg(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
     """Decode a baseline/extended-sequential or progressive Huffman
     JFIF stream to (width, height, uint8 array — (h, w) gray or
@@ -299,21 +302,7 @@ def decode_jpeg(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
                     bits, values
                 )
                 i += 17 + nv
-        elif marker in (0xC0, 0xC1):  # SOF0 / SOF1
-            prec = seg[0]
-            if prec != 8:
-                raise ValueError(f"unsupported JPEG precision {prec} (8 only)")
-            h = int.from_bytes(seg[1:3], "big")
-            w = int.from_bytes(seg[3:5], "big")
-            nc = seg[5]
-            comps = []
-            for c in range(nc):
-                cid, samp, qid = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append(
-                    {"id": cid, "h": samp >> 4, "v": samp & 15, "q": qid}
-                )
-            frame = (h, w, comps)
-        elif marker == 0xC2:  # SOF2 — progressive Huffman (r9)
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1; SOF2 progressive (r9)
             prec = seg[0]
             if prec != 8:
                 raise ValueError(f"unsupported JPEG precision {prec} (8 only)")
@@ -326,7 +315,19 @@ def decode_jpeg(data: bytes) -> _ty.Tuple[int, int, np.ndarray]:
                     {"id": cid, "h": samp >> 4, "v": samp & 15, "q": qid}
                 )
             frame = (h, w, comps)
-            progressive = True
+            progressive = marker == 0xC2
+            # every coded block costs at least 2 bits (its DC symbol and
+            # an EOB); a progressive stream codes every block's DC symbol
+            # in its DC scans, at least 1 bit. Reject a frame the stream
+            # is too short to code before allocating its planes.
+            blocks = sum(
+                by * bx for by, bx in (_comp_block_grid(frame, c) for c in comps)
+            )
+            if blocks * (1 if progressive else 2) > 8 * len(data):
+                raise ValueError(
+                    f"JPEG declares {w}x{h} pixels ({blocks} blocks), "
+                    f"beyond its {len(data)} bytes"
+                )
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
                         0xCE, 0xCF):
             raise ValueError(

@@ -16,10 +16,7 @@ from pyspark.sql import DataFrame as SDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-#: per-session memo of spread decisions keyed on the normalized plan
-#: string (see the r13 comment inside spread_narrow_source).
-_SPREAD_DECISIONS: dict = {}
+from torcharrow_spark.memo import memo
 
 #: monotonically unique suffix for pushdown_barrier metric names (the
 #: analyzer requires observed-metrics names to be unique per query
@@ -127,32 +124,24 @@ def spread_narrow_source(df: SDF) -> SDF:
     # DRIVER time per call (df.rdd materializes the full physical plan
     # and its partition packing), paid by every text_stats/dedup build
     # inside the bench's timed region. The decision is a pure function
-    # of (plan shape, file layout, parallelism), so memoize it per
-    # session keyed on the expr-id-normalized plan string — the plan
-    # text embeds the file listing and pushed filters, and the same
-    # normalized scan over immutable files always packs into the same
-    # splits. Metadata only (a bool per plan shape); no rows are cached.
+    # of (plan shape, file layout, parallelism), so it is memoized
+    # keyed on the expr-id-normalized plan string and the identity of
+    # the scanned files (`memo`): an overwritten source decides again.
+    # Metadata only (a bool per plan shape); no rows are cached.
+    # The probe is NOT job-free: ``sparkPlan`` does not yet hold the
+    # exchanges EnsureRequirements adds, and under AQE ``df.rdd``
+    # executes those shuffle stages, so a miss can run Spark jobs while
+    # the query is being built.
     try:
-        app_id = df.sparkSession.sparkContext.applicationId
-    except Exception:
-        app_id = None
-    key = (app_id, par, re.sub(r"#\d+", "#x", plan))
-    cached = _SPREAD_DECISIONS.get(key)
-    if cached is not None:
-        return df.repartition(par) if cached else df
-    try:
-        # safe here: the plan has no Exchange, so converting to an RDD
-        # plans the scan splits without executing any query stage
-        nparts = df.rdd.getNumPartitions()
+        spread = memo(
+            ("spread", par, re.sub(r"#\d+", "#x", plan)),
+            lambda: df.rdd.getNumPartitions() * 2 <= par,
+            session=df.sparkSession,
+            paths=df.inputFiles(),
+        )
     except Exception:
         return df
-    spread = nparts * 2 <= par
-    if len(_SPREAD_DECISIONS) > 512:
-        _SPREAD_DECISIONS.clear()
-    _SPREAD_DECISIONS[key] = spread
-    if not spread:
-        return df
-    return df.repartition(par)
+    return df.repartition(par) if spread else df
 
 
 def lineage_cut(df: SDF, eager: bool = False) -> SDF:
@@ -186,7 +175,9 @@ def lineage_cut(df: SDF, eager: bool = False) -> SDF:
     ``eager=False`` defers materialization to the first action (the
     cut frame is usually consumed immediately and possibly under a
     different job description); iterative algorithms that measure
-    per-round progress pass ``eager=True``.
+    per-round progress pass ``eager=True``. Neither form is job-free at
+    call time: under AQE the cut plans its RDD, which runs every
+    upstream shuffle stage while the query is being built.
     """
     mode = "auto"
     try:
@@ -379,18 +370,10 @@ def cap_amplified_scan(
       planned split, so small-scale plans and their byte anchors are
       untouched);
     * the session conf already set at/below the cap (the operator
-      respects a stricter manual setting);
-    * kill switch: ``spark.torcharrow.amplifiedScanCap=false``.
+      respects a stricter manual setting).
     """
     spark = df.sparkSession
     try:
-        if (
-            spark.conf.get(
-                "spark.torcharrow.amplifiedScanCap", "true"
-            ).lower()
-            != "true"
-        ):
-            return df
         budget = (
             rows_budget if rows_budget is not None
             else AMPLIFIED_SORT_ROWS_BUDGET

@@ -31,14 +31,10 @@ import typing as _ty
 from pyspark.sql import DataFrame as SDF
 from pyspark.sql import functions as F
 
+from torcharrow_spark.operators.textstats import _words
+
 __all__ = ["term_frequencies", "tf_idf", "top_terms", "bm25_scores",
            "collocations", "bigram_lm_scores"]
-
-
-def _words(col: F.Column) -> F.Column:
-    # Same whitespace-token convention as operators/textstats.py, so one
-    # DuckDB normalization expression serves every text operator.
-    return F.split(F.regexp_replace(F.trim(F.lower(col)), r"\s+", " "), " ")
 
 
 def _round8(col: F.Column) -> F.Column:

@@ -33,13 +33,6 @@ def _words(col):
     return F.split(F.regexp_replace(F.trim(F.lower(col)), r"\s+", " "), " ")
 
 
-def _round4(col):
-    """floor(x*1e4 + 0.5)/1e4 — engine-independent half-up rounding (the
-    builtin round() of different engines disagrees on double half-way
-    representations)."""
-    return F.floor(col * 10000.0 + 0.5) / 10000.0
-
-
 # --- SQL-text fragment generators (r13, guide §5.4) -------------------
 #
 # Every builder below constructs its expression tree as ONE generated
@@ -66,6 +59,9 @@ def _words_sqltext(text_sql: str) -> str:
 
 
 def _round4_sqltext(x: str) -> str:
+    """floor(x*1e4 + 0.5)/1e4 — engine-independent half-up rounding (the
+    builtin round() of different engines disagrees on double half-way
+    representations)."""
     return f"(floor(({x}) * 10000.0D + 0.5D) / 10000.0D)"
 
 
@@ -82,8 +78,14 @@ def _numlit_sqltext(v) -> str:
 
 
 def _ngrams_sqltext(words_sql: str, n: int) -> str:
-    """SQL-text mirror of ``_ngrams`` below — same zip_with chain over
-    n shifted slices, same literals."""
+    """Space-joined token n-grams as a zip_with chain over n shifted
+    slices. CRITICAL shape: ``words_sql`` appears only as an HOF *input*
+    (each slice evaluates it once per row); the earlier
+    transform-over-indices form referenced the words INSIDE its lambda,
+    and an outer computed expression in an interpreted lambda re-evaluates
+    per element — O(len²) splits per document, measured 120x slower on
+    the quality gate once the projection was actually materialized
+    (count() benchmarks prune projections and had hidden it)."""
     cnt = f"greatest(size({words_sql}) - {n - 1}, 0)"
     acc = f"slice({words_sql}, 1, {cnt})"
     for j in range(1, n):
@@ -92,6 +94,15 @@ def _ngrams_sqltext(words_sql: str, n: int) -> str:
             "(a, b) -> concat(a, ' ', b))"
         )
     return acc
+
+
+def _dup_frac_sqltext(arr_sql: str) -> str:
+    """1 - distinct/total elements of an array, 0.0 when it is empty."""
+    return (
+        f"CASE WHEN size({arr_sql}) > 0 THEN 1.0D - "
+        f"cast(size(array_distinct({arr_sql})) as double) / "
+        f"cast(size({arr_sql}) as double) ELSE 0.0D END"
+    )
 
 
 def _token_count_exprs(text_col: str, words_sql: str | None = None) -> _ty.List[F.Column]:
@@ -247,26 +258,6 @@ def doc_fingerprint(df: SDF, text_col: str = "text", id_col: str = "doc_id") -> 
     )
 
 
-def _ngrams(words: F.Column, n: int) -> F.Column:
-    """Space-joined token n-grams as a zip_with chain over n shifted
-    slices. CRITICAL shape: ``words`` appears only as an HOF *input*
-    (each slice evaluates it once per row); the earlier
-    transform-over-indices form referenced ``words`` INSIDE its lambda,
-    and an outer computed expression in an interpreted lambda re-evaluates
-    per element — O(len²) splits per document, measured 120x slower on
-    the quality gate once the projection was actually materialized
-    (count() benchmarks prune projections and had hidden it)."""
-    cnt = F.greatest(F.size(words) - (n - 1), F.lit(0))
-    acc = F.slice(words, 1, cnt)
-    for j in range(1, n):
-        acc = F.zip_with(
-            acc,
-            F.slice(words, j + 1, cnt),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return acc
-
-
 def repetition_stats(
     df: SDF, text_col: str = "text", id_col: str = "doc_id"
 ) -> SDF:
@@ -300,16 +291,9 @@ def repetition_stats(
             - F.size(F.array_distinct(words)).cast("double")
             / F.size(words).cast("double")
         ).alias("dup_word_frac"),
-        (
-            F.when(
-                F.size(_ngrams(words, 5)) > 0,
-                F.lit(1.0)
-                - F.size(F.array_distinct(_ngrams(words, 5))).cast("double")
-                / F.size(_ngrams(words, 5)).cast("double"),
-            ).otherwise(F.lit(0.0))
-        ).alias("dup5_frac"),
-        _ngrams(words, 2).alias("g2"),
-        _ngrams(words, 3).alias("g3"),
+        F.expr(f"{_dup_frac_sqltext(_ngrams_sqltext('__w__', 5))} AS dup5_frac"),
+        F.expr(f"{_ngrams_sqltext('__w__', 2)} AS g2"),
+        F.expr(f"{_ngrams_sqltext('__w__', 3)} AS g3"),
     )
     tagged = base.select(
         "doc_id",
@@ -612,12 +596,7 @@ def gopher_filter(
         f"CASE WHEN {nw} > 0 THEN 1.0D - "
         f"cast(size(array_distinct({w})) as double) / {nwd} ELSE 0.0D END"
     )
-    g5 = _ngrams_sqltext(w, 5)
-    dup5 = (
-        f"CASE WHEN size({g5}) > 0 THEN 1.0D - "
-        f"cast(size(array_distinct({g5})) as double) / "
-        f"cast(size({g5}) as double) ELSE 0.0D END"
-    )
+    dup5 = _dup_frac_sqltext(_ngrams_sqltext(w, 5))
     reason = (
         # NULL text must fail the gate explicitly: every metric below
         # evaluates to NULL on NULL input, so without this leading rule

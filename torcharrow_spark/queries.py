@@ -37,47 +37,24 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-#: session-lifetime TABLE REGISTRY (r13, guide §5.4): ``spark.read
-#: .parquet(path)`` costs ~0.25 s of driver time PER CALL (file listing,
-#: footer/schema resolution, py4j) and every declared query pays it for
-#: every table it loads, inside the bench's timed region. A real engine
-#: resolves a table once per session through its catalog; this dict is
-#: that catalog for the bench tables. It holds LAZY scan handles only —
-#: plan + schema metadata, never rows; every action still scans the
-#: parquet files, so no result or intermediate is ever reused (the first
-#: build in a session — every cold number — pays the full resolution).
-#: Keyed by applicationId so a new session never sees stale handles.
-#: Kill switch: ``spark.torcharrow.scanRelationCache=false``.
-_SCAN_HANDLES: dict = {}
-
-
 def _load(spark: SparkSession, sf_dir: str, table: str):
-    """Load a testdata table through the engine (tuned session, ns-aware)."""
+    """Load a testdata table through the engine (tuned session, ns-aware).
+    The lazy scan handle is resolved once per session and file identity
+    (see ``torcharrow_spark.memo``)."""
     import torcharrow_spark as ts
     from torcharrow_spark.frame import DataFrame as TAFrame
+    from torcharrow_spark.memo import memo
     from torcharrow_spark.sources import read_parquet_ns
 
     ts.tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    sdf = _SCAN_HANDLES.get(key)
-    if sdf is None:
-        if table == "events":
-            sdf = read_parquet_ns(f"{sf_dir}/events.parquet", spark).to_spark()
-        else:
-            sdf = ts.read_parquet(f"{sf_dir}/{table}.parquet", spark).to_spark()
-        try:
-            cache_on = (
-                spark.conf.get(
-                    "spark.torcharrow.scanRelationCache", "true"
-                ).lower()
-                == "true"
-            )
-        except Exception:
-            cache_on = True
-        if cache_on:
-            if len(_SCAN_HANDLES) > 256:
-                _SCAN_HANDLES.clear()
-            _SCAN_HANDLES[key] = sdf
+    path = f"{sf_dir}/{table}.parquet"
+    read = read_parquet_ns if table == "events" else ts.read_parquet
+    sdf = memo(
+        ("scan", path),
+        lambda: read(path, spark).to_spark(),
+        session=spark,
+        paths=(path,),
+    )
     return TAFrame(sdf)
 
 
@@ -2025,7 +2002,7 @@ def q44_ann_ivf(spark: SparkSession, sf_dir: str) -> SDF:
              len(string_split(nt, ' '))::BIGINT AS n_tokens,
              list_sum([greatest((length(w) + 3) // 4, 1)
                        for w in string_split(nt, ' ')])::BIGINT AS n_bpe,
-             -- mirror the engine's _round4 half-up rounding exactly
+             -- mirror the engine's _round4_sqltext half-up rounding exactly
              floor((CASE WHEN len(string_split(nt, ' ')) > 0
                   THEN len(list_filter(string_split(nt, ' '),
                            w -> list_contains(['the','a','and','of','to','in','is','it'], w)))
@@ -7118,7 +7095,8 @@ def q145_modern_curation(spark: SparkSession, sf_dir: str) -> SDF:
         pack_documents,
         url_dedup_ids,
     )
-    from torcharrow_spark.operators.relevance import _round8, _words
+    from torcharrow_spark.operators.relevance import _round8
+    from torcharrow_spark.operators.textstats import _words
 
     docs = _load(spark, sf_dir, "documents").to_spark()
     url = _synth_url_expr(400)
@@ -7560,7 +7538,8 @@ def q140_logreg_quality(spark: SparkSession, sf_dir: str) -> SDF:
     scoring is a zero-shuffle broadcast-literal projection. The oracle
     replays the entire training loop in SQL — weights bit-identical."""
     from torcharrow_spark.operators import logreg_score, logreg_train
-    from torcharrow_spark.operators.relevance import _round8, _words
+    from torcharrow_spark.operators.relevance import _round8
+    from torcharrow_spark.operators.textstats import _words
 
     docs = _load(spark, sf_dir, "documents").to_spark()
     nw = F.size(_words(F.col("text"))).cast("double")
@@ -8659,7 +8638,8 @@ def q166_chain(spark: SparkSession, sf_dir: str, with_warc: SDF) -> SDF:
         url_host,
         warc_records,
     )
-    from torcharrow_spark.operators.relevance import _round8, _words
+    from torcharrow_spark.operators.relevance import _round8
+    from torcharrow_spark.operators.textstats import _words
     from torcharrow_spark.operators.textnorm import (
         decode_payloads,
         normalize_text,

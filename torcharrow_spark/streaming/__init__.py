@@ -747,7 +747,7 @@ def term_stats_batch(df: SDF, text_col: str = "text", id_col: str = "doc_id") ->
     table in one aggregate. One explode + one vocabulary-sized
     HashAggregate (map-side combine), the same plan `relevance.tf_idf`
     builds its df table with."""
-    from torcharrow_spark.operators.relevance import _words
+    from torcharrow_spark.operators.textstats import _words
 
     words = _words(F.col(text_col))
     per_doc = df.select(
@@ -802,7 +802,7 @@ def term_stats_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(path)
-    from torcharrow_spark.operators.relevance import _words
+    from torcharrow_spark.operators.textstats import _words
 
     words = _words(F.col(text_col))
     raw = stream.select(F.explode(words).alias("term")).where(
@@ -953,7 +953,8 @@ def quality_scores_batch(
         logreg_score,
         logreg_train,
     )
-    from torcharrow_spark.operators.relevance import _round8, _words
+    from torcharrow_spark.operators.relevance import _round8
+    from torcharrow_spark.operators.textstats import _words
 
     gated = gopher_filter(
         df, text_col, id_col,

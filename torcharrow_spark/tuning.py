@@ -352,8 +352,7 @@ REGISTRY: list[dict] = [
             "plans and their byte anchors never change."
         ),
         "override": (
-            "Kill switch spark.torcharrow.amplifiedScanCap=false; a "
-            "session maxPartitionBytes set STRICTER than the cap is "
+            "A session maxPartitionBytes set STRICTER than the cap is "
             "always respected; per-call rows_budget= for operators "
             "with different fanout density."
         ),
