@@ -2,7 +2,9 @@
 the sf0.1 test data) and check each plan's output rows, shuffle bytes,
 spill and exchange count against pins that hold at any core count;
 print ONE JSON line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {...}, "sf": ...}.
+"queries": {...}, "sf": ...} and write the full payload to
+bench_full.json (gitignored). At the pin scale it then runs the sf1
+stress pins (a 10x corpus built once from sf0.1) and the WARC ingest pin.
 
 The pins are the gate. Shuffle bytes, rows and exchanges are a property
 of (plan, data, partitioning), and `gate_session` fixes the partitioning
@@ -14,9 +16,12 @@ and once steady, and both walls go into the JSON. Wall statistics
 (seeded closed-loop runs, medians, per-layer splits) come from
 `perfbench/` (BENCHMARK.json), not from here.
 
-Options: SPARK_GRAFT_BENCH_STRICT=1 exits 1 on any pin violation;
-SPARK_GRAFT_NO_STRESS=1 skips the sf1+ stress and extra tiers;
-SPARK_GRAFT_NO_SF10=1 skips only the sf10/sf100 tiers.
+Options (environment variables):
+  SPARK_GRAFT_SF_DIR        test data directory (default: the sf0.1 data);
+  SPARK_GRAFT_NO_STRESS=1   skips the sf1 stress and WARC ingest pins;
+  SPARK_GRAFT_BENCH_STRICT=1  exits 1 on any pin violation;
+  SPARK_DRIVER_MEMORY       driver heap of the gate session (default 16g).
+gate_session sets SPARK_GRAFT_CPUS to PLAN_WIDTH in this process.
 """
 
 from __future__ import annotations
@@ -157,8 +162,8 @@ def gate_session(app: str = "bench", master_width: int | None = None):
 # run, Exchange count of the built plan as plans.plan_stats reports it —
 # the formatted plan names each shuffle exchange twice, tree and detail).
 # All measured at PLAN_WIDTH 32 on local[4]; the comment compares the bytes
-# with the local[32] r13 run (BENCH_full_r13.json) and its pin. Rows and
-# exchanges are first pins.
+# with the local[32] r13 run (`git show 5f1e4e3:BENCH_full_r13.json`) and
+# its pin. Rows and exchanges are first pins.
 HEADLINE_PINS: dict[str, tuple[int, int, int | None]] = {
     "q01_pricing_summary": (6, 756, 2),  # = r13 pin
     "q03_join_topk": (10, 616294, 2),  # = r13 pin
@@ -316,84 +321,64 @@ def pin_violations(got: dict, pin: tuple) -> dict:
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 STRESS_DIR = os.path.join(REPO, ".stress_sf1")
-STRESS10_DIR = os.path.join(REPO, ".stress_sf10")
-SF100_DIR = os.path.join(REPO, ".stress_sf100")
 
 
-def _build_tagged(spark, src: str, dest: str, marker: str, tag: str,
-                  stride: int, files: int, emb_salt: str | None) -> None:
-    """Materialize a 10x corpus from `src` once (marker-guarded,
-    gitignored). Every word in copy i>0 gets the tag f"{tag}{i}", so each
-    copy reproduces the source's intra-copy near-dup structure verbatim
-    while sharing ZERO shingles across copies — true near-dup structure
-    grows exactly linearly (a partial mutation was rejected: an unchanged
-    rare shingle's document frequency grows 10x and prefix candidates
-    quadratically). Embeddings (when `emb_salt` is given) get a per-copy
+def _build_stress_sf1(spark, sf01_dir: str) -> None:
+    """Materialize the 10x 'sf1' stress corpus (50k docs / 20k vectors)
+    from sf0.1 once (marker-guarded, gitignored). Every word in copy i>0
+    gets the tag f"x{i}", so each copy reproduces the source's intra-copy
+    near-dup structure verbatim while sharing ZERO shingles across copies
+    — true near-dup structure grows exactly linearly (a partial mutation
+    was rejected: an unchanged rare shingle's document frequency grows
+    10x and prefix candidates quadratically). Embeddings get a per-copy
     Rademacher sign pattern: within-copy cosines exact, cross-copy ~0.
-    Written as `files` hash-partitioned files (a one-file corpus
-    scan-gated every stress query on one straggler task)."""
+    Written as 32 hash-partitioned files (a one-file corpus scan-gated
+    every stress query on one straggler task)."""
     from pyspark.sql import functions as F
 
-    done = os.path.join(dest, marker)
+    done = os.path.join(STRESS_DIR, "_BUILT_v3")
     if os.path.exists(done):
         return
-    docs = spark.read.parquet(f"{src}/documents.parquet")
+    stride, files = 10_000_000, 32
+    docs = spark.read.parquet(f"{sf01_dir}/documents.parquet")
     copies = spark.range(10).select(F.col("id").cast("int").alias("copy"))
     docs.crossJoin(copies).select(
         (F.col("doc_id") + F.col("copy") * F.lit(stride)).alias("doc_id"),
         F.when(F.col("copy") == 0, F.col("text"))
         .otherwise(
             F.array_join(
-                F.expr(
-                    "transform(split(text, ' '), "
-                    f"w -> concat(w, '{tag}', copy))"
-                ),
+                F.expr("transform(split(text, ' '), w -> concat(w, 'x', copy))"),
                 " ",
             )
         )
         .alias("text"),
         *[c for c in docs.columns if c not in ("doc_id", "text")],
     ).repartition(files, "doc_id").write.mode("overwrite").parquet(
-        f"{dest}/documents.parquet"
+        f"{STRESS_DIR}/documents.parquet"
     )
-    if emb_salt is not None:
-        emb = spark.read.parquet(f"{src}/embeddings.parquet")
-        emb.crossJoin(copies).select(
-            (F.col("vec_id") + F.col("copy") * F.lit(stride)).alias("vec_id"),
-            F.when(F.col("copy") == 0, F.col("embedding"))
-            .otherwise(
-                F.expr(
-                    "transform(embedding, (x, d) -> CAST(x * "
-                    f"(CASE WHEN pmod(xxhash64(concat({emb_salt}copy, ',', d)), 2) = 0 "
-                    "THEN 1.0 ELSE -1.0 END) AS FLOAT))"
-                )
+    emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
+    emb.crossJoin(copies).select(
+        (F.col("vec_id") + F.col("copy") * F.lit(stride)).alias("vec_id"),
+        F.when(F.col("copy") == 0, F.col("embedding"))
+        .otherwise(
+            F.expr(
+                "transform(embedding, (x, d) -> CAST(x * "
+                "(CASE WHEN pmod(xxhash64(concat(copy, ',', d)), 2) = 0 "
+                "THEN 1.0 ELSE -1.0 END) AS FLOAT))"
             )
-            .alias("embedding"),
-            *[c for c in emb.columns if c not in ("vec_id", "embedding")],
-        ).repartition(files, "vec_id").write.mode("overwrite").parquet(
-            f"{dest}/embeddings.parquet"
         )
+        .alias("embedding"),
+        *[c for c in emb.columns if c not in ("vec_id", "embedding")],
+    ).repartition(files, "vec_id").write.mode("overwrite").parquet(
+        f"{STRESS_DIR}/embeddings.parquet"
+    )
     with open(done, "w") as fh:
         fh.write("ok\n")
 
 
-def _build_stress_sf1(spark, sf01_dir: str) -> None:
-    """The 10x 'sf1' stress corpus (50k docs / 20k vectors) from sf0.1."""
-    _build_tagged(spark, sf01_dir, STRESS_DIR, "_BUILT_v3", "x",
-                  10_000_000, 32, "")
-
-
-def _build_stress_sf10(spark) -> None:
-    """The 100x 'sf10' corpus (500k docs / 200k vectors) from sf1; tag
-    'y{copy}' composes with sf1's 'x{copy}', and a second independent
-    sign pattern keeps cross-copy cosines ~0."""
-    _build_tagged(spark, STRESS_DIR, STRESS10_DIR, "_BUILT_v2", "y",
-                  1_000_000_000, 64, "'t2:', ")
-
-
-def _stress_cases(spark, sdir: str) -> dict:
+def _stress_cases(spark) -> dict:
     """The pair-machinery operators whose cost could creep quadratically
-    with corpus size, as builders over the stress corpus at `sdir`."""
+    with corpus size, as builders over the sf1 stress corpus."""
     from torcharrow_spark.operators import (
         cdc_dedup_stats,
         cosine_pairs,
@@ -407,10 +392,10 @@ def _stress_cases(spark, sdir: str) -> dict:
     from torcharrow_spark.queries import QUERIES
 
     def docs():
-        return spark.read.parquet(f"{sdir}/documents.parquet")
+        return spark.read.parquet(f"{STRESS_DIR}/documents.parquet")
 
     def emb():
-        return spark.read.parquet(f"{sdir}/embeddings.parquet")
+        return spark.read.parquet(f"{STRESS_DIR}/embeddings.parquet")
 
     return {
         # same params as q19 (banded pair growth tracks true dups)
@@ -435,7 +420,7 @@ def _stress_cases(spark, sdir: str) -> dict:
             emb(), threshold=0.2, n_planes="auto"
         ),
         "q105_heavy_hitters": lambda: QUERIES["q105_heavy_hitters"](
-            spark, sdir
+            spark, STRESS_DIR
         ),
         # byte-driven: bytes track corpus CHARS, not doc count
         "q157_cdc_dedup": lambda: cdc_dedup_stats(docs()),
@@ -461,335 +446,33 @@ STRESS_PINS: dict[str, tuple[int, int, int | None]] = {
     "q175_cross_doc_spans": (3550, 60489744, 6),  # = r13 pin
 }
 
-# sf10 pins (rows, shuffle-write bytes, exchanges), not re-measured at
-# PLAN_WIDTH on local[4] (the tier needs the 500k-doc corpus): rows from
-# the local[32] BENCH_full_r13 run, bytes the earlier local[32] pins,
-# which that run matched within 4%. PLAN_WIDTH 32 keeps their partitioning.
-STRESS_SF10_PINS: dict[str, tuple[int, int, int | None]] = {
-    "q19_minhash_pairs": (72529, 116_348_489, None),
-    "q46_simhash_pairs": (2325687, 95_475_855, None),
-    "q86_strip_spans": (500000, 943_221_883, None),
-    "q21_ngram_jaccard_auto": (25600, 10_911_099_791, None),
-    "q42_cosine_dedup": (2939128, 59_918_395, None),
-    "q157_cdc_dedup": (500000, 1_019_480_207, None),
-}
 
-
-def run_stress_tier(spark, sdir: str, pins: dict, best_of: int,
-                    metrics: StageMetrics, label: str,
-                    lower: dict | None = None) -> dict:
-    """Measure the pinned stress cases on the corpus at `sdir`. Each row
-    reports best-of steady seconds, its ratio to the same case one
-    decade down (`lower`, sec by name; ~10 = linear), and the pins; a
-    moved pin puts its violations under "regression"."""
-    cases = _stress_cases(spark, sdir)
+def run_stress_tier(spark, metrics: StageMetrics, lower: dict) -> dict:
+    """Measure the pinned stress cases on the sf1 corpus. Each row
+    reports best-of-3 steady seconds, its ratio to the same case at sf0.1
+    (`lower`, sec by name; ~10 = linear), and the pins; a moved pin puts
+    its violations under "regression"."""
+    best_of = 3
+    cases = _stress_cases(spark)
     out: dict[str, dict] = {}
-    for name, pin in pins.items():
+    for name, pin in STRESS_PINS.items():
         m = measure(cases[name], metrics, best_of)
         m["best_of"] = best_of
-        b = (lower or {}).get(name)
+        b = lower.get(name)
         m["vs_lower_tier_ratio"] = round(m["sec"] / b, 2) if b else None
         bad = pin_violations(m, pin)
         if bad:
             m["regression"] = bad
-            print(f"# STRESS {label} REGRESSION {name}: {m} vs pin {pin}",
+            print(f"# STRESS sf1 REGRESSION {name}: {m} vs pin {pin}",
                   file=sys.stderr)
         out[name] = m
         print(
-            f"# stress {label} {name}: {m['sec']:.3f}s best-of-{best_of} "
+            f"# stress sf1 {name}: {m['sec']:.3f}s best-of-{best_of} "
             f"({m['rows']} rows, shuffle {m['shuffle_bytes']}B, "
             f"{m['exchanges']} exchanges)",
             file=sys.stderr,
         )
     return out
-
-
-def pair_skew_q42(spark) -> dict:
-    """Pair-stage skew evidence for the q42 cosine family on the sf1
-    corpus (measurement only). The pair kernel evaluates each bucket in
-    one task, in bounded-memory tiles, and elects a bucket above
-    `_elect_onset(dim)` members — so the largest bucket's C(m, 2) pairs are the longest
-    task. The histogram shows where organic sf1 buckets sit relative to
-    the election cap."""
-    from pyspark.sql import functions as F
-
-    from torcharrow_spark.operators.similarity import (
-        _elect_onset,
-        _infer_dim,
-        _resolve_n_planes,
-        lsh_bucket,
-    )
-
-    e = spark.read.parquet(f"{STRESS_DIR}/embeddings.parquet")
-    n_planes = _resolve_n_planes(e, "auto", "cosine_pairs")
-    dim = _infer_dim(e, "embedding")
-    sizes = (
-        e.select(lsh_bucket(F.col("embedding"), n_planes, dim).alias("b"))
-        .groupBy("b")
-        .count()
-    )
-    h = sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.max("count").alias("max_members"),
-        F.expr("percentile(count, 0.5)").alias("p50_members"),
-        F.expr("percentile(count, 0.99)").alias("p99_members"),
-    ).collect()[0]
-    elect_cap = _elect_onset(dim)
-    m_max = int(h["max_members"])
-    out = {
-        "n_planes": n_planes,
-        "n_buckets": int(h["n_buckets"]),
-        "max_members": m_max,
-        "p50_members": float(h["p50_members"]),
-        "p99_members": float(h["p99_members"]),
-        "elect_cap_members": int(elect_cap),
-        "max_bucket_pairs": m_max * (m_max - 1) // 2,
-        "max_bucket_under_elect_cap": m_max <= elect_cap,
-    }
-    print(f"# stress sf1 pair-skew q42: {out}", file=sys.stderr)
-    return out
-
-
-def run_recall_curves(spark, sf01_dir: str, n_queries: int = 24) -> dict:
-    """Recall@10 vs probe depth for BOTH ANN scale paths on the sf1
-    stress corpus (20k vectors, dim 64): multi-probe LSH (n_planes=5,
-    32 buckets, perturbation-set probing) and IVF (n_cells=64). The
-    corpus is a WEAK-neighbor regime — true top-10 cosines sit at
-    0.40-0.49, so no single-table partition concentrates them; the r4
-    measured curve (lsh 0.08/0.22/0.44/0.68 at 1/2/4/8 probes, ivf
-    0.04/0.22/0.69 at 1/4/16 cells) is ~2.7x the random-scan baseline
-    at 25% coverage, and the pytest twin pins monotonicity + the >=
-    0.55-at-25% / >= 2x-baseline floors. On a near-dup-rich corpus
-    (cos >= 0.9 neighbors) the same probe budgets sit near 1.0 —
-    operators should read THIS curve to size probe budgets before
-    burning a full scan. Ground truth is exact brute force over the
-    same corpus/queries."""
-    from pyspark.sql import functions as F
-
-    from torcharrow_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        lsh_topk,
-        lsh_topk_multitable,
-    )
-
-    _build_stress_sf1(spark, sf01_dir)
-    emb = spark.read.parquet(f"{STRESS_DIR}/embeddings.parquet")
-    # deterministic query sample spread across the id space
-    q = emb.where(F.pmod(F.col("vec_id"), F.lit(2003)) == 0).limit(n_queries)
-    k = 10
-    exact = {
-        (r["query_id"], r["match_id"])
-        for r in brute_force_topk(emb, q, k=k).collect()
-    }
-
-    def _recall(got) -> float:
-        hits = {(r["query_id"], r["match_id"]) for r in got.collect()}
-        return round(len(exact & hits) / len(exact), 4)
-
-    out: dict = {"k": k, "n_queries": n_queries, "lsh": {}, "ivf": {}}
-    for n_probe in (1, 2, 4, 8):  # 8/32 buckets = 25% of cells
-        out["lsh"][n_probe] = _recall(
-            lsh_topk(emb, q, k=k, n_planes=5, n_probe=n_probe)
-        )
-    # r8 (VERDICT r7 ask #3): the AUTO-sized table at the SAME 25%
-    # scanned-fraction budget as lsh@8/32 — auto picks 8 planes at the
-    # 20k-vector corpus (256 buckets), so equal coverage = 64 probes;
-    # finer buckets + deeper perturbation probing at identical scan
-    # budget is the trade auto sizing makes as the corpus grows
-    from torcharrow_spark.operators.similarity import auto_n_planes
-
-    auto_planes = auto_n_planes(emb.count())
-    auto_probes = max(1, (1 << auto_planes) // 4)  # 25% of buckets
-    out["lsh_auto"] = {
-        "planes": auto_planes,
-        f"{auto_probes}probe_25pct": _recall(
-            lsh_topk(
-                emb, q, k=k, n_planes="auto", n_probe=auto_probes
-            )
-        ),
-    }
-    for n_probe in (1, 4, 16):  # 16/64 cells = 25%
-        out["ivf"][n_probe] = _recall(
-            ivf_topk(emb, q, k=k, n_cells=64, n_probe=n_probe)
-        )
-    # same 8-scans-per-query budget as lsh@8, allocated across
-    # independent TABLES instead of probes of one table — the
-    # multi-table lever (corpus-side cost: shuffle x n_tables)
-    out["lsh_multitable"] = {
-        "2tables_x4probe": _recall(
-            lsh_topk_multitable(emb, q, k=k, n_planes=5, n_tables=2, n_probe=4)
-        ),
-        "4tables_x2probe": _recall(
-            lsh_topk_multitable(emb, q, k=k, n_planes=5, n_tables=4, n_probe=2)
-        ),
-    }
-    # r5: TRAINED cells at the SAME probe budget as ivf@16/64 — kmeans
-    # centroids follow the embedding density, so cells concentrate true
-    # neighbors; this is the standard uplift lever the weak-neighbor
-    # curve above calls for (r4 verdict ask #6). Fit cost: 3 Lloyd
-    # scans + one k x dim HashAggregate per scan.
-    from torcharrow_spark.operators.clustering import kmeans
-    from torcharrow_spark.operators.similarity import ivf_topk_df
-
-    _asg, cents = kmeans(emb, k=64, max_iter=3)
-    spark_ = emb.sparkSession
-    centdf = spark_.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(cents)],
-        "cell int, centroid array<double>",
-    )
-    out["ivf_trained"] = {
-        16: _recall(ivf_topk_df(emb, q, centdf, k=k, n_probe=16))
-    }
-    # r6: kmeans++-seeded cells at the SAME 16-probe budget (r5 verdict
-    # ask #5) — D^2 seeding spreads the 64 seeds across the embedding
-    # density instead of md5-luck, the standard next recall increment
-    # over r5's md5-init 0.77.
-    _asg2, cents_pp = kmeans(emb, k=64, max_iter=3, init="kmeans++")
-    centdf_pp = spark_.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(cents_pp)],
-        "cell int, centroid array<double>",
-    )
-    out["ivf_trained_pp"] = {
-        16: _recall(ivf_topk_df(emb, q, centdf_pp, k=k, n_probe=16))
-    }
-    # r9 (VERDICT r8 ask #8): the three-round 0.70-0.77 plateau was
-    # CELL GRANULARITY, not the weak-neighbor regime — every trained
-    # row above hand-pins 64 cells (312 vectors/cell), which smears
-    # the weak neighbors across cell boundaries. Measured in the numpy
-    # design space first (same corpus/queries/k, TRUE scanned-vector
-    # fractions): trained 64 cells @ 16 probes = 0.72 @ 25.0%;
-    # 141 @ 35 = 0.68-0.85 across seeds (too seed-noisy to ship);
-    # 512 @ 128 = 0.87-0.89 across EVERY seed @ 25.1-25.3% — ~40
-    # vectors/cell (~4k) localizes them at the same scanned fraction.
-    # Rejected at equal budget (measured): soft/multi-assignment
-    # (0.67-0.71), spherical training (no change), untrained sampled
-    # centroids (0.77-0.92, seed-noisy). Engine run, its own
-    # kmeans|| D^2 seeding + 3 Lloyd steps at 512 cells, 128-probe =
-    # 25% budget: **0.890** (md5-seeded: 0.83 — seeding matters at
-    # this granularity). Fit is ~3 min of the bench wall — the price
-    # of the only recall row past the verdict's 0.85 bar.
-    n_fine, probes_fine = 512, 128
-    _asg3, cents_fine = kmeans(emb, k=n_fine, max_iter=3, init="kmeans++")
-    centdf_fine = spark_.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(cents_fine)],
-        "cell int, centroid array<double>",
-    )
-    out["ivf_trained_fine"] = {
-        "cells": n_fine,
-        f"{probes_fine}probe_25pct": _recall(
-            ivf_topk_df(emb, q, centdf_fine, k=k, n_probe=probes_fine)
-        ),
-    }
-    # r11 (VERDICT r10 ask #2): the IVF x int8 COMPOSITION — probe
-    # trained cells, int8-scan ONLY the probed cells' codes, exact
-    # re-rank the survivors (similarity.ivf_quantized_topk, q171's
-    # operator; SAME 512 trained centroids as the row above, no
-    # second fit). Byte accounting: n_probe/512 cells x 8/32 bits —
-    # deeper probing than any float row at a FRACTION of its bytes,
-    # which is the point: 204/512 probes = 39.8% of vectors seen at
-    # 9.96% of full-scan float32 bytes, and the int8 stage no longer
-    # loses in-cell neighbors (r10's 1.00 fidelity measurement), so
-    # recall == cell-containment recall at 40% coverage. This is the
-    # sublinear path `quantized_rerank_topk`'s tuning ceiling points
-    # to at 10^9 vectors.
-    from torcharrow_spark.operators.similarity import ivf_quantized_topk
-
-    bits_frac = 8.0 / 32.0
-    probes_comp = 204
-    out["ivf_int8"] = {
-        "cells": n_fine,
-        "n_probe": probes_comp,
-        "candidates": 50,
-        "effective_bytes_pct": round(
-            probes_comp / n_fine * bits_frac * 100, 2
-        ),
-        "recall": _recall(
-            ivf_quantized_topk(
-                emb, q, centdf_fine, k=k, n_probe=probes_comp,
-                candidates=50,
-            )
-        ),
-    }
-    # r10 (VERDICT r9 ask #8): int8 coarse scan + full-precision
-    # re-rank — the q123 quantization machinery promoted to a
-    # retrieval path. Byte-budget accounting: an 8-bit full-corpus
-    # scan reads the SAME bytes as float32-probing 25% of cells (the
-    # r9 trained-IVF operating point) but sees EVERY vector, so
-    # recall is bounded by int8 ranking fidelity, not cell luck.
-    # Measured here: 1.00 at candidates=50 (and already at 20 in the
-    # numpy design space) vs the 0.89 trained-IVF ceiling — the
-    # ceiling was the probe paradigm, not the weak-neighbor corpus.
-    # No training, no seed noise; the re-rank join is |q| x cand rows.
-    from torcharrow_spark.operators.similarity import quantized_rerank_topk
-
-    out["int8_rerank"] = {
-        "candidates": 50,
-        "fullscan_int8_25pct_bytes": _recall(
-            quantized_rerank_topk(emb, q, k=k, candidates=50)
-        ),
-    }
-    print(
-        f"# recall_sf1: lsh {out['lsh']} lsh_auto {out['lsh_auto']} "
-        f"ivf {out['ivf']} int8_rerank {out['int8_rerank']} "
-        f"multitable {out['lsh_multitable']} ivf_trained {out['ivf_trained']} "
-        f"ivf_trained_pp {out['ivf_trained_pp']} "
-        f"ivf_trained_fine {out['ivf_trained_fine']} "
-        f"ivf_int8 {out['ivf_int8']}",
-        file=sys.stderr,
-    )
-    return out
-
-
-def run_tensor_export(spark, sf_dir: str) -> dict:
-    """Throughput of `interop_torch.batched_tensors` (rows/s, MB/s) over
-    ALL sf lineitem rows x 7 numeric columns: executor-side Arrow IPC
-    serialize (mapInArrow), driver-side re-chunk to exact 65536-row
-    tensor dicts, numpy conversion of every yielded batch — the whole
-    bridge, nothing skipped. Best-of-3 steady (a driver-side loop)."""
-    import numpy as np
-
-    from torcharrow_spark.interop_torch import batched_tensors
-
-    cols = [
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax",
-    ]
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(*cols)
-    batch = 65536
-
-    def consume() -> tuple:
-        rows = 0
-        nbytes = 0
-        for tensors in batched_tensors(li, batch_size=batch):
-            n = len(next(iter(tensors.values())))
-            rows += n
-            for v in tensors.values():
-                a = np.asarray(v)
-                nbytes += a.nbytes
-        return rows, nbytes
-
-    consume()  # cold: codegen + Arrow path warm-up
-    sec = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        rows, nbytes = consume()
-        sec = min(sec, round(time.perf_counter() - t0, 3))
-    out = {
-        "sec": sec,
-        "best_of": 3,
-        "rows": rows,
-        "mb": round(nbytes / 1e6, 1),
-        "rows_per_sec": int(rows / sec),
-        "mb_per_sec": round(nbytes / 1e6 / sec, 1),
-        "batch_size": batch,
-    }
-    print(f"# tensor_export: {out}", file=sys.stderr)
-    return out
-
-
-GPT2_ENCODER = "/root/reference/torcharrow/test/asset/gpt2_bpe_encoder.json"
-GPT2_VOCAB = "/root/reference/torcharrow/test/asset/gpt2_bpe_vocab.bpe"
 
 
 # The real-file WARC tier: the sf0.1 synthetic crawl materialized ONCE
@@ -973,254 +656,14 @@ def run_warc_file_ingest(spark, sf_dir: str, metrics: StageMetrics) -> dict:
     return out
 
 
-#: (rows, shuffle-write bytes, exchanges) of one count-sink execution
-#: of q19's minhash_pairs on the 5M-doc corpus (128 files): the r12
-#: capture on local[32], not re-measured since.
-SF100_Q19_PIN = (727097, 1_168_758_597, None)
-
-
-def run_stress_sf100_bytes(spark, metrics: StageMetrics) -> dict:
-    """One byte-only assertion for one pair family at the third decade,
-    so 50k -> 5M docs shuffle linearity cannot silently rot between
-    one-off evidence runs. The 5M-doc corpus is built ONCE per machine
-    from the sf10 corpus by the SCALE_SF100.md copy-tagging scheme
-    ('z{copy}' word tags); the measurement is a SINGLE count-sink
-    execution of q19's minhash_pairs — no steady re-run, no wall claim.
-    The gate: rows equal, bytes within 25% of the pin, zero spill."""
-    from torcharrow_spark.operators import minhash_pairs
-
-    _build_stress_sf10(spark)
-    _build_tagged(spark, STRESS10_DIR, SF100_DIR, "_BUILT_v1", "z",
-                  10_000_000_000, 128, None)
-    docs100 = spark.read.parquet(f"{SF100_DIR}/documents.parquet")
-    wm = metrics.snapshot()
-    t0 = time.perf_counter()
-    rows = minhash_pairs(docs100, shingle_k=3, num_hashes=8, bands=4).count()
-    b = metrics.since(wm)
-    out: dict = {
-        "rows": rows,
-        "oneshot_wall_sec": round(time.perf_counter() - t0, 1),
-        "shuffle_bytes": b["shuffle_write"],
-        "spill_bytes": b["spill"],
-    }
-    bad = pin_violations(out, SF100_Q19_PIN)
-    if bad:
-        out["regression"] = bad
-    print(f"# stress_sf100 q19 bytes: {out}", file=sys.stderr)
-    return out
-
-
-def run_recall_sf10(spark) -> dict:
-    """r12 (VERDICT r11 ask #6): the ivf_int8 composition's recall at
-    the SECOND measured decade — the 200k-vector sf10 stress corpus.
-    The 512-cell table is trained ONCE per machine and cached as a
-    parquet fixture next to the corpus (md5-init, 2 Lloyd steps —
-    assignment scans cost ~4 min each at 200k x 512 cells, so the
-    kmeans++ seeding the sf1 ladder buys is traded away here; at 390
-    vectors/cell the granularity is COARSE, the regime where sf1
-    measured seeding to be worth little). Reports recall@10 and
-    effective scan bytes for a probe ladder around the sf1 operating
-    point (204/512 at 8/32 bits = 9.96% of full-scan bytes).
-
-    Cost-model note this row exists to publish: at constant cell
-    count, corpus growth packs more vectors per cell, so the SAME
-    probe count scans the same byte FRACTION but concentrates less of
-    the true neighborhood per cell — holding recall across decades
-    ultimately needs cells ~ N (constant occupancy), which raises
-    assignment cost per scan; that is the trained-fit price the
-    standing index (`annindex`) amortizes by persisting codes."""
-    from pyspark.sql import functions as F
-
-    from torcharrow_spark.operators.clustering import kmeans
-    from torcharrow_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_quantized_topk,
-    )
-
-    _build_stress_sf10(spark)
-    emb = spark.read.parquet(f"{STRESS10_DIR}/embeddings.parquet")
-    cent_path = os.path.join(STRESS10_DIR, "centroids_512_md5x2")
-    if not os.path.exists(os.path.join(cent_path, "_SUCCESS")):
-        _t0 = time.perf_counter()
-        _asg, cents = kmeans(emb, k=512, max_iter=2, init="md5")
-        spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(cents)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-        print(
-            f"# recall_sf10: trained+cached 512 cells in "
-            f"{time.perf_counter() - _t0:.0f}s",
-            file=sys.stderr,
-        )
-    centdf = spark.read.parquet(cent_path)
-    q = emb.where(F.pmod(F.col("vec_id"), F.lit(9001)) == 0).limit(24)
-    k = 10
-    exact = {
-        (r["query_id"], r["match_id"])
-        for r in brute_force_topk(emb, q, k=k).collect()
-    }
-    out: dict = {"k": k, "n_queries": 24, "cells": 512, "ladder": {}}
-    bits_frac = 8.0 / 32.0
-    for n_probe in (154, 204, 256):
-        got = {
-            (r["query_id"], r["match_id"])
-            for r in ivf_quantized_topk(
-                emb, q, centdf, k=k, n_probe=n_probe, candidates=50
-            ).collect()
-        }
-        out["ladder"][n_probe] = {
-            "recall": round(len(exact & got) / len(exact), 4),
-            "effective_bytes_pct": round(
-                n_probe / 512 * bits_frac * 100, 2
-            ),
-        }
-    print(f"# recall_sf10: {out['ladder']}", file=sys.stderr)
-    return out
-
-
-def run_ann_index_lifecycle(spark, sf01_dir: str) -> dict:
-    """r12 (VERDICT r11 ask #5): price the standing ANN index's
-    lifecycle on the sf1 stress corpus (20k vectors, dim 64, 64
-    md5-pick cells). Probe wall is measured at 0, 4, and 16 live
-    delta batches (each delta adds one parquet scan + union branch to
-    every `ann_index_topk`), then after `ann_index_compact` folds the
-    deltas into a fresh base snapshot. Reports the compaction wall
-    and the BREAK-EVEN probe count: compact_sec / (probe@16 - probe@0)
-    — run the fold when the root will be probed more times than that
-    before the next append wave. Row counts are sanity-pinned
-    (probes must return identical k x queries rows at every delta
-    state); walls are report-only (the lifecycle has no plan to
-    regress — the probe plan is pinned by q174's oracle)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from torcharrow_spark.operators import (
-        ann_index_append,
-        ann_index_compact,
-        ann_index_publish,
-        ann_index_topk,
-    )
-    from torcharrow_spark.operators.similarity import _centroids
-
-    _build_stress_sf1(spark, sf01_dir)
-    emb = spark.read.parquet(f"{STRESS_DIR}/embeddings.parquet")
-    cent_rows = _centroids(emb, 64, "vec_id", "embedding")
-    cents = spark.createDataFrame(
-        [(i, v) for i, (_cid, v) in enumerate(cent_rows)],
-        "cell int, centroid array<double>",
-    )
-    q = emb.where(F.pmod(F.col("vec_id"), F.lit(2003)) == 0).limit(24)
-    root = tempfile.mkdtemp(prefix="bench_annix_") + "/idx"
-
-    def _probe() -> tuple[float, int]:
-        best, rows = float("inf"), 0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            got = ann_index_topk(
-                q, emb, root, k=10, n_probe=8, candidates=50
-            ).collect()
-            best = min(best, round(time.perf_counter() - t0, 3))
-            rows = len(got)
-        return best, rows
-
-    out: dict = {}
-    try:
-        # base = 80% of the corpus; 16 delta batches from the rest
-        base = emb.where(F.col("vec_id") % 5 != 0)
-        ann_index_publish(base, cents, root)
-        out["probe_at_0_deltas_sec"], r0 = _probe()
-        for i in range(16):
-            ann_index_append(
-                emb.where(
-                    (F.col("vec_id") % 5 == 0)
-                    & (F.col("vec_id") % 80 == i * 5)
-                ),
-                root,
-            )
-            if i == 3:
-                out["probe_at_4_deltas_sec"], r4 = _probe()
-        out["probe_at_16_deltas_sec"], r16 = _probe()
-        t0 = time.perf_counter()
-        compact_report = ann_index_compact(root, spark)
-        out["compact_sec"] = round(time.perf_counter() - t0, 3)
-        out["compact_rows"] = compact_report["merged_rows"]
-        out["probe_after_compact_sec"], rc = _probe()
-        out["rows_consistent"] = len({r0, r4, r16, rc}) == 1
-        drift = out["probe_at_16_deltas_sec"] - min(
-            out["probe_at_0_deltas_sec"], out["probe_after_compact_sec"]
-        )
-        out["break_even_probes"] = (
-            round(out["compact_sec"] / drift, 1) if drift > 0.05 else None
-        )
-        print(
-            f"# ann lifecycle: probe 0/4/16 deltas "
-            f"{out['probe_at_0_deltas_sec']}/"
-            f"{out['probe_at_4_deltas_sec']}/"
-            f"{out['probe_at_16_deltas_sec']}s, compact "
-            f"{out['compact_sec']}s -> {out['probe_after_compact_sec']}s, "
-            f"break-even {out['break_even_probes']} probes, rows "
-            f"consistent {out['rows_consistent']}",
-            file=sys.stderr,
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(root), ignore_errors=True)
-    return out
-
-
-def run_bpe_real_vocab(spark, sf_dir: str) -> dict:
-    """Tokenize every sf document with the full GPT-2 vocabulary
-    (50,257 tokens / 50,000 merges, the PUBLIC asset shipped in the
-    reference repo) through the production path — Arrow-batched
-    pandas_udf, tokenizer in the task closure — and report steady
-    seconds + tokens/sec. Skipped (empty dict) when the asset isn't
-    mounted."""
-    if not (os.path.exists(GPT2_ENCODER) and os.path.exists(GPT2_VOCAB)):
-        return {}
-    from pyspark.sql import functions as F
-
-    from torcharrow_spark.functions import BPETokenizer
-    from torcharrow_spark.functions.bpe import bpe_tokenize
-
-    with open(GPT2_ENCODER, encoding="utf-8") as f:
-        encoder = json.load(f)
-    with open(GPT2_VOCAB, encoding="utf-8") as f:
-        merges = [tuple(l.split()) for l in f.read().split("\n")[1:-1]]
-    tok = BPETokenizer(encoder, merges)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def build():
-        return bpe_tokenize(tok, docs, "text")
-
-    _sink(build())  # cold: closure broadcast + codegen
-    t0 = time.perf_counter()
-    _sink(build())
-    sec = round(time.perf_counter() - t0, 3)
-    row = build().agg(
-        F.sum(F.size("tokens")).alias("toks"), F.count(F.lit(1)).alias("docs")
-    ).collect()[0]
-    out = {
-        "sec": sec,
-        "docs": int(row["docs"]),
-        "tokens": int(row["toks"]),
-        "tokens_per_sec": int(row["toks"] / sec),
-        "n_merges": len(merges),
-    }
-    print(f"# bpe_real_vocab: {out}", file=sys.stderr)
-    return out
-
-
 def compact_line(payload: dict, full_name: str | None) -> str:
     """The ONE-line stdout summary the driver records: required fields
     (metric/value/unit/queries/sf) + one-number rollups of everything
-    else, with the detail living in BENCH_full_r{N}.json. The driver
-    keeps only the LAST 2000 chars of stdout and json-parses the final
-    line, so the line is kept <= 1900 chars by dropping the optional
-    byte_regressions list, then compressing `queries` (never the
-    required five)."""
+    else, with the detail living in bench_full.json. The driver keeps only
+    the LAST 2000 chars of stdout and json-parses the final line, so the
+    line is kept <= 1900 chars by dropping the optional byte_regressions
+    list, then compressing `queries` (never the required five)."""
     stress = payload.get("stress_sf1") or {}
-    stress10 = payload.get("stress_sf10") or {}
     compact = {
         "metric": payload["metric"],
         "value": payload["value"],
@@ -1232,16 +675,9 @@ def compact_line(payload: dict, full_name: str | None) -> str:
         "stress_sf1_sec": round(
             sum(v.get("sec", 0) for v in stress.values()), 1
         ),
-        "stress_sf10_sec": round(
-            sum(v.get("sec", 0) for v in stress10.values()), 1
-        ),
         "stress_spill_bytes": sum(
-            v.get("spill_bytes", 0)
-            for v in (*stress.values(), *stress10.values())
+            v.get("spill_bytes", 0) for v in stress.values()
         ),
-        # per-tier names: five queries exist in BOTH tiers, and a
-        # {**a, **b} merge would let a clean sf10 entry mask its sf1
-        # twin's flag
         "stress_regressions": stress_regressions(payload),
         "cpus": payload.get("cpus"),
         "plan_width": payload.get("plan_width"),
@@ -1268,13 +704,11 @@ def compact_line(payload: dict, full_name: str | None) -> str:
 
 
 def stress_regressions(payload: dict) -> list:
-    """Names of every stress-tier row whose pins moved, tier-suffixed."""
-    sf1 = payload.get("stress_sf1") or {}
-    sf10 = payload.get("stress_sf10") or {}
-    out = [k for k, v in sf1.items() if v.get("regression")]
-    out += [f"{k}@sf10" for k, v in sf10.items() if v.get("regression")]
-    out += [k for k in ("warc_file_ingest", "stress_sf100_bytes")
-            if (payload.get(k) or {}).get("regression")]
+    """Names of every stress-tier row whose pins moved."""
+    out = [k for k, v in (payload.get("stress_sf1") or {}).items()
+           if v.get("regression")]
+    if (payload.get("warc_file_ingest") or {}).get("regression"):
+        out.append("warc_file_ingest")
     return sorted(out)
 
 
@@ -1322,24 +756,7 @@ def main() -> None:
             "q86_strip_spans": results["q86_strip_duplicate_spans"]["sec"],
             **{n: results[n]["sec"] for n in STRESS_PINS if n in results},
         }
-        tiers["stress_sf1"] = run_stress_tier(
-            spark, STRESS_DIR, STRESS_PINS, 3, metrics, "sf1", lower
-        )
-        tiers["stress_sf1"]["pair_skew_q42"] = pair_skew_q42(spark)
-        if not os.environ.get("SPARK_GRAFT_NO_SF10"):
-            _build_stress_sf10(spark)
-            tiers["stress_sf10"] = run_stress_tier(
-                spark, STRESS10_DIR, STRESS_SF10_PINS, 2, metrics, "sf10",
-                {n: v["sec"] for n, v in tiers["stress_sf1"].items()
-                 if "sec" in v},
-            )
-        tiers["bpe_real_vocab"] = run_bpe_real_vocab(spark, sf_dir)
-        tiers["recall_sf1"] = run_recall_curves(spark, sf_dir)
-        tiers["ann_index_lifecycle"] = run_ann_index_lifecycle(spark, sf_dir)
-        if not os.environ.get("SPARK_GRAFT_NO_SF10"):
-            tiers["recall_sf10"] = run_recall_sf10(spark)
-            tiers["stress_sf100_bytes"] = run_stress_sf100_bytes(spark, metrics)
-        tiers["tensor_export"] = run_tensor_export(spark, sf_dir)
+        tiers["stress_sf1"] = run_stress_tier(spark, metrics, lower)
         tiers["warc_file_ingest"] = run_warc_file_ingest(spark, sf_dir, metrics)
 
     warm = {n: m["sec"] for n, m in results.items()}
@@ -1363,20 +780,13 @@ def main() -> None:
     }
     # Only the LAST 2000 chars of stdout are kept by the recorder, so the
     # FULL payload goes to a repo file and stdout gets the compact line.
-    full_name = None
+    full_name = "bench_full.json"  # gitignored
     try:
-        rounds = [
-            int(f[7:-5].lstrip("0") or 0)
-            for f in os.listdir(REPO)
-            if f.startswith("BENCH_r") and f.endswith(".json") and f[7:-5].isdigit()
-        ]
-        n = (max(rounds) + 1) if rounds else 0
-        full_name = f"BENCH_full_r{n:02d}.json"
         with open(os.path.join(REPO, full_name), "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
     except OSError as e:  # read-only checkout: stderr note, no full copy
+        print(f"# {full_name} write skipped: {e}", file=sys.stderr)
         full_name = None
-        print(f"# BENCH_full write skipped: {e}", file=sys.stderr)
 
     print(compact_line(payload, full_name))
     if (byte_regressions or stress_regressions(payload)) and os.environ.get(

@@ -1,5 +1,6 @@
-"""bench.py's plan-pin gate: the compact stdout line (pure) and the pins'
-independence from the master width (two Spark subprocesses)."""
+"""bench.py's plan-pin gate: the compact stdout line and the documented
+environment knobs (pure), and the pins' independence from the master width
+(two Spark subprocesses)."""
 
 import json
 import os
@@ -24,24 +25,26 @@ def test_compact_line_fits_driver_tail_window():
         "sf": 0.1,
         "spill_bytes": {f"q{i:03d}": 0 for i in range(46)},
         "byte_regressions": {},
-        "stress_sf1": {"q19": {"sec": 10.0, "spill_bytes": 0},
-                       "pair_skew_q42": {"n_buckets": 256}},
-        "stress_sf10": {"q19": {"sec": 100.0, "spill_bytes": 7,
-                                "regression": {"spill_bytes": 0}}},
+        "stress_sf1": {"q18": {"sec": 4.0, "spill_bytes": 0},
+                       "q19": {"sec": 10.0, "spill_bytes": 7,
+                               "regression": {"spill_bytes": 0}}},
+        "warc_file_ingest": {"sec": 1.0, "rows": 5000},
         "cpus": 4,
         "plan_width": 32,
     }
-    line = compact_line(payload, "BENCH_full_r07.json")
+    line = compact_line(payload, "bench_full.json")
     assert len(line) <= 1900
     d = json.loads(line)
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in d
-    assert d["stress_regressions"] == ["q19@sf10"]
+    assert d["stress_regressions"] == ["q19"]
     assert d["stress_spill_bytes"] == 7
-    assert d["stress_sf10_sec"] == 100.0
+    assert d["stress_sf1_sec"] == 14.0
     assert d["plan_width"] == 32
+    assert d["full"] == "bench_full.json"
     for gone in ("machine_factor", "probe_factors",
-                 "regressions_drift_adjusted", "wall_watch"):
+                 "regressions_drift_adjusted", "wall_watch",
+                 "stress_sf10_sec"):
         assert gone not in d
 
     # adversarial: a huge byte_regressions dict is dropped before the
@@ -52,6 +55,31 @@ def test_compact_line_fits_driver_tail_window():
     assert len(line) <= 1900
     d = json.loads(line)
     assert "queries" in d and "metric" in d
+
+
+def test_every_environment_knob_is_documented():
+    """Each environment variable bench.py reads is named in its module
+    docstring, so a knob cannot exist without its option line."""
+    import ast
+
+    src = open(os.path.join(REPO, "bench.py")).read()
+    tree = ast.parse(src)
+    doc = ast.get_docstring(tree)
+
+    def is_environ(node):
+        return (isinstance(node, ast.Attribute) and node.attr == "environ"
+                and isinstance(node.value, ast.Name) and node.value.id == "os")
+
+    read = set()
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "get" and is_environ(node.func.value)):
+            read.add(node.args[0].value)
+        elif (isinstance(node, ast.Subscript) and is_environ(node.value)
+                and isinstance(node.ctx, ast.Load)):
+            read.add(node.slice.value)
+    assert {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_NO_STRESS"} <= read
+    assert sorted(k for k in read if k not in doc) == []
 
 
 _PIN_PROBE = """

@@ -569,3 +569,51 @@ def test_ann_index_crash_window_does_not_duplicate(spark, tmp_path):
         )
     )
     assert got == want
+
+
+def test_ann_index_probe_identity_across_compaction(spark, sf_dir, tmp_path):
+    """The standing index's row identity over its whole lifecycle on the
+    sf0.01 embeddings: publish 80% of the corpus, append the rest as 4
+    delta batches, probe; compact, probe again. Both probes must equal
+    the one-shot ivf_quantized_topk over the full corpus with the same
+    centroids, row for row (24 queries x k=10 = 240 rows)."""
+    from pyspark.sql import functions as F
+
+    from torcharrow_spark.operators import (
+        ann_index_append,
+        ann_index_compact,
+        ann_index_publish,
+        ann_index_topk,
+        ivf_quantized_topk,
+    )
+    from torcharrow_spark.operators.similarity import _centroids
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
+    cents = spark.createDataFrame(
+        [(i, v) for i, (_cid, v) in
+         enumerate(_centroids(emb, 16, "vec_id", "embedding"))],
+        "cell int, centroid array<double>",
+    )
+    q = emb.where(F.pmod(F.col("vec_id"), F.lit(21)) == 0)
+    root = str(tmp_path / "annix_life")
+
+    def probe():
+        return sorted(map(tuple, ann_index_topk(
+            q, emb, root, k=10, n_probe=4, candidates=50).collect()))
+
+    ann_index_publish(emb.where(F.col("vec_id") % 5 != 0), cents, root)
+    for i in range(4):
+        ann_index_append(
+            emb.where((F.col("vec_id") % 5 == 0)
+                      & (F.col("vec_id") % 20 == i * 5)),
+            root,
+        )
+    appended = probe()
+    ann_index_compact(root, spark)
+    compacted = probe()
+    one_shot = sorted(map(tuple, ivf_quantized_topk(
+        emb, q, cents, k=10, n_probe=4, candidates=50).collect()))
+    assert len(one_shot) == 240
+    assert appended == one_shot
+    assert compacted == one_shot

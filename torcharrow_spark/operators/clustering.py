@@ -184,7 +184,8 @@ def kmeans(
             cents = _init_centroids(feat, k, id_col, vec_col)
         else:
             raise ValueError(f"unknown init {init!r} (md5 | kmeans++)")
-        # r13 (guide §5.4, measured decomposition in OPTIMIZATION_r13):
+        # r13 (guide §5.4, measured decomposition in
+        # `git show 5f1e4e3:OPTIMIZATION_r13.md`):
         # the per-iteration wall was dominated by DRIVER-side
         # construction of the 64 per-dim Column-API agg expressions
         # (~0.6 s/iteration of py4j round trips at dim=64 — the same

@@ -1306,8 +1306,9 @@ def ngram_jaccard_pairs_prefix(
     100x audit (r7, measured at the sf10 stress tier): every stage is
     LINEAR in the corpus — buckets 234,853 -> 2,348,941, raw pairs
     6.95M -> 69.5M, filtered candidates 3.25M -> 32.5M, wall 14.6 s ->
-    144.9 s (9.9x at 10x rows; the 19.9 recorded in BENCH_r06 was one
-    noisy steady run of the byte-identical plan). The dominant exchange
+    144.9 s (9.9x at 10x rows; the 19.9 recorded in
+    `git show 5f1e4e3:BENCH_r06.json` was one noisy steady run of the
+    byte-identical plan). The dominant exchange
     (~86% of the query's shuffle) is the verify intermediate: one full
     sorted hash array (~52 longs, incompressible 64-bit values — lz4
     lands at ~the 416 B/row entropy floor) crosses the wire per

@@ -1336,7 +1336,8 @@ def quantized_rerank_topk(
     land in the quantized top-``candidates``), not by which cells the
     true neighbors fell into. Measured on the bench's weak-neighbor
     sf1 corpus: recall@10 = 1.00 at candidates=20..200 vs trained-IVF
-    0.89 at the same byte budget (BENCH_r10 recall section). No
+    0.89 at the same byte budget (`git show 5f1e4e3:BENCH_r10.json`,
+    recall section). No
     training, no seed sensitivity, no skew: the scan is
     embarrassingly parallel and the only shuffle is the bounded
     top-candidates window.
@@ -1555,9 +1556,10 @@ def ivf_quantized_topk(
     exactly ONE cell, so no candidate pair duplicates across probes.
 
     Reference owes nothing here (torcharrow has no ANN surface); the
-    bar is this repo's own recall ladder — see bench.py
-    run_recall_curves ``ivf_int8`` row (recall >= 0.95 at <= 10%
-    effective bytes on the sf1 weak-neighbor corpus) and
+    bar is this repo's own recall ladder — the ``recall_sf1.ivf_int8``
+    row of `git show 5f1e4e3:BENCH_full_r13.json` (recall >= 0.95 at
+    <= 10% effective bytes on the sf1 weak-neighbor corpus), the
+    sf0.01 floors in tests/test_operators.py, and
     tuning.py's ``quantized_rerank_topk`` N*Q ceiling, past which
     callers must switch to THIS composition."""
     if not (2 <= bits <= 16):

@@ -883,10 +883,10 @@ def q170_ann_quantized_rerank(spark: SparkSession, sf_dir: str) -> SDF:
     cosines survive a bounded window, and only those re-score against
     the full-precision vectors. On the bench's weak-neighbor sf1
     corpus this measures recall@10 = 1.00 vs trained-IVF's 0.89 at
-    equal bytes (BENCH_r10): the plateau was the probe paradigm (cell
-    luck), not the corpus. The oracle replays BOTH stages —
-    quantization codes, the expanded dequantized-norm algebra, the
-    candidate window, the exact re-rank — term-for-term."""
+    equal bytes (`git show 5f1e4e3:BENCH_r10.json`): the plateau was
+    the probe paradigm (cell luck), not the corpus. The oracle replays
+    BOTH stages — quantization codes, the expanded dequantized-norm
+    algebra, the candidate window, the exact re-rank — term-for-term."""
     from torcharrow_spark.operators import quantized_rerank_topk
 
     emb = _load(spark, sf_dir, "embeddings").to_spark()
@@ -1007,8 +1007,9 @@ def q171_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> SDF:
     dequantized-norm coarse algebra over probed cells only, the
     candidate window, and the exact re-rank — term-for-term. The
     recall ladder row (>= 0.95 at <= 10% effective bytes, sf1
-    weak-neighbor corpus) lives in bench.py run_recall_curves
-    ``ivf_int8``."""
+    weak-neighbor corpus) is in `git show 5f1e4e3:BENCH_full_r13.json`
+    (``recall_sf1.ivf_int8``); its sf0.01 floors are
+    tests/test_operators.py::test_quantized_ann_recall_floors_sf001."""
     from torcharrow_spark.operators import ivf_quantized_topk
 
     emb = _load(spark, sf_dir, "embeddings").to_spark()
@@ -7145,7 +7146,8 @@ def q145_modern_curation(spark: SparkSession, sf_dir: str) -> SDF:
     # semi-joining docs directly against k3 yields exactly d2 ⋉ k3 — but
     # skips re-executing the url-dedup shuffle and the gopher word-stats
     # scan inside the final action (measured 3.3 s of the 11.3 s wall at
-    # sf0.1; stage decomposition in OPTIMIZATION_r13.md).
+    # sf0.1; stage decomposition in
+    # `git show 5f1e4e3:OPTIMIZATION_r13.md`).
     d3 = docs.join(k3, "doc_id", "left_semi")
     surv = exact_dedup(d3)
     sized = surv.select(
@@ -9605,12 +9607,13 @@ def q155_unicode_clean(spark: SparkSession, sf_dir: str) -> SDF:
 # Driver correctness window
 #
 # The driver hashes only the FIRST 50 entries of queries() against their
-# oracles (CORRECTNESS_r2 stopped at q50, leaving every wave-2 operator
-# family without a driver row). The window below is a curated
-# maximum-coverage set: every SURVEY §2 section and every LLM-pipeline
-# operator cluster has at least one driver-green row. Queries outside
-# the window remain fully oracle-checked by pytest (tests/test_oracle.py
-# runs ALL queries at sf0.001) and tools/driver_sim.py at sf0.01.
+# oracles (`git show 5f1e4e3:CORRECTNESS_r02.json` stopped at q50,
+# leaving every wave-2 operator family without a driver row). The
+# window below is a curated maximum-coverage set: every SURVEY §2
+# section and every LLM-pipeline operator cluster has at least one
+# driver-green row. Queries outside the window remain fully
+# oracle-checked by pytest (tests/test_oracle.py runs ALL queries at
+# sf0.001) and tools/driver_sim.py at sf0.01.
 
 DRIVER_WINDOW = [
     # --- SURVEY §2 core (every section represented) ---
