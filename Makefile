@@ -1,7 +1,8 @@
 # Developer gates. The pre-snapshot gate is `make gate`: every declared
 # query must be value-hash-clean against its DuckDB oracle at the
-# driver's exact scale factor (sf0.01) — the strongest local predictor
-# of an all-green CORRECTNESS_r{N}.json — plus the full pytest suite.
+# driver's exact scale factor (sf0.01) — rows, schema and an
+# order-insensitive value hash, as the driver checks them — plus the
+# full pytest suite.
 
 PY ?= python
 SF001 ?= /root/testdata/sf0.001

@@ -20,7 +20,8 @@ Options (environment variables):
   SPARK_GRAFT_SF_DIR        test data directory (default: the sf0.1 data);
   SPARK_GRAFT_NO_STRESS=1   skips the sf1 stress and WARC ingest pins;
   SPARK_GRAFT_BENCH_STRICT=1  exits 1 on any pin violation;
-  SPARK_DRIVER_MEMORY       driver heap of the gate session (default 16g).
+  SPARK_DRIVER_MEMORY       driver heap of the gate session (default: the
+                            smaller of 16g and half of physical memory).
 gate_session sets SPARK_GRAFT_CPUS to PLAN_WIDTH in this process.
 """
 
@@ -126,14 +127,14 @@ def gate_session(app: str = "bench", master_width: int | None = None):
     from pyspark.sql import SparkSession
 
     import torcharrow_spark as ts
-    from torcharrow_spark.session import worker_confs
+    from torcharrow_spark.session import driver_memory, worker_confs
 
     width = master_width or len(os.sched_getaffinity(0))
     confs = worker_confs()  # the engine's Python worker path
     builder = (
         SparkSession.builder.master(f"local[{width}]")
         .appName(app)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.default.parallelism", str(PLAN_WIDTH))

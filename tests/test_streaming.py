@@ -14,29 +14,42 @@ from torcharrow_spark.streaming import (
 
 
 def test_stream_matches_batch(spark, sf_dir, tmp_path):
-    ev = read_parquet_ns(f"{sf_dir}/events.parquet", spark).to_spark()
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in windowed_counts_batch(ev, "1 hour").collect()
-    }
+    """Stream == batch in rows AND column types, for a `timestamp_ntz`
+    source and for an instant (`timestamp`) one: the stream casts ts to
+    an instant for its watermark, and window_start must still carry the
+    source's type, as the batch plan's does."""
+    from pyspark.sql import functions as F
 
-    # re-land with microsecond timestamps: streaming reads the raw files,
-    # and Spark's parquet reader rejects the source's nanos encoding
-    stream_dir = str(tmp_path / "events_us")
-    ev.write.mode("overwrite").parquet(stream_dir)
+    ev_ntz = read_parquet_ns(f"{sf_dir}/events.parquet", spark).to_spark()
+    ev_ltz = ev_ntz.withColumn("ts", F.col("ts").cast("timestamp"))
+    for name, ev in (("ntz", ev_ntz), ("ltz", ev_ltz)):
+        batch_df = windowed_counts_batch(ev, "1 hour")
+        batch = {
+            (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
+            for r in batch_df.collect()
+        }
 
-    q = windowed_counts_stream(
-        spark, stream_dir, ev.schema, window="1 hour", query_name="t_stream"
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    stream = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM t_stream").collect()
-    }
-    assert stream == batch
+        # re-land with microsecond timestamps: streaming reads the raw
+        # files, and Spark's parquet reader rejects the source's nanos
+        # encoding
+        stream_dir = str(tmp_path / f"events_{name}")
+        ev.write.mode("overwrite").parquet(stream_dir)
+
+        q = windowed_counts_stream(
+            spark, stream_dir, ev.schema, window="1 hour",
+            query_name=f"t_stream_{name}",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        streamed = spark.sql(f"SELECT * FROM t_stream_{name}")
+        stream = {
+            (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
+            for r in streamed.collect()
+        }
+        assert stream == batch
+        assert streamed.dtypes == batch_df.dtypes, name
 
 
 def test_sessionize_gap(spark):
@@ -284,11 +297,13 @@ def test_enriched_stream_matches_batch(spark, sf_dir, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    streamed = spark.sql("SELECT * FROM t_enriched")
     stream = {
         (r["window_start"], r["tier"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM t_enriched").collect()
+        for r in streamed.collect()
     }
     assert stream == batch
+    assert streamed.dtypes == enriched_counts_batch(ev, dim, "user_id", "tier").dtypes
 
 
 def test_cms_stream_matches_batch(spark, sf_dir, tmp_path):
@@ -1005,3 +1020,47 @@ def test_incremental_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
     # (it also holds batch 0/1 survivors' keys), so the fresh run's
     # survivors are a subset of the original batch-0 survivors
     assert want_fresh <= want
+
+
+@pytest.mark.parametrize(
+    "twin", ["incremental_dedup_stream", "cdc_incremental_stream"]
+)
+def test_index_root_claim_fails_fast(spark, tmp_path, twin):
+    """Both standing-index twins run the same loop, so both refuse a
+    root they cannot relate to their batch ids: a fresh checkpoint on a
+    root another checkpoint owns fails naming the owner, and a root
+    with delta partitions but no owner marker fails too — neither
+    silently dedups against base only."""
+    import shutil
+
+    import torcharrow_spark.streaming as streaming
+
+    run = getattr(streaming, twin)
+    schema = "doc_id long, text string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon " * 4),
+         (2, "one two three four five six " * 4)],
+        schema,
+    ).coalesce(1).write.parquet(src)
+    idx = str(tmp_path / "idx")
+
+    def go(ckpt: str):
+        q = run(
+            spark, src, spark.read.parquet(src).schema,
+            str(tmp_path / f"kept_{ckpt}"), idx, str(tmp_path / ckpt),
+            query_name=f"t_claim_{twin}_{ckpt}",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    go("ckpt_a")  # cold start claims the root and lands batch 0's delta
+    assert os.path.exists(f"{idx}/delta/batch_id=0")
+    with pytest.raises(Exception, match="owned by checkpoint"):
+        go("ckpt_b")
+    shutil.rmtree(f"{idx}/_owner_checkpoint")
+    with pytest.raises(Exception, match="existing delta partitions"):
+        go("ckpt_c")
+    assert not os.path.exists(str(tmp_path / "kept_ckpt_c"))

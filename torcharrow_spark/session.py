@@ -85,12 +85,20 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     return spark
 
 
+def driver_memory() -> str:
+    """The driver heap: $SPARK_DRIVER_MEMORY, else the smaller of 16g and
+    half of physical memory, so the default heap cannot outgrow a small
+    host and push it into swap or the OOM killer instead of spilling."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (2 << 20)
+    return os.environ.get("SPARK_DRIVER_MEMORY") or f"{min(16 << 10, half_mb)}m"
+
+
 def get_session(app: str = "torcharrow-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.partitions", cpus)

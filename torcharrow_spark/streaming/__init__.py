@@ -6,6 +6,10 @@ for late data, and a stateful sessionization operator. Batch equivalents
 (`windowed_counts_batch`) share the same expression logic so results are
 oracle-checkable; the streaming wrappers run the identical plan with
 `readStream` + `availableNow` for tests, Kafka/files in production.
+
+Every stream is read by `_source` and ends in one of two sinks:
+`_to_memory` (an in-memory table, tests) or `_land` (a ``foreachBatch``
+sink whose writes go through `_write_batch`).
 """
 
 from __future__ import annotations
@@ -18,6 +22,96 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
+def _source(
+    spark: SparkSession, schema, path: str, max_files_per_trigger: int | None = None
+) -> SDF:
+    """The parquet directory at `path` as a stream. max_files_per_trigger
+    splits a static directory into multiple micro-batches so tests can
+    exercise cross-batch state."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(path)
+
+
+def _instant_ts(stream: SDF) -> SDF:
+    """Watermarks require an instant (ltz) timestamp; session tz is pinned
+    to UTC so a `timestamp_ntz` wall-clock round-trips exactly."""
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
+        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream
+
+
+def _to_memory(df: SDF, mode: str, query_name: str):
+    """Start `df` into the in-memory table `query_name` (tests);
+    production would swap the sink for Kafka/Delta via writeStream."""
+    return (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _write_batch(df: SDF, dest: str, batch_id: int) -> None:
+    """The exactly-once landing of one micro-batch: `df` is written to
+    its own ``{dest}/batch_id=<n>`` partition directory with
+    mode('overwrite'), so a batch re-invoked after a partial/failed
+    write (foreachBatch's at-least-once contract) replaces its own
+    directory instead of appending duplicates. foreachBatch replays a
+    batch id with identical contents, so overwrite-by-batch-id makes the
+    replay a no-op — a bare ``mode('append')`` sink would be
+    at-least-once only. The overwrite is scoped to the batch's own
+    directory, never the table; readers of `dest` see a ``batch_id``
+    partition column (standard Hive-style layout; prune or drop it)."""
+    df.write.mode("overwrite").parquet(f"{dest}/batch_id={batch_id}")
+
+
+def _land(stream: SDF, query_name: str, on_batch, checkpoint_path: str | None = None):
+    """Start `stream` with `on_batch(batch_df, batch_id)` run on every
+    micro-batch (``foreachBatch``), checkpointed at `checkpoint_path`
+    when one is given."""
+    writer = stream.writeStream.foreachBatch(on_batch)
+    if checkpoint_path is not None:
+        writer = writer.option("checkpointLocation", checkpoint_path)
+    return writer.trigger(availableNow=True).queryName(query_name).start()
+
+
+def _window_agg(
+    events: SDF,
+    seg_col: str,
+    window: str,
+    slide: str | None = None,
+    exact: bool = False,
+    ts_type: str | None = None,
+) -> SDF:
+    """(window_start, seg_col, n_events, total_value) per event-time
+    window of ``ts``. `exact` sums ``value`` as a decimal, so the total
+    is independent of accumulation order (and equal between batch,
+    streaming, and an external SQL oracle). A stream twin passes its
+    source's ``ts`` type as `ts_type`, so window_start has the type its
+    batch twin gives even though the stream was cast to an instant for
+    its watermark."""
+    w = F.window("ts", window, slide) if slide else F.window("ts", window)
+    total = (
+        F.sum(F.col("value").cast("decimal(18,4)")).cast("double")
+        if exact
+        else F.sum("value")
+    )
+    start = F.col("w.start")
+    return (
+        events.groupBy(w.alias("w"), F.col(seg_col))
+        .agg(F.count(F.lit(1)).alias("n_events"), total.alias("total_value"))
+        .select(
+            (start if ts_type is None else start.cast(ts_type)).alias("window_start"),
+            seg_col,
+            "n_events",
+            "total_value",
+        )
+    )
+
+
 def windowed_counts_batch(
     events: SDF, window: str = "1 hour", slide: str | None = None
 ) -> SDF:
@@ -25,20 +119,7 @@ def windowed_counts_batch(
     window aggregation (batch plan). A sliding window emits one row per
     window the event falls in — window/slide overlapping copies — which
     is how Spark plans it too (explode before the hash aggregate)."""
-    w = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        events.groupBy(w.alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return _window_agg(events, "event_type", window, slide)
 
 
 def windowed_counts_stream(
@@ -63,35 +144,13 @@ def windowed_counts_stream(
     max_files_per_trigger splits a static directory into multiple
     micro-batches so tests can exercise cross-batch watermark
     advancement."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
-    # watermarks require an instant (ltz) timestamp; session tz is pinned
-    # to UTC so the wall-clock round-trips exactly
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    stream = _source(spark, schema, path, max_files_per_trigger)
+    ts_type = dict(stream.dtypes).get("ts")
+    agg = _window_agg(
+        _instant_ts(stream).withWatermark("ts", watermark),
+        "event_type", window, ts_type=ts_type,
     )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(agg, output_mode, query_name)
 
 
 def with_session_ids(events: SDF, gap_minutes: int = 30) -> SDF:
@@ -99,8 +158,6 @@ def with_session_ids(events: SDF, gap_minutes: int = 30) -> SDF:
     when the gap since the user's previous event exceeds `gap_minutes`.
     lag + running sum of session-start flags over a per-user window —
     one shuffle on user_id."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy("ts")
     # TIMESTAMP_NTZ has no direct long cast; go through ltz (session=UTC)
     secs = F.col("ts").cast("timestamp").cast("long")
@@ -145,10 +202,7 @@ def sessionize_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    stream = spark.readStream.schema(schema).parquet(path)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    stream = stream.select("user_id", "ts", "value")
+    stream = _instant_ts(_source(spark, schema, path)).select("user_id", "ts", "value")
 
     gap_secs = gap_minutes * 60
 
@@ -176,13 +230,7 @@ def sessionize_stream(
     result = stream.groupBy("user_id").applyInPandasWithState(
         assign, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    return (
-        result.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(result, "append", query_name)
 
 
 def dedup_batch(df: SDF, keys: _ty.List[str]) -> SDF:
@@ -220,25 +268,15 @@ def dedup_stream(
 
     Returns the started StreamingQuery on an in-memory sink (tests);
     production swaps the sink."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    stream = stream.withWatermark("ts", watermark)
+    stream = _instant_ts(
+        _source(spark, schema, path, max_files_per_trigger)
+    ).withWatermark("ts", watermark)
     out = (
         stream.dropDuplicatesWithinWatermark(keys)
         if within_watermark
         else stream.dropDuplicates(keys)
     )
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(out, "append", query_name)
 
 
 def hll_stream(
@@ -262,15 +300,8 @@ def hll_stream(
     production swaps the sink for a compacted table."""
     from torcharrow_spark.operators.sketch import hll_registers
 
-    stream = spark.readStream.schema(schema).parquet(path)
-    regs = hll_registers(stream, value_col, group_cols or [], p)
-    return (
-        regs.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    regs = hll_registers(_source(spark, schema, path), value_col, group_cols or [], p)
+    return _to_memory(regs, "complete", query_name)
 
 
 def enriched_counts_batch(
@@ -283,25 +314,7 @@ def enriched_counts_batch(
     """Windowed per-segment counts after enriching each event with a
     dimension attribute (the batch plan; semantics shared with
     :func:`enriched_counts_stream`)."""
-    return (
-        events.join(F.broadcast(dim), key)
-        .groupBy(F.window("ts", window).alias("w"), F.col(seg_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # exact decimal sum -> the result is independent of
-            # accumulation order (and equal between batch, streaming,
-            # and an external SQL oracle)
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            seg_col,
-            "n_events",
-            "total_value",
-        )
-    )
+    return _window_agg(events.join(F.broadcast(dim), key), seg_col, window, exact=True)
 
 
 def enriched_counts_stream(
@@ -327,33 +340,13 @@ def enriched_counts_stream(
     state, bounded by the watermark.  The dimension is re-broadcast
     per batch, so updating the static table between batches picks up
     new reference data without restarting the query."""
-    stream = spark.readStream.schema(schema).parquet(path)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .join(F.broadcast(dim), key)
-        .groupBy(F.window("ts", window).alias("w"), F.col(seg_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            seg_col,
-            "n_events",
-            "total_value",
-        )
+    stream = _source(spark, schema, path)
+    ts_type = dict(stream.dtypes).get("ts")
+    enriched = (
+        _instant_ts(stream).withWatermark("ts", watermark).join(F.broadcast(dim), key)
     )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    agg = _window_agg(enriched, seg_col, window, exact=True, ts_type=ts_type)
+    return _to_memory(agg, "complete", query_name)
 
 
 def cms_stream(
@@ -374,15 +367,8 @@ def cms_stream(
     estimates (overestimates only, standard CM guarantee)."""
     from torcharrow_spark.operators.sketch import cms_sketch
 
-    stream = spark.readStream.schema(schema).parquet(path)
-    cells = cms_sketch(stream, value_col, d=d, w=w)
-    return (
-        cells.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    cells = cms_sketch(_source(spark, schema, path), value_col, d=d, w=w)
+    return _to_memory(cells, "complete", query_name)
 
 
 def correlate_streams_batch(
@@ -432,13 +418,10 @@ def correlate_streams(
     NOT the stream history.  Without the time-range conjunct the
     state would grow forever; this helper makes the bound part of
     the API."""
-    ra = spark.readStream.schema(schema).parquet(path_a)
-    rb = spark.readStream.schema(schema).parquet(path_b)
-    if dict(ra.dtypes).get("ts") == "timestamp_ntz":
-        ra = ra.withColumn("ts", F.col("ts").cast("timestamp"))
-        rb = rb.withColumn("ts", F.col("ts").cast("timestamp"))
-    a = ra.withWatermark("ts", watermark).alias("a")
-    b = rb.withWatermark("ts", watermark).alias("b")
+    a, b = (
+        _instant_ts(_source(spark, schema, p)).withWatermark("ts", watermark).alias(n)
+        for p, n in ((path_a, "a"), (path_b, "b"))
+    )
     joined = a.join(
         b,
         (F.col(f"a.{key}") == F.col(f"b.{key}"))
@@ -455,13 +438,7 @@ def correlate_streams(
             / F.lit(1_000_000.0)
         ).alias("lag_s"),
     )
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(joined, "append", query_name)
 
 
 def stream_to_parquet(
@@ -478,34 +455,21 @@ def stream_to_parquet(
     so arbitrary batch logic (dedup against keys, compaction, merges)
     runs inside the sink, and the landing is EXACTLY-ONCE: each batch
     is written to its own ``batch_id=<n>`` partition directory with
-    mode('overwrite'), so a batch re-invoked after a partial/failed
-    write (foreachBatch's at-least-once contract) replaces its own
-    directory instead of appending duplicates. foreachBatch replays a
-    batch id with identical contents, so overwrite-by-batch-id makes
-    the replay a no-op — a bare ``mode('append')`` sink here would be
-    at-least-once only. Readers of ``dest_path`` see a ``batch_id``
-    partition column (standard Hive-style layout; prune or drop it).
+    mode('overwrite') (`_write_batch`), so a replayed batch replaces
+    its own directory instead of appending duplicates. Readers of
+    ``dest_path`` see a ``batch_id`` partition column.
 
     Scale notes: parquet writes are per-partition files (no driver
     bottleneck); per-batch ``dropDuplicates`` dedups WITHIN the batch
     (cheap, bounded by the trigger size) — cross-batch exact dedup
     belongs to ``dedup_stream`` (watermark-bounded state) or a
     downstream compaction over the landed table."""
-    stream = spark.readStream.schema(schema).parquet(src_path)
 
     def _sink(batch_df, batch_id: int) -> None:
         out = batch_df.dropDuplicates(dedup_keys) if dedup_keys else batch_df
-        # idempotent landing: overwrite is scoped to this batch's own
-        # partition directory, never the table
-        out.write.mode("overwrite").parquet(f"{dest_path}/batch_id={batch_id}")
+        _write_batch(out, dest_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
+    return _land(_source(spark, schema, src_path), query_name, _sink, checkpoint_path)
 
 
 def _curate_base(df: SDF, text_col: str, id_col: str, n_shards: int,
@@ -625,10 +589,7 @@ def curate_pack_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
+    stream = _source(spark, schema, path, max_files_per_trigger)
     base = _curate_base(stream, text_col, id_col, n_shards, min_words, max_dup_word_frac)
 
     cols = ["doc_id", "n_tokens", "shard", "bin", "offset"]
@@ -677,13 +638,7 @@ def curate_pack_stream(
     result = base.groupBy("shard").applyInPandasWithState(
         pack, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    return (
-        result.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(result, "append", query_name)
 
 
 def contamination_stream(
@@ -708,36 +663,26 @@ def contamination_stream(
 
     Shape: ``foreachBatch`` running the batch operator per micro-batch,
     landing each batch's scores in its own ``batch_id=<n>`` parquet
-    partition with mode('overwrite') — the same exactly-once idempotent
-    sink as :func:`stream_to_parquet`. foreachBatch is exactly right
-    here: the per-document metric depends only on the document itself
-    and the STATIC benchmark set, so there is no cross-batch state to
-    carry and stream == batch holds under ANY micro-batch partitioning
-    (the paired test proves it across several files). Production pins
-    the benchmark shingle table with ``persist()`` before starting the
-    stream; readers of ``dest_path`` see (doc_id, n_shingles,
-    n_overlap, overlap_frac, contaminated) plus the batch_id partition
-    column."""
+    partition — the exactly-once sink of :func:`stream_to_parquet`.
+    foreachBatch is exactly right here: the per-document metric depends
+    only on the document itself and the STATIC benchmark set, so there
+    is no cross-batch state to carry and stream == batch holds under
+    ANY micro-batch partitioning (the paired test proves it across
+    several files). Production pins the benchmark shingle table with
+    ``persist()`` before starting the stream; readers of ``dest_path``
+    see (doc_id, n_shingles, n_overlap, overlap_frac, contaminated)
+    plus the batch_id partition column."""
     from torcharrow_spark.operators.dedup import contamination
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
 
     def _sink(batch_df, batch_id: int) -> None:
         scored = contamination(
             train=test_df, test=batch_df, k=k, threshold=threshold,
             text_col=text_col, id_col=id_col,
         )
-        scored.write.mode("overwrite").parquet(f"{dest_path}/batch_id={batch_id}")
+        _write_batch(scored, dest_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
+    stream = _source(spark, schema, path, max_files_per_trigger)
+    return _land(stream, query_name, _sink)
 
 
 def term_stats_batch(df: SDF, text_col: str = "text", id_col: str = "doc_id") -> SDF:
@@ -798,12 +743,9 @@ def term_stats_stream(
     both from one tagged union of the two stateless explodes. A doc
     REPLAYED by the source would double-count (exact-once doc delivery
     is the upstream `dedup_stream` / `curate_pack_stream` contract)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
     from torcharrow_spark.operators.textstats import _words
 
+    stream = _source(spark, schema, path, max_files_per_trigger)
     words = _words(F.col(text_col))
     raw = stream.select(F.explode(words).alias("term")).where(
         F.col("term") != ""
@@ -816,13 +758,7 @@ def term_stats_stream(
         F.sum("__is_df__").alias("df"),
         (F.count(F.lit(1)) - F.sum("__is_df__")).alias("tf_total"),
     )
-    return (
-        stats.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(stats, "complete", query_name)
 
 
 def tf_stream(
@@ -837,29 +773,18 @@ def tf_stream(
 ):
     """Per-document term frequencies AT INGEST: lands
     `relevance.term_frequencies` of each micro-batch into its own
-    ``batch_id=<n>`` parquet partition with mode('overwrite') — the
-    exactly-once idempotent sink pattern of `contamination_stream`.
-    tf is a pure per-document quantity, so stream == batch holds under
-    any micro-batch partitioning; joining the landed table against
-    `term_stats_stream`'s drifting df table gives windowed TF-IDF
-    without ever rescanning old text."""
+    ``batch_id=<n>`` parquet partition — the exactly-once sink of
+    `contamination_stream`. tf is a pure per-document quantity, so
+    stream == batch holds under any micro-batch partitioning; joining
+    the landed table against `term_stats_stream`'s drifting df table
+    gives windowed TF-IDF without ever rescanning old text."""
     from torcharrow_spark.operators.relevance import term_frequencies
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
-
     def _sink(batch_df, batch_id: int) -> None:
-        tf = term_frequencies(batch_df, text_col, id_col)
-        tf.write.mode("overwrite").parquet(f"{dest_path}/batch_id={batch_id}")
+        _write_batch(term_frequencies(batch_df, text_col, id_col), dest_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
+    stream = _source(spark, schema, path, max_files_per_trigger)
+    return _land(stream, query_name, _sink)
 
 
 def dedup_windowed_counts_batch(
@@ -899,35 +824,13 @@ def dedup_windowed_counts_stream(
     batch twin whenever duplicates of an event share its event time
     (the at-least-once-redelivery case) and arrive in event order —
     the paired test proves it across micro-batches."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-    agg = (
-        deduped.groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = _source(spark, schema, path, max_files_per_trigger)
+    ts_type = dict(stream.dtypes).get("ts")
+    deduped = _instant_ts(stream).withWatermark(
+        "ts", watermark
+    ).dropDuplicatesWithinWatermark(keys)
+    agg = _window_agg(deduped, "event_type", window, ts_type=ts_type)
+    return _to_memory(agg, "append", query_name)
 
 
 def quality_scores_batch(
@@ -1000,9 +903,8 @@ def quality_scores_stream(
     iters scans of the bounded batch + a dim-sized exact-decimal
     aggregate each, so fit cost is bounded by the trigger size), then
     every survivor is scored with the fresh weights and landed in its
-    own ``batch_id=<n>`` parquet partition with mode('overwrite') —
-    the same idempotent exactly-once sink as `stream_to_parquet`
-    (a replayed batch id overwrites its own directory, never appends).
+    own ``batch_id=<n>`` parquet partition — the exactly-once sink of
+    `stream_to_parquet`.
 
     Semantics by design: weights drift WITH the stream — each batch is
     scored by the model of its own data, which is the production
@@ -1012,10 +914,6 @@ def quality_scores_stream(
     global model is `logreg_train` once + `logreg_score` inside any
     sink. Readers of ``dest_path`` see (doc_id, label, score) plus the
     batch_id partition column."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
 
     def _sink(batch_df, batch_id: int) -> None:
         scored = quality_scores_batch(
@@ -1023,15 +921,10 @@ def quality_scores_stream(
             lr=lr, iters=iters,
             min_words=min_words, max_dup_word_frac=max_dup_word_frac,
         )
-        scored.write.mode("overwrite").parquet(f"{dest_path}/batch_id={batch_id}")
+        _write_batch(scored, dest_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
+    stream = _source(spark, schema, path, max_files_per_trigger)
+    return _land(stream, query_name, _sink, checkpoint_path)
 
 
 def cdc_incremental_stream(
@@ -1077,48 +970,43 @@ def cdc_incremental_stream(
     (paired pytest), which makes the twin oracle-checkable through
     q161's batch side."""
     from torcharrow_spark.operators.cdc import cdc_chunks, cdc_dedup_against_index
-    from torcharrow_spark.operators.indexstore import read_index
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
-
-    def _sink(batch_df, batch_id: int) -> None:
-        if batch_id == 0:
-            _claim_index_root(spark, index_path, checkpoint_path)
-        base = read_index(spark, index_path)
-        delta = _try_read_parquet(spark, f"{index_path}/delta")
-        if delta is not None:
-            delta = delta.where(F.col("batch_id") < F.lit(int(batch_id)))
-        parts = [d.select("h") for d in (base, delta) if d is not None]
-        if parts:
-            index = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        else:  # cold start: nothing kept yet
-            index = spark.createDataFrame([], "h string")
+    def gate(batch_df, index):
         scored = cdc_dedup_against_index(
             batch_df, index, text_col, id_col, max_shared_frac=max_shared_frac
         )
-        survivors = batch_df.join(
-            scored.where(F.col("keep")).select(id_col), id_col
-        )
-        survivors.write.mode("overwrite").parquet(
-            f"{dest_path}/batch_id={batch_id}"
-        )
-        # chunk the JUST-WRITTEN survivors (not the uncached plan — it
-        # would re-run the index join; same rule as the MinHash twin)
-        landed = spark.read.parquet(f"{dest_path}/batch_id={batch_id}")
-        cdc_chunks(landed, text_col, id_col).select("h").distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{index_path}/delta/batch_id={batch_id}")
+        return batch_df.join(scored.where(F.col("keep")).select(id_col), id_col)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
+    return _index_twin(
+        spark, _source(spark, schema, path, max_files_per_trigger), query_name,
+        dest_path, index_path, checkpoint_path, "h string", gate,
+        lambda landed: cdc_chunks(landed, text_col, id_col).select("h").distinct(),
     )
+
+
+def _score_and_gate(cleaned: SDF, id_col: str, keep: tuple, min_quality: float) -> SDF:
+    """Shared tail of the web/WARC ingest chains: fused textstats
+    quality + language-ID projection over normalized ``text``, its md5,
+    and the ``min_quality`` gate. Returns (id_col, *keep, text_md5,
+    quality, pred_lang)."""
+    from torcharrow_spark.operators.textstats import (
+        _language_exprs,
+        _quality_exprs,
+        _words,
+    )
+
+    base = cleaned.select(
+        F.col(id_col),
+        *[F.col(c) for c in keep],
+        F.col("text"),
+        _words(F.col("text")).alias("__w__"),
+    )
+    quality = _quality_exprs("text", words_sql="__w__")[-1]
+    pred_lang = _language_exprs("text", words_sql="__w__")[0]
+    scored = base.select(
+        id_col, *keep, F.md5(F.col("text")).alias("text_md5"), quality, pred_lang
+    )
+    return scored.where(F.col("quality") >= min_quality)
 
 
 def web_ingest_batch(
@@ -1141,11 +1029,6 @@ def web_ingest_batch(
     micro-batch."""
     from torcharrow_spark.operators import html_extract
     from torcharrow_spark.operators.textnorm import normalize_text
-    from torcharrow_spark.operators.textstats import (
-        _language_exprs,
-        _quality_exprs,
-        _words,
-    )
 
     pages = html_extract(df, html_col, id_col)
     cleaned = normalize_text(
@@ -1154,26 +1037,9 @@ def web_ingest_batch(
         id_col=id_col,
         passthrough=("title",),
     )
-    base = cleaned.select(
-        F.col(id_col),
-        F.col("title"),
-        F.col("was_mojibake"),
-        F.col("n_chars"),
-        F.col("text"),
-        _words(F.col("text")).alias("__w__"),
+    return _score_and_gate(
+        cleaned, id_col, ("title", "was_mojibake", "n_chars"), min_quality
     )
-    quality = _quality_exprs("text", words_sql="__w__")[-1]
-    pred_lang = _language_exprs("text", words_sql="__w__")[0]
-    scored = base.select(
-        id_col,
-        "title",
-        "was_mojibake",
-        "n_chars",
-        F.md5(F.col("text")).alias("text_md5"),
-        quality,
-        pred_lang,
-    )
-    return scored.where(F.col("quality") >= min_quality)
 
 
 def web_ingest_stream(
@@ -1191,29 +1057,18 @@ def web_ingest_stream(
     """Streaming twin of `web_ingest_batch` (r9): raw HTML pages land
     continuously; each micro-batch is extracted, repaired, scored, and
     gated with the SAME stateless chain, then written to its own
-    ``batch_id=<n>`` parquet partition with mode('overwrite') — the
-    idempotent exactly-once sink shared by the other foreachBatch
-    twins (a replayed batch id overwrites its own directory, never
-    appends). Because the chain holds no state, stream == batch is
-    exact for any micro-batch split of the source."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
+    ``batch_id=<n>`` parquet partition — the exactly-once sink shared
+    by the other foreachBatch twins. Because the chain holds no state,
+    stream == batch is exact for any micro-batch split of the source."""
 
     def _sink(batch_df, batch_id: int) -> None:
         curated = web_ingest_batch(
             batch_df, html_col=html_col, id_col=id_col, min_quality=min_quality
         )
-        curated.write.mode("overwrite").parquet(f"{dest_path}/batch_id={batch_id}")
+        _write_batch(curated, dest_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
+    stream = _source(spark, schema, path, max_files_per_trigger)
+    return _land(stream, query_name, _sink, checkpoint_path)
 
 
 def warc_ingest_batch(
@@ -1241,11 +1096,6 @@ def warc_ingest_batch(
         decode_payloads,
         normalize_text,
     )
-    from torcharrow_spark.operators.textstats import (
-        _language_exprs,
-        _quality_exprs,
-        _words,
-    )
 
     recs = warc_records(df, warc_col, id_col)
     pages = recs.where(
@@ -1265,30 +1115,11 @@ def warc_ingest_batch(
         id_col=id_col,
         passthrough=("title", "encoding", "target_uri"),
     )
-    base = cleaned.select(
-        F.col(id_col),
-        F.col("target_uri"),
-        F.col("encoding"),
-        F.col("title"),
-        F.col("was_mojibake"),
-        F.col("n_chars"),
-        F.col("text"),
-        _words(F.col("text")).alias("__w__"),
+    return _score_and_gate(
+        cleaned, id_col,
+        ("target_uri", "encoding", "title", "was_mojibake", "n_chars"),
+        min_quality,
     )
-    quality = _quality_exprs("text", words_sql="__w__")[-1]
-    pred_lang = _language_exprs("text", words_sql="__w__")[0]
-    scored = base.select(
-        id_col,
-        "target_uri",
-        "encoding",
-        "title",
-        "was_mojibake",
-        "n_chars",
-        F.md5(F.col("text")).alias("text_md5"),
-        quality,
-        pred_lang,
-    )
-    return scored.where(F.col("quality") >= min_quality)
 
 
 def warc_ingest_stream(
@@ -1306,30 +1137,29 @@ def warc_ingest_stream(
     """Streaming twin of `warc_ingest_batch` (r10): WARC captures land
     continuously (the Common Crawl delivery shape); each micro-batch
     runs the SAME stateless bytes->curated-text chain and writes to
-    its own ``batch_id=<n>`` parquet partition with mode('overwrite')
-    — the idempotent exactly-once sink shared by every foreachBatch
-    twin. Stateless chain => stream == batch EXACT for any micro-batch
-    split of the source."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
+    its own ``batch_id=<n>`` parquet partition — the exactly-once sink
+    shared by every foreachBatch twin. Stateless chain => stream ==
+    batch EXACT for any micro-batch split of the source."""
 
     def _sink(batch_df, batch_id: int) -> None:
         curated = warc_ingest_batch(
             batch_df, warc_col=warc_col, id_col=id_col,
             min_quality=min_quality,
         )
-        curated.write.mode("overwrite").parquet(
-            f"{dest_path}/batch_id={batch_id}"
-        )
+        _write_batch(curated, dest_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
+    stream = _source(spark, schema, path, max_files_per_trigger)
+    return _land(stream, query_name, _sink, checkpoint_path)
+
+
+def _path_missing(e: Exception) -> bool:
+    """True only for Spark's "path does not exist" analysis error."""
+    from pyspark.errors import AnalysisException
+
+    return isinstance(e, AnalysisException) and (
+        getattr(e, "getCondition", lambda: None)() == "PATH_NOT_FOUND"
+        or "PATH_NOT_FOUND" in str(e)
+        or "Path does not exist" in str(e)
     )
 
 
@@ -1363,16 +1193,7 @@ def _claim_index_root(
         rows = spark.read.text(marker).collect()
         owner = rows[0]["value"].strip() if rows else ""
     except Exception as e:
-        from pyspark.errors import AnalysisException
-
-        if not (
-            isinstance(e, AnalysisException)
-            and (
-                getattr(e, "getErrorClass", lambda: None)() == "PATH_NOT_FOUND"
-                or "PATH_NOT_FOUND" in str(e)
-                or "Path does not exist" in str(e)
-            )
-        ):
+        if not _path_missing(e):
             raise
     if owner is not None:
         if owner != checkpoint_path:
@@ -1412,15 +1233,65 @@ def _try_read_parquet(spark: SparkSession, path: str):
         df.schema  # force analysis so a missing path raises HERE
         return df
     except Exception as e:
-        from pyspark.errors import AnalysisException
-
-        if isinstance(e, AnalysisException) and (
-            getattr(e, "getErrorClass", lambda: None)() == "PATH_NOT_FOUND"
-            or "PATH_NOT_FOUND" in str(e)
-            or "Path does not exist" in str(e)
-        ):
+        if _path_missing(e):
             return None
         raise
+
+
+def _index_twin(
+    spark: SparkSession,
+    stream: SDF,
+    query_name: str,
+    dest_path: str,
+    index_path: str,
+    checkpoint_path: str,
+    index_schema: str,
+    gate,
+    index_rows,
+):
+    """The standing-index loop of `incremental_dedup_stream` and
+    `cdc_incremental_stream`. Each micro-batch claims the root at batch
+    0 (`_claim_index_root`), unions the manifest-resolved base with
+    every earlier batch's delta (an empty `index_schema` frame on a cold
+    start), lands ``gate(batch_df, index)`` in `dest_path`, and writes
+    ``index_rows(landed)`` as this batch's delta; both writes go through
+    `_write_batch`."""
+    from torcharrow_spark.operators.indexstore import read_index
+
+    cols = [f.split()[0] for f in index_schema.split(",")]
+
+    def _sink(batch_df, batch_id: int) -> None:
+        if batch_id == 0:
+            # fail fast if a FRESH checkpoint points at a root whose
+            # deltas belong to another checkpoint's batch-id sequence
+            _claim_index_root(spark, index_path, checkpoint_path)
+        # r9: the standing base is MANIFEST-RESOLVED (the rename-free
+        # versioned layout of operators.indexstore — compact_index
+        # publishes base_v{N} snapshots; the legacy bare `base` dir
+        # still resolves for pre-r9 roots)
+        base = read_index(spark, index_path)
+        delta = _try_read_parquet(spark, f"{index_path}/delta")
+        if delta is not None:
+            # a REPLAYED batch (crash after its delta landed but before
+            # the checkpoint committed) must not see its own keys — it
+            # would collide with itself and drop every doc; partition
+            # pruning makes this a directory-level filter
+            delta = delta.where(F.col("batch_id") < F.lit(int(batch_id)))
+        parts = [d.select(*cols) for d in (base, delta) if d is not None]
+        if parts:
+            index = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        else:  # cold start: nothing kept yet
+            index = spark.createDataFrame([], index_schema)
+        _write_batch(gate(batch_df, index), dest_path, batch_id)
+        # derive the index delta from the JUST-WRITTEN survivors file,
+        # not the survivors plan: re-evaluating the uncached plan would
+        # run the gate's index join a second time per batch (r7
+        # review), and the read-back is also exactly what a replayed
+        # batch must key on
+        landed = spark.read.parquet(f"{dest_path}/batch_id={batch_id}")
+        _write_batch(index_rows(landed), f"{index_path}/delta", batch_id)
+
+    return _land(stream, query_name, _sink, checkpoint_path)
 
 
 def incremental_dedup_stream(
@@ -1454,11 +1325,10 @@ def incremental_dedup_stream(
        same no-pair-emission plan, immune to hot buckets by
        construction);
     3. lands survivors in `{dest_path}/batch_id=N` and the survivors'
-       OWN band keys in `{index_path}/delta/batch_id=N`, both with
-       mode('overwrite') into the batch's own directory — the same
-       idempotent exactly-once discipline as `stream_to_parquet`: a
-       replayed batch id overwrites its own output and its own index
-       delta, never appends a duplicate, and the standing index is the
+       OWN band keys in `{index_path}/delta/batch_id=N`, both
+       exactly-once by batch id like `stream_to_parquet`: a replayed
+       batch id overwrites its own output and its own index delta,
+       never appends a duplicate, and the standing index is the
        UNION of base + deltas (band keys are per-doc, so union IS the
        merged index — `minhash_index` scale notes).
 
@@ -1482,64 +1352,19 @@ def incremental_dedup_stream(
         dedup_against_index,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(path)
-
-    def _sink(batch_df, batch_id: int) -> None:
-        if batch_id == 0:
-            # fail fast if a FRESH checkpoint points at a root whose
-            # deltas belong to another checkpoint's batch-id sequence
-            _claim_index_root(spark, index_path, checkpoint_path)
-        # r9: the standing base is MANIFEST-RESOLVED (the rename-free
-        # versioned layout of operators.indexstore — compact_index
-        # publishes base_v{N} snapshots; the legacy bare `base` dir
-        # still resolves for pre-r9 roots)
-        from torcharrow_spark.operators.indexstore import read_index
-
-        base = read_index(spark, index_path)
-        delta = _try_read_parquet(spark, f"{index_path}/delta")
-        if delta is not None:
-            # a REPLAYED batch (crash after its delta landed but before
-            # the checkpoint committed) must not see its own keys — it
-            # would collide with itself and drop every doc; partition
-            # pruning makes this a directory-level filter
-            delta = delta.where(F.col("batch_id") < F.lit(int(batch_id)))
-        parts = [
-            d.select("band", "band_key")
-            for d in (base, delta)
-            if d is not None
-        ]
-        if parts:
-            index = parts[0] if len(parts) == 1 else parts[0].unionByName(
-                parts[1]
-            )
-        else:  # cold start: nothing kept yet
-            index = spark.createDataFrame([], "band int, band_key string")
-        survivors = dedup_against_index(
+    def gate(batch_df, index):
+        return dedup_against_index(
             batch_df, index, text_col, id_col,
             shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
         )
-        survivors.write.mode("overwrite").parquet(
-            f"{dest_path}/batch_id={batch_id}"
-        )
-        # derive the index delta from the JUST-WRITTEN survivors file,
-        # not the survivors plan: re-evaluating the uncached plan would
-        # run shingling + both index joins a second time per batch
-        # (r7 review), and the read-back is also exactly what a
-        # replayed batch must key on
-        landed = spark.read.parquet(f"{dest_path}/batch_id={batch_id}")
-        _banded_keys(
-            landed, text_col, id_col, shingle_k, num_hashes, bands
-        ).select("band", "band_key", id_col).write.mode("overwrite").parquet(
-            f"{index_path}/delta/batch_id={batch_id}"
-        )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
+    def index_rows(landed):
+        return _banded_keys(
+            landed, text_col, id_col, shingle_k, num_hashes, bands
+        ).select("band", "band_key", id_col)
+
+    return _index_twin(
+        spark, _source(spark, schema, path, max_files_per_trigger), query_name,
+        dest_path, index_path, checkpoint_path, "band int, band_key string",
+        gate, index_rows,
     )
