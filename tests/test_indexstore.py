@@ -450,6 +450,23 @@ def test_ann_index_cold_start_errors_are_named(spark, tmp_path):
         read_ann_index(spark, root)
 
 
+def test_ann_index_publish_rejects_out_of_range_bits(spark, tmp_path):
+    """The standing index serves only code widths ivf_quantized_topk
+    accepts: a publish at bits outside [2, 16] fails before anything is
+    written under the root."""
+    import pytest
+
+    from torcharrow_spark.operators import ann_index_publish
+
+    vecs = _toy_vectors(spark)
+    cents = _toy_cents(spark, vecs)
+    for bits in (1, 17):
+        root = tmp_path / f"annix_bits{bits}"
+        with pytest.raises(ValueError, match=r"bits must be in \[2, 16\]"):
+            ann_index_publish(vecs, cents, str(root), bits=bits)
+        assert not root.exists()
+
+
 def test_ann_index_republish_supersedes(spark, tmp_path):
     """A wholesale re-publish bumps the manifest version; readers see
     ONLY the new snapshot (the old one stays on disk for GC grace)."""

@@ -333,22 +333,68 @@ def test_jaccard_auto_is_prefix_and_jobfree(spark, monkeypatch):
     assert est["sampled_shingles"] > 0
 
 
-def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
-    """Probing every cell makes IVF exact: results must equal brute-force
-    top-k (same tie-breaking, same cosine doubles)."""
-    from torcharrow_spark.operators.similarity import brute_force_topk, ivf_topk
+@pytest.mark.parametrize(
+    "path",
+    [
+        "lsh_topk",
+        "lsh_topk_multitable",
+        "ivf_topk",
+        "ivf_topk_df",
+        "quantized_rerank_topk",
+        "ivf_quantized_topk",
+        "ann_index_topk",
+    ],
+)
+def test_ivf_full_probe_equals_brute_force(spark, sf_dir, tmp_path, path):
+    """Every ANN path is exact at its degenerate setting — LSH probing
+    all 2^n_planes buckets of every table, IVF probing every cell, the
+    int8 paths probing every cell with a candidate pool >= the corpus —
+    and must return brute force's rows: same (query_id, match_id, rank),
+    same cosine doubles. This pins the shared top-k tail's contract:
+    self-matches are excluded and ties break on the lower match_id."""
+    from torcharrow_spark.operators import similarity as sim
+    from torcharrow_spark.operators.annindex import (
+        ann_index_publish,
+        ann_index_topk,
+    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter("vec_id < 8")
-    exact = {(r["query_id"], r["rank"]): (r["match_id"], round(r["cosine"], 9))
-             for r in brute_force_topk(emb, q, k=3).collect()}
-    full = {(r["query_id"], r["rank"]): (r["match_id"], round(r["cosine"], 9))
-            for r in ivf_topk(emb, q, k=3, n_cells=8, n_probe=8).collect()}
-    assert exact == full and len(exact) == 24
+    n = emb.count()
+    cents = emb.where("vec_id < 8").select(
+        F.col("vec_id").cast("int").alias("cell"),
+        F.col("embedding").alias("centroid"),
+    )
 
-    # partial probe returns ranked rows for every query (recall plumbing)
-    part = ivf_topk(emb, q, k=3, n_cells=8, n_probe=2)
-    assert part.groupBy("query_id").count().count() == 8
+    def ann_index():
+        root = str(tmp_path / "annix")
+        ann_index_publish(emb, cents, root)
+        return ann_index_topk(q, emb, root, k=3, n_probe=8, candidates=n)
+
+    run = {
+        "lsh_topk": lambda: sim.lsh_topk(emb, q, k=3, n_planes=3, n_probe=8),
+        "lsh_topk_multitable": lambda: sim.lsh_topk_multitable(
+            emb, q, k=3, n_planes=2, n_tables=2, n_probe=4
+        ),
+        "ivf_topk": lambda: sim.ivf_topk(emb, q, k=3, n_cells=8, n_probe=8),
+        "ivf_topk_df": lambda: sim.ivf_topk_df(emb, q, cents, k=3, n_probe=8),
+        "quantized_rerank_topk": lambda: sim.quantized_rerank_topk(
+            emb, q, k=3, candidates=n
+        ),
+        "ivf_quantized_topk": lambda: sim.ivf_quantized_topk(
+            emb, q, cents, k=3, n_probe=8, candidates=n
+        ),
+        "ann_index_topk": ann_index,
+    }[path]
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["match_id"], r["rank"], round(r["cosine"], 9))
+            for r in df.collect()
+        )
+
+    exact = rows(sim.brute_force_topk(emb, q, k=3))
+    assert rows(run()) == exact and len(exact) == 24
 
 
 def test_resize_media_plumbing(spark):
@@ -2388,6 +2434,8 @@ def test_ivf_partial_probe_recall(spark, sf_dir):
             for r in ivf_topk(emb, q, k=3, n_cells=16, n_probe=4).collect()}
     recall = len(exact & part) / len(exact)
     assert recall >= 0.5, recall
+    # partial probe still returns ranked rows for every query
+    assert {qid for qid, _ in part} == {qid for qid, _ in exact}
 
 
 def test_multi_probe_lsh_recall_monotone(spark, sf_dir):
@@ -2572,16 +2620,22 @@ def test_recall_vs_probe_curves_sf1(spark):
     assert ivf[4] >= 2 * (4 / 64), ivf
 
 
-def test_quantized_ann_recall_floors_sf001(spark, sf_dir):
+def test_quantized_ann_recall_floors_sf001(spark, sf_dir, tmp_path):
     """Recall@10 of the two int8 ANN paths against exact brute force on
     the sf0.01 embeddings (500 vectors, dim 64, 24 queries). The int8
     coarse scan + exact re-rank sees every vector, so 50 candidates
     recover the exact top-10. IVF-int8 over 32 kmeans++ cells can only
     lose neighbors outside the probed cells: recall never falls as
     n_probe grows and is exact at full probe (measured 0.40/0.61/0.83/
-    1.0 at 4/8/16/32)."""
+    1.0 at 4/8/16/32). The n_probe sweep pays stage 1 (quantize +
+    assign) once: it publishes a standing index and probes it per
+    point, and the full-probe rows equal ivf_quantized_topk's."""
     import os
 
+    from torcharrow_spark.operators.annindex import (
+        ann_index_publish,
+        ann_index_topk,
+    )
     from torcharrow_spark.operators.clustering import kmeans
     from torcharrow_spark.operators.similarity import (
         brute_force_topk,
@@ -2597,22 +2651,32 @@ def test_quantized_ann_recall_floors_sf001(spark, sf_dir):
              for r in brute_force_topk(emb, q, k=k).collect()}
     assert len(exact) == 24 * k
 
-    def recall(got):
-        hits = {(r["query_id"], r["match_id"]) for r in got.collect()}
+    def recall(rows):
+        hits = {(r["query_id"], r["match_id"]) for r in rows}
         return len(exact & hits) / len(exact)
 
-    assert recall(quantized_rerank_topk(emb, q, k=k, candidates=50)) == 1.0
+    assert recall(
+        quantized_rerank_topk(emb, q, k=k, candidates=50).collect()
+    ) == 1.0
 
     _asg, cents = kmeans(emb, k=32, max_iter=3, init="kmeans++")
     centdf = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(cents)],
         "cell int, centroid array<double>",
     )
-    ivf = {p: recall(ivf_quantized_topk(emb, q, centdf, k=k, n_probe=p,
-                                        candidates=50))
-           for p in (4, 8, 16, 32)}
+    root = str(tmp_path / "annix")
+    ann_index_publish(emb, centdf, root)
+    probed = {
+        p: ann_index_topk(q, emb, root, k=k, n_probe=p,
+                          candidates=50).collect()
+        for p in (4, 8, 16, 32)
+    }
+    ivf = {p: recall(rows) for p, rows in probed.items()}
     assert ivf[4] <= ivf[8] <= ivf[16] <= ivf[32], ivf
     assert ivf[32] == 1.0, ivf
+    one_shot = ivf_quantized_topk(emb, q, centdf, k=k, n_probe=32,
+                                  candidates=50).collect()
+    assert sorted(map(tuple, probed[32])) == sorted(map(tuple, one_shot))
 
 
 def test_multitable_lsh_dominates_single_table(spark, sf_dir):

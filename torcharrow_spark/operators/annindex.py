@@ -1,5 +1,5 @@
 """Standing quantized ANN index — publish once, append nightly, probe
-forever (r11).
+forever.
 
 This is the composition the tuning registry's N*Q ceiling row points
 at, made PERSISTENT: `similarity.ivf_quantized_topk` recomputes the
@@ -33,24 +33,28 @@ is an ACCELERATION structure, not a semantic one (q174's oracle is
 q171's for exactly this reason). The exact re-rank joins back to the
 caller's full-precision ``corpus`` by id: codes are 4x smaller than
 float32 precisely because the floats stay in source-of-truth storage,
-and the re-rank reads |queries| x candidates of them by key.
+and the re-rank reads |queries| x candidates of them by key. The probe
+is `similarity._int8_probe`, the same stages 2-4 `ivf_quantized_topk`
+runs over its in-plan codes, so this module holds storage only: no
+window, join or cosine of its own.
 
 Reference parity note: torcharrow has no ANN or index surface; the
-bar is this repo's own recall ladder (bench `ivf_int8` row) and the
-indexstore lifecycle discipline (crash matrix in tests).
+bar is this repo's own recall ladder (recall 0.95 at 10% of the
+full-scan bytes on the sf1 corpus, kept in CHANGES.md's "pin gate and
+nothing else" entry) and the indexstore lifecycle discipline (crash
+matrix in tests).
 """
 
 from __future__ import annotations
 
 import logging as _logging
-import typing as _ty
 
 from pyspark.sql import DataFrame as SDF
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from . import indexstore as ixs
-from .similarity import assign_quantized_cells
+from .similarity import _int8_probe, assign_quantized_cells
 
 _log = _logging.getLogger(__name__)
 
@@ -99,23 +103,24 @@ def ann_index_publish(
     return {"codes": m_codes, "cents": m_cents}
 
 
-def _stored_cents(spark: SparkSession, index_root: str) -> _ty.Tuple[SDF, int]:
+def _stored_cents(spark: SparkSession, index_root: str) -> SDF:
+    """The published (cell, centroid, bits) table. Reading ``bits``
+    takes a Spark job, so only the append, which needs it, reads it."""
     cents = ixs.read_index(spark, _cents_root(index_root))
     if cents is None:
         raise ValueError(
             f"ann index at {index_root!r} has no published centroids — "
             "run ann_index_publish first"
         )
-    bits = cents.select("bits").head()["bits"]
-    return cents.select("cell", "centroid"), int(bits)
+    return cents
 
 
 def _next_batch_id(fs, codes_root: str) -> int:
     """Allocate the next delta batch id, never reusing one a
-    compaction has already folded (r12, ADVICE r11 high): ids come
-    from max(ids present on disk, ids recorded as ``merged_batches``
-    in the committed manifest) + 1. The pure on-disk scan this
-    replaced reset to 0 after a compaction deleted the delta dirs, so
+    compaction has already folded: ids come from max(ids present on
+    disk, ids recorded as ``merged_batches`` in the committed
+    manifest) + 1. The pure on-disk scan this replaced reset to 0
+    after a compaction deleted the delta dirs, so
     an append-after-compact landed under an id the NEXT compaction's
     ``merged_already`` guard would exclude from the merge — and its
     cleanup loop deleted the delta anyway, silently losing the
@@ -151,8 +156,11 @@ def ann_index_append(
     a new base snapshot with the indexstore compaction machinery when
     delta count warrants."""
     spark = spark or new_vectors.sparkSession
-    cents, bits = _stored_cents(spark, index_root)
-    codes = assign_quantized_cells(new_vectors, cents, bits, id_col, vec_col)
+    stored = _stored_cents(spark, index_root)
+    bits = int(stored.select("bits").head()["bits"])
+    codes = assign_quantized_cells(
+        new_vectors, stored.select("cell", "centroid"), bits, id_col, vec_col
+    )
     fs = ixs.fs_for(index_root, spark)
     codes_root = _codes_root(index_root)
     batch_id = _next_batch_id(fs, codes_root)
@@ -169,8 +177,8 @@ def ann_index_append(
 def read_ann_index(spark: SparkSession, index_root: str) -> SDF:
     """The standing code table a probe scans: manifest-resolved base
     snapshot UNION the live delta batches NOT already folded into that
-    base. The manifest's ``merged_batches`` filter (r12, ADVICE r11
-    medium) mirrors ``compact_index``'s own re-merge guard: after a
+    base. The manifest's ``merged_batches`` filter mirrors
+    ``compact_index``'s own re-merge guard: after a
     crash between a compaction's manifest commit and its delta
     cleanup, a folded delta is still on disk — unioning it would
     surface those rows twice (new base + delta), duplicating
@@ -217,13 +225,14 @@ def ann_index_compact(
     id_col: str = "vec_id",
 ) -> dict:
     """Fold the codes root's delta batches into a new immutable base
-    snapshot under the manifest protocol (r12, VERDICT r11 ask #5) —
-    the same `dedup.compact_index` machinery the MinHash/exact
-    standing indexes use, applied to the quantized-code table. Probe
-    cost is what compaction buys back: each live delta adds one
-    parquet scan + union branch to every `ann_index_topk` call (the
-    bench lifecycle tier prices the drift), and a fold returns the
-    probe to its single-snapshot plan. ``retired=`` drops vectors by
+    snapshot under the manifest protocol — the same
+    `dedup.compact_index` machinery the MinHash/exact standing indexes
+    use, applied to the quantized-code table. Probe cost is what
+    compaction buys back: each live delta adds one parquet scan +
+    union branch to every `ann_index_topk` call, so probe time grows
+    with the delta count (the tuning registry's compaction row has the
+    measured drift), and a fold returns the probe to its
+    single-snapshot plan. ``retired=`` drops vectors by
     id in the same pass (takedowns / retention), exactly as the dedup
     indexes do. The centroid root is NOT compacted — it is one tiny
     published snapshot that only changes on a wholesale re-train."""
@@ -258,135 +267,12 @@ def ann_index_topk(
     bit-for-bit, which q174's oracle (q171's SQL on the same corpus)
     pins end to end THROUGH the publish/append/probe lifecycle."""
     spark = spark or queries.sparkSession
-    cents, bits = _stored_cents(spark, index_root)
+    cents = _stored_cents(spark, index_root).select("cell", "centroid")
     codes = read_ann_index(spark, index_root)
     src_id = [c for c in codes.columns if c not in _CODE_COLS][0]
-    return _probe_codes(
+    return _int8_probe(
         codes.withColumnRenamed(src_id, "match_id"),
-        cents,
-        queries,
-        corpus,
-        k=k,
-        n_probe=n_probe,
-        candidates=candidates,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-
-
-def _probe_codes(
-    codes: SDF,
-    centroids: SDF,
-    queries: SDF,
-    corpus: SDF,
-    k: int,
-    n_probe: int,
-    candidates: int,
-    id_col: str,
-    vec_col: str,
-) -> SDF:
-    """Stages 2-4 of `similarity.ivf_quantized_topk` over a PERSISTED
-    stage-1 frame — the same probe window / shared coarse algebra /
-    exact re-rank expressions, reading codes instead of building
-    them."""
-    from pyspark.sql import Window
-
-    from .similarity import (
-        _cosine_from,
-        _dot,
-        _int8_approx_cosine,
-        _norm,
-    )
-
-    cents = F.broadcast(
-        centroids.select(
-            F.col("cell").alias("__cell__"),
-            F.col("centroid").alias("__cv__"),
-            _norm(F.col("centroid")).alias("__cn__"),
-        )
-    )
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-            "q_vec"
-        ),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
-    probe_sim = _cosine_from(
-        _dot(F.col("q_vec"), F.col("__cv__")),
-        F.col("q_norm"),
-        F.col("__cn__"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("__psim__").desc(), F.col("__cell__").asc()
-    )
-    q_probes = F.broadcast(
-        q0.crossJoin(cents)
-        .select(
-            "query_id", "q_vec", "q_norm",
-            F.col("__cell__"), probe_sim.alias("__psim__"),
-        )
-        .withColumn("__r__", F.row_number().over(wp))
-        .where(F.col("__r__") <= n_probe)
-        .select(
-            "query_id", "q_vec", "q_norm",
-            F.col("__cell__").alias("cell"),
-            F.aggregate(
-                F.col("q_vec"), F.lit(0.0), lambda a, x: a + x
-            ).alias("qsum_dot"),
-        )
-    )
-    approx = _int8_approx_cosine(
-        qvec=F.col("qvec"),
-        q_vec=F.col("q_vec"),
-        v_min=F.col("v_min"),
-        v_scale=F.col("v_scale"),
-        q_sum=F.col("q_sum"),
-        qsq=F.col("qsq"),
-        qsum_dot=F.col("qsum_dot"),
-        q_norm=F.col("q_norm"),
-    )
-    coarse = (
-        codes.join(q_probes, "cell")
-        .where(F.col("match_id") != F.col("query_id"))
-        .select("query_id", "match_id", approx.alias("approx_cosine"))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("match_id").asc()
-    )
-    cand = (
-        coarse.withColumn("rank", F.row_number().over(w1))
-        .where(F.col("rank") <= candidates)
-        .select("query_id", "match_id")
-    )
-    full = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
-    rescored = (
-        cand.join(full, "match_id")
-        .join(
-            F.broadcast(q0.select("query_id", "q_vec", "q_norm")),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")),
-                F.col("q_norm"),
-                F.col("c_norm"),
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
+        cents, queries, corpus, k, n_probe, candidates, id_col, vec_col,
     )
 
 

@@ -49,19 +49,19 @@ _DEFAULT_DIM = 64
 #: measured (4 planes at 2k vectors, 8 at 20k, 11 at 200k, 14 at 2M)
 AUTO_TARGET_BUCKET = 128
 
-#: N*Q budget ceiling for `quantized_rerank_topk`'s coarse stage (r11,
-#: VERDICT r10 what's-wrong #3): the stage is a DELIBERATE full scan —
-#: |corpus| x |queries| pairs, each an interpreted HOF fold over `dim`
-#: code elements — so its cost model is C = N * Q * dim element
-#: products. Measured on local[32] (sf1 corpus, 20k x 24 x 64 =
-#: 30.7M element products in ~2 s of executor time): ~5e8 element
-#: products per core-second through the interpreted fold. The ceiling
-#: below caps the coarse stage at ~1 core-hour per 1000 cores (≈ 2e15
-#: element products on a 1000-executor/8-core cluster): above it, the
-#: full scan is the plan that eats the cluster and callers MUST switch
-#: to `ivf_quantized_topk` (probe trained cells, int8-scan only the
-#: probed cells, exact re-rank — recall 0.95 at 10% of the bytes,
-#: BENCH recall ladder `ivf_int8`). Advisory, not enforced: the
+#: N*Q budget ceiling for `quantized_rerank_topk`'s coarse stage, which
+#: is a DELIBERATE full scan — |corpus| x |queries| pairs, each an
+#: interpreted HOF fold over `dim` code elements — so its cost model is
+#: C = N * Q * dim element products. Measured on local[32] (sf1 corpus,
+#: 20k x 24 x 64 = 30.7M element products in ~2 s of executor time):
+#: ~5e8 element products per core-second through the interpreted fold.
+#: The ceiling caps the coarse stage at ~1 core-hour per 1000 cores
+#: (≈ 2e15 element products on a 1000-executor/8-core cluster): above
+#: it, the full scan is the plan that eats the cluster and callers MUST
+#: switch to `ivf_quantized_topk` (probe trained cells, int8-scan only
+#: the probed cells, exact re-rank — recall 0.95 at 10% of the bytes on
+#: the sf1 corpus; CHANGES.md's "pin gate and nothing else" entry keeps
+#: the retired recall tier's values). Advisory, not enforced: the
 #: operator serves any size; the registry row (tuning.py) publishes
 #: the trade.
 QUANTIZED_SCAN_NQD_CEILING = 2 * 10**15
@@ -439,6 +439,65 @@ def _bucket_pair_cosines(buckets: SDF, threshold: float, onset: int) -> SDF:
     )
 
 
+def _top_n(df: SDF, part: str, order, n: int, rank: str = "rank") -> SDF:
+    """Rows ranked 1..``n`` within each ``part`` group under ``order``,
+    the rank in column ``rank`` — the one bounded row_number() window
+    behind every top-k tail, candidate pool and cell probe (Spark plans
+    it with a WindowGroupLimit, so no full per-group sort runs)."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= n)
+
+
+def _topk_rows(scored: SDF, k: int) -> SDF:
+    """The shared top-k tail over (query_id, match_id, cosine) rows: per
+    query the ``k`` highest cosines, ties to the lower match_id."""
+    order = [F.col("cosine").desc(), F.col("match_id").asc()]
+    return _top_n(scored, "query_id", order, k).select(
+        "query_id", "match_id", "cosine", "rank"
+    )
+
+
+def _corpus_side(corpus: SDF, id_col: str, vec_col: str, *extra) -> SDF:
+    """(match_id, c_vec, c_norm, *extra): norms are per vector, computed
+    before any join."""
+    return corpus.select(
+        F.col(id_col).alias("match_id"),
+        F.col(vec_col).alias("c_vec"),
+        _norm(F.col(vec_col)).alias("c_norm"),
+        *extra,
+    )
+
+
+def _query_side(
+    queries: SDF, id_col: str, vec_col: str, *extra, double: bool = False
+) -> SDF:
+    """(query_id, q_vec, q_norm, *extra); ``double=True`` casts q_vec's
+    elements to double, the form the int8 coarse scan reads."""
+    v = F.col(vec_col)
+    if double:
+        v = F.transform(v, lambda x: x.cast("double"))
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        v.alias("q_vec"),
+        _norm(F.col(vec_col)).alias("q_norm"),
+        *extra,
+    )
+
+
+def _pair_cosine():
+    """Exact cosine of a joined (c_vec, c_norm) x (q_vec, q_norm) row."""
+    return _cosine_from(
+        _dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
+    ).alias("cosine")
+
+
+def _non_self(pairs: SDF, score) -> SDF:
+    """(query_id, match_id, score) of every pair but a query with itself."""
+    return pairs.where(F.col("match_id") != F.col("query_id")).select(
+        "query_id", "match_id", score
+    )
+
+
 def brute_force_topk(
     corpus: SDF,
     queries: SDF,
@@ -450,37 +509,9 @@ def brute_force_topk(
     Cost is |corpus| x |queries| dot products, all JVM-side; norms are
     one-per-vector, computed before the join; the per-query top-k window
     is bounded by k so no full sort materializes."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            _norm(F.col(vec_col)).alias("q_norm"),
-        )
-    )
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
-    scored = (
-        c.crossJoin(q)
-        .where(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    q = F.broadcast(_query_side(queries, id_col, vec_col))
+    pairs = _corpus_side(corpus, id_col, vec_col).crossJoin(q)
+    return _topk_rows(_non_self(pairs, _pair_cosine()), k)
 
 
 def _plane_weights(plane: int, dim: int):
@@ -636,46 +667,24 @@ def lsh_topk(
     corpus_size / 2^n_planes, so pick
     n_planes ≈ log2(corpus_size / target_bucket_size) — each query
     scores ~n_probe buckets, so the per-query cost is n_probe x bucket
-    size, not the corpus. The default ``n_planes='auto'`` (r8) applies
-    the rule itself via :func:`auto_n_planes`; pin an int for strict
+    size, not the corpus. The default ``n_planes='auto'`` applies the
+    rule itself via :func:`auto_n_planes`; pin an int for strict
     run-to-run comparability."""
     n_planes = _resolve_n_planes(corpus, n_planes, "lsh_topk")
     dim = _infer_dim(corpus, vec_col)
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
+    c = _corpus_side(
+        corpus, id_col, vec_col,
         lsh_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
     )
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            _norm(F.col(vec_col)).alias("q_norm"),
+        _query_side(
+            queries, id_col, vec_col,
             F.explode(
                 lsh_probe_buckets(F.col(vec_col), n_planes, dim, n_probe)
             ).alias("bucket"),
         )
     )
-    scored = (
-        c.join(q, "bucket")
-        .where(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _topk_rows(_non_self(c.join(q, "bucket"), _pair_cosine()), k)
 
 
 #: plane-id namespace stride between LSH tables: table t hashes with
@@ -704,8 +713,9 @@ def lsh_topk_multitable(
     multi-probe saturates. A neighbor missed by one table's partition
     is found unless EVERY table splits it: candidate probability goes
     1 - (1 - p)^L for per-table collision p, the boost that matters in
-    the weak-neighbor regime the r4 sf1 recall curve documents (single
-    table + 8-probe plateaus at ~0.68 recall@10 there).
+    the weak-neighbor regime of the sf1 recall curve (single table +
+    8-probe plateaued at ~0.68 recall@10 there; CHANGES.md's "pin gate
+    and nothing else" entry keeps the retired recall tier's values).
 
     Cost model vs multi-probe: multi-probe multiplies only the QUERY
     side (tiny, broadcast); each extra table re-keys the CORPUS —
@@ -720,7 +730,7 @@ def lsh_topk_multitable(
     collapses them with map-side partial aggregation — duplicates die
     before the shuffle instead of riding it.
 
-    ``n_planes='auto'`` (default, r8) sizes each table's plane count by
+    ``n_planes='auto'`` (the default) sizes each table's plane count by
     :func:`auto_n_planes` from the corpus count; pin an int for strict
     run-to-run comparability."""
     if n_tables < 1:
@@ -738,11 +748,8 @@ def lsh_topk_multitable(
             for t in range(n_tables)
         ]
     )
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-        F.explode(c_buckets).alias("tb"),
+    c = _corpus_side(
+        corpus, id_col, vec_col, F.explode(c_buckets).alias("tb")
     ).select(
         "match_id", "c_vec", "c_norm",
         F.col("tb.t").alias("t"), F.col("tb.b").alias("bucket"),
@@ -760,11 +767,8 @@ def lsh_topk_multitable(
         ]
     )
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            _norm(F.col(vec_col)).alias("q_norm"),
-            F.explode(q_buckets).alias("tb"),
+        _query_side(
+            queries, id_col, vec_col, F.explode(q_buckets).alias("tb")
         ).select(
             "query_id", "q_vec", "q_norm",
             F.col("tb.t").alias("t"),
@@ -772,26 +776,11 @@ def lsh_topk_multitable(
         )
     )
     scored = (
-        c.join(q, ["t", "bucket"])
-        .where(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
-            ).alias("cosine"),
-        )
+        _non_self(c.join(q, ["t", "bucket"]), _pair_cosine())
         .groupBy("query_id", "match_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _topk_rows(scored, k)
 
 
 def cosine_pairs(
@@ -1001,42 +990,20 @@ def ivf_topk(
     switch the argmax to a broadcast-join scoring over a centroid
     DataFrame)."""
     cents = _centroids(corpus, n_cells, id_col, vec_col)
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
+    c = _corpus_side(
+        corpus, id_col, vec_col,
         F.array_max(_cell_sims(vec_col, cents))["c"].alias("cell"),
     )
     probes = F.slice(
         F.reverse(F.array_sort(_cell_sims(vec_col, cents))), 1, n_probe
     )
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            _norm(F.col(vec_col)).alias("q_norm"),
+        _query_side(
+            queries, id_col, vec_col,
             F.explode(F.transform(probes, lambda p: p["c"])).alias("cell"),
         )
     )
-    scored = (
-        c.join(q, "cell")
-        .where(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _topk_rows(_non_self(c.join(q, "cell"), _pair_cosine()), k)
 
 
 def normalize_embeddings(df: SDF, vec_col: str = "embedding") -> SDF:
@@ -1113,8 +1080,6 @@ def quantize_embeddings(
     round()'s tie rule, floor does not) — so quantized codes are
     bit-identical anywhere.  Constant vectors quantize to code 0 with
     scale 0.  Returns (id, qvec: array<int>, v_min, v_scale)."""
-    if not (2 <= bits <= 16):
-        raise ValueError("bits must be in [2, 16]")
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     df2 = df.select(F.col(id_col), dv.alias("__v__"))
     mn, scale, q = _affine_codes(F.col("__v__"), bits)
@@ -1127,11 +1092,15 @@ def quantize_embeddings(
 
 
 def _affine_codes(dv, bits: int):
-    """The affine quantization expressions — ONE definition shared by
-    :func:`quantize_embeddings` and :func:`ivf_quantized_topk` (r11
-    review: the q170/q171 oracles replay these codes term-for-term, so
-    the two operators must be divergence-proof by construction).
-    ``dv`` is a double-array Column; returns (min, scale, codes)."""
+    """The affine quantization expressions — ONE definition, and the one
+    ``bits`` check, for every int8 path: :func:`quantize_embeddings`,
+    :func:`assign_quantized_cells` and through it
+    :func:`ivf_quantized_topk` and the standing index's publish and
+    append. The q170/q171 oracles replay these codes term-for-term, so
+    the paths must be divergence-proof by construction. ``dv`` is a
+    double-array Column; returns (min, scale, codes)."""
+    if not (2 <= bits <= 16):
+        raise ValueError("bits must be in [2, 16]")
     levels = (1 << bits) - 1
     mn = F.array_min(dv)
     mx = F.array_max(dv)
@@ -1147,15 +1116,30 @@ def _affine_codes(dv, bits: int):
     return mn, scale, q
 
 
-def _int8_approx_cosine(qvec, q_vec, v_min, v_scale, q_sum, qsq,
-                        qsum_dot, q_norm):
-    """The quantized-scan cosine — ONE definition shared by
-    :func:`quantized_rerank_topk` and :func:`ivf_quantized_topk`:
+def _code_stats(qvec):
+    """(sum(codes), sum(codes^2)) of an int code array: the per-vector
+    terms of the coarse scan's expanded dequantized norm."""
+    return (
+        F.aggregate(qvec, F.lit(0.0), lambda a, x: a + x.cast("double")),
+        F.aggregate(
+            qvec,
+            F.lit(0.0),
+            lambda a, x: a + x.cast("double") * x.cast("double"),
+        ),
+    )
+
+
+def _int8_approx_cosine(qsq, qsum_dot):
+    """The quantized-scan cosine of a joined (qvec, v_min, v_scale,
+    q_sum) x (q_vec, q_norm) row, given sum(codes^2) ``qsq`` and
+    sum(query) ``qsum_dot``:
     ``cos = (v_min * sum(query) + scale * <codes, query>) /
     sqrt(nm2) / |query|`` with the dequantized norm EXPANDED
     (``nm2 = n*min^2 + 2*min*scale*sum(q) + scale^2*sum(q^2)``) so no
     float vector ever materializes; zero-denominator guards replace
     each factor with 1."""
+    qvec, q_vec = F.col("qvec"), F.col("q_vec")
+    v_min, v_scale, q_norm = F.col("v_min"), F.col("v_scale"), F.col("q_norm")
     idx = F.sequence(F.lit(0), F.size(qvec) - 1)
     dot_codes = F.aggregate(
         F.transform(
@@ -1170,7 +1154,7 @@ def _int8_approx_cosine(qvec, q_vec, v_min, v_scale, q_sum, qsq,
     n_dim = F.size(qvec).cast("double")
     nm2 = (
         n_dim * v_min * v_min
-        + F.lit(2.0) * v_min * v_scale * q_sum
+        + F.lit(2.0) * v_min * v_scale * F.col("q_sum")
         + v_scale * v_scale * qsq
     )
     return (
@@ -1178,6 +1162,11 @@ def _int8_approx_cosine(qvec, q_vec, v_min, v_scale, q_sum, qsq,
         / F.when(nm2 > 0, F.sqrt(nm2)).otherwise(F.lit(1.0))
         / F.when(q_norm > 0, q_norm).otherwise(F.lit(1.0))
     )
+
+
+def _vec_sum(vec):
+    """sum(query), the query-side term of the coarse scan's dot."""
+    return F.aggregate(vec, F.lit(0.0), lambda a, x: a + x)
 
 
 def dequantize_embeddings(
@@ -1190,6 +1179,72 @@ def dequantize_embeddings(
         lambda q: F.col("v_min") + q.cast("double") * F.col("v_scale"),
     )
     return df.select(id_col, rec.alias(out_col))
+
+
+def _cent_table(centroids: SDF, cell_col: str, cent_col: str) -> SDF:
+    """The broadcast centroid table every cell-scoring step joins:
+    (__cell__, __cv__ centroid, __cn__ its norm) — n_cells rows of dim
+    floats shipped to every executor."""
+    return F.broadcast(
+        centroids.select(
+            F.col(cell_col).alias("__cell__"),
+            F.col(cent_col).alias("__cv__"),
+            _norm(F.col(cent_col)).alias("__cn__"),
+        )
+    )
+
+
+def _cell_scores(
+    side: SDF, cents: SDF, sid: str, vec: str, norm: str, carry, sim: str
+) -> SDF:
+    """``side`` x every cell of ``cents``: (sid, *carry, __cell__, sim),
+    ``sim`` the cosine of column ``vec`` (norm ``norm``) to the cell's
+    centroid."""
+    return side.crossJoin(cents).select(
+        sid,
+        *carry,
+        "__cell__",
+        _cosine_from(
+            _dot(F.col(vec), F.col("__cv__")), F.col(norm), F.col("__cn__")
+        ).alias(sim),
+    )
+
+
+def _best_cell(
+    side: SDF, cents: SDF, sid: str, vec: str, norm: str, carry
+) -> SDF:
+    """Each row's argmax-cosine cell, ties to the lower cell id:
+    (sid, *carry, cell). One HashAggregate of max(struct(sim, -cell)),
+    map-side combined, so the shuffle carries one partial struct per
+    row, NOT the n_cells-expanded rows."""
+    return (
+        _cell_scores(side, cents, sid, vec, norm, carry, "__sim__")
+        .groupBy(sid)
+        .agg(
+            F.max(
+                F.struct(
+                    F.col("__sim__"), (-F.col("__cell__")).alias("__nc__")
+                )
+            ).alias("__m__"),
+            *[F.first(c).alias(c) for c in carry],
+        )
+        .select(sid, *carry, (-F.col("__m__.__nc__")).alias("cell"))
+    )
+
+
+def _probe_cells(
+    side: SDF, cents: SDF, sid: str, vec: str, norm: str, n_probe: int
+) -> SDF:
+    """Each row's ``n_probe`` best cells under a bounded window, ties to
+    the lower cell id: (sid, vec, norm, cell), one row per probe."""
+    scored = _cell_scores(side, cents, sid, vec, norm, [vec, norm], "__psim__")
+    return _top_n(
+        scored,
+        sid,
+        [F.col("__psim__").desc(), F.col("__cell__").asc()],
+        n_probe,
+        "__r__",
+    ).select(sid, vec, norm, F.col("__cell__").alias("cell"))
 
 
 def ivf_topk_df(
@@ -1218,92 +1273,47 @@ def ivf_topk_df(
     (tiny) query side. The probe join + exact scoring + top-k window
     are identical to :func:`ivf_topk`, so n_probe == n_cells again
     degrades to exact brute force."""
-    cents = F.broadcast(
-        centroids.select(
-            F.col(cell_col).alias("__cell__"),
-            F.col(cent_col).alias("__cv__"),
-            _norm(F.col(cent_col)).alias("__cn__"),
-        )
-    )
-
-    def _best_cells(side: SDF, sid: str, keep_vec: str, n_keep: int) -> SDF:
-        sim = _cosine_from(
-            _dot(F.col(keep_vec), F.col("__cv__")),
-            F.col("__n__"),
-            F.col("__cn__"),
-        )
-        scored = (
-            side.crossJoin(cents)
-            .select(
-                F.col(sid),
-                F.col(keep_vec),
-                F.col("__n__"),
-                F.col("__cell__"),
-                sim.alias("__sim__"),
-            )
-        )
-        if n_keep == 1:
-            # one HashAggregate, map-side combined: ties to lower cell id
-            return scored.groupBy(sid).agg(
-                F.max(
-                    F.struct(
-                        F.col("__sim__"), (-F.col("__cell__")).alias("__nc__")
-                    )
-                ).alias("__m__"),
-                F.first(keep_vec).alias(keep_vec),
-                F.first("__n__").alias("__n__"),
-            ).select(
-                sid, keep_vec, "__n__",
-                (-F.col("__m__.__nc__")).alias("cell"),
-            )
-        w = Window.partitionBy(sid).orderBy(
-            F.col("__sim__").desc(), F.col("__cell__").asc()
-        )
-        return (
-            scored.withColumn("__r__", F.row_number().over(w))
-            .where(F.col("__r__") <= n_keep)
-            .select(sid, keep_vec, "__n__", F.col("__cell__").alias("cell"))
-        )
-
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("__n__"),
-    )
-    c_assigned = _best_cells(c, "match_id", "c_vec", 1).withColumnRenamed(
-        "__n__", "c_norm"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("__n__"),
+    cents = _cent_table(centroids, cell_col, cent_col)
+    c = _best_cell(
+        _corpus_side(corpus, id_col, vec_col),
+        cents, "match_id", "c_vec", "c_norm", ["c_vec", "c_norm"],
     )
     q_probes = F.broadcast(
-        _best_cells(q, "query_id", "q_vec", n_probe).withColumnRenamed(
-            "__n__", "q_norm"
+        _probe_cells(
+            _query_side(queries, id_col, vec_col),
+            cents, "query_id", "q_vec", "q_norm", n_probe,
         )
     )
-    scored = (
-        c_assigned.join(q_probes, "cell")
-        .where(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")),
-                F.col("q_norm"),
-                F.col("c_norm"),
-            ).alias("cosine"),
-        )
+    return _topk_rows(_non_self(c.join(q_probes, "cell"), _pair_cosine()), k)
+
+
+def _rerank(
+    coarse: SDF,
+    corpus: SDF,
+    q: SDF,
+    k: int,
+    candidates: int,
+    id_col: str,
+    vec_col: str,
+) -> SDF:
+    """Exact verification of candidates only: per query the
+    top-``candidates`` of ``coarse``'s (query_id, match_id,
+    approx_cosine) rows, joined by id to the full-precision ``corpus``
+    and to the broadcast query side ``q`` (query_id, q_vec, q_norm),
+    re-scored with the exact cosine, then the top-k tail. The join
+    reads |queries| x candidates rows — noise at corpus scale."""
+    cand = _top_n(
+        coarse,
+        "query_id",
+        [F.col("approx_cosine").desc(), F.col("match_id").asc()],
+        candidates,
+    ).select("query_id", "match_id")
+    rescored = (
+        cand.join(_corpus_side(corpus, id_col, vec_col), "match_id")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "match_id", _pair_cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _topk_rows(rescored, k)
 
 
 def quantized_rerank_topk(
@@ -1316,119 +1326,53 @@ def quantized_rerank_topk(
     vec_col: str = "embedding",
 ) -> SDF:
     """Two-stage ANN: int-quantized coarse scan + full-precision
-    re-rank (r10, VERDICT r9 ask #8 — the q123 `quantize_embeddings`
-    machinery promoted from a storage stat to a retrieval path).
+    re-rank — the q123 `quantize_embeddings` machinery used as a
+    retrieval path, not only a storage stat.
 
     Stage 1 scans the WHOLE corpus in its ``bits``-bit quantized form:
     per-vector affine codes (4x fewer bytes than float32 at 8 bits, 8x
     vs the float64 parquet) are dequantized on the fly inside one JVM
     fold — ``cos_q = (v_min * sum(q) + scale * <q_codes, query>) /
     norms`` never materializes a float vector — and the per-query
-    top-``candidates`` survive a bounded window. Stage 2 re-scores
-    ONLY those candidates against the full-precision vectors (an
-    id-keyed join of |queries| x candidates rows — noise at corpus
-    scale) and emits the exact-cosine top-k.
+    top-``candidates`` survive a bounded window. Stage 2 (`_rerank`)
+    re-scores ONLY those candidates against the full-precision vectors
+    and emits the exact-cosine top-k.
 
     Budget accounting vs probe-based ANN: at 8 bits the full
     quantized scan reads the SAME bytes as float32-probing 25% of the
-    cells — the r9 trained-IVF operating point — but sees EVERY
-    vector, so recall is bounded by int8 ranking fidelity (top-k must
-    land in the quantized top-``candidates``), not by which cells the
-    true neighbors fell into. Measured on the bench's weak-neighbor
-    sf1 corpus: recall@10 = 1.00 at candidates=20..200 vs trained-IVF
-    0.89 at the same byte budget (`git show 5f1e4e3:BENCH_r10.json`,
-    recall section). No
-    training, no seed sensitivity, no skew: the scan is
+    cells — the trained-IVF operating point — but sees EVERY vector,
+    so recall is bounded by int8 ranking fidelity (top-k must land in
+    the quantized top-``candidates``), not by which cells the true
+    neighbors fell into. Measured on the weak-neighbor sf1 corpus:
+    recall@10 = 1.00 at 50 candidates vs trained-IVF 0.89 at the same
+    byte budget (CHANGES.md's "pin gate and nothing else" entry keeps
+    the retired recall tier's values). No training, no seed
+    sensitivity, no skew: the scan is
     embarrassingly parallel and the only shuffle is the bounded
     top-candidates window.
 
-    Cost ceiling (r11): the coarse stage is linear in corpus x
-    queries — C = N * Q * dim interpreted-fold element products. Past
+    Cost ceiling: the coarse stage is linear in corpus x queries —
+    C = N * Q * dim interpreted-fold element products. Past
     ``QUANTIZED_SCAN_NQD_CEILING`` (module constant + tuning.py
     registry row: ~1 core-hour per 1000 cores) switch to
     :func:`ivf_quantized_topk`, which probes trained IVF cells and
     int8-scans ONLY those — sublinear at the same re-rank quality."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                "q_vec"
-            ),
-            _norm(F.col(vec_col)).alias("q_norm"),
-        )
-    )
-    qz = quantize_embeddings(corpus, vec_col, id_col, bits=bits)
-    # per-code partial sums: sum(codes) once per corpus vector;
-    # <codes, query> per (vector, query) pair via one integer-indexed
-    # fold over the code array — no dequantized array materializes
-    c = qz.select(
+    q = _query_side(queries, id_col, vec_col, double=True)
+    q_sum, qsq = _code_stats(F.col("qvec"))
+    # sum(codes) once per corpus vector; <codes, query> per (vector,
+    # query) pair inside the fold — no dequantized array materializes
+    c = quantize_embeddings(corpus, vec_col, id_col, bits=bits).select(
         F.col(id_col).alias("match_id"),
         "qvec",
         "v_min",
         "v_scale",
-        F.aggregate(
-            F.col("qvec"), F.lit(0.0), lambda a, x: a + x.cast("double")
-        ).alias("q_sum"),
+        q_sum.alias("q_sum"),
     )
-    approx = _int8_approx_cosine(
-        qvec=F.col("qvec"),
-        q_vec=F.col("q_vec"),
-        v_min=F.col("v_min"),
-        v_scale=F.col("v_scale"),
-        q_sum=F.col("q_sum"),
-        qsq=F.aggregate(
-            F.col("qvec"),
-            F.lit(0.0),
-            lambda a, x: a + x.cast("double") * x.cast("double"),
-        ),
-        qsum_dot=F.aggregate(
-            F.col("q_vec"), F.lit(0.0), lambda a, x: a + x
-        ),
-        q_norm=F.col("q_norm"),
+    approx = _int8_approx_cosine(qsq, _vec_sum(F.col("q_vec")))
+    coarse = _non_self(
+        c.crossJoin(F.broadcast(q)), approx.alias("approx_cosine")
     )
-    coarse = (
-        c.crossJoin(q)
-        .where(F.col("match_id") != F.col("query_id"))
-        .select("query_id", "match_id", approx.alias("approx_cosine"))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("match_id").asc()
-    )
-    cand = (
-        coarse.withColumn("rank", F.row_number().over(w1))
-        .where(F.col("rank") <= candidates)
-        .select("query_id", "match_id")
-    )
-    # stage 2: exact cosine on the full-precision vectors, candidates
-    # only — |queries| x candidates rows
-    full = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
-    rescored = (
-        cand.join(full, "match_id")
-        .join(
-            q.select("query_id", "q_vec", "q_norm"), "query_id"
-        )
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")),
-                F.col("q_norm"),
-                F.col("c_norm"),
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _rerank(coarse, corpus, q, k, candidates, id_col, vec_col)
 
 
 def assign_quantized_cells(
@@ -1439,79 +1383,66 @@ def assign_quantized_cells(
     vec_col: str = "embedding",
     cell_col: str = "cell",
     cent_col: str = "centroid",
-    out_id: str | None = None,
-    prebroadcast: bool = False,
 ) -> SDF:
     """The quantized-index BUILD — stage 1 of :func:`ivf_quantized_topk`
-    and the frame :func:`operators.annindex.ann_index_publish` persists
-    (r11): per corpus vector, affine int codes (`_affine_codes`) plus
-    its argmax-cosine cell against the broadcast centroid table,
-    reduced by ONE map-side-combined max_by HashAggregate (the shuffle
-    carries one struct of codes + 2 doubles per vector, ties to the
-    LOWER cell id), with the coarse-scan stats (q_sum, qsq) projected
-    on top. Output: ``(id, qvec, v_min, v_scale, cell, q_sum, qsq)``.
-    ``prebroadcast=True`` means ``centroids`` is already the
-    broadcast-aliased (__cell__, __cv__, __cn__) frame."""
-    out_id = out_id or id_col
-    if prebroadcast:
-        cents = centroids
-    else:
-        cents = F.broadcast(
-            centroids.select(
-                F.col(cell_col).alias("__cell__"),
-                F.col(cent_col).alias("__cv__"),
-                _norm(F.col(cent_col)).alias("__cn__"),
-            )
-        )
+    and the frame :func:`operators.annindex.ann_index_publish` persists:
+    per corpus vector, affine int codes (`_affine_codes`) plus its
+    argmax-cosine cell against the broadcast centroid table
+    (`_best_cell`: the shuffle carries one struct of codes + 2 doubles
+    per vector, ties to the LOWER cell id), with the coarse-scan stats
+    (q_sum, qsq) projected on top. Output:
+    ``(id, qvec, v_min, v_scale, cell, q_sum, qsq)``."""
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = corpus.select(F.col(id_col).alias(out_id), dv.alias("__v__"))
+    base = corpus.select(F.col(id_col), dv.alias("__v__"))
     mn, scale, codes = _affine_codes(F.col("__v__"), bits)
     coded = base.select(
-        out_id,
+        id_col,
         "__v__",
         _norm(F.col("__v__")).alias("__n__"),
         codes.alias("qvec"),
         mn.alias("v_min"),
         scale.alias("v_scale"),
     )
-    asg_sim = _cosine_from(
-        _dot(F.col("__v__"), F.col("__cv__")),
-        F.col("__n__"),
-        F.col("__cn__"),
+    cols = ["qvec", "v_min", "v_scale"]
+    q_sum, qsq = _code_stats(F.col("qvec"))
+    return _best_cell(
+        coded, _cent_table(centroids, cell_col, cent_col),
+        id_col, "__v__", "__n__", cols,
+    ).select(id_col, *cols, "cell", q_sum.alias("q_sum"), qsq.alias("qsq"))
+
+
+def _int8_probe(
+    codes: SDF,
+    centroids: SDF,
+    queries: SDF,
+    corpus: SDF,
+    k: int,
+    n_probe: int,
+    candidates: int,
+    id_col: str,
+    vec_col: str,
+    cell_col: str = "cell",
+    cent_col: str = "centroid",
+) -> SDF:
+    """Stages 2-4 of :func:`ivf_quantized_topk` over a stage-1 code
+    frame ``codes`` — (match_id, qvec, v_min, v_scale, cell, q_sum,
+    qsq), built in-plan or read from a standing index: the tiny query
+    side takes its ``n_probe`` best cells and broadcasts, the probed
+    cells' codes score against their queries under the expanded
+    dequantized-norm algebra, and `_rerank` verifies the per-query
+    top-``candidates`` exactly."""
+    q = _query_side(queries, id_col, vec_col, double=True)
+    probes = F.broadcast(
+        _probe_cells(
+            q, _cent_table(centroids, cell_col, cent_col),
+            "query_id", "q_vec", "q_norm", n_probe,
+        ).withColumn("qsum_dot", _vec_sum(F.col("q_vec")))
     )
-    assigned = (
-        coded.crossJoin(cents)
-        .select(
-            out_id, "qvec", "v_min", "v_scale",
-            F.col("__cell__"), asg_sim.alias("__sim__"),
-        )
-        .groupBy(out_id)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__sim__"), (-F.col("__cell__")).alias("__nc__")
-                )
-            ).alias("__m__"),
-            F.first("qvec").alias("qvec"),
-            F.first("v_min").alias("v_min"),
-            F.first("v_scale").alias("v_scale"),
-        )
-        .select(
-            out_id, "qvec", "v_min", "v_scale",
-            (-F.col("__m__.__nc__")).alias("cell"),
-        )
+    approx = _int8_approx_cosine(F.col("qsq"), F.col("qsum_dot"))
+    coarse = _non_self(
+        codes.join(probes, "cell"), approx.alias("approx_cosine")
     )
-    return assigned.select(
-        out_id, "qvec", "v_min", "v_scale", "cell",
-        F.aggregate(
-            F.col("qvec"), F.lit(0.0), lambda a, x: a + x.cast("double")
-        ).alias("q_sum"),
-        F.aggregate(
-            F.col("qvec"),
-            F.lit(0.0),
-            lambda a, x: a + x.cast("double") * x.cast("double"),
-        ).alias("qsq"),
-    )
+    return _rerank(coarse, corpus, q, k, candidates, id_col, vec_col)
 
 
 def ivf_quantized_topk(
@@ -1527,9 +1458,9 @@ def ivf_quantized_topk(
     cell_col: str = "cell",
     cent_col: str = "centroid",
 ) -> SDF:
-    """Sublinear high-recall ANN (r11, VERDICT r10 ask #2): trained-IVF
-    cell probing x int8 coarse scan x exact re-rank — the composition
-    of :func:`ivf_topk_df` (which probes 25% of cells for 0.89 recall)
+    """Sublinear high-recall ANN: trained-IVF cell probing x int8
+    coarse scan x exact re-rank — the composition of
+    :func:`ivf_topk_df` (which probes 25% of cells for 0.89 recall)
     and :func:`quantized_rerank_topk` (which scans 100% of int8 codes
     for 1.00 recall). Probing IVF cells bounds WHICH codes are read;
     quantization bounds the BYTES per code; the exact re-rank restores
@@ -1538,128 +1469,35 @@ def ivf_quantized_topk(
     ``(n_probe / n_cells) * (bits / 32)`` — e.g. 2/8 cells at 8 bits
     reads 6.25% of the full-scan bytes; recall is bounded by cell
     luck ONLY for neighbors outside the probed cells (the int8 stage
-    no longer loses in-cell neighbors, per the r10 1.00 measurement).
+    does not lose in-cell neighbors: the full int8 scan measured
+    recall 1.00).
 
-    Stage shapes (all bounded): (1) index build — corpus x
-    broadcast(centroids) assignment reduced by one map-side-combined
-    max_by HashAggregate carrying the int codes (ONE shuffle of
-    |corpus| rows of dim int8-codes + 2 doubles; at 100 TB this is
-    the index you persist once and read forever, like the standing
-    MinHash index); (2) probe — the tiny query side takes its
-    ``n_probe`` best cells under a bounded window and BROADCASTS;
-    (3) coarse — probed cells' codes score against their queries via
-    the same expanded dequantized-norm algebra as
-    :func:`quantized_rerank_topk` (no float vector materializes), and
-    the per-query top-``candidates`` survive a bounded window;
-    (4) re-rank — an id-keyed join of |queries| x candidates rows
-    against the full-precision vectors. A corpus vector lives in
-    exactly ONE cell, so no candidate pair duplicates across probes.
+    Stage shapes (all bounded): (1) index build —
+    :func:`assign_quantized_cells`, one shuffle of |corpus| rows of dim
+    int8-codes + 2 doubles; at 100 TB this is the index you persist
+    once and read forever (:mod:`operators.annindex`); (2) probe — the
+    tiny query side takes its ``n_probe`` best cells under a bounded
+    window and BROADCASTS; (3) coarse — probed cells' codes score
+    against their queries via the same expanded dequantized-norm
+    algebra as :func:`quantized_rerank_topk` (no float vector
+    materializes), and the per-query top-``candidates`` survive a
+    bounded window; (4) re-rank — an id-keyed join of |queries| x
+    candidates rows against the full-precision vectors. Stages 2-4 are
+    the one probe the standing index runs too. A corpus vector lives
+    in exactly ONE cell, so no candidate pair duplicates across probes.
 
     Reference owes nothing here (torcharrow has no ANN surface); the
-    bar is this repo's own recall ladder — the ``recall_sf1.ivf_int8``
-    row of `git show 5f1e4e3:BENCH_full_r13.json` (recall >= 0.95 at
-    <= 10% effective bytes on the sf1 weak-neighbor corpus), the
-    sf0.01 floors in tests/test_operators.py, and
-    tuning.py's ``quantized_rerank_topk`` N*Q ceiling, past which
-    callers must switch to THIS composition."""
-    if not (2 <= bits <= 16):
-        raise ValueError("bits must be in [2, 16]")
-    cents = F.broadcast(
-        centroids.select(
-            F.col(cell_col).alias("__cell__"),
-            F.col(cent_col).alias("__cv__"),
-            _norm(F.col(cent_col)).alias("__cn__"),
-        )
-    )
-    # ---- stage 1: quantize (projection) + assign best cell (max_by)
+    bar is this repo's own recall ladder — recall 0.95 at 9.96%
+    effective bytes on the sf1 weak-neighbor corpus (512 trained
+    cells, 204 probes; CHANGES.md's "pin gate and nothing else" entry
+    keeps the retired recall tier's values), the sf0.01 floors in
+    tests/test_operators.py, and tuning.py's ``quantized_rerank_topk``
+    N*Q ceiling, past which callers must switch to THIS composition."""
     c = assign_quantized_cells(
-        corpus, cents, bits, id_col, vec_col,
-        out_id="match_id", prebroadcast=True,
+        corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col)),
+        centroids, bits, "match_id", vec_col, cell_col, cent_col,
     )
-    # ---- stage 2: query probes (tiny side), broadcast
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-            "q_vec"
-        ),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
-    probe_sim = _cosine_from(
-        _dot(F.col("q_vec"), F.col("__cv__")),
-        F.col("q_norm"),
-        F.col("__cn__"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("__psim__").desc(), F.col("__cell__").asc()
-    )
-    q_probes = F.broadcast(
-        q0.crossJoin(cents)
-        .select(
-            "query_id", "q_vec", "q_norm",
-            F.col("__cell__"), probe_sim.alias("__psim__"),
-        )
-        .withColumn("__r__", F.row_number().over(wp))
-        .where(F.col("__r__") <= n_probe)
-        .select(
-            "query_id", "q_vec", "q_norm",
-            F.col("__cell__").alias("cell"),
-            F.aggregate(
-                F.col("q_vec"), F.lit(0.0), lambda a, x: a + x
-            ).alias("qsum_dot"),
-        )
-    )
-    # ---- stage 3: int8 coarse scan over PROBED cells only — the
-    # SHARED expanded dequantized-norm algebra (_int8_approx_cosine)
-    approx = _int8_approx_cosine(
-        qvec=F.col("qvec"),
-        q_vec=F.col("q_vec"),
-        v_min=F.col("v_min"),
-        v_scale=F.col("v_scale"),
-        q_sum=F.col("q_sum"),
-        qsq=F.col("qsq"),
-        qsum_dot=F.col("qsum_dot"),
-        q_norm=F.col("q_norm"),
-    )
-    coarse = (
-        c.join(q_probes, "cell")
-        .where(F.col("match_id") != F.col("query_id"))
-        .select("query_id", "match_id", approx.alias("approx_cosine"))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("match_id").asc()
-    )
-    cand = (
-        coarse.withColumn("rank", F.row_number().over(w1))
-        .where(F.col("rank") <= candidates)
-        .select("query_id", "match_id")
-    )
-    # ---- stage 4: exact re-rank, candidates only
-    full = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
-    rescored = (
-        cand.join(full, "match_id")
-        .join(
-            F.broadcast(q0.select("query_id", "q_vec", "q_norm")),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            "match_id",
-            _cosine_from(
-                _dot(F.col("q_vec"), F.col("c_vec")),
-                F.col("q_norm"),
-                F.col("c_norm"),
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
+    return _int8_probe(
+        c, centroids, queries, corpus, k, n_probe, candidates,
+        id_col, vec_col, cell_col, cent_col,
     )

@@ -97,6 +97,69 @@ def _anchor_grams(df: SDF, k: int, text_col: str, id_col: str) -> SDF:
     )
 
 
+def _strip_spans(df: SDF, spans: SDF, text_col: str, id_col: str) -> SDF:
+    """The removal tail both strip operators share: a per-doc
+    collect_list of (start, len) pairs (doc-keyed, spans are few and
+    fixed-width), left-joined to every document's normalized tokens,
+    then a zero-shuffle per-doc mask — token i survives iff no span
+    covers it (two-arg filter HOF, cost O(tokens x spans_in_doc)) —
+    and reassembly with the audit columns (id, text, n_tokens,
+    n_removed, n_spans)."""
+    from .preprocess import spread_narrow_source
+
+    per_doc = spans.groupBy(id_col).agg(
+        F.collect_list(
+            F.struct(
+                F.col("span_start").alias("s"), F.col("span_len").alias("l")
+            )
+        ).alias("__spans__")
+    )
+    words = F.split(_norm_text(F.col(text_col)), " ")
+    base = (
+        spread_narrow_source(df)
+        .select(F.col(id_col), words.alias("__w__"))
+        .join(per_doc, id_col, "left")
+    )
+    sp = F.coalesce(
+        F.col("__spans__"),
+        F.array().cast("array<struct<s:bigint,l:bigint>>"),
+    )
+    kept = F.filter(
+        F.col("__w__"),
+        lambda x, i: ~F.exists(
+            sp, lambda s: (s["s"] <= i) & (i < s["s"] + s["l"])
+        ),
+    )
+    return base.select(
+        F.col(id_col),
+        F.array_join(kept, " ").alias(text_col),
+        F.size("__w__").cast("long").alias("n_tokens"),
+        (F.size("__w__") - F.size(kept)).cast("long").alias("n_removed"),
+        F.size(sp).cast("long").alias("n_spans"),
+    )
+
+
+def _merge_runs(marked: SDF, id_col: str, k: int, *extra) -> SDF:
+    """Per-doc run merge of marked anchor positions: consecutive
+    positions collapse to one maximal span via the pos - row_number()
+    grouping trick (one doc-keyed shuffle). Returns (id, span_start,
+    span_len, n_grams, *extra) — ``extra`` are further aggregates."""
+    w = Window.partitionBy(id_col).orderBy("pos")
+    runs = marked.withColumn(
+        "__grp__", F.col("pos") - F.row_number().over(w)
+    )
+    return (
+        runs.groupBy(id_col, "__grp__")
+        .agg(
+            F.min("pos").cast("long").alias("span_start"),
+            (F.max("pos") - F.min("pos") + k).cast("long").alias("span_len"),
+            F.count(F.lit(1)).cast("long").alias("n_grams"),
+            *extra,
+        )
+        .drop("__grp__")
+    )
+
+
 def cross_doc_duplicate_grams(
     df: SDF, k: int = 50, text_col: str = "text", id_col: str = "doc_id"
 ) -> SDF:
@@ -136,19 +199,8 @@ def cross_doc_spans(
       (how many documents the most-copied part appears in).
     """
     marked = cross_doc_duplicate_grams(df, k, text_col, id_col)
-    w = Window.partitionBy(id_col).orderBy("pos")
-    runs = marked.withColumn(
-        "__grp__", F.col("pos") - F.row_number().over(w)
-    )
-    return (
-        runs.groupBy(id_col, "__grp__")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.max("pos") - F.min("pos") + k).cast("long").alias("span_len"),
-            F.count(F.lit(1)).cast("long").alias("n_grams"),
-            F.max("n_docs").cast("long").alias("max_docs"),
-        )
-        .select(id_col, "span_start", "span_len", "n_grams", "max_docs")
+    return _merge_runs(
+        marked, id_col, k, F.max("n_docs").cast("long").alias("max_docs")
     )
 
 
@@ -168,39 +220,8 @@ def strip_cross_doc_spans(
     fixed-width), then a zero-shuffle per-doc mask — token i survives
     iff no span s covers it (two-arg filter HOF, cost
     O(tokens x spans_in_doc))."""
-    from .preprocess import spread_narrow_source
-
     spans = cross_doc_spans(df, k, text_col, id_col)
-    per_doc = spans.groupBy(id_col).agg(
-        F.collect_list(
-            F.struct(
-                F.col("span_start").alias("s"), F.col("span_len").alias("l")
-            )
-        ).alias("__spans__")
-    )
-    words = F.split(_norm_text(F.col(text_col)), " ")
-    base = (
-        spread_narrow_source(df)
-        .select(F.col(id_col), words.alias("__w__"))
-        .join(per_doc, id_col, "left")
-    )
-    sp = F.coalesce(
-        F.col("__spans__"),
-        F.array().cast("array<struct<s:bigint,l:bigint>>"),
-    )
-    kept = F.filter(
-        F.col("__w__"),
-        lambda x, i: ~F.exists(
-            sp, lambda s: (s["s"] <= i) & (i < s["s"] + s["l"])
-        ),
-    )
-    return base.select(
-        F.col(id_col),
-        F.array_join(kept, " ").alias(text_col),
-        F.size("__w__").cast("long").alias("n_tokens"),
-        (F.size("__w__") - F.size(kept)).cast("long").alias("n_removed"),
-        F.size(sp).cast("long").alias("n_spans"),
-    )
+    return _strip_spans(df, spans, text_col, id_col)
 
 
 def cross_corpus_spans(
@@ -235,19 +256,7 @@ def cross_corpus_spans(
         .distinct()
     )
     marked = grams.join(ref, ["__h1__", "__h2__"], "left_semi")
-    w = Window.partitionBy(id_col).orderBy("pos")
-    runs = marked.withColumn(
-        "__grp__", F.col("pos") - F.row_number().over(w)
-    )
-    return (
-        runs.groupBy(id_col, "__grp__")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.max("pos") - F.min("pos") + k).cast("long").alias("span_len"),
-            F.count(F.lit(1)).cast("long").alias("n_grams"),
-        )
-        .select(id_col, "span_start", "span_len", "n_grams")
-    )
+    return _merge_runs(marked, id_col, k)
 
 
 def strip_cross_corpus_spans(
@@ -264,41 +273,10 @@ def strip_cross_corpus_spans(
     same audit contract as `strip_cross_doc_spans`: (id, text,
     n_tokens, n_removed, n_spans). Spans come from
     `cross_corpus_spans`; the reference corpus is read-only."""
-    from .preprocess import spread_narrow_source
-
     spans = cross_corpus_spans(
         df, reference, k, text_col, id_col, ref_text_col, ref_id_col
     )
-    per_doc = spans.groupBy(id_col).agg(
-        F.collect_list(
-            F.struct(
-                F.col("span_start").alias("s"), F.col("span_len").alias("l")
-            )
-        ).alias("__spans__")
-    )
-    words = F.split(_norm_text(F.col(text_col)), " ")
-    base = (
-        spread_narrow_source(df)
-        .select(F.col(id_col), words.alias("__w__"))
-        .join(per_doc, id_col, "left")
-    )
-    sp = F.coalesce(
-        F.col("__spans__"),
-        F.array().cast("array<struct<s:bigint,l:bigint>>"),
-    )
-    kept = F.filter(
-        F.col("__w__"),
-        lambda x, i: ~F.exists(
-            sp, lambda s: (s["s"] <= i) & (i < s["s"] + s["l"])
-        ),
-    )
-    return base.select(
-        F.col(id_col),
-        F.array_join(kept, " ").alias(text_col),
-        F.size("__w__").cast("long").alias("n_tokens"),
-        (F.size("__w__") - F.size(kept)).cast("long").alias("n_removed"),
-        F.size(sp).cast("long").alias("n_spans"),
-    )
+    return _strip_spans(df, spans, text_col, id_col)
 
 
 __all__ = [

@@ -445,7 +445,10 @@ REGISTRY: list[dict] = [
             "the quantized top-candidates."
         ),
         "trade": (
-            "the bench corpus measures recall 1.00 already at 20; 50 "
+            "the sf1 weak-neighbor corpus measured recall 1.00 at 50 "
+            "(CHANGES.md's 'pin gate and nothing else' entry keeps "
+            "the retired recall tier's values), and q170's 20 "
+            "candidates already reproduce brute force at sf0.01; 50 "
             "is 2.5x margin for corpora with tighter cosine spacing "
             "at the int8 noise floor (~scale/2 per element). Raising "
             "it scales only the re-rank join, never the scan."
@@ -471,12 +474,13 @@ REGISTRY: list[dict] = [
             "per 1000 cores. Below it the full scan wins: recall "
             "1.00, no training, no seed noise. Above it the IVF "
             "composition holds 0.95 recall at 10% of the bytes "
-            "(BENCH recall ladder ivf_int8 row: 512 trained cells, "
-            "204 probes, sf1 corpus) and scales with probed cells, "
-            "not the corpus. At 10^9 vectors x 10^3 queries x dim "
-            "512 the full scan is ~5e14 x dim — past the ceiling for "
-            "any real dim, which is the VERDICT r10 finding this row "
-            "publishes."
+            "(512 trained cells, 204 probes, sf1 corpus; the last "
+            "recall-ladder values are in CHANGES.md's 'pin gate and "
+            "nothing else' entry) and scales with probed cells, not "
+            "the corpus. At 10^9 vectors x 10^3 queries x dim 512 "
+            "the full scan is ~5e14 x dim — past the ceiling for any "
+            "real dim, so a corpus that size needs the IVF "
+            "composition."
         ),
         "override": (
             "advisory, not enforced — pick the operator per corpus "
@@ -485,7 +489,7 @@ REGISTRY: list[dict] = [
             "at full probe depth. For recurring search over a "
             "standing corpus, persist the composition with "
             "operators.annindex (publish once, append nightly, probe "
-            "the stored codes — r11)."
+            "the stored codes)."
         ),
     },
     {
@@ -499,17 +503,19 @@ REGISTRY: list[dict] = [
             "deltas into a fresh base snapshot under the manifest "
             "protocol and returns the probe to its single-snapshot "
             "plan. Batch ids are manifest-monotonic, so "
-            "append-after-compact never collides (r12)."
+            "append-after-compact never collides."
         ),
         "trade": (
             "Measured on the sf1 stress corpus (20k vectors, 64 "
-            "cells, 24 queries, BENCH ann_index_lifecycle tier): "
-            "probe 2.0 s at 0 deltas -> 3.4 s at 4 -> 5.1 s at 16; "
-            "compact cost 3.1 s, so break-even is ~ONE probe at 16 "
-            "deltas — fold whenever the root will be probed at all "
-            "before the next append wave. The drift is per-delta "
-            "JOB overhead (scan + union branch), not data volume, "
-            "so it scales with delta COUNT, not corpus size."
+            "cells, 24 queries) by a since-retired lifecycle bench "
+            "tier: probe 1.05 s at 0 deltas -> 1.38 s at 4 -> 2.30 s "
+            "at 16; compact 1.85 s, so break-even is ~1.5 probes at "
+            "16 deltas — fold whenever the root will be probed more "
+            "than once before the next append wave (last values in "
+            "CHANGES.md's 'pin gate and nothing else' entry). The "
+            "drift is per-delta JOB overhead (scan + union branch), "
+            "not data volume, so it scales with delta COUNT, not "
+            "corpus size."
         ),
         "override": (
             "ann_index_compact(root, retired=...) also drops vectors "
