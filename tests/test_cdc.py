@@ -284,7 +284,7 @@ def test_vectorized_cuts_match_reference_loop():
 
 
 def test_chunk_text_large_window_nondefault_modulus():
-    """ADVICE r12 repro: chunk_text with realistic CDC params
+    """chunk_text with realistic CDC params
     (window=13, modulus=24) must reproduce the reference loop's cut
     count instead of the overflowed fast path's, and windows 16/32/48
     must not crash (numpy UFuncTypeError/OverflowError on 31^15+)."""

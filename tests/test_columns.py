@@ -396,7 +396,7 @@ def test_reduce_associative_distributed(spark):
 
 
 def test_reduce_associative_exact_index_order(spark):
-    """r7 (ADVICE r6): when the frame carries its construction index,
+    """r7: when the frame carries its construction index,
     associative=True must fold in EXACT index order even after the
     frame has been reordered — probed with right-projection
     (f(a,b) = b), which is associative but maximally order-sensitive:

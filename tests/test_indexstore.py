@@ -1,10 +1,10 @@
 """Crash-recovery matrix for the rename-free versioned index store
-(r9, VERDICT r8 ask #2 + ADVICE r8 high).
+(r9).
 
 The pre-r9 `compact_index` rmtree'd the old base then RENAMED a scratch
 dir into place — a crash between the two left the only copy of the
-index in a dir the next run deleted unconditionally (ADVICE r8, high:
-silent total index loss), and the rename meant object stores were out
+index in a dir the next run deleted unconditionally (silent total
+index loss), and the rename meant object stores were out
 of reach entirely. These tests pin the replacement protocol
 (`operators/indexstore.py`): every mutation is list / read / create-
 only put / delete — NO rename anywhere in the protocol layer — and a
@@ -164,7 +164,7 @@ def test_crash_after_commit_never_remerges_or_resurrects(
     """The commit lands but cleanup is interrupted before the folded
     deltas are deleted. A re-run must NOT merge those deltas again —
     under a `retired=` pass a re-merge would RESURRECT rows the
-    takedown just removed (the subtle half of ADVICE r8)."""
+    takedown just removed."""
     root = str(tmp_path / "idx")
     publish_index(minhash_index(corpus, shingle_k=2), root, spark)
     minhash_index(delivery, shingle_k=2).write.parquet(
@@ -487,7 +487,7 @@ def test_ann_index_republish_supersedes(spark, tmp_path):
 
 
 def test_ann_index_append_after_compact_keeps_data(spark, tmp_path):
-    """r12 (ADVICE r11 high): the documented append->compact->append->
+    """r12: the documented append->compact->append->
     compact lifecycle must lose nothing. Pre-fix, the second append
     reused batch_id=0 (allocator only scanned on-disk deltas), the
     second compaction excluded it as already-merged, and its cleanup
@@ -526,7 +526,7 @@ def test_ann_index_append_after_compact_keeps_data(spark, tmp_path):
 
 
 def test_ann_index_crash_window_does_not_duplicate(spark, tmp_path):
-    """r12 (ADVICE r11 medium): crash between a compaction's manifest
+    """r12: crash between a compaction's manifest
     commit and its delta cleanup leaves the folded delta on disk; the
     reader must skip it (manifest merged_batches guard) or the folded
     rows appear twice and corrupt the top-k."""

@@ -1,4 +1,4 @@
-"""Baseline JPEG decode (r9, VERDICT r8 ask #6): exactness against the
+"""Baseline JPEG decode (r9): exactness against the
 decoder-independent integer formula for the oracle family, a full-
 coefficient IDCT cross-check against the brute-force T.81 definition,
 and the truncated/progressive error discipline the verdict named."""

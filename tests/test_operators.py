@@ -224,7 +224,7 @@ def test_prefix_jaccard_boundary_threshold_pairs(spark):
 
 
 def test_prefix_jaccard_exact_under_forced_32bit_collisions(spark):
-    """r8 (VERDICT r7 ask #4): the prefix plan's candidate-volume pass
+    """r8: the prefix plan's candidate-volume pass
     now rides 32-bit truncated shingle hashes; exactness comes from the
     survivor-sized 64-bit re-verify. Force BOTH collision hazards and
     pin output == direct mode:
@@ -1635,6 +1635,21 @@ def test_grouped_binned_quantile(spark):
             grouped_binned_quantile(df.repartition(7), "x", [0.5, 0.95],
                                     ["g"], n_bins=512).collect()}
     assert out == out7
+    # a NULL group key is a group like any other: its quantiles equal
+    # the ungrouped path's over its own rows, within one bin width
+    from torcharrow_spark.operators import binned_quantile
+
+    dfn = df.selectExpr("CASE WHEN g = 'b' THEN NULL ELSE g END AS g", "x")
+    outn = {(r["g"], r["q"]): r["value"] for r in
+            grouped_binned_quantile(dfn, "x", [0.5, 0.95], ["g"],
+                                    n_bins=512).collect()}
+    assert set(outn) == {("a", 0.5), ("a", 0.95), (None, 0.5), (None, 0.95)}
+    ref = {r["q"]: r["value"] for r in
+           binned_quantile(dfn.where("g IS NULL"), "x", [0.5, 0.95],
+                           n_bins=512).collect()}
+    for q in (0.5, 0.95):
+        assert abs(outn[(None, q)] - ref[q]) <= width + 1e-9
+        assert outn[("a", q)] == out[("a", q)]
 
 
 def test_grouped_heavy_hitters(spark):
@@ -2166,7 +2181,7 @@ def test_simhash_64bit_extension(spark):
     for (a, b), h in pairs.items():
         assert bin((want60[a] ^ want60[b]) & ((1 << 64) - 1)).count("1") == h
 
-    # ADVICE r8: bits=64 with max_hamming=0 makes ONE 64-bit block —
+    # bits=64 with max_hamming=0 makes ONE 64-bit block —
     # the old F.lit((1 << 64) - 1) mask overflowed a signed long at
     # PLAN time (never reached an executor). The all-ones mask is a
     # no-op, so the plan now skips it; semantics = exact-hash equality.
@@ -2176,7 +2191,7 @@ def test_simhash_64bit_extension(spark):
 
 
 def test_bytes_based_election_wide_vectors(spark):
-    """r8 (VERDICT r7 ask #5): the election onset is bytes-aware —
+    """r8: the election onset is bytes-aware —
     wide-payload members (embedding vectors) elect proportionally
     earlier, so a hot bucket's post-collect expression amplification
     (sorted class-key structs + star lists, ~3x the array bytes) and
@@ -2220,7 +2235,7 @@ def test_bytes_based_election_wide_vectors(spark):
 
 
 def test_auto_n_planes_sizing(spark, sf_dir):
-    """r8 (VERDICT r7 ask #3): the hyperplane sizing rule as code —
+    """r8: the hyperplane sizing rule as code —
     ceil(log2(n / 128)) clamped to [1, 30] — must reproduce every pin
     this repo ever measured, and n_planes='auto' must be plan-identical
     to the explicit value it resolves to."""
@@ -3421,7 +3436,7 @@ def test_emit_pairs_election_generic(spark):
 
 
 def test_emit_pairs_star_overflow_chunked(spark):
-    """r7 (ADVICE r6): a collapsed class whose star list exceeds
+    """r7: a collapsed class whose star list exceeds
     ``chunk`` must emit through the chunk-bounded overflow branch —
     same pair SET as a chunk large enough to inline the stars, so the
     bounding is pure plan shape, never semantics. Covers both the
@@ -4047,7 +4062,7 @@ def test_exact_dedup_against_index(spark, delivery_split):
 
 
 def test_retire_from_index_minhash(spark, delivery_split):
-    """r8 (VERDICT r7 ask #6): retiring a corpus doc drops ALL its band
+    """r8: retiring a corpus doc drops ALL its band
     rows, so a delivery doc that collided ONLY with retired docs now
     survives — takedowns must actually re-admit."""
     corpus, new = delivery_split
@@ -4145,7 +4160,7 @@ def test_incremental_hot_bucket_is_one_aggregate(spark):
 
 
 def test_cap_amplified_scan(spark, tmp_path):
-    """r9 (VERDICT r8 ask #1): a bare parquet scan feeding a known
+    """r9: a bare parquet scan feeding a known
     row-amplifying stage is re-read through a conf-scoped child session
     that caps split bytes — more, narrower map tasks; zero new
     exchanges; the user's session conf untouched. The cap only binds

@@ -72,7 +72,7 @@ def test_driver_window_coverage():
         "q162_warc_ingest",       # §2.1 sources (q54 interop rotated
                                   # out r10; WARC read IS the §2.1
                                   # source family at crawl scale)
-        # r12 rotations (VERDICT r11 ask #7): q129 (curation, green
+        # r12 rotations: q129 (curation, green
         # r2-r11) hands exact-dedup+packing coverage to q145/q166;
         # q19 (MinHash, green r2-r11) keeps q58/q149/q151/q166;
         # q86 (within-corpus span dedup, green r2-r11) hands the
@@ -108,11 +108,11 @@ def test_driver_window_coverage():
         "q147_video_frame_decode",
         "q149_incremental_dedup",
         "q41_bpe_tokenize",
-        # r8 rotations (VERDICT r7 ask #2): the modern-curation capstone
+        # r8 rotations: the modern-curation capstone
         # and the exact half of the incremental-index family get their
         # first driver-hash rows
         "q145_modern_curation",
-        # r9 rotations (VERDICT r8 ask #3): the never-driver-hashed
+        # r9 rotations: the never-driver-hashed
         # q151 (takedown re-admission over the r9 pointer-resolved
         # index lifecycle), q132 (stream==batch curate+pack twin),
         # q146 (skew diagnostic), plus the new q152 JPEG oracle.
@@ -135,7 +135,7 @@ def test_driver_window_coverage():
         # q76 (text analysis keeps q24/q127/q128/q139), q98 (the
         # relational core keeps q01/q02/q03/q06/q07/q35/q37).
         "q154_html_extract", "q157_cdc_dedup", "q158_web_ingest_curation",
-        # r10 rotations (VERDICT r9 asks #1-#3): the WARC->pack
+        # r10 rotations: the WARC->pack
         # capstone + multi-host robots land with driver rows on day
         # one; q153/q162/q163/q164 (sim/judge-verified only in r9) get
         # their first driver hashes. Rotated out (driver-green,
@@ -153,7 +153,7 @@ def test_driver_window_coverage():
         # gated; quality keeps q24/q145/q158, MinHash keeps
         # q19/q58/q149/q151/q166).
         "q168_unigram_tokenize", "q169_language_id_trained",
-        # r11 rotations (VERDICT r10 ask #9 + new-capstone tradition):
+        # r11 rotations (plus the new-capstone tradition):
         # the judge-run-only r10 families get driver rows (q155
         # mojibake repair, q156 GIF, q159 G.711, q160 domains, q161
         # incremental CDC) and the four r11 queries land on day one

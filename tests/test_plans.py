@@ -12,17 +12,22 @@ from torcharrow_spark.queries import QUERIES
 
 
 @contextmanager
-def _no_spread(spark):
+def _no_spread():
     """Pin the ORGANIC-SCALE plan: at a healthy (multi-file) layout
     spread_narrow_source never fires, so zero-exchange pins hold; the
     bench tables are single-row-group, so tests that assert those
-    shapes disable the spread for the build. The spread exchange
-    itself is pinned by test_spread_narrow_source_plan."""
-    spark.conf.set("spark.torcharrow.spreadNarrowSource", "false")
+    shapes build with the spread replaced by identity (every caller
+    imports it from `preprocess` at call time, so all of them see the
+    patch). The spread exchange itself is pinned by
+    test_spread_narrow_source_plan."""
+    from torcharrow_spark.operators import preprocess
+
+    spread = preprocess.spread_narrow_source
+    preprocess.spread_narrow_source = lambda df: df
     try:
         yield
     finally:
-        spark.conf.set("spark.torcharrow.spreadNarrowSource", "true")
+        preprocess.spread_narrow_source = spread
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -63,7 +68,7 @@ def test_groupby_is_hash_aggregate(spark, sf_dir):
 def test_narrow_ops_have_no_shuffle(spark, sf_dir):
     """Pure projections (text stats, fingerprints) must be scan->project,
     zero exchanges."""
-    with _no_spread(spark):
+    with _no_spread():
         for q in ("q24_text_stats", "q25_fingerprint"):
             stats = plan_stats(QUERIES[q](spark, sf_dir))
             assert stats["exchanges"] == 0, (q, stats)
@@ -120,7 +125,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
 
 def test_text_stats_is_single_projection(spark, sf_dir):
     """Fused text_stats must plan with zero exchanges (was: two joins)."""
-    with _no_spread(spark):
+    with _no_spread():
         stats = plan_stats(QUERIES["q24_text_stats"](spark, sf_dir))
     assert stats["exchanges"] == 0, stats
 
@@ -283,7 +288,7 @@ def test_gopher_filter_is_zero_shuffle(spark, sf_dir):
     """q128's composite quality gate must plan as scan->project — every
     signal (incl. both repetition fractions) is a per-row HOF, so the
     100 TB filter pass costs exactly one scan."""
-    with _no_spread(spark):
+    with _no_spread():
         stats = plan_stats(QUERIES["q128_gopher_filter"](spark, sf_dir))
     assert stats["exchanges"] == 0, stats
 
@@ -339,7 +344,7 @@ def test_curation_pipeline_plan(spark, sf_dir):
     shuffle) + packing (per-shard windows): hash aggregates only, and
     the whole pipeline stays within a handful of exchanges — no stage
     re-reads or re-shuffles the corpus."""
-    with _no_spread(spark):
+    with _no_spread():
         text = formatted_plan(QUERIES["q129_curation_pipeline"](spark, sf_dir))
         assert "SortAggregate" not in text
         stats = plan_stats(QUERIES["q129_curation_pipeline"](spark, sf_dir))
@@ -382,7 +387,7 @@ def test_shuffle_payloads_are_narrow(spark, sf_dir):
     row where 16 do."""
     from torcharrow_spark.plans import shuffle_payloads
 
-    with _no_spread(spark):
+    with _no_spread():
         # exact dedup: every exchange payload is hash halves + bounded
         # aggs
         ex = shuffle_payloads(QUERIES["q18_exact_dedup"](spark, sf_dir))
@@ -413,7 +418,7 @@ def test_curation_pipeline_shuffles_hashes_not_text(spark, sf_dir):
     ever carries text."""
     from torcharrow_spark.plans import shuffle_payloads
 
-    with _no_spread(spark):
+    with _no_spread():
         payloads = shuffle_payloads(
             QUERIES["q129_curation_pipeline"](spark, sf_dir)
         )
@@ -467,14 +472,14 @@ def test_spread_narrow_source_plan(spark, sf_dir):
     """The r7 narrow-source spread, pinned at the plan level: when it
     fires (single-row-group bench table), the ONLY exchange it adds is
     a ROUND-ROBIN repartition — never a key-ed shuffle, so no skew and
-    no text ever rides a partitioning KEY — and with the conf off the
+    no text ever rides a partitioning KEY — and without the spread the
     zero-exchange organic shape returns."""
     stats = plan_stats(QUERIES["q24_text_stats"](spark, sf_dir))
     assert stats["exchanges"] >= 1, stats  # fires on the 1-row-group table
     text = formatted_plan(QUERIES["q24_text_stats"](spark, sf_dir))
     assert "RoundRobinPartitioning" in text
     assert "hashpartitioning(text" not in text.lower()
-    with _no_spread(spark):
+    with _no_spread():
         stats_off = plan_stats(QUERIES["q24_text_stats"](spark, sf_dir))
     assert stats_off["exchanges"] == 0, stats_off
 
@@ -511,7 +516,7 @@ def test_pushdown_barrier_keeps_gate_above_spread(spark, sf_dir):
     m = re.search(r"DataFilters: \[([^\n]*)\]", text)
     assert m is None or "CASE WHEN" not in m.group(1), m.group(0)[:500]
     rows = sorted(r.doc_id for r in gated.collect())
-    with _no_spread(spark):
+    with _no_spread():
         plain = gate()
         assert "CollectMetrics" not in formatted_plan(plain)
         rows_off = sorted(r.doc_id for r in plain.collect())

@@ -351,7 +351,7 @@ def test_read_write_warc_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_write_warc_failed_rewrite_keeps_prior_generation(spark, tmp_path):
-    """r12 (ADVICE r11 low): a re-write whose Spark job FAILS must
+    """r12: a re-write whose Spark job FAILS must
     leave the previous generation's part files intact and readable —
     the pre-r12 code deleted them on the driver before the job ran.
     Also: a successful re-write with fewer partitions still removes

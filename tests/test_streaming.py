@@ -901,7 +901,7 @@ def test_incremental_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
     # this used to simulate replay with a FRESH checkpoint, which the
     # owner-marker guard now rejects (below) — a fresh checkpoint
     # restarting at batch 0 would silently ignore every prior delta
-    # (ADVICE r7 medium), so the only legitimate replay is the same
+    #, so the only legitimate replay is the same
     # checkpoint re-running its uncommitted batch.
     os.remove(str(tmp_path / "ckpt" / "commits" / "0"))
     crc = str(tmp_path / "ckpt" / "commits" / ".0.crc")
@@ -968,7 +968,7 @@ def test_incremental_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
             for r in kept.where(F.col("batch_id") == 0).collect()} == want
 
     # cold start: no base, fresh index root — intra-batch rule alone.
-    # r8 (ADVICE r7): the source is a fresh SINGLE-COPY dir — `src` has
+    # r8: the source is a fresh SINGLE-COPY dir — `src` has
     # the delivery appended twice by now, and dedup_against_index
     # assumes unique ids within a delivery (keep-min-id lets equal-id
     # duplicates through), so the old set-based assertion could not see

@@ -247,7 +247,7 @@ def test_warc_ingest_stream_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_q166_fixture_path_identical(spark, sf_dir, tmp_path):
-    """r12 (VERDICT r11 ask #3): bench.py's fixture-backed q166 row
+    """r12: bench.py's fixture-backed q166 row
     (materialized warc_frame parquet -> q166_chain) must be
     bit-identical to the registered per-run-synth query — the fixture
     changes WHERE the bytes come from, never what the chain computes."""

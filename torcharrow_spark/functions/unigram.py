@@ -301,7 +301,7 @@ def unigram_train(
     n_iters: int = 1,
     scale: int = 1_000_000,
 ) -> _ty.Dict[str, int]:
-    """TRAINED Unigram-LM vocabulary (r11, VERDICT r10 ask #4): the
+    """TRAINED Unigram-LM vocabulary (r11): the
     SentencePiece fit (Kudo 2018) as hard EM over the corpus, every
     step integer/SQL-replayable like q138's Lloyd iterations and
     q169's NB fit.

@@ -219,8 +219,8 @@ def language_id_train(
     n: int = 2,
     n_buckets: int = 256,
 ) -> _ty.Dict[str, _ty.Dict[str, _ty.Any]]:
-    """TRAINED language identification, fit half (r10, VERDICT r9 ask
-    #7): multinomial Naive Bayes over md5-hashed character-n-gram
+    """TRAINED language identification, fit half (r10): multinomial
+    Naive Bayes over md5-hashed character-n-gram
     counts — the fastText-neighborhood model (Joulin et al. 2016 use
     the same hashed char-n-gram features; NB is the classic closed-form
     fit, McCallum & Nigam 1998) a real pipeline runs as its first

@@ -45,7 +45,7 @@ def _norm_text(col):
 #: never fires on real data distributions; it exists for the cliff.
 DEFAULT_ELECT_THRESHOLD = 1 << 18
 
-#: r8 (VERDICT r7 ask #5): the member-count threshold alone let a
+#: r8: the member-count threshold alone let a
 #: WIDE-payload bucket build a huge collect_list buffer before election
 #: fired — cosine/semantic members carry the full embedding vector
 #: (~290 B at dim 64, ~4 KB at dim 1024) vs ~16 B for minhash band
@@ -81,7 +81,7 @@ ELECT_BYTES_BOUND = 1 << 25
 DEFAULT_EMIT_CHUNK = 1024
 
 #: simhash auto-sizing clamp bounds (r9: module constants so the docs
-#: in simhash_pairs / tuning.REGISTRY derive from the code — ADVICE r8
+#: in simhash_pairs / tuning.REGISTRY derive from the code — a review
 #: found both texts still said "[16, 32]" after the r8 un-clamp).
 #: The 64 ceiling is what the two-digest construction in `simhash`
 #: physically provides (one signed long); the 16 floor is the smallest
@@ -180,8 +180,8 @@ def _emit_pairs(
     `exact_dedup` FIRST (the standard pipeline order, as q129/q145 do)
     is the right plan anyway.
 
-    Since r8 the election onset is also BYTES-bounded (VERDICT r7 ask
-    #5): callers pass ``member_bytes`` — the estimated serialized
+    Since r8 the election onset is also BYTES-bounded: callers pass
+    ``member_bytes`` — the estimated serialized
     width of one array element — and the effective threshold is
     ``min(elect_threshold, ELECT_BYTES_BOUND / member_bytes)``, so
     wide-payload members (embedding vectors) elect proportionally
@@ -358,7 +358,7 @@ def _emit_pairs_units(grouped: SDF, stars_col: str, bare_col: str,
     DIAGONAL chunk-pair, where each element anchors exactly once, so
     star pairs never duplicate.
 
-    Star lists are themselves CHUNK-BOUNDED (r7, ADVICE r6): a
+    Star lists are themselves CHUNK-BOUNDED (r7): a
     collapsed class of m members puts m-1 star targets on its single
     rep anchor, so the inline ``concat(tail, st)`` would make one
     input row's Generate fanout m-1 — ~800 MB buffered at the union
@@ -409,6 +409,47 @@ def _emit_pairs_units(grouped: SDF, stars_col: str, bare_col: str,
     return small_pairs.unionByName(big_pairs).unionByName(star_pairs)
 
 
+def _chunk_pair_cols(arr, chunk: int):
+    """The salted chunk-pair split both emitters share: the chunk size
+    ``__csz__``, the exploded chunk-index pairs ``__p__`` (project both
+    beside the group's array as ``__arr__``), and the next projection's
+    ``__ci__``/``__cj__`` indices with their ``__ca__``/``__cb__``
+    slices of ``__arr__``."""
+    m = F.size(arr)
+    # csz first, nch derived: the chunk size floors at ``chunk`` and
+    # grows as ceil(m/256) for pathological groups, so nch <= 256 (the
+    # chunk-pair index array stays small) AND per-row fanout stays
+    # csz^2 <= chunk^2 up to m = 256*chunk (see DEFAULT_EMIT_CHUNK)
+    csz = F.greatest(F.lit(chunk), F.ceil(m / F.lit(256))).cast("int")
+    nch = F.ceil(m / csz).cast("int")
+    idx = F.sequence(F.lit(0), nch - 1)
+    # all ordered chunk-index pairs (i, j) with i <= j: at most
+    # 256*257/2 = 32,896 small structs per group row
+    idx_pairs = F.flatten(
+        F.transform(
+            idx,
+            lambda i: F.transform(
+                F.slice(idx, i + 1, F.size(idx)),
+                lambda j: F.struct(i.alias("i"), j.alias("j")),
+            ),
+        )
+    )
+
+    def chunk_slice(side: str):
+        return F.slice(
+            F.col("__arr__"),
+            F.col(f"__p__.{side}") * F.col("__csz__") + 1,
+            F.col("__csz__"),
+        )
+
+    return csz.alias("__csz__"), F.explode(idx_pairs).alias("__p__"), [
+        F.col("__p__.i").alias("__ci__"),
+        F.col("__p__.j").alias("__cj__"),
+        chunk_slice("i").alias("__ca__"),
+        chunk_slice("j").alias("__cb__"),
+    ]
+
+
 def _build_emit_units_cols(bare_col: str, stars_col: str, chunk: int) -> dict:
     """Column construction for `_emit_pairs_units`, extracted verbatim
     for `memo` reuse (see the docstring above for the plan shape)."""
@@ -432,45 +473,17 @@ def _build_emit_units_cols(bare_col: str, stars_col: str, chunk: int) -> dict:
     small_out = [F.col("__a__"), F.explode(targets).alias("__b__")]
 
     big_pred = F.size(bare) > chunk
-    m = F.size(bare)
-    # csz first, nch derived: the chunk size floors at ``chunk`` and
-    # grows as ceil(m/256) for pathological groups, so nch <= 256 (the
-    # chunk-pair index array stays small) AND per-row fanout stays
-    # csz^2 <= chunk^2 up to m = 256*chunk (see DEFAULT_EMIT_CHUNK)
-    csz = F.greatest(F.lit(chunk), F.ceil(m / F.lit(256))).cast("int")
-    nch = F.ceil(m / csz).cast("int")
-    idx = F.sequence(F.lit(0), nch - 1)
-    idx_pairs = F.flatten(
-        F.transform(
-            idx,
-            lambda i: F.transform(
-                F.slice(idx, i + 1, F.size(idx)),
-                lambda j: F.struct(i.alias("i"), j.alias("j")),
-            ),
-        )
-    )
+    csz, pairs, chunk_cols = _chunk_pair_cols(bare, chunk)
     step1_cols = [
         bare.alias("__arr__"),
         F.col(stars_col).alias("__ss__"),
-        csz.alias("__csz__"),
-        F.explode(idx_pairs).alias("__p__"),
+        csz,
+        pairs,
     ]
     # star slices ride only the DIAGONAL chunk-pairs (where they are
     # consumed): off-diagonal rows carry NULL, so the star payload
     # crosses the exchange exactly once
-    step2_cols = [
-        F.col("__p__.i").alias("__ci__"),
-        F.col("__p__.j").alias("__cj__"),
-        F.slice(
-            F.col("__arr__"),
-            F.col("__p__.i") * F.col("__csz__") + 1,
-            F.col("__csz__"),
-        ).alias("__ca__"),
-        F.slice(
-            F.col("__arr__"),
-            F.col("__p__.j") * F.col("__csz__") + 1,
-            F.col("__csz__"),
-        ).alias("__cb__"),
+    step2_cols = chunk_cols + [
         F.when(
             (F.col("__p__.i") == F.col("__p__.j"))
             & F.col("__ss__").isNotNull(),
@@ -597,44 +610,8 @@ def _build_emit_impl_cols(arr_col: str, chunk: int) -> dict:
     small_out = [F.col("__a__"), F.explode(tail).alias("__b__")]
 
     big_pred = F.size(arr) > chunk
-    m = F.size(arr)
-    # csz first, nch derived: the chunk size floors at ``chunk`` and
-    # grows as ceil(m/256) for pathological groups, so nch <= 256 (the
-    # chunk-pair index array stays small) AND per-row fanout stays
-    # csz^2 <= chunk^2 up to m = 256*chunk (see DEFAULT_EMIT_CHUNK)
-    csz = F.greatest(F.lit(chunk), F.ceil(m / F.lit(256))).cast("int")
-    nch = F.ceil(m / csz).cast("int")
-    idx = F.sequence(F.lit(0), nch - 1)
-    # all ordered chunk-index pairs (i, j) with i <= j: at most
-    # 256*257/2 = 32,896 small structs per group row
-    idx_pairs = F.flatten(
-        F.transform(
-            idx,
-            lambda i: F.transform(
-                F.slice(idx, i + 1, F.size(idx)),
-                lambda j: F.struct(i.alias("i"), j.alias("j")),
-            ),
-        )
-    )
-    step1_cols = [
-        arr.alias("__arr__"),
-        csz.alias("__csz__"),
-        F.explode(idx_pairs).alias("__p__"),
-    ]
-    step2_cols = [
-        F.col("__p__.i").alias("__ci__"),
-        F.col("__p__.j").alias("__cj__"),
-        F.slice(
-            F.col("__arr__"),
-            F.col("__p__.i") * F.col("__csz__") + 1,
-            F.col("__csz__"),
-        ).alias("__ca__"),
-        F.slice(
-            F.col("__arr__"),
-            F.col("__p__.j") * F.col("__csz__") + 1,
-            F.col("__csz__"),
-        ).alias("__cb__"),
-    ]
+    csz, pairs, step2_cols = _chunk_pair_cols(arr, chunk)
+    step1_cols = [arr.alias("__arr__"), csz, pairs]
     spread_keys = [
         F.col("__ci__"), F.col("__cj__"), F.xxhash64(F.col("__ca__"))
     ]
@@ -808,10 +785,9 @@ def _shingles(df: SDF, text_col: str, id_col: str, k: int) -> SDF:
       BEFORE the first exchange, invisible to Spark's byte-based split
       sizing — `preprocess.cap_amplified_scan` re-reads the source
       through a conf-scoped session so each map task's fused explode
-      output stays within the sort-row budget (r9, VERDICT r8 ask #1:
-      the sf40 3.3 GB map-sort spill, previously a hand-set
-      maxPartitionBytes in tuning.py, now default engine behavior —
-      zero new exchanges, bit-identical shuffle bytes);
+      output stays within the sort-row budget (zero new exchanges,
+      bit-identical shuffle bytes; the spill it prevents is measured
+      at `preprocess.AMPLIFIED_SORT_ROWS_BUDGET`);
     * single-row-group sources: spread so the scan-fused compute isn't
       serialized into one task (preprocess.spread_narrow_source)."""
     from torcharrow_spark.operators.preprocess import (
@@ -1475,7 +1451,7 @@ def ngram_jaccard_pairs_prefix(
     # benchmark-distorting cache — but drops the dfreq aggregate, the
     # join and the sort from both clones.
     #
-    # r8 (VERDICT r7 ask #4): the verify intermediate was the sf10
+    # r8: the verify intermediate was the sf10
     # tier's dominant byte mover (~86% of q21-auto's 17.7 GB shuffle —
     # one full 64-bit hash array riding the second verify join per
     # surviving candidate). Pure delta-encoding cannot shrink it
@@ -1718,7 +1694,7 @@ def _simhash_buckets(
     for i, w in enumerate(widths):
         # w == 64 only when max_hamming == 0 at the full 64-bit width
         # (one block = the whole hash): (1 << 64) - 1 overflows a
-        # signed long literal at plan time (ADVICE r8), and the all-
+        # signed long literal at plan time, and the all-
         # ones mask is a no-op anyway — skip the AND.
         shifted = F.shiftrightunsigned(F.col("simhash"), offset)
         masked = shifted if w >= 64 else shifted.bitwiseAND(F.lit((1 << w) - 1))
@@ -2306,8 +2282,8 @@ def decontaminate(
 def retire_from_index(
     index: SDF, retired: SDF, id_col: str = "doc_id"
 ) -> SDF:
-    """Remove retired documents from a dedup index (r8, VERDICT r7 ask
-    #6): real pipelines DELETE — retention windows, takedowns, license
+    """Remove retired documents from a dedup index (r8): real pipelines
+    DELETE — retention windows, takedowns, license
     revocations — and an index that only grows keeps dead documents
     vetoing new deliveries forever. One anti-join by document id:
 
@@ -2348,7 +2324,7 @@ def compact_index(
     marker — after which a FRESH streaming checkpoint may claim the
     root (the remediation the replay guard's fail-fast directs to).
 
-    r9 (VERDICT r8 ask #2 + ADVICE r8 high): the swap is the
+    r9: the swap is the
     RENAME-FREE pointer protocol of `operators.indexstore` — the
     merged snapshot is written to ``base_v{N}``, count-verified, and
     published by creating ONE manifest file; readers resolve the

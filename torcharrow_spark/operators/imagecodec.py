@@ -589,7 +589,7 @@ def encode_gif_animated(
     frames: _ty.Sequence[dict],
     palette: _ty.Optional[_ty.Sequence[_ty.Tuple[int, int, int]]] = None,
 ) -> bytes:
-    """GIF89a animation encoder (r11, VERDICT r10 ask #6) — the
+    """GIF89a animation encoder (r11) — the
     synthesis half of :func:`decode_gif_frames`'s oracle. Each frame
     dict: ``idx`` (2-D uint8 palette indices, required), ``left`` /
     ``top`` (rect position, default 0), ``disposal`` (0-3, default 0),
@@ -655,7 +655,7 @@ def encode_gif_animated(
 def decode_gif_frames(
     data: bytes,
 ) -> _ty.Tuple[int, int, np.ndarray]:
-    """Animated-GIF decoder (r11, VERDICT r10 ask #6 — the frame-N
+    """Animated-GIF decoder (r11 — the frame-N
     path :func:`decode_gif`'s multi-frame ValueError points at): walks
     EVERY image descriptor + Graphic Control Extension and returns the
     COMPOSITED canvas after each frame — what a viewer displays — as

@@ -1,5 +1,5 @@
 """Pure-stdlib baseline JPEG (ITU-T T.81 / JFIF) decode — the format a
-real multimodal corpus is actually made of (r9, VERDICT r8 ask #6).
+real multimodal corpus is actually made of (r9).
 
 Scope (documented, enforced with clear errors — the same error
 discipline as `imagecodec`):

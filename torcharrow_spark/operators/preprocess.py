@@ -76,14 +76,12 @@ def spread_narrow_source(df: SDF) -> SDF:
     at most half the cluster's parallelism; the widening fires down
     to 2-core clusters. When it fires it pays one exchange of the
     source's bytes — exactly the trade a single-row-group vendor dump
-    wants, and invisible at any healthy layout. Disable with the
-    session conf ``spark.torcharrow.spreadNarrowSource=false`` (the
-    plan-pin tests do, to pin the organic-scale zero-exchange shapes;
-    the spread exchange itself is pinned by its own test as a
-    ROUND-ROBIN repartition — never a key-ed shuffle, so no skew and
-    no text ever rides a partitioning KEY).
+    wants, and invisible at any healthy layout. The spread exchange
+    is pinned by its own test as a ROUND-ROBIN repartition — never a
+    key-ed shuffle, so no skew and no text ever rides a partitioning
+    KEY.
 
-    Exchange matching (r8, ADVICE r7): "already spread" means a SHUFFLE
+    Exchange matching (r8): "already spread" means a SHUFFLE
     exchange — ``Exchange hashpartitioning/rangepartitioning/
     RoundRobinPartitioning/SinglePartition`` — not the bare substring
     "Exchange", which also matched ``BroadcastExchange``. Plans whose
@@ -99,12 +97,6 @@ def spread_narrow_source(df: SDF) -> SDF:
     import re
 
     try:
-        if (
-            df.sparkSession.conf.get(
-                "spark.torcharrow.spreadNarrowSource", "true"
-            ).lower() != "true"
-        ):
-            return df
         plan = df._jdf.queryExecution().sparkPlan().toString()
     except Exception:
         return df
@@ -148,9 +140,11 @@ def lineage_cut(df: SDF, eager: bool = False) -> SDF:
     """Truncate ``df``'s lineage so downstream consumers re-read a
     materialized block instead of re-executing the upstream plan (the
     guide's §5 recompute-vs-store lever; every checkpoint in this
-    engine routes through here — r13, VERDICT r12 ask #5).
+    engine routes through here, so one place decides how a cut is
+    stored).
 
-    Two storage modes, selected by how the session is configured:
+    Two storage modes, selected by whether the context has a
+    checkpoint directory:
 
     * Default — ``localCheckpoint``: blocks live on the executors that
       computed them, zero extra I/O, but NON-REPLICATED with truncated
@@ -166,12 +160,6 @@ def lineage_cut(df: SDF, eager: bool = False) -> SDF:
       availability-correct mode; it costs one write+read of the cut
       frame through the checkpoint store.
 
-    Kill switch: ``spark.torcharrow.reliableLineageCuts=false`` keeps
-    ``localCheckpoint`` even when a checkpoint dir is set (for
-    sessions that set a dir for unrelated reasons); ``=true`` asserts
-    the dir is configured rather than silently degrading. Default
-    ``auto`` = reliable iff a dir is set.
-
     ``eager=False`` defers materialization to the first action (the
     cut frame is usually consumed immediately and possibly under a
     different job description); iterative algorithms that measure
@@ -179,39 +167,26 @@ def lineage_cut(df: SDF, eager: bool = False) -> SDF:
     call time: under AQE the cut plans its RDD, which runs every
     upstream shuffle stage while the query is being built.
     """
-    mode = "auto"
     try:
-        mode = df.sparkSession.conf.get(
-            "spark.torcharrow.reliableLineageCuts", "auto"
-        ).lower()
+        jsc = df.sparkSession.sparkContext._jsc
+        has_dir = jsc.sc().getCheckpointDir().isDefined()
     except Exception:
-        pass
-    if mode != "false":
         has_dir = False
-        try:
-            jopt = df.sparkSession.sparkContext._jsc.sc().getCheckpointDir()
-            has_dir = jopt.isDefined()
-        except Exception:
-            has_dir = False
-        if mode == "true" and not has_dir:
-            raise ValueError(
-                "spark.torcharrow.reliableLineageCuts=true but no "
-                "checkpoint directory is configured; call "
-                "sparkContext.setCheckpointDir(...) first"
-            )
-        if has_dir:
-            return df.checkpoint(eager=eager)
+    if has_dir:
+        return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
 
-#: r9 (VERDICT r8 ask #1): per-map-task POST-AMPLIFICATION row budget.
-#: A scan fused with a row-amplifying generator (the shingle explode)
-#: multiplies rows BEFORE the first exchange, invisible to Spark's
-#: byte-based split sizing — at the sf40 evidence tier, default 128 MB
-#: splits packed a 2M-doc corpus into ~32 map tasks whose fused explode
-#: produced ~33M rows EACH, and the shuffle writers' map-side sorts
-#: spilled 3.3 GB to disk (SCALE_SF100.md; the only spill ever observed
-#: in this engine). 2^21 rows/task reproduces the measured fix: with
+#: r9: per-map-task POST-AMPLIFICATION row budget. A scan fused with a
+#: row-amplifying generator (the shingle explode) multiplies rows
+#: BEFORE the first exchange, invisible to Spark's byte-based split
+#: sizing — at the retired sf40 evidence tier (32 cores), default
+#: 128 MB splits packed a 2M-doc corpus into ~32 map tasks whose fused
+#: explode produced ~33M rows EACH, and the shuffle writers' map-side
+#: sorts spilled 3.3 GB to disk. On a 4-core local[4] session, a 36 MB
+#: one-file corpus (1 MiB row groups) planned 4 splits: q21's auto
+#: jaccard spilled 1.46 GB without the cap and nothing with it, at
+#: equal rows (CHANGES.md). 2^21 rows/task reproduces the sf40 fix: with
 #: the shingle density below, the cap lands on exactly the 4 MB split
 #: width that was hand-measured to cut that spill 88% at bit-identical
 #: shuffle bytes. Sized for sort-buffer comfort (2M rows x ~50 B
@@ -305,9 +280,9 @@ def _scan_session(parent, max_partition_bytes: int):
         child = parent.newSession()
         cache[max_partition_bytes] = child
     # refresh runtime confs on EVERY call (not just creation): a parent
-    # conf changed after the child was cached (a test flipping
-    # spreadNarrowSource, a user retuning shuffle width) must be seen
-    # by plans built through the child; driver-only, ~ms
+    # conf changed after the child was cached (a user retuning shuffle
+    # width) must be seen by plans built through the child; driver-only,
+    # ~ms
     for row in parent.sql("SET").collect():
         try:
             child.conf.set(row["key"], row["value"])
@@ -343,16 +318,16 @@ def cap_amplified_scan(
     rows_per_input_byte: float = SHINGLE_ROWS_PER_INPUT_BYTE,
     rows_budget: int | None = None,
 ) -> SDF:
-    """Amplification-aware scan-split sizing (r9, VERDICT r8 ask #1 —
-    default engine behavior, previously a hand-set `tuning.py` conf).
+    """Amplification-aware scan-split sizing (r9 — default engine
+    behavior, previously a hand-set `tuning.py` conf).
 
     Spark sizes scan splits by INPUT bytes, but an operator that fuses
     a row-amplifying generator into the scan (shingle explode before
     the first exchange) multiplies the rows each map task must sort
     for its shuffle write — at 128 MB splits over a large-file corpus
     that is tens of millions of post-explode rows per task, and the
-    map-side sorts spill to disk (the sf40 q21-auto 3.3 GB spill,
-    SCALE_SF100.md). The amplifying OPERATOR knows its own fanout, so
+    map-side sorts spill to disk (see AMPLIFIED_SORT_ROWS_BUDGET for
+    the runs). The amplifying OPERATOR knows its own fanout, so
     it calls this at its scan boundary: if ``df`` is a bare parquet
     scan whose effective split bytes would exceed
     ``rows_budget / rows_per_input_byte``, the SAME source is re-read
@@ -838,6 +813,16 @@ def binned_cdf(
     ).drop("__bin__", "__bn__", "__cumb__", "__lo__", "__hi__", "__n__")
 
 
+def _join_null_safe(left: SDF, right: SDF, keys: _ty.List[str]) -> SDF:
+    """``left.join(right, keys)`` with a NULL key matching NULL. The key
+    columns appear once, taken from ``left``, so a ``left`` already
+    hash-partitioned on them still serves the group-keyed aggregate or
+    window above the join without a new exchange."""
+    cond = [F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")) for k in keys]
+    rest = [F.col(f"r.{c}") for c in right.columns if c not in keys]
+    return left.alias("l").join(right.alias("r"), cond).select("l.*", *rest)
+
+
 def grouped_binned_quantile(
     df: SDF,
     col: str,
@@ -858,7 +843,9 @@ def grouped_binned_quantile(
     fixed-double-op arithmetic as the ungrouped form, so results are
     deterministic and engine-reproducible.
 
-    Returns one row per (group, q): ``by... , q, value``.
+    Returns one row per (group, q): ``by... , q, value``. A NULL group
+    key forms a group like any other: both joins with ``bounds`` match
+    keys null-safely, as :func:`grouped_binned_cdf` does.
     """
     if not qs:
         raise ValueError("qs must be non-empty")
@@ -873,7 +860,7 @@ def grouped_binned_quantile(
         F.max("__v__").alias("__hi__"),
         F.count(F.lit(1)).alias("__total__"),
     )
-    b = base.join(bounds, keys)
+    b = _join_null_safe(bounds, base, keys)
     w = (F.col("__hi__") - F.col("__lo__")) / F.lit(float(n_bins))
     # degenerate single-value groups (width 0): everything in bin 0
     bin_ = F.when(F.col("__hi__") == F.col("__lo__"), F.lit(0)).otherwise(
@@ -893,15 +880,16 @@ def grouped_binned_quantile(
         .orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    hist = (
+    hist = _join_null_safe(
         hist.select(
             *keys,
             "bin",
             "n",
             F.sum("n").over(hw).alias("cum"),
             (F.sum("n").over(hw) - F.col("n")).alias("cum_before"),
-        )
-        .join(bounds, keys)
+        ),
+        bounds,
+        keys,
     )
     qcol = F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q")
     width = (F.col("__hi__") - F.col("__lo__")) / F.lit(float(n_bins))

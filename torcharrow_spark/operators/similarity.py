@@ -70,14 +70,14 @@ QUANTIZED_SCAN_NQD_CEILING = 2 * 10**15
 def auto_n_planes(
     n_vectors: int, target_bucket: int = AUTO_TARGET_BUCKET
 ) -> int:
-    """The documented hyperplane sizing rule as code (r8, VERDICT r7
-    ask #3 — mirrors ``dedup.simhash_auto_bits``): expected bucket
+    """The documented hyperplane sizing rule as code (r8 — mirrors
+    ``dedup.simhash_auto_bits``): expected bucket
     population is n / 2^planes, so
     ``planes = ceil(log2(n / target_bucket))`` clamped to [1, 30]
     (bucket ids are ints built from 2^i bit weights). Before this, the
     docstrings said n_planes "MUST grow with the corpus" but every
     call site sized it by hand — the sf100 decade needed a manual
-    +log2(10) bump (SCALE_SF100.md), exactly the forgotten-parameter
+    +log2(10) bump, exactly the forgotten-parameter
     failure auto sizing removes.
 
     Reproducibility note (same trade as ``simhash_auto_bits`` and
@@ -801,7 +801,7 @@ def cosine_pairs(
 
     Sizing rule: expected bucket size is corpus_size / 2^n_planes, so
     pick n_planes ≈ log2(corpus_size / target_bucket_size). n_planes
-    MUST grow with the corpus, and since r8 (VERDICT r7 ask #3) the
+    MUST grow with the corpus, and since r8 the
     default ``'auto'`` applies the rule ITSELF via
     :func:`auto_n_planes` — one bounded count() picks
     ceil(log2(n / 128)) planes clamped to [1, 30], so a forgotten
@@ -1129,10 +1129,10 @@ def _code_stats(qvec):
     )
 
 
-def _int8_approx_cosine(qsq, qsum_dot):
+def _int8_approx_cosine(qsum_dot):
     """The quantized-scan cosine of a joined (qvec, v_min, v_scale,
-    q_sum) x (q_vec, q_norm) row, given sum(codes^2) ``qsq`` and
-    sum(query) ``qsum_dot``:
+    q_sum, qsq) x (q_vec, q_norm) row, given sum(query) ``qsum_dot``
+    (``q_sum``/``qsq`` are sum(codes)/sum(codes^2), `_code_stats`):
     ``cos = (v_min * sum(query) + scale * <codes, query>) /
     sqrt(nm2) / |query|`` with the dequantized norm EXPANDED
     (``nm2 = n*min^2 + 2*min*scale*sum(q) + scale^2*sum(q^2)``) so no
@@ -1155,7 +1155,7 @@ def _int8_approx_cosine(qsq, qsum_dot):
     nm2 = (
         n_dim * v_min * v_min
         + F.lit(2.0) * v_min * v_scale * F.col("q_sum")
-        + v_scale * v_scale * qsq
+        + v_scale * v_scale * F.col("qsq")
     )
     return (
         approx_dot
@@ -1359,16 +1359,18 @@ def quantized_rerank_topk(
     int8-scans ONLY those — sublinear at the same re-rank quality."""
     q = _query_side(queries, id_col, vec_col, double=True)
     q_sum, qsq = _code_stats(F.col("qvec"))
-    # sum(codes) once per corpus vector; <codes, query> per (vector,
-    # query) pair inside the fold — no dequantized array materializes
+    # sum(codes) and sum(codes^2) once per corpus vector; <codes, query>
+    # per (vector, query) pair inside the fold — no dequantized array
+    # materializes
     c = quantize_embeddings(corpus, vec_col, id_col, bits=bits).select(
         F.col(id_col).alias("match_id"),
         "qvec",
         "v_min",
         "v_scale",
         q_sum.alias("q_sum"),
+        qsq.alias("qsq"),
     )
-    approx = _int8_approx_cosine(qsq, _vec_sum(F.col("q_vec")))
+    approx = _int8_approx_cosine(_vec_sum(F.col("q_vec")))
     coarse = _non_self(
         c.crossJoin(F.broadcast(q)), approx.alias("approx_cosine")
     )
@@ -1438,7 +1440,7 @@ def _int8_probe(
             "query_id", "q_vec", "q_norm", n_probe,
         ).withColumn("qsum_dot", _vec_sum(F.col("q_vec")))
     )
-    approx = _int8_approx_cosine(F.col("qsq"), F.col("qsum_dot"))
+    approx = _int8_approx_cosine(F.col("qsum_dot"))
     coarse = _non_self(
         codes.join(probes, "cell"), approx.alias("approx_cosine")
     )

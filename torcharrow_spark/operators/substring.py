@@ -1,5 +1,5 @@
-"""Cross-document EXACT substring dedup (r12, VERDICT r11 "what's
-missing" #1) — the suffix-array dedup family of Lee et al. 2022
+"""Cross-document EXACT substring dedup (r12) — the suffix-array dedup
+family of Lee et al. 2022
 ("Deduplicating Training Data Makes Language Models Better",
 ExactSubstr): find every maximal ARBITRARY-LENGTH exact substring that
 a document shares with at least one OTHER document at >= k-token

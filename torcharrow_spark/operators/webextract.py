@@ -396,7 +396,7 @@ def escape_html_text(col: F.Column) -> F.Column:
 
 
 # ---------------------------------------------------------------------------
-# multi-host robots enforcement (r10, VERDICT r9 ask #2)
+# multi-host robots enforcement (r10)
 #
 # `robots_allowed` compiles ONE host's policy into the plan — right for
 # the per-host scope it declares, but a whole-crawl politeness pass

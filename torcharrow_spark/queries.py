@@ -533,7 +533,7 @@ def q14_map_dict(spark: SparkSession, sf_dir: str) -> SDF:
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
-# q148's cap_bound threshold must track the engine's (ADVICE r6: a
+# q148's cap_bound threshold must track the engine's (a
 # hardcoded 2097152 drifted when DEFAULT_EMIT_CHUNK dropped 8192→1024);
 # interpolating chunk*256 from the operator module makes drift impossible.
 from torcharrow_spark.operators.dedup import DEFAULT_EMIT_CHUNK as _EMIT_CHUNK
@@ -874,8 +874,8 @@ def q22_ann_brute_force(spark: SparkSession, sf_dir: str) -> SDF:
     """,
 )
 def q170_ann_quantized_rerank(spark: SparkSession, sf_dir: str) -> SDF:
-    """Two-stage ANN: int8 coarse scan + exact re-rank (r10, VERDICT
-    r9 ask #8 — operators/similarity.quantized_rerank_topk, promoting
+    """Two-stage ANN: int8 coarse scan + exact re-rank (r10 —
+    operators/similarity.quantized_rerank_topk, promoting
     q123's `quantize_embeddings` from a storage stat to a retrieval
     path). The whole corpus is scanned in 8-bit affine codes — at the
     SAME byte budget as float32-probing 25% of IVF cells, the r9
@@ -997,7 +997,7 @@ def q170_ann_quantized_rerank(spark: SparkSession, sf_dir: str) -> SDF:
 )
 def q171_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> SDF:
     """Sublinear high-recall ANN: IVF cell probing x int8 coarse scan
-    x exact re-rank (r11, VERDICT r10 ask #2 —
+    x exact re-rank (r11 —
     operators/similarity.ivf_quantized_topk, the composition of q44's
     probe machinery and q170's quantized-scan machinery). Probing
     n_probe=2 of 8 cells at 8-bit codes reads 6.25% of the full-scan
@@ -1074,7 +1074,7 @@ def q177_ann_index_compacted(spark: SparkSession, sf_dir: str) -> SDF:
     the one-shot computation: `ann_index_compact` folds the first
     delta into a fresh base snapshot under the manifest protocol, and
     the post-compact append must land under a NEW batch id (the
-    manifest-monotonic allocator, ADVICE r11 high — the pre-r12
+    manifest-monotonic allocator — the pre-r12
     allocator reused folded ids and the next fold silently deleted
     the appended vectors). Exercises exactly the storage transitions
     q174's single-epoch lifecycle cannot: merged_batches guards on
@@ -1939,7 +1939,7 @@ def q42_cosine_dedup(spark: SparkSession, sf_dir: str) -> SDF:
     """Embedding-cosine near-duplicate pairs: LSH-bucketed self-join +
     exact cosine filter (operators/similarity.py:cosine_pairs) — the
     embedding analog of minhash dedup; quadratic work confined to each
-    bucket. r8 (VERDICT r7 ask #3): plane sizing is AUTO — ceil(log2(
+    bucket. r8: plane sizing is AUTO — ceil(log2(
     corpus / 128)) planes, the rule the oracle's `np` CTE replays — so
     the bucket structure tracks the corpus across every SF (4 planes at
     sf0.1's 2k vectors, exactly the pre-r8 pin, so the bench anchors
@@ -3755,8 +3755,8 @@ _CROSS_DOC_SPANS_CTE = f"""
     """,
 )
 def q175_cross_doc_spans(spark: SparkSession, sf_dir: str) -> SDF:
-    """Cross-document EXACT substring dedup, detection half (r12,
-    VERDICT r11 "what's missing" #1 — operators/substring.py, the Lee
+    """Cross-document EXACT substring dedup, detection half (r12 —
+    operators/substring.py, the Lee
     et al. 2022 ExactSubstr family): every MAXIMAL arbitrary-length
     substring a document shares verbatim with at least one OTHER
     document at >= 30-token granularity, reconstructed distributed-ly
@@ -6012,6 +6012,48 @@ def _logreg_oracle_sql(iters: int, lr: float) -> str:
     )
 
 
+def _quality_scored(src: SDF) -> SDF:
+    """The learned quality stage of q140, q145 and q166, as
+    `_logreg_ctes` replays it: words-per-doc features of ``src`` (doc_id,
+    lang, n_chars, text), one lineage cut, a 3-step `logreg_train`, then
+    every doc scored. Returns (doc_id, x0, x1, x2, y, score)."""
+    from torcharrow_spark.operators import logreg_score, logreg_train
+    from torcharrow_spark.operators.relevance import _round8
+    from torcharrow_spark.operators.textstats import _words
+
+    nw = F.size(_words(F.col("text"))).cast("double")
+    feat = src.where(nw > 0).select(
+        "doc_id",
+        F.lit(1.0).alias("x0"),
+        _round8(F.log(F.lit(1.0) + nw)).alias("x1"),
+        _round8(F.col("n_chars").cast("double") / nw).alias("x2"),
+        F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
+    )
+    # `feat` feeds three logreg-train iterations plus the score and the
+    # callers' mean/cut branches — each a separate action that would
+    # re-run everything upstream; one lazy lineage cut caps that at one
+    # execution.
+    feat = lineage_cut(feat)
+    w = logreg_train(feat, ["x0", "x1", "x2"], "y", lr=1.0, iters=3)
+    return logreg_score(feat, ["x0", "x1", "x2"], w)
+
+
+def _above_mean(scored: SDF) -> SDF:
+    """doc_ids scored at or above the mean score: the top-k%-by-score
+    cut real pipelines use (an absolute 0.5 keeps nothing when the
+    positive class is a minority). The mean is decimal-exact over the
+    round6 scores, so the cutoff is aggregation-order independent."""
+    mean_score = (
+        F.sum(F.col("score").cast("decimal(18,6)")).cast("double")
+        / F.count(F.lit(1))
+    ).alias("m")
+    return (
+        scored.crossJoin(F.broadcast(scored.agg(mean_score)))
+        .where(F.col("score") >= F.col("m"))
+        .select("doc_id")
+    )
+
+
 @query(
     "q141_decontaminate",
     oracle=f"""
@@ -6337,7 +6379,7 @@ def _synth_jpeg_stats(spark, sf_dir, progressive: bool):
 
 @query("q152_jpeg_decode", oracle=_JPEG_STATS_ORACLE)
 def q152_jpeg_decode(spark: SparkSession, sf_dir: str) -> SDF:
-    """REAL baseline JPEG decode on Spark (r9, VERDICT r8 ask #6 —
+    """REAL baseline JPEG decode on Spark (r9 —
     operators/jpegcodec + multimodal.decode_image_stats(squares=True)):
     a spec-valid JFIF stream is synthesized per document with
     per-block quantized DC ``70 + (doc_id*7 + i*13) % 116 - 128`` and
@@ -7091,13 +7133,9 @@ def q145_modern_curation(spark: SparkSession, sf_dir: str) -> SDF:
     from torcharrow_spark.operators import (
         exact_dedup,
         gopher_filter,
-        logreg_score,
-        logreg_train,
         pack_documents,
         url_dedup_ids,
     )
-    from torcharrow_spark.operators.relevance import _round8
-    from torcharrow_spark.operators.textstats import _words
 
     docs = _load(spark, sf_dir, "documents").to_spark()
     url = _synth_url_expr(400)
@@ -7113,34 +7151,7 @@ def q145_modern_curation(spark: SparkSession, sf_dir: str) -> SDF:
     # while the probe side skips re-executing the url-dedup shuffle that
     # d1 embeds (the g side still runs it exactly once).
     d2 = docs.join(g, "doc_id", "left_semi")
-    nw = F.size(_words(F.col("text"))).cast("double")
-    feat = d2.where(nw > 0).select(
-        "doc_id",
-        F.lit(1.0).alias("x0"),
-        _round8(F.log(F.lit(1.0) + nw)).alias("x1"),
-        _round8(F.col("n_chars").cast("double") / nw).alias("x2"),
-        F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
-    )
-    # r12 lineage cut: `feat` feeds three logreg-train iterations plus
-    # the score/mean/cut branches — each a separate action that would
-    # re-run the gopher gate and its joins; one lazy lineage cut
-    # caps that chain at one execution (same trade as `withmeta`).
-    feat = lineage_cut(feat)
-    w = logreg_train(feat, ["x0", "x1", "x2"], "y", lr=1.0, iters=3)
-    scored = logreg_score(feat, ["x0", "x1", "x2"], w)
-    # relative cutoff — keep the above-mean half (the top-k%-by-score
-    # shape real pipelines use; an absolute 0.5 keeps nothing when the
-    # positive class is a minority). The mean is decimal-exact over the
-    # round6 scores, so the cutoff is aggregation-order independent.
-    mean_score = (
-        F.sum(F.col("score").cast("decimal(18,6)")).cast("double")
-        / F.count(F.lit(1))
-    ).alias("m")
-    k3 = (
-        scored.crossJoin(F.broadcast(scored.agg(mean_score)))
-        .where(F.col("score") >= F.col("m"))
-        .select("doc_id")
-    )
+    k3 = _above_mean(_quality_scored(d2))
     # r13 (guide §5.1 recompute-vs-store): k3 ⊆ feat ⊆ d2 ⊆ docs and every
     # stage only FILTERS rows (doc_id is the documents primary key), so
     # semi-joining docs directly against k3 yields exactly d2 ⋉ k3 — but
@@ -7406,8 +7417,8 @@ def q150_incremental_exact_dedup(spark: SparkSession, sf_dir: str) -> SDF:
     """,
 )
 def q151_incremental_dedup_retired(spark: SparkSession, sf_dir: str) -> SDF:
-    """Incremental near-dedup AFTER index retirement (r8, VERDICT r7
-    ask #6 — the takedown/retention shape): even doc_ids are the
+    """Incremental near-dedup AFTER index retirement (r8 — the
+    takedown/retention shape): even doc_ids are the
     curated corpus, docs with doc_id % 10 == 0 are then RETIRED from
     the standing MinHash index (`operators/dedup.retire_from_index` —
     an anti-join by doc id that drops every band row of the retired
@@ -7539,26 +7550,8 @@ def q140_logreg_quality(spark: SparkSession, sf_dir: str) -> SDF:
     aggregate per step (shuffle volume independent of corpus size);
     scoring is a zero-shuffle broadcast-literal projection. The oracle
     replays the entire training loop in SQL — weights bit-identical."""
-    from torcharrow_spark.operators import logreg_score, logreg_train
-    from torcharrow_spark.operators.relevance import _round8
-    from torcharrow_spark.operators.textstats import _words
-
     docs = _load(spark, sf_dir, "documents").to_spark()
-    nw = F.size(_words(F.col("text"))).cast("double")
-    feat = docs.where(nw > 0).select(
-        "doc_id",
-        F.lit(1.0).alias("x0"),
-        _round8(F.log(F.lit(1.0) + nw)).alias("x1"),
-        _round8(F.col("n_chars").cast("double") / nw).alias("x2"),
-        F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
-    )
-    # r12 lineage cut: `feat` feeds three logreg-train iterations plus
-    # the score/mean/cut branches — each a separate action that would
-    # re-run the gopher gate and its joins; one lazy lineage cut
-    # caps that chain at one execution (same trade as `withmeta`).
-    feat = lineage_cut(feat)
-    w = logreg_train(feat, ["x0", "x1", "x2"], "y", lr=1.0, iters=3)
-    return logreg_score(feat, ["x0", "x1", "x2"], w).select(
+    return _quality_scored(docs).select(
         "doc_id", F.col("y").cast("long").alias("label"), "score"
     )
 
@@ -7837,7 +7830,7 @@ def q164_robots_gate(spark: SparkSession, sf_dir: str) -> SDF:
     """,
 )
 def q167_robots_multihost(spark: SparkSession, sf_dir: str) -> SDF:
-    """Whole-crawl robots enforcement (r10, VERDICT r9 ask #2 —
+    """Whole-crawl robots enforcement (r10 —
     operators/webextract.robots_rules + robots_gate): q164's gate
     compiled ONE policy into the plan; a crawl spans millions of
     hosts. Here every host publishes its OWN robots.txt — synthesized
@@ -8145,7 +8138,7 @@ def _q169_oracle(n_buckets: int = 256) -> str:
 
 @query("q169_language_id_trained", oracle=_q169_oracle())
 def q169_language_id_trained(spark: SparkSession, sf_dir: str) -> SDF:
-    """TRAINED language identification (r10, VERDICT r9 ask #7 —
+    """TRAINED language identification (r10 —
     operators/classifier.language_id_train/score): a real curation
     pipeline's first gate is a trained char-n-gram classifier, not the
     stopword heuristic of `language_id` (q24). The model is
@@ -8258,8 +8251,8 @@ def _q168_oracle() -> str:
 
 
 def _q173_oracle() -> str:
-    """DuckDB replay of the ENTIRE Unigram-LM hard-EM fit (r11,
-    VERDICT r10 ask #4 — the q138 per-iteration-CTE pattern applied to
+    """DuckDB replay of the ENTIRE Unigram-LM hard-EM fit (r11 — the
+    q138 per-iteration-CTE pattern applied to
     Kudo 2018): word counts -> substring seed counts -> add-1-smoothed
     char fallbacks -> top-40-by-(count*len) seed pieces -> integer
     seed costs floor(-ln(cnt/total)*1e6+0.5) -> E-step (canonical
@@ -8408,7 +8401,7 @@ def _q173_oracle() -> str:
 
 @query("q173_unigram_trained", oracle=_q173_oracle())
 def q173_unigram_trained(spark: SparkSession, sf_dir: str) -> SDF:
-    """TRAINED Unigram-LM vocabulary (r11, VERDICT r10 ask #4 —
+    """TRAINED Unigram-LM vocabulary (r11 —
     functions/unigram.unigram_train; Kudo 2018 as hard EM): the fit
     runs on the EVEN half of the corpus — substring-frequency seeding
     (top 40 by count*len over lengths 2-3, plus add-1-smoothed [a-z]
@@ -8466,8 +8459,8 @@ def q173_unigram_trained(spark: SparkSession, sf_dir: str) -> SDF:
 
 @query("q168_unigram_tokenize", oracle=_q168_oracle())
 def q168_unigram_tokenize(spark: SparkSession, sf_dir: str) -> SDF:
-    """Unigram-LM (SentencePiece-style) tokenization (r10, VERDICT r9
-    ask #5 — functions/unigram.py; Kudo 2018): the tokenizer family
+    """Unigram-LM (SentencePiece-style) tokenization (r10 —
+    functions/unigram.py; Kudo 2018): the tokenizer family
     T5/LLaMA-lineage pipelines run where GPT-2 lineage runs BPE (q41).
     Text is normalized to lowercase single-spaced words (q41's exact
     pretokenization), then each word gets its VITERBI-optimal
@@ -8512,7 +8505,7 @@ def q166_warc_frame(spark: SparkSession, sf_dir: str) -> SDF:
     Latin-1-behind-meta / mojibake'd bare UTF-8, URL spanning 20 hosts
     x 5 path classes) + request + a 404; every 11th document
     plagiarizes its predecessor (exact-dup bait).  Split out of the
-    q166 body (r12, VERDICT r11 ask #3) so bench.py can materialize it
+    q166 body (r12) so bench.py can materialize it
     ONCE as a parquet fixture and measure the ENGINE chain instead of
     re-paying the per-run Python synthesis+gzip that was ~97% of the
     r10/r11 headline wall.  The query itself still synthesizes per run
@@ -8631,8 +8624,6 @@ def q166_chain(spark: SparkSession, sf_dir: str, with_warc: SDF) -> SDF:
         filter_domains,
         gopher_filter,
         html_extract,
-        logreg_score,
-        logreg_train,
         near_dup_clusters,
         pack_documents,
         robots_gate,
@@ -8640,8 +8631,6 @@ def q166_chain(spark: SparkSession, sf_dir: str, with_warc: SDF) -> SDF:
         url_host,
         warc_records,
     )
-    from torcharrow_spark.operators.relevance import _round8
-    from torcharrow_spark.operators.textstats import _words
     from torcharrow_spark.operators.textnorm import (
         decode_payloads,
         normalize_text,
@@ -8729,30 +8718,7 @@ def q166_chain(spark: SparkSession, sf_dir: str, with_warc: SDF) -> SDF:
     # runs them exactly once).
     d2 = withmeta.join(keep, "doc_id", "left_semi")
     feat_src = d2.join(docs.select("doc_id", "lang"), "doc_id")
-    nw = F.size(_words(F.col("text"))).cast("double")
-    feat = feat_src.where(nw > 0).select(
-        "doc_id",
-        F.lit(1.0).alias("x0"),
-        _round8(F.log(F.lit(1.0) + nw)).alias("x1"),
-        _round8(F.col("n_chars").cast("double") / nw).alias("x2"),
-        F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
-    )
-    # r12 lineage cut: `feat` feeds three logreg-train iterations plus
-    # the score/mean/cut branches — each a separate action that would
-    # re-run the gopher gate and its joins; one lazy lineage cut
-    # caps that chain at one execution (same trade as `withmeta`).
-    feat = lineage_cut(feat)
-    w = logreg_train(feat, ["x0", "x1", "x2"], "y", lr=1.0, iters=3)
-    scored = logreg_score(feat, ["x0", "x1", "x2"], w)
-    mean_score = (
-        F.sum(F.col("score").cast("decimal(18,6)")).cast("double")
-        / F.count(F.lit(1))
-    ).alias("m")
-    k3 = (
-        scored.crossJoin(F.broadcast(scored.agg(mean_score)))
-        .where(F.col("score") >= F.col("m"))
-        .select("doc_id")
-    )
+    k3 = _above_mean(_quality_scored(feat_src))
     # r13 (guide §5.1, same proof as q145): k3 ⊆ feat ⊆ d2 ⊆ withmeta,
     # every stage below the lineage cut only FILTERS rows (filter_domains
     # ends `.select(*df.columns)`, robots_gate's `allowed` is dropped,
@@ -8800,7 +8766,7 @@ def q166_chain(spark: SparkSession, sf_dir: str, with_warc: SDF) -> SDF:
 
 @query("q166_commoncrawl_capstone", oracle=_q166_oracle())
 def q166_commoncrawl_capstone(spark: SparkSession, sf_dir: str) -> SDF:
-    """The Common Crawl END-TO-END capstone (r10, VERDICT r9 ask #1):
+    """The Common Crawl END-TO-END capstone (r10):
     every r9 web-ingest stage chained from RAW WARC BYTES into the
     curation back end, in one oracle-checked hash. Per document a
     per-record-gzipped WARC is synthesized (`q166_warc_frame`: charset
@@ -9466,7 +9432,7 @@ def q156_gif_decode(spark: SparkSession, sf_dir: str) -> SDF:
     """,
 )
 def q172_gif_animation(spark: SparkSession, sf_dir: str) -> SDF:
-    """Animated-GIF frame decode (r11, VERDICT r10 ask #6 —
+    """Animated-GIF frame decode (r11 —
     operators/imagecodec.decode_gif_frames): a GIF89a ANIMATION is
     synthesized per document — frame 0 fills the ``(16+d%5) x
     (12+d%4)`` canvas with indices ``(d*7 + i*13) % 256``; frames
@@ -9629,18 +9595,18 @@ DRIVER_WINDOW = [
                                 # cumsum was driver-green r2-r8; §2.6
                                 # stays covered by q01/q66/q110)
     "q16_event_windows",        # §2.14 streaming windows + watermark
-    "q155_unicode_clean",       # r11 rotation (VERDICT r10 ask #9):
+    "q155_unicode_clean",       # r11 rotation:
                                 # mojibake repair gets its first
                                 # driver hash (q17_sessionize was
                                 # driver-green r2-r10; §2.14 keeps
                                 # q16 in-window and the 9 stream/batch
                                 # twins stay pytest-pinned)
     "q27_rec_ops",              # §2.13 bucketize/sigrid_hash/z-scale
-    "q169_language_id_trained", # r10 (VERDICT r9 ask #7): trained NB
+    "q169_language_id_trained", # r10: trained NB
                                 # language ID, held-out split (q127's
                                 # bigram-LM row was driver-green
                                 # r2-r9; quality keeps q24/q145/q158)
-    "q145_modern_curation",     # r8 rotation (VERDICT r7 ask #2): the
+    "q145_modern_curation",     # r8 rotation: the
                                 # MODERN-curation capstone — URL dedup
                                 # -> Gopher gate -> LEARNED logreg
                                 # filter -> exact dedup -> packing —
@@ -9648,17 +9614,17 @@ DRIVER_WINDOW = [
                                 # (q31 map(callable) was driver-green
                                 # r2-r7; §2.3 stays covered by q51's
                                 # mapInArrow + q66's reduce rows)
-    "q162_warc_ingest",         # r10 rotation (VERDICT r9 ask #3):
+    "q162_warc_ingest",         # r10 rotation:
                                 # WARC->text end-to-end, never
                                 # driver-hashed (q35_set_ops was
                                 # driver-green r2-r9; §2.5 keeps
                                 # q03/q136, §2.1 sources covered HERE)
-    "q166_commoncrawl_capstone",# r10 (VERDICT r9 ask #1): the WARC->
+    "q166_commoncrawl_capstone",# r10: the WARC->
                                 # pack END-TO-END capstone gets its
                                 # driver row immediately (q128's bare
                                 # gopher gate was driver-green r2-r9;
                                 # gopher runs inside q129/q145/q166)
-    "q160_domain_curation",     # r11 rotation (VERDICT r10 ask #9):
+    "q160_domain_curation",     # r11 rotation:
                                 # the per-label broadcast domain gates
                                 # (q163_charset_ingest was driver-
                                 # green r10; charset decode runs
@@ -9667,19 +9633,18 @@ DRIVER_WINDOW = [
     "q136_rolling_quantiles",   # §2.5 rolling windows (quantile/median/
                                 # std form; q47's sum/mean was driver-
                                 # green r2-r3 and stays pytest+sim-gated)
-    "q167_robots_multihost",    # r10 (VERDICT r9 ask #2): rules-table
+    "q167_robots_multihost",    # r10: rules-table
                                 # robots enforcement across 20 hosts
                                 # (q150 incremental-exact was driver-
                                 # green r8-r9; the index family keeps
                                 # q149/q151 rows in-window)
-    "q161_cdc_incremental",     # r11 rotation (VERDICT r10 ask #9):
+    "q161_cdc_incremental",     # r11 rotation:
                                 # incremental CDC against a standing
                                 # chunk index (q164_robots_gate was
                                 # driver-green r10; q167's rules-table
                                 # gate is its strict superset and
                                 # stays in-window)
-    "q151_incremental_dedup_retired", # r9 rotation (VERDICT r8 ask
-                                # #3): the r8 takedown flagship —
+    "q151_incremental_dedup_retired", # r9 rotation: the r8 takedown flagship —
                                 # retirement re-admission over the r9
                                 # POINTER-RESOLVED index lifecycle
                                 # (publish -> compact(retired) ->
@@ -9687,18 +9652,18 @@ DRIVER_WINDOW = [
                                 # q52_describe was driver-green r2-r8
                                 # (§2.6 stays covered by
                                 # q01/q12/q66/q110)
-    "q153_progressive_jpeg",    # r12 rotation (VERDICT r11 ask #7):
+    "q153_progressive_jpeg",    # r12 rotation:
                                 # rotated out in r11 with only judge
                                 # runs on record; swaps back for
                                 # q152_jpeg_decode (driver-green
                                 # r9-r11 — progressive decode walks a
                                 # superset of the baseline path)
-    "q156_gif_decode",          # r11 rotation (VERDICT r10 ask #9):
+    "q156_gif_decode",          # r11 rotation:
                                 # GIF entropy/palette decode, judge-
                                 # run-only until now (q153_progressive
                                 # _jpeg was driver-green r10; JPEG
                                 # keeps q152 in-window)
-    "q172_gif_animation",       # r11 (VERDICT r10 ask #6): animated
+    "q172_gif_animation",       # r11: animated
                                 # GIF compositing gets its driver row
                                 # on day one (q110_grouped_quantiles
                                 # was driver-green r2-r10; §2.6 keeps
@@ -9711,8 +9676,7 @@ DRIVER_WINDOW = [
                                 # the q54 interop row)
     "q66_head_tail_reduce",     # §2.3 reduce + §2.2 head/tail(order_by)
     # --- LLM-pipeline operator clusters ---
-    "q175_cross_doc_spans",     # r12 rotation (VERDICT r11 ask #7 +
-                                # #4): cross-document exact substring
+    "q175_cross_doc_spans",     # r12 rotation: cross-document exact substring
                                 # dedup, day-one driver row
                                 # (q129_curation_pipeline was driver-
                                 # green r2-r11; exact dedup + packing
@@ -9729,13 +9693,13 @@ DRIVER_WINDOW = [
                                 # green r2-r11) as the LSH-bucket
                                 # family's row
     "q43_jaccard_prefix",       # PPJoin prefix Jaccard (scale path)
-    "q170_ann_quantized_rerank",# r11 rotation (VERDICT r10 ask #9):
+    "q170_ann_quantized_rerank",# r11 rotation:
                                 # the int8-rerank recall breakthrough
                                 # gets its driver row (q133's multi-
                                 # table LSH was driver-green r6-r10;
                                 # the ANN cluster keeps q42's LSH
                                 # buckets in-window)
-    "q171_ann_ivf_int8",        # r11 (VERDICT r10 ask #2): the
+    "q171_ann_ivf_int8",        # r11: the
                                 # IVF x int8 sublinear composition,
                                 # day-one driver row (q123_quantize_
                                 # embeddings was driver-green r2-r10;
@@ -9754,7 +9718,7 @@ DRIVER_WINDOW = [
                                 # (q67's bare kmeans was driver-green
                                 # r2-r4; q138's oracle re-proves the
                                 # same per-dim decimal arithmetic)
-    "q159_g711_audio",          # r11 rotation (VERDICT r10 ask #9):
+    "q159_g711_audio",          # r11 rotation:
                                 # G.711 mu/A-law decode, judge-run-
                                 # only until now (q132_curate_pack_
                                 # twin was driver-green r9-r10;
@@ -9767,14 +9731,14 @@ DRIVER_WINDOW = [
                                 # family (q76 chunk_documents was
                                 # driver-green r3-r8; text analysis
                                 # keeps q24/q127/q128/q139 rows)
-    "q146_skew_report",         # r9 rotation (VERDICT r8 ask #3): the
+    "q146_skew_report",         # r9 rotation: the
                                 # partition-skew diagnostic — never
                                 # driver-hashed (q79_dedup_lines was
                                 # driver-green r2-r8; the span/line
                                 # dedup family keeps
                                 # q86_strip_duplicate_spans in-window
                                 # and exact dedup runs inside q129)
-    "q168_unigram_tokenize",    # r10 (VERDICT r9 ask #5): Unigram-LM
+    "q168_unigram_tokenize",    # r10: Unigram-LM
                                 # Viterbi tokenizer, token-exact
                                 # (q148's election audit was driver-
                                 # green r6-r9; MinHash keeps
@@ -9785,13 +9749,13 @@ DRIVER_WINDOW = [
                                 # first driver-hash row (q82 funnel was
                                 # driver-green r2-r6; the event family
                                 # keeps q16/q17/q98 rows in-window)
-    "q173_unigram_trained",     # r11 (VERDICT r10 ask #4): the
+    "q173_unigram_trained",     # r11: the
                                 # SentencePiece EM fit, day-one driver
                                 # row (q135_semantic_dedup was driver-
                                 # green r2-r10; q138's kmeans+semantic
                                 # dedup composition is its in-window
                                 # superset)
-    "q174_ann_standing_index",  # r12 (VERDICT r11 ask #7): the
+    "q174_ann_standing_index",  # r12: the
                                 # standing quantized ANN index has
                                 # NEVER been driver-hashed (judge-
                                 # verified only in r11); replaces

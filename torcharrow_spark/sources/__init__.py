@@ -802,7 +802,7 @@ def read_warc(
     types: _ty.Optional[_ty.Sequence[str]] = ("response",),
 ) -> DataFrame:
     """Read ``.warc`` / ``.warc.gz`` files from disk — the Common
-    Crawl front door as a SOURCE (r11, VERDICT r10 ask #5; until now
+    Crawl front door as a SOURCE (r11; until now
     WARC ingest took a binary COLUMN). Spark's distributed
     ``binaryFile`` source yields one task per WARC file — exactly the
     unit Common Crawl ships (~1 GB files, tens of thousands per
@@ -853,7 +853,7 @@ def write_warc(
     complete, so a speculative duplicate or post-failure retry can
     never interleave bytes into a published part (r11 review).
 
-    Directory-rewrite crash safety (r12, ADVICE r11 low): the new
+    Directory-rewrite crash safety (r12): the new
     generation lands in a hidden ``.gen-*`` staging subdir while the
     Spark job runs — the previous generation's ``part-*.warc.gz``
     stay untouched and fully readable until the ENTIRE job has

@@ -1167,7 +1167,7 @@ def _claim_index_root(
     spark: SparkSession, index_path: str, checkpoint_path: str
 ) -> None:
     """Bind an incremental-dedup index root to ONE streaming checkpoint
-    (r8, ADVICE r7 medium): the delta replay guard
+    (r8): the delta replay guard
     (``batch_id < current``) is only correct while batch ids are
     monotone over the root's lifetime — i.e. under the SAME checkpoint.
     A fresh/recreated checkpoint restarts at batch 0, so the guard
@@ -1338,7 +1338,7 @@ def incremental_dedup_stream(
     `dedup_against_index(batch, base_index)` (paired pytest), which is
     what makes the twin oracle-checkable through its batch side.
 
-    CONTRACT (r8, ADVICE r7): one long-lived checkpoint per index
+    CONTRACT (r8): one long-lived checkpoint per index
     root. The replay guard keys deltas on the streaming batch id,
     which is only monotone within a single checkpoint — so batch 0
     CLAIMS the root with an owner marker, and a later run that points

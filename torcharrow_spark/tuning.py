@@ -1,12 +1,13 @@
-"""The 100-TB operator surface: every conf and threshold this engine
-owns, in one place (r8, VERDICT r7 ask #8).
+"""The 100-TB operator surface: every threshold this engine owns and
+the Spark confs it relies on, in one place.
 
-r7 added a session conf (``spark.torcharrow.spreadNarrowSource``) and
-earlier rounds buried election, salting, auto-sizing and AQE-pinning
-thresholds in module constants; an operator running this engine on a
-real cluster had to read source to find the knobs. This module is the
-ops page: each entry names the knob, where it lives, its default, the
-measured trade behind the default, and the kill switch / override.
+Election, salting, auto-sizing and AQE-pinning thresholds live in
+module constants, so an operator running this engine on a real cluster
+would otherwise have to read source to find the knobs. This module is
+the ops page: each entry names the knob, where it lives, its default,
+the measured trade behind the default, and the override. The engine
+owns no session conf of its own: narrow-source spreading and the
+lineage-cut storage mode decide from the plan and the context.
 ``REGISTRY`` is data (used by the docs test, printable by
 ``describe()``); the defaults are imported from their owning modules,
 so this page can never drift from the code.
@@ -21,9 +22,9 @@ Guidance that applies across every entry:
   strict run-to-run comparability for forgetting-proofness; pin an
   explicit value where reproducibility across differently-sized
   corpora matters (oracle queries do).
-* Every kill switch exists because the behavior it gates was measured
-  to LOSE somewhere (noted per entry) — turning one off is a
-  legitimate per-workload call, not an emergency hatch.
+* An override exists because the behavior it changes was measured to
+  LOSE somewhere (noted per entry) — using one is a legitimate
+  per-workload call, not an emergency hatch.
 """
 
 from __future__ import annotations
@@ -44,70 +45,8 @@ from .operators import webextract as _webextract
 #:   default    — the live default (imported, not transcribed)
 #:   effect     — what it changes in the plan
 #:   trade      — the measurement behind the default
-#:   override   — how to change / kill it
+#:   override   — how to change it
 REGISTRY: list[dict] = [
-    {
-        "name": "narrow-source spreading",
-        "kind": "session-conf",
-        "location": "spark.torcharrow.spreadNarrowSource",
-        "default": "true",
-        "effect": (
-            "Before scan-fused heavy per-row compute (shingling, "
-            "hashing, decode), a still-scan-shaped file source whose "
-            "planned splits use <= half the cluster's parallelism is "
-            "widened by ONE round-robin exchange "
-            "(operators.preprocess.spread_narrow_source)."
-        ),
-        "trade": (
-            "sf0.1 single-row-group tables: minhash -33%, text stats "
-            "-37%, span-strip -41% wall for one exchange of the "
-            "source's bytes; measured-REVERTED where payload bytes "
-            "dominate compute (audio/video metadata walks: 1.75x "
-            "worse spread). No-op at any healthy multi-row-group "
-            "layout, so 100-TB plans carry zero of these bytes. "
-            "Broadcast-join-shaped inputs are intentionally left "
-            "unspread (probing their splits would fire the broadcast "
-            "job at planning time)."
-        ),
-        "override": (
-            "spark.conf.set('spark.torcharrow.spreadNarrowSource', "
-            "'false') — plan-pin tests do this to pin the organic "
-            "zero-exchange shapes."
-        ),
-    },
-    {
-        "name": "reliable lineage cuts",
-        "kind": "session-conf",
-        "location": "spark.torcharrow.reliableLineageCuts",
-        "default": "auto",
-        "effect": (
-            "Every lineage-truncation site in the engine (iterative "
-            "connected components, multi-consumer Python-stage "
-            "outputs in CDC stats / unigram fit / the curation "
-            "chains) routes through operators.preprocess.lineage_cut. "
-            "'auto' uses reliable checkpoint() when the session has a "
-            "checkpoint directory configured "
-            "(sparkContext.setCheckpointDir / spark.checkpoint.dir) "
-            "and localCheckpoint() otherwise."
-        ),
-        "trade": (
-            "localCheckpoint blocks are executor-local and "
-            "non-replicated with truncated lineage: on a real cluster "
-            "an executor loss (preemption, dynamic deallocation) "
-            "aborts the job unrecoverably — an availability bug at "
-            "the 100 TB design point. Reliable checkpoint() writes "
-            "the cut frame through the checkpoint store once "
-            "(pay-per-cut I/O) and survives executor loss. In local "
-            "mode the single 'executor' dying kills the app anyway, "
-            "so localCheckpoint is the right default there."
-        ),
-        "override": (
-            "'false' keeps localCheckpoint even when a checkpoint dir "
-            "is set (for sessions that configure a dir for unrelated "
-            "reasons); 'true' asserts the dir is configured instead "
-            "of silently degrading."
-        ),
-    },
     {
         "name": "pair-emission chunk / salting onset",
         "kind": "module-constant",
@@ -179,7 +118,7 @@ REGISTRY: list[dict] = [
             "while a dim-64 cosine bucket elects at ~120k members "
             "(~32 MB peak) instead of 2^18 (~70 MB) and a dim-1024 "
             "one at ~8k — the executor-peak bound the member count "
-            "alone could not give (VERDICT r7 ask #5)."
+            "alone could not give."
         ),
         "override": (
             "Per call: _emit_pairs(member_bytes=, elect_threshold=); "
@@ -201,7 +140,8 @@ REGISTRY: list[dict] = [
         "trade": (
             "128 reproduces every manually-measured pin across three "
             "decades (4 planes at 2k vectors, 8 at 20k, 11 at 200k, "
-            "14 at 2M — SCALE_SF100.md) and keeps the per-bucket "
+            "14 at 2M on the retired sf100 tier) and keeps the "
+            "per-bucket "
             "quadratic step executor-cheap; each extra plane splits "
             "some true near pairs (recall/cost trade inherent to "
             "single-table hyperplane LSH)."
@@ -322,8 +262,8 @@ REGISTRY: list[dict] = [
         ),
         "default": _preprocess.AMPLIFIED_SORT_ROWS_BUDGET,
         "effect": (
-            "r9 (VERDICT r8 ask #1): DEFAULT ENGINE BEHAVIOR, no "
-            "longer a hand-set conf. The shingle-explode operators "
+            "r9: DEFAULT ENGINE BEHAVIOR, no longer a hand-set conf. "
+            "The shingle-explode operators "
             "call preprocess.cap_amplified_scan at their scan "
             "boundary: a bare parquet scan whose effective split "
             "bytes would push the fused explode past this many "
@@ -347,9 +287,12 @@ REGISTRY: list[dict] = [
             "(one 35-task stage coalesced to 64 MB targets whose "
             "array payloads run ~6-8x in memory) — ZERO disk spill "
             "at sf40 with default confs, identical rows, +1.3% "
-            "shuffle bytes of partition framing. Only binds when "
-            "total_bytes/parallelism exceeds the cap, so bench-SF "
-            "plans and their byte anchors never change."
+            "shuffle bytes of partition framing. On a 4-core "
+            "local[4] session a 36 MB one-file corpus (1 MiB row "
+            "groups) spilled 1.46 GB in q21's auto jaccard without "
+            "the cap and nothing with it, at equal rows. Only binds "
+            "when total_bytes/parallelism exceeds the cap, so "
+            "bench-SF plans and their byte anchors never change."
         ),
         "override": (
             "A session maxPartitionBytes set STRICTER than the cap is "
