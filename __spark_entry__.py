@@ -2,8 +2,8 @@
 
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``oracle_sql()[name]`` via DuckDB: a query passes when its row count,
+schema and order-insensitive value hash all match the oracle's.
 
 All query implementations live in ``torcharrow_spark.queries`` — one
 entry per operator family from SURVEY §2 plus the LLM-pipeline operators;

@@ -7,6 +7,7 @@ import torcharrow_spark as ts
 from torcharrow_spark.interop_torch import (
     Dense,
     PackedList,
+    PackedMap,
     PadSequence,
     WithPresence,
     batched_tensors,
@@ -49,6 +50,110 @@ def test_round_trip_and_batches(spark):
     batches = list(batched_tensors(d, batch_size=2))
     assert len(batches) == 2
     assert sum(len(np.asarray(b["x"])) for b in batches) == 4
+
+
+def _rows(v):
+    """Per-row Python values of one converted column, so that exports
+    whose list offsets start at a slice's offset compare equal."""
+    if isinstance(v, WithPresence):
+        return [x if p else None for x, p in zip(_rows(v.values), np.asarray(v.presence))]
+    if isinstance(v, PackedList):
+        flat, off = _rows(v.values), np.asarray(v.offsets)
+        return [flat[a:b] for a, b in zip(off[:-1], off[1:])]
+    if isinstance(v, PackedMap):
+        pairs, off = list(zip(_rows(v.keys), _rows(v.values))), np.asarray(v.offsets)
+        return [pairs[a:b] for a, b in zip(off[:-1], off[1:])]
+    if isinstance(v, dict):
+        return [dict(zip(v, row)) for row in zip(*(_rows(f) for f in v.values()))]
+    return list(v)
+
+
+def _all_types(spark, n, parts):
+    return spark.range(0, n, 1, parts).selectExpr(
+        "id",
+        "IF(id % 5 = 0, NULL, id * 0.5) AS dbl",
+        "IF(id % 7 = 0, NULL, concat('s', id)) AS str",
+        "sequence(0, id % 4) AS lst",
+        "map(concat('k', id % 3), id % 11) AS mp",
+        "named_struct('a', id % 13, 'b', id * 2.0) AS st",
+        "timestamp_seconds(id * 3600) AS ts",
+        "CAST(id / 8 AS decimal(12, 3)) AS dec",
+        "id % 2 = 0 AS flag",
+        "date_add(DATE'2020-01-01', CAST(id % 400 AS int)) AS day",
+        "CAST(concat('b', id % 17) AS binary) AS bin",
+    )
+
+
+def test_batched_tensors_equal_to_tensor(spark):
+    """The streamed export yields the rows `to_tensor` converts, in the
+    same order, for every column type it converts, in exact batch_size
+    batches across partition boundaries."""
+    n = 2500
+    sdf = _all_types(spark, n, 7)
+    whole = to_tensor(sdf)
+    batches = list(batched_tensors(sdf, batch_size=1000))
+    assert [len(np.asarray(b["id"])) for b in batches] == [1000, 1000, 500]
+    for name, col in whole.items():
+        assert [r for b in batches for r in _rows(b[name])] == _rows(col), name
+
+
+def test_batched_tensors_empty_frame(spark):
+    sdf = _all_types(spark, 100, 3).where("id < 0")
+    assert list(batched_tensors(sdf, batch_size=10)) == []
+
+
+def test_batched_tensors_failing_udf_raises(spark):
+    """A failing task raises from the iteration, whether it fails while
+    the export's shuffle stages run or while its batches are served, and
+    the next export on the session still works."""
+    import concurrent.futures as cf
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    @F.udf("long")
+    def boom(x):
+        if x == 77:
+            raise ValueError("boom77")
+        return x
+
+    base = spark.range(0, 200, 1, 3).select(boom("id").alias("b"))
+    with cf.ThreadPoolExecutor(1) as pool:
+        for sdf in (base, base.groupBy("b").count()):
+            run = pool.submit(lambda: list(batched_tensors(sdf, batch_size=64)))
+            with pytest.raises(Exception, match="boom77"):
+                run.result(timeout=300)
+    ok = list(batched_tensors(spark.range(0, 10, 1, 2), batch_size=4))
+    assert [len(np.asarray(b["id"])) for b in ok] == [4, 4, 2]
+
+
+def test_batched_tensors_is_one_sql_execution(spark):
+    """The export is one SQL execution named after it that runs all of
+    its jobs, so its plan's Python nodes carry their metrics."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest():
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+    before = newest()
+    sdf = spark.range(0, 3000, 1, 3).select(plus_one("id").alias("x"))
+    assert sum(len(np.asarray(b["x"])) for b in batched_tensors(sdf, 1024)) == 3000
+    new = (store.execution(i) for i in range(before + 1, newest() + 1))
+    ours = [e.get() for e in new
+            if e.isDefined() and e.get().description() == "batched_tensors"]
+    assert len(ours) == 1
+    ex = ours[0]
+    assert ex.jobs().size() >= 1
+    assert ex.errorMessage().isEmpty()
+    assert "ArrowEvalPython" in ex.physicalPlanDescription()
 
 
 def test_asof_join_small(spark):

@@ -93,6 +93,14 @@ def test_memo_keys_on_file_and_directory_identity(tmp_path):
     M.memo("d", build, paths=(str(d),))
     assert len(calls) == 3
 
+    build, calls = _counting()
+    M.memo("g", build, paths=(f"{d}/part-*",))
+    M.memo("g", build, paths=(f"{d}/part-*",))
+    assert len(calls) == 1
+    (d / "part-2").write_bytes(b"w")  # a new match
+    M.memo("g", build, paths=(f"{d}/part-*",))
+    assert len(calls) == 2
+
     # a path the driver cannot stat is keyed by the path alone
     build, calls = _counting()
     for p in ("hdfs://nn/t.parquet", str(tmp_path / "missing")):
@@ -120,6 +128,49 @@ def _larger_multi_row_group(path):
     return ["doc_id"], n
 
 
+def _count_parquet_reads(monkeypatch):
+    """Paths handed to Spark's Parquet reader from now on."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **options):
+        reads.extend(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    return reads
+
+
+def test_read_parquet_resolves_a_scan_once_per_file_identity(
+    spark, tmp_path, monkeypatch
+):
+    """``read_parquet`` (and ``read_parquet_ns``, under its own key)
+    returns the same scan handle for an unchanged file, with no second
+    schema read, and re-reads a file overwritten with a new schema."""
+    import torcharrow_spark as ts
+    from torcharrow_spark.sources import read_parquet_ns
+
+    reads = _count_parquet_reads(monkeypatch)
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"doc_id": [1, 2, 3], "ts": [1, 2, 3]}), path)
+    first = ts.read_parquet(path, spark).to_spark()
+    assert ts.read_parquet(path, spark).to_spark() is first
+    assert ts.read_parquet(path, spark, columns=["doc_id"]).columns == ["doc_id"]
+    assert len(reads) == 1
+    ns = read_parquet_ns(path, spark).to_spark()
+    assert read_parquet_ns(path, spark).to_spark() is ns
+    assert ns is not first and len(reads) == 2
+
+    columns, rows = _schema_change(path)
+    got = ts.read_parquet(path, spark).to_spark()
+    assert got.columns == columns
+    assert sorted(map(tuple, got.collect())) == rows
+    assert read_parquet_ns(path, spark).to_spark().columns == columns
+    assert len(reads) == 4
+
+
 @pytest.mark.parametrize("overwrite", [_schema_change, _larger_multi_row_group])
 def test_load_serves_an_overwritten_table_fresh(
     spark, tmp_path, monkeypatch, overwrite
@@ -127,17 +178,9 @@ def test_load_serves_an_overwritten_table_fresh(
     """A table overwritten mid-session is re-resolved, never served from
     the old handle. An unchanged file is served from one handle with no
     second read."""
-    import torcharrow_spark as ts
     from torcharrow_spark import queries as Q
 
-    reads = []
-    real_read = ts.read_parquet
-
-    def counting_read(*a, **k):
-        reads.append(a[0])
-        return real_read(*a, **k)
-
-    monkeypatch.setattr(ts, "read_parquet", counting_read)
+    reads = _count_parquet_reads(monkeypatch)
     sf_dir, path = str(tmp_path), str(tmp_path / "t.parquet")
     pq.write_table(
         pa.table({"doc_id": [1, 2, 3], "text": ["a", "b", "c"]}), path

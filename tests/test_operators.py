@@ -4690,8 +4690,8 @@ def test_connected_components_materializes_edges_once(spark):
 def test_unigram_train_scans_corpus_once(spark):
     """r12 optimization pin: unigram_train's word-type table is cut
     from its lineage, so the corpus text is read once per fit — the
-    seed's two collects and the E-step re-read the cached types, not
-    the corpus."""
+    seed's collect and the E-step re-read the cached types, not the
+    corpus."""
     from pyspark.sql import functions as F
 
     from torcharrow_spark.functions.unigram import unigram_train

@@ -1,8 +1,10 @@
 """Simulate the driver's correctness-gate canonicalization as closely as
 possible: run each declared query on Spark and its oracle SQL on DuckDB,
 convert both results to pandas, sort columns by name, sort rows by all
-columns, and md5-hash the CSV rendering.  A hash match here is a strong
-predictor of a `hash_match: true` row in CORRECTNESS_r{N}.json.
+columns, and md5-hash the CSV rendering.  A hash match here predicts
+that the driver's correctness check of the same query at the same scale
+passes: same row count, same schema and the same order-insensitive
+value hash as DuckDB's answer.
 
 Usage: python tools/driver_sim.py [sf_dir] [query_name ...]
 """

@@ -355,9 +355,9 @@ def unigram_train(
         .groupBy("w")
         .agg(F.count("*").alias("wc"))
     )
-    # r12 (guide §5): the word-TYPE table feeds the seed's two collects
+    # r12 (guide §5): the word-TYPE table feeds the seed's collect
     # and every EM iteration's E-step — each its own action, so the
-    # corpus scan + explode + groupBy re-ran 3+ times per fit. One lazy
+    # corpus scan + explode + groupBy re-ran once per action. One lazy
     # lineage cut makes them read executor-local blocks; the table
     # is vocabulary-bounded (word types, not instances), so the stored
     # blocks stay small at any corpus scale. Measured at sf0.1: fit
@@ -376,15 +376,21 @@ def unigram_train(
         .groupBy("p")
         .agg(F.sum("wc").alias("cnt"))
     )
-    char_rows = subcnt.where(F.length("p") == 1).collect()
-    multi_rows = (
-        subcnt.where(F.length("p") >= 2)
-        .orderBy((F.col("cnt") * F.length("p")).desc(), F.col("p").asc())
-        .limit(int(n_seed))
+    # one collect for both seeds: normalization leaves only [a-z], so
+    # the at most 26 single chars sort first and the multis follow in
+    # seed order; the driver splits the rows
+    seed_rows = (
+        subcnt.orderBy(
+            (F.length("p") >= 2).asc(),
+            (F.col("cnt") * F.length("p")).desc(),
+            F.col("p").asc(),
+        )
+        .limit(len(_AZ) + int(n_seed))
         .collect()
     )
-    obs_char = {r["p"]: int(r["cnt"]) for r in char_rows}
+    obs_char = {r["p"]: int(r["cnt"]) for r in seed_rows if len(r["p"]) == 1}
     chars = {c: obs_char.get(c, 0) + 1 for c in _AZ}
+    multi_rows = [r for r in seed_rows if len(r["p"]) >= 2][: int(n_seed)]
     multis = {r["p"]: int(r["cnt"]) for r in multi_rows}
 
     def _costs(

@@ -4,14 +4,16 @@ and immutable Column trees, never rows.
 A result is reused under the caller's pure key, plus the session's
 ``applicationId`` when a session is given, plus the identity of every
 input path: a file's ``(st_size, st_mtime_ns, st_ino)``, a directory's
-sorted listing of the same. A path the driver cannot stat (a non-``file:``
-URI) is keyed by the path alone. A table overwritten mid-session therefore
+sorted listing of the same, a local glob (``*``, ``?``, ``[...]``) the
+same over its current matches. A path the driver cannot stat (a
+non-``file:`` URI) is keyed by the path alone. A table overwritten mid-session therefore
 gets a new entry and is never served from the old one. One LRU bound drops
 the least recently used entry.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import threading
 from collections import OrderedDict
@@ -34,7 +36,10 @@ def _identity(path: str):
         st = os.stat(local)
         return (path, st.st_size, st.st_mtime_ns, st.st_ino)
     except OSError:
-        return path
+        pass
+    # a glob's matches change without any one path changing
+    matches = sorted(glob.glob(local)) if any(c in local for c in "*?[") else ()
+    return (path, tuple(_identity(m) for m in matches)) if matches else path
 
 
 def memo(key, build, *, session=None, paths=()):

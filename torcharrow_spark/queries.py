@@ -39,23 +39,14 @@ def query(name: str, oracle: str | None = None):
 
 def _load(spark: SparkSession, sf_dir: str, table: str):
     """Load a testdata table through the engine (tuned session, ns-aware).
-    The lazy scan handle is resolved once per session and file identity
-    (see ``torcharrow_spark.memo``)."""
+    The readers memoise the lazy scan handle per session and file
+    identity (see ``torcharrow_spark.memo``)."""
     import torcharrow_spark as ts
-    from torcharrow_spark.frame import DataFrame as TAFrame
-    from torcharrow_spark.memo import memo
     from torcharrow_spark.sources import read_parquet_ns
 
     ts.tune(spark)
-    path = f"{sf_dir}/{table}.parquet"
     read = read_parquet_ns if table == "events" else ts.read_parquet
-    sdf = memo(
-        ("scan", path),
-        lambda: read(path, spark).to_spark(),
-        session=spark,
-        paths=(path,),
-    )
-    return TAFrame(sdf)
+    return read(f"{sf_dir}/{table}.parquet", spark)
 
 
 # exact decimal sum of a 2-decimal double column, returned as double

@@ -40,7 +40,14 @@ def _spark(spark: SparkSession | None) -> SparkSession:
 
 
 def read_parquet(path: str, spark: SparkSession | None = None, columns: _ty.List[str] | None = None) -> DataFrame:
-    sdf = _spark(spark).read.parquet(path)
+    """Lazy Parquet scan. The scan handle (and the schema inference job
+    behind it) is resolved once per session and file identity, so an
+    unchanged file is not re-read and an overwritten one is (see
+    ``torcharrow_spark.memo``)."""
+    from ..memo import memo
+
+    s = _spark(spark)
+    sdf = memo(("scan", path), lambda: s.read.parquet(path), session=s, paths=(path,))
     if columns:
         sdf = sdf.select(*columns)  # column pruning reaches the scan
     return DataFrame(sdf)
@@ -51,28 +58,36 @@ def read_parquet_ns(path: str, spark: SparkSession | None = None,
     """Parquet with nanosecond timestamps (Spark's reader rejects
     TIMESTAMP(NANOS) by default): read nanos as long, convert to
     microsecond TIMESTAMP_NTZ — truncation matches what external engines
-    (DuckDB, pandas) do when downcasting ns->us."""
-    s = _spark(spark)
-    prev = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        sdf = s.read.parquet(path)
-        # schema is resolved eagerly at read time, so the conf can be restored
-        sdf.schema
-    finally:
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+    (DuckDB, pandas) do when downcasting ns->us. Memoised like
+    ``read_parquet``, under its own key."""
+    from ..memo import memo
 
-    fields = {f.name: f.dataType for f in sdf.schema.fields}
-    for c in ts_cols or ["ts"]:
-        # Only long columns need the nanos->micros conversion; files written
-        # with plain us/ms timestamps already arrive as TIMESTAMP(_NTZ).
-        if isinstance(fields.get(c), T.LongType):
-            sdf = sdf.withColumn(
-                c, F.expr(f"cast(timestamp_micros(`{c}` div 1000) as timestamp_ntz)")
-            )
-    return DataFrame(sdf)
+    s = _spark(spark)
+    cols = tuple(ts_cols or ["ts"])
+
+    def read():
+        prev = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        try:
+            sdf = s.read.parquet(path)
+            # schema is resolved eagerly at read time, so the conf can be restored
+            sdf.schema
+        finally:
+            s.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
+        fields = {f.name: f.dataType for f in sdf.schema.fields}
+        for c in cols:
+            # Only long columns need the nanos->micros conversion; files written
+            # with plain us/ms timestamps already arrive as TIMESTAMP(_NTZ).
+            if isinstance(fields.get(c), T.LongType):
+                sdf = sdf.withColumn(
+                    c, F.expr(f"cast(timestamp_micros(`{c}` div 1000) as timestamp_ntz)")
+                )
+        return sdf
+
+    return DataFrame(memo(("scan_ns", path, cols), read, session=s, paths=(path,)))
 
 
 def read_csv(path: str, spark: SparkSession | None = None, schema=None, header: bool = True) -> DataFrame:
