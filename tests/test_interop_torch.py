@@ -105,11 +105,29 @@ def test_batched_tensors_empty_frame(spark):
 def test_batched_tensors_failing_udf_raises(spark):
     """A failing task raises from the iteration, whether it fails while
     the export's shuffle stages run or while its batches are served, and
-    the next export on the session still works."""
-    import concurrent.futures as cf
+    the next export on the session still works. A hung export fails the
+    test after 300 s: it runs in a daemon thread, which nothing joins."""
+    import threading
 
     import pytest
     from pyspark.sql import functions as F
+
+    def within(seconds, fn):
+        out = {}
+
+        def run():
+            try:
+                out["value"] = fn()
+            except BaseException as e:  # re-raised on the test's thread
+                out["error"] = e
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(seconds)
+        assert not t.is_alive(), f"export still running after {seconds} s"
+        if "error" in out:
+            raise out["error"]
+        return out["value"]
 
     @F.udf("long")
     def boom(x):
@@ -118,11 +136,9 @@ def test_batched_tensors_failing_udf_raises(spark):
         return x
 
     base = spark.range(0, 200, 1, 3).select(boom("id").alias("b"))
-    with cf.ThreadPoolExecutor(1) as pool:
-        for sdf in (base, base.groupBy("b").count()):
-            run = pool.submit(lambda: list(batched_tensors(sdf, batch_size=64)))
-            with pytest.raises(Exception, match="boom77"):
-                run.result(timeout=300)
+    for sdf in (base, base.groupBy("b").count()):
+        with pytest.raises(Exception, match="boom77"):
+            within(300, lambda: list(batched_tensors(sdf, batch_size=64)))
     ok = list(batched_tensors(spark.range(0, 10, 1, 2), batch_size=4))
     assert [len(np.asarray(b["id"])) for b in ok] == [4, 4, 2]
 

@@ -93,14 +93,6 @@ def test_memo_keys_on_file_and_directory_identity(tmp_path):
     M.memo("d", build, paths=(str(d),))
     assert len(calls) == 3
 
-    build, calls = _counting()
-    M.memo("g", build, paths=(f"{d}/part-*",))
-    M.memo("g", build, paths=(f"{d}/part-*",))
-    assert len(calls) == 1
-    (d / "part-2").write_bytes(b"w")  # a new match
-    M.memo("g", build, paths=(f"{d}/part-*",))
-    assert len(calls) == 2
-
     # a path the driver cannot stat is keyed by the path alone
     build, calls = _counting()
     for p in ("hdfs://nn/t.parquet", str(tmp_path / "missing")):
@@ -169,6 +161,36 @@ def test_read_parquet_resolves_a_scan_once_per_file_identity(
     assert sorted(map(tuple, got.collect())) == rows
     assert read_parquet_ns(path, spark).to_spark().columns == columns
     assert len(reads) == 4
+
+
+def test_read_parquet_reads_what_it_cannot_stat_afresh(spark, tmp_path, monkeypatch):
+    """A path the driver cannot stat (here a brace glob; a remote URI
+    alike) is read afresh on every call, so a matching file overwritten
+    with more rows is seen. A change to a conf that shapes the inferred
+    schema, or another session, gets its own scan of an unchanged file."""
+    import torcharrow_spark as ts
+
+    reads = _count_parquet_reads(monkeypatch)
+    pq.write_table(pa.table({"k": [1, 2]}), str(tmp_path / "a.parquet"))
+    pq.write_table(pa.table({"k": [3]}), str(tmp_path / "b.parquet"))
+    braces = f"{tmp_path}/{{a,b}}.parquet"
+    assert ts.read_parquet(braces, spark).to_spark().count() == 3
+    pq.write_table(pa.table({"k": [1, 2, 4, 5]}), str(tmp_path / "a.parquet"))
+    assert ts.read_parquet(braces, spark).to_spark().count() == 5
+    assert len(reads) == 2
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    assert ts.read_parquet(path, spark).to_spark().dtypes == [("b", "binary")]
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert ts.read_parquet(path, spark).to_spark().dtypes == [("b", "string")]
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert ts.read_parquet(path, spark).to_spark().dtypes == [("b", "binary")]
+    other = spark.newSession()
+    assert ts.read_parquet(path, other).to_spark().sparkSession is other
+    assert len(reads) == 5
 
 
 @pytest.mark.parametrize("overwrite", [_schema_change, _larger_multi_row_group])

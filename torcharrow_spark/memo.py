@@ -4,16 +4,15 @@ and immutable Column trees, never rows.
 A result is reused under the caller's pure key, plus the session's
 ``applicationId`` when a session is given, plus the identity of every
 input path: a file's ``(st_size, st_mtime_ns, st_ino)``, a directory's
-sorted listing of the same, a local glob (``*``, ``?``, ``[...]``) the
-same over its current matches. A path the driver cannot stat (a
-non-``file:`` URI) is keyed by the path alone. A table overwritten mid-session therefore
-gets a new entry and is never served from the old one. One LRU bound drops
-the least recently used entry.
+sorted listing of the same. A path the driver cannot stat (a non-``file:``
+URI, a glob) is keyed by the path alone; ``can_stat`` tells a caller which
+paths it can stat. A table overwritten mid-session therefore gets a new
+entry and is never served from the old one. One LRU bound drops the least
+recently used entry.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 import threading
 from collections import OrderedDict
@@ -24,11 +23,23 @@ _STORE: OrderedDict = OrderedDict()
 _LOCK = threading.Lock()
 
 
-def _identity(path: str):
+def _local(path: str) -> str | None:
     parts = urlsplit(path)
     if parts.scheme not in ("", "file"):
+        return None
+    return unquote(parts.path) if parts.scheme else path
+
+
+def can_stat(path: str) -> bool:
+    """Whether ``path`` is a local file or directory, keyed by its identity."""
+    local = _local(path)
+    return local is not None and os.path.exists(local)
+
+
+def _identity(path: str):
+    local = _local(path)
+    if local is None:
         return path
-    local = unquote(parts.path) if parts.scheme else path
     try:
         if os.path.isdir(local):
             return (path, tuple(_identity(os.path.join(local, n))
@@ -36,10 +47,7 @@ def _identity(path: str):
         st = os.stat(local)
         return (path, st.st_size, st.st_mtime_ns, st.st_ino)
     except OSError:
-        pass
-    # a glob's matches change without any one path changing
-    matches = sorted(glob.glob(local)) if any(c in local for c in "*?[") else ()
-    return (path, tuple(_identity(m) for m in matches)) if matches else path
+        return path
 
 
 def memo(key, build, *, session=None, paths=()):

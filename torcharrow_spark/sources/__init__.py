@@ -39,15 +39,35 @@ def _spark(spark: SparkSession | None) -> SparkSession:
     return s if s is not None else get_session()
 
 
-def read_parquet(path: str, spark: SparkSession | None = None, columns: _ty.List[str] | None = None) -> DataFrame:
-    """Lazy Parquet scan. The scan handle (and the schema inference job
-    behind it) is resolved once per session and file identity, so an
-    unchanged file is not re-read and an overwritten one is (see
-    ``torcharrow_spark.memo``)."""
-    from ..memo import memo
+# session confs that change the schema a Parquet scan resolves
+_SCAN_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
 
+
+def _scan(s: SparkSession, key, path: str, read):
+    """``read()``'s lazy scan. For a local file or directory it is resolved
+    once per session object, ``_SCAN_CONFS`` values and file identity (see
+    ``torcharrow_spark.memo``). Any other path (a remote URI, a glob) is
+    read afresh, since its file listing can change with nothing the driver
+    can stat."""
+    from ..memo import can_stat, memo
+
+    if not can_stat(path):
+        return read()
+    confs = tuple(s.conf.get(k) for k in _SCAN_CONFS)
+    return memo((key, path, s, confs), read, session=s, paths=(path,))
+
+
+def read_parquet(path: str, spark: SparkSession | None = None, columns: _ty.List[str] | None = None) -> DataFrame:
+    """Lazy Parquet scan. For a local file or directory the scan handle
+    (and the schema inference job behind it) is reused while the files
+    are unchanged; an overwritten one is read again (see ``_scan``)."""
     s = _spark(spark)
-    sdf = memo(("scan", path), lambda: s.read.parquet(path), session=s, paths=(path,))
+    sdf = _scan(s, "scan", path, lambda: s.read.parquet(path))
     if columns:
         sdf = sdf.select(*columns)  # column pruning reaches the scan
     return DataFrame(sdf)
@@ -60,8 +80,6 @@ def read_parquet_ns(path: str, spark: SparkSession | None = None,
     microsecond TIMESTAMP_NTZ — truncation matches what external engines
     (DuckDB, pandas) do when downcasting ns->us. Memoised like
     ``read_parquet``, under its own key."""
-    from ..memo import memo
-
     s = _spark(spark)
     cols = tuple(ts_cols or ["ts"])
 
@@ -87,7 +105,7 @@ def read_parquet_ns(path: str, spark: SparkSession | None = None,
                 )
         return sdf
 
-    return DataFrame(memo(("scan_ns", path, cols), read, session=s, paths=(path,)))
+    return DataFrame(_scan(s, ("scan_ns", cols), path, read))
 
 
 def read_csv(path: str, spark: SparkSession | None = None, schema=None, header: bool = True) -> DataFrame:
