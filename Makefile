@@ -17,7 +17,7 @@ test-full:
 	SPARK_GRAFT_FULL_TESTS=1 $(PY) -m pytest tests/ -x -q
 
 oracle:
-	$(PY) tools/oracle_check.py $(SF001)
+	$(PY) tools/driver_sim.py $(SF001)
 
 # hash-level driver simulation at the driver's SF (sf0.01), all queries
 driver-sim:

@@ -1,25 +1,40 @@
 """Plan-pin gate: run the headline queries at $SPARK_GRAFT_SF_DIR (default:
 the sf0.1 test data) and check each plan's output rows, shuffle bytes,
-spill and exchange count against pins that hold at any core count;
-print ONE JSON line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {...}, "sf": ...} and write the full payload to
-bench_full.json (gitignored). At the pin scale it then runs the sf1
-stress pins (a 10x corpus built once from sf0.1) and the WARC ingest pin.
+spill and exchange count against pins that hold at any core count. At the
+pin scale it then runs the sf1 stress pins (a 10x corpus built once from
+sf0.1) and the WARC ingest pin.
+
+Usage: python bench.py [query ...]
+  With no argument it runs the headline queries and both tiers. Named
+  queries (any QUERIES name) are measured alone, on the same session and
+  method; their pins are checked where they are pinned and the run is at
+  the pin scale, and the stress and WARC tiers are skipped.
 
 The pins are the gate. Shuffle bytes, rows and exchanges are a property
 of (plan, data, partitioning), and `gate_session` fixes the partitioning
-from one constant, PLAN_WIDTH, whatever the host's core count. Walls are
+from one constant, PLAN_WIDTH, whatever the host's core count. Shuffle
+and spill bytes are read from Spark's status store through perfbench's
+StatusProbe, over the jobs of one steady run's build and sink, so jobs
+a build runs eagerly (model fits, lineage cuts) count too. Walls are
 reported, never gated: each query is executed against the NOOP sink
 (`df.write.format("noop")` forces every output column; a count() sink
 lets Catalyst prune projection-only queries to a row count) once cold
-and once steady, and both walls go into the JSON. Wall statistics
-(seeded closed-loop runs, medians, per-layer splits) come from
-`perfbench/` (BENCHMARK.json), not from here.
+and once steady. Wall statistics (seeded closed-loop runs, medians,
+per-layer splits) come from `perfbench/` (BENCHMARK.json), not from here.
+
+Output: progress lines on stderr; the last stdout line is the payload as
+one JSON object: {"metric", "value": steady total sec, "unit", "cold_total",
+"queries": {name: row}, "stress_sf1": {name: row}, "warc_file_ingest": row,
+"sf", "cpus", "plan_width"}. A row holds sec, cold_sec, rows,
+shuffle_bytes, spill_bytes, exchanges, build_jobs (jobs the steady run's
+build ran; reported, not pinned) and, when a pin moved, "regression":
+{field: pinned value}.
+
+Exit status: 1 when any headline, stress or WARC row broke a pin, else 0.
 
 Options (environment variables):
   SPARK_GRAFT_SF_DIR        test data directory (default: the sf0.1 data);
   SPARK_GRAFT_NO_STRESS=1   skips the sf1 stress and WARC ingest pins;
-  SPARK_GRAFT_BENCH_STRICT=1  exits 1 on any pin violation;
   SPARK_DRIVER_MEMORY       driver heap of the gate session (default: the
                             smaller of 16g and half of physical memory).
 gate_session sets SPARK_GRAFT_CPUS to PLAN_WIDTH in this process.
@@ -31,6 +46,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -234,72 +250,44 @@ def _sink(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-class StageMetrics:
-    """Per-query shuffle/spill bytes from the live AppStatusStore (the
-    same numbers the Spark UI's stage table shows). Reads stages by id
-    watermark (sum over stageId > snapshot), so eviction of OLD stages
-    from the store between snapshots cannot skew a diff."""
-
-    def __init__(self, spark):
-        self._store = spark.sparkContext._jsc.sc().statusStore()
-        self._empty = spark.sparkContext._jvm.java.util.ArrayList()
-        self._defaults = [
-            getattr(self._store, f"stageList$default${i}")() for i in range(2, 6)
-        ]
-
-    def _stages(self):
-        lst = self._store.stageList(self._empty, *self._defaults)
-        it = lst.iterator()
-        while it.hasNext():
-            yield it.next()
-
-    def snapshot(self) -> int:
-        """Watermark: the max stage id seen so far (-1 if none)."""
-        mx = -1
-        for s in self._stages():
-            mx = max(mx, s.stageId())
-        return mx
-
-    def since(self, watermark: int) -> dict:
-        """Shuffle write/read + spill bytes over stages newer than the
-        watermark."""
-        w = r = sp = dsp = 0
-        for s in self._stages():
-            if s.stageId() > watermark:
-                w += s.shuffleWriteBytes()
-                r += s.shuffleReadBytes()
-                sp += s.memoryBytesSpilled() + s.diskBytesSpilled()
-                dsp += s.diskBytesSpilled()
-        return {"shuffle_write": int(w), "shuffle_read": int(r),
-                "spill": int(sp), "disk_spill": int(dsp)}
-
-
-def measure(build, metrics: StageMetrics, best_of: int = 1) -> dict:
+def measure(build, probe, best_of: int = 1) -> dict:
     """One cold run and `best_of` steady runs (walls, reported only: the
     cold one and the best steady one), then the pinned quantities:
-    shuffle and spill bytes of the first steady run, output rows, and
-    the built plan's Exchange count."""
+    shuffle and spill bytes of the first steady run's jobs, build and
+    sink, read through `probe` (a perfbench StatusProbe), output rows,
+    and the built plan's Exchange count. `build_jobs` counts the jobs
+    that first steady build ran."""
+    from pyspark import SparkContext
+
     from torcharrow_spark.plans import plan_stats
 
-    t0 = time.perf_counter()
-    _sink(build())
-    cold = round(time.perf_counter() - t0, 3)
-    sec, b = float("inf"), None
-    for _ in range(best_of):
-        wm = metrics.snapshot()
+    sc = SparkContext.getOrCreate()
+    tag = f"bench:{uuid.uuid4().hex}"
+
+    def run(i) -> float:
         t0 = time.perf_counter()
-        _sink(build())
-        sec = min(sec, round(time.perf_counter() - t0, 3))
-        if b is None:
-            b = metrics.since(wm)
+        sc.setJobGroup(f"{tag}/{i}/build", f"{tag} build")
+        df = build()
+        sc.setJobGroup(f"{tag}/{i}/sink", f"{tag} sink")
+        _sink(df)
+        return round(time.perf_counter() - t0, 3)
+
+    cold = run("cold")
+    sec = min(run(i) for i in range(best_of))
+    sc.setJobGroup(f"{tag}/plan", f"{tag} plan")
     df = build()
+    rows = df.count()
+    probe.settle()
+    build_jobs = probe.jobs(f"{tag}/0/build")
+    stats = probe.job_stats(build_jobs + probe.jobs(f"{tag}/0/sink"))
     return {
         "sec": sec,
         "cold_sec": cold,
-        "rows": df.count(),
-        "shuffle_bytes": b["shuffle_write"],
-        "spill_bytes": b["spill"],
+        "rows": rows,
+        "shuffle_bytes": int(stats["shuffle_write_bytes"]),
+        "spill_bytes": int(stats["spill_bytes"]),
         "exchanges": plan_stats(df)["exchanges"],
+        "build_jobs": len(build_jobs),
     }
 
 
@@ -318,6 +306,17 @@ def pin_violations(got: dict, pin: tuple) -> dict:
     if got["spill_bytes"]:
         bad["spill_bytes"] = 0
     return bad
+
+
+def _check(label: str, m: dict, pin: tuple | None) -> dict:
+    """Report row `m` on stderr; with a pin, put its violations under
+    "regression"."""
+    bad = pin_violations(m, pin) if pin else {}
+    if bad:
+        m["regression"] = bad
+    print(f"# {label}: {m}" + (f" PIN REGRESSION vs {pin}" if bad else ""),
+          file=sys.stderr)
+    return m
 
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -448,31 +447,16 @@ STRESS_PINS: dict[str, tuple[int, int, int | None]] = {
 }
 
 
-def run_stress_tier(spark, metrics: StageMetrics, lower: dict) -> dict:
-    """Measure the pinned stress cases on the sf1 corpus. Each row
-    reports best-of-3 steady seconds, its ratio to the same case at sf0.1
-    (`lower`, sec by name; ~10 = linear), and the pins; a moved pin puts
-    its violations under "regression"."""
+def run_stress_tier(spark, probe) -> dict:
+    """Measure the pinned stress cases on the sf1 corpus: best-of-3
+    steady seconds and the pins."""
     best_of = 3
     cases = _stress_cases(spark)
     out: dict[str, dict] = {}
     for name, pin in STRESS_PINS.items():
-        m = measure(cases[name], metrics, best_of)
+        m = measure(cases[name], probe, best_of)
         m["best_of"] = best_of
-        b = lower.get(name)
-        m["vs_lower_tier_ratio"] = round(m["sec"] / b, 2) if b else None
-        bad = pin_violations(m, pin)
-        if bad:
-            m["regression"] = bad
-            print(f"# STRESS sf1 REGRESSION {name}: {m} vs pin {pin}",
-                  file=sys.stderr)
-        out[name] = m
-        print(
-            f"# stress sf1 {name}: {m['sec']:.3f}s best-of-{best_of} "
-            f"({m['rows']} rows, shuffle {m['shuffle_bytes']}B, "
-            f"{m['exchanges']} exchanges)",
-            file=sys.stderr,
-        )
+        out[name] = _check(f"stress sf1 {name}", m, pin)
     return out
 
 
@@ -623,7 +607,7 @@ HEADLINE_OVERRIDES = {
 }
 
 
-def run_warc_file_ingest(spark, sf_dir: str, metrics: StageMetrics) -> dict:
+def run_warc_file_ingest(spark, sf_dir: str, probe) -> dict:
     """Parse-path-only WARC tier: read the materialized .warc.gz fixture
     from disk (one task per file), explode records, decode charsets,
     extract text. Best-of-2 steady seconds and the pins."""
@@ -649,152 +633,70 @@ def run_warc_file_ingest(spark, sf_dir: str, metrics: StageMetrics) -> dict:
             passthrough=("encoding", "target_uri"),
         )
 
-    out = measure(build, metrics, best_of=2)
-    bad = pin_violations(out, WARC_INGEST_PIN)
-    if bad:
-        out["regression"] = bad
-    print(f"# warc_file_ingest: {out}", file=sys.stderr)
-    return out
+    m = measure(build, probe, best_of=2)
+    return _check("warc_file_ingest", m, WARC_INGEST_PIN)
 
 
-def compact_line(payload: dict, full_name: str | None) -> str:
-    """The ONE-line stdout summary the driver records: required fields
-    (metric/value/unit/queries/sf) + one-number rollups of everything
-    else, with the detail living in bench_full.json. The driver keeps only
-    the LAST 2000 chars of stdout and json-parses the final line, so the
-    line is kept <= 1900 chars by dropping the optional byte_regressions
-    list, then compressing `queries` (never the required five)."""
-    stress = payload.get("stress_sf1") or {}
-    compact = {
-        "metric": payload["metric"],
-        "value": payload["value"],
-        "unit": payload["unit"],
-        "queries": {k: round(v, 2) for k, v in payload["queries"].items()},
-        "sf": payload["sf"],
-        "spill_bytes_total": sum(payload.get("spill_bytes", {}).values()),
-        "byte_regressions": sorted(payload.get("byte_regressions", {})),
-        "stress_sf1_sec": round(
-            sum(v.get("sec", 0) for v in stress.values()), 1
-        ),
-        "stress_spill_bytes": sum(
-            v.get("spill_bytes", 0) for v in stress.values()
-        ),
-        "stress_regressions": stress_regressions(payload),
-        "cpus": payload.get("cpus"),
-        "plan_width": payload.get("plan_width"),
-        "full": full_name,
-    }
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:
-        compact.pop("byte_regressions")
-        line = json.dumps(compact, separators=(",", ":"))
-    # `queries` is driver-required — never dropped; if the line still
-    # overflows, compress it (1-decimal, then slowest-N) instead
-    if len(line) > 1900:
-        compact["queries"] = {
-            k: round(v, 1) for k, v in compact["queries"].items()
-        }
-        line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > 1900 and len(compact["queries"]) > 5:
-        keep = sorted(
-            compact["queries"].items(), key=lambda kv: -kv[1]
-        )[: max(5, len(compact["queries"]) - 8)]
-        compact["queries"] = dict(sorted(keep))
-        line = json.dumps(compact, separators=(",", ":"))
-    return line
+def exit_status(payload: dict) -> int:
+    """1 when any headline, stress or WARC row broke a pin, else 0."""
+    rows = [*payload["queries"].values(),
+            *payload.get("stress_sf1", {}).values()]
+    if "warc_file_ingest" in payload:
+        rows.append(payload["warc_file_ingest"])
+    return int(any(m.get("regression") for m in rows))
 
 
-def stress_regressions(payload: dict) -> list:
-    """Names of every stress-tier row whose pins moved."""
-    out = [k for k, v in (payload.get("stress_sf1") or {}).items()
-           if v.get("regression")]
-    if (payload.get("warc_file_ingest") or {}).get("regression"):
-        out.append("warc_file_ingest")
-    return sorted(out)
-
-
-def main() -> None:
+def main(names: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = gate_session("bench")
+    from perfbench.probes import StatusProbe
     from torcharrow_spark.queries import QUERIES
 
-    metrics = StageMetrics(spark)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"bench.py: unknown queries {unknown}")
+    probe = StatusProbe(spark)
     # warm the JVM + parquet footers once so timings measure the queries
     _sink(QUERIES["q01_pricing_summary"](spark, sf_dir))
-    # materialize fixture-backed front doors OUTSIDE any timed region
-    _build_q166_fixture(spark, sf_dir)
+    run = names or HEADLINE
+    if "q166_commoncrawl_capstone" in run:
+        # materialize the fixture-backed front door OUTSIDE any timed region
+        _build_q166_fixture(spark, sf_dir)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
+    pinned = sf_val == PIN_SF
 
     results: dict[str, dict] = {}
-    byte_regressions: dict[str, dict] = {}
-    for name in HEADLINE:
+    for name in run:
         qfn = HEADLINE_OVERRIDES.get(name, QUERIES[name])
-        m = results[name] = measure(lambda: qfn(spark, sf_dir), metrics)
-        print(
-            f"# {name}: cold {m['cold_sec']:.3f}s / steady {m['sec']:.3f}s "
-            f"({m['rows']} rows, shuffle {m['shuffle_bytes']}B, "
-            f"{m['exchanges']} exchanges)",
-            file=sys.stderr,
-        )
-        bad = pin_violations(m, HEADLINE_PINS[name]) if sf_val == PIN_SF else {}
-        if bad:
-            byte_regressions[name] = {
-                k: {"got": m[k], "pin": v} for k, v in bad.items()
-            }
-            print(f"# PIN REGRESSION {name}: {byte_regressions[name]}",
-                  file=sys.stderr)
+        m = measure(lambda: qfn(spark, sf_dir), probe)
+        pin = HEADLINE_PINS.get(name) if pinned else None
+        results[name] = _check(name, m, pin)
 
     tiers: dict = {}
-    if sf_val == PIN_SF and not os.environ.get("SPARK_GRAFT_NO_STRESS"):
+    if not names and pinned and not os.environ.get("SPARK_GRAFT_NO_STRESS"):
         _build_stress_sf1(spark, sf_dir)
-        lower = {
-            "q21_ngram_jaccard_auto": results["q21_ngram_jaccard"]["sec"],
-            "q86_strip_spans": results["q86_strip_duplicate_spans"]["sec"],
-            **{n: results[n]["sec"] for n in STRESS_PINS if n in results},
-        }
-        tiers["stress_sf1"] = run_stress_tier(spark, metrics, lower)
-        tiers["warc_file_ingest"] = run_warc_file_ingest(spark, sf_dir, metrics)
+        tiers["stress_sf1"] = run_stress_tier(spark, probe)
+        tiers["warc_file_ingest"] = run_warc_file_ingest(spark, sf_dir, probe)
 
-    warm = {n: m["sec"] for n, m in results.items()}
-    cold = {n: m["cold_sec"] for n, m in results.items()}
     payload = {
         "metric": "headline_queries_total_steady_state",
-        "value": round(sum(warm.values()), 3),
+        "value": round(sum(m["sec"] for m in results.values()), 3),
         "unit": "sec",
-        "queries": warm,
-        "cold_queries": cold,
-        "cold_total": round(sum(cold.values()), 3),
-        "rows": {n: m["rows"] for n, m in results.items()},
-        "shuffle_bytes": {n: m["shuffle_bytes"] for n, m in results.items()},
-        "spill_bytes": {n: m["spill_bytes"] for n, m in results.items()},
-        "exchanges": {n: m["exchanges"] for n, m in results.items()},
-        "byte_regressions": byte_regressions,
+        "cold_total": round(sum(m["cold_sec"] for m in results.values()), 3),
+        "queries": results,
         **tiers,
         "sf": sf_val,
         "cpus": len(os.sched_getaffinity(0)),
         "plan_width": PLAN_WIDTH,
     }
-    # Only the LAST 2000 chars of stdout are kept by the recorder, so the
-    # FULL payload goes to a repo file and stdout gets the compact line.
-    full_name = "bench_full.json"  # gitignored
-    try:
-        with open(os.path.join(REPO, full_name), "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=True)
-    except OSError as e:  # read-only checkout: stderr note, no full copy
-        print(f"# {full_name} write skipped: {e}", file=sys.stderr)
-        full_name = None
-
-    print(compact_line(payload, full_name))
-    if (byte_regressions or stress_regressions(payload)) and os.environ.get(
-        "SPARK_GRAFT_BENCH_STRICT"
-    ):
-        sys.exit(1)
+    print(json.dumps(payload, sort_keys=True))
+    return exit_status(payload)
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

@@ -1,6 +1,6 @@
-"""bench.py's plan-pin gate: the compact stdout line and the documented
-environment knobs (pure), and the pins' independence from the master width
-(two Spark subprocesses)."""
+"""bench.py's plan-pin gate: its exit decision and the documented
+environment knobs (pure), a named single-query run, and the pins'
+independence from the master width (Spark subprocesses)."""
 
 import json
 import os
@@ -10,51 +10,25 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_compact_line_fits_driver_tail_window():
-    """Bench output is recorded as the LAST 2000 chars of stdout, whose
-    last line is json-parsed. The compact line must always fit and
-    always keep the five required fields."""
-    from bench import compact_line
+def test_exit_status_fails_on_any_broken_pin():
+    """bench.py exits nonzero when a headline, stress or WARC row carries
+    a pin violation, and zero when none does."""
+    from bench import exit_status
 
-    payload = {
-        "metric": "headline_queries_total_steady_state",
-        "value": 71.5,
-        "unit": "sec",
-        "queries": {f"q{i:03d}_some_longish_query_name": i * 1.234
-                    for i in range(46)},
-        "sf": 0.1,
-        "spill_bytes": {f"q{i:03d}": 0 for i in range(46)},
-        "byte_regressions": {},
-        "stress_sf1": {"q18": {"sec": 4.0, "spill_bytes": 0},
-                       "q19": {"sec": 10.0, "spill_bytes": 7,
-                               "regression": {"spill_bytes": 0}}},
-        "warc_file_ingest": {"sec": 1.0, "rows": 5000},
-        "cpus": 4,
-        "plan_width": 32,
-    }
-    line = compact_line(payload, "bench_full.json")
-    assert len(line) <= 1900
-    d = json.loads(line)
-    for k in ("metric", "value", "unit", "queries", "sf"):
-        assert k in d
-    assert d["stress_regressions"] == ["q19"]
-    assert d["stress_spill_bytes"] == 7
-    assert d["stress_sf1_sec"] == 14.0
-    assert d["plan_width"] == 32
-    assert d["full"] == "bench_full.json"
-    for gone in ("machine_factor", "probe_factors",
-                 "regressions_drift_adjusted", "wall_watch",
-                 "stress_sf10_sec"):
-        assert gone not in d
+    ok = {"sec": 1.0, "rows": 6, "shuffle_bytes": 756, "spill_bytes": 0,
+          "exchanges": 2, "build_jobs": 0}
+    bad = dict(ok, regression={"exchanges": 2})
 
-    # adversarial: a huge byte_regressions dict is dropped before the
-    # required fields ever are
-    payload["byte_regressions"] = {f"q{i}_padpadpadpadpad": {}
-                                   for i in range(200)}
-    line = compact_line(payload, None)
-    assert len(line) <= 1900
-    d = json.loads(line)
-    assert "queries" in d and "metric" in d
+    def payload(q=ok, stress=ok, warc=ok):
+        return {"queries": {"q01": q}, "stress_sf1": {"q19": stress},
+                "warc_file_ingest": warc}
+
+    assert exit_status(payload()) == 0
+    assert exit_status({"queries": {"q01": ok}}) == 0
+    assert exit_status({"queries": {"q01": bad}}) == 1
+    assert exit_status(payload(q=bad)) == 1
+    assert exit_status(payload(stress=bad)) == 1
+    assert exit_status(payload(warc=bad)) == 1
 
 
 def test_every_environment_knob_is_documented():
@@ -86,12 +60,13 @@ _PIN_PROBE = """
 import json
 import bench
 spark = bench.gate_session("pin-probe", master_width={width})
+from perfbench.probes import StatusProbe
 from torcharrow_spark.queries import QUERIES
 q, sf = QUERIES["q86_strip_duplicate_spans"], {sf!r}
-metrics = bench.StageMetrics(spark)
+probe = StatusProbe(spark)
 print(json.dumps({{
-    "pins": bench.measure(lambda: q(spark, sf), metrics),
-    "wide": bench.measure(lambda: q(spark, sf).repartition(64), metrics),
+    "pins": bench.measure(lambda: q(spark, sf), probe),
+    "wide": bench.measure(lambda: q(spark, sf).repartition(64), probe),
 }}))
 """
 
@@ -133,3 +108,24 @@ def test_pins_hold_across_master_widths(sf_dir):
         pin = (p["rows"], p["shuffle_bytes"], p["exchanges"])
         assert pin_violations(got[w]["pins"], pin) == {}
         assert "exchanges" in pin_violations(got[w]["wide"], pin)
+
+
+def test_named_run_measures_only_that_query(sf_dir):
+    """`bench.py <query>` measures the named query alone, checks no pin
+    off the pin scale and skips the stress and WARC tiers; it exits 0 and
+    its last stdout line is the payload."""
+    p = subprocess.run(
+        [sys.executable, "bench.py", "q01_pricing_summary"],
+        capture_output=True, cwd=REPO, text=True, timeout=600,
+        env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
+                 SPARK_DRIVER_MEMORY="1g"),
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    payload = json.loads(p.stdout.strip().splitlines()[-1])
+    assert list(payload["queries"]) == ["q01_pricing_summary"]
+    assert "stress_sf1" not in payload and "warc_file_ingest" not in payload
+    row = payload["queries"]["q01_pricing_summary"]
+    assert row["rows"] > 0 and row["shuffle_bytes"] > 0
+    assert row["spill_bytes"] == 0 and row["exchanges"] == 2
+    assert row["build_jobs"] == 0 and "regression" not in row
+    assert payload["value"] == row["sec"]

@@ -1,7 +1,7 @@
 """End-to-end correctness gate: every declared query vs its DuckDB oracle
-at sf0.001 (the driver runs the same comparison at sf0.01 —
-tools/oracle_check.py; reference model: Criteo integration test with an
-external numpy oracle, SURVEY §5.5)."""
+at sf0.001 (the driver runs the same comparison at sf0.01, which
+tools/driver_sim.py reproduces; reference model: Criteo integration test
+with an external numpy oracle, SURVEY §5.5)."""
 
 import os
 import sys

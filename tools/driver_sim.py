@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.oracle_check import TABLES, duck_connect  # noqa: E402
+from tools.oracle_check import duck_connect  # noqa: E402
 
 
 def _canon(pdf, round_floats: bool = False):

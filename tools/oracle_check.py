@@ -1,18 +1,9 @@
-"""Local stand-in for the driver's correctness gate: run every declared
-query on Spark AND its oracle SQL on DuckDB over the same parquet tables,
-compare row-count, schema (column names), and an order-insensitive
-value comparison (exact, with float-diff diagnostics on mismatch).
-
-Usage: python tools/oracle_check.py [sf_dir] [query_name ...]
+"""The DuckDB side of the oracle check: every source table as a view over
+one scale's parquet files. tools/driver_sim.py runs each query's oracle
+SQL on this connection and compares it with Spark's answer.
 """
 
 from __future__ import annotations
-
-import math
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region",
@@ -37,76 +28,3 @@ def duck_connect(sf_dir: str):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
-
-
-def _canon(v):
-    if v is None:
-        return "∅"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return repr(v)
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{k}:{_canon(x)}" for k, x in sorted(v.items())) + "}"
-    return str(v)
-
-
-def _rows_canonical(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(_canon(r[i]) for i in order) for r in rows)
-
-
-def compare(name: str, spark, con, sf_dir: str, verbose: bool = True) -> bool:
-    from torcharrow_spark.queries import ORACLES, QUERIES
-
-    sdf = QUERIES[name](spark, sf_dir)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    if name not in ORACLES:
-        print(f"{name}: rows-only check, {len(s_rows)} rows (no oracle)")
-        return True
-    res = con.execute(ORACLES[name])
-    d_cols = [d[0] for d in res.description]
-    d_rows = res.fetchall()
-
-    ok = True
-    if sorted(s_cols) != sorted(d_cols):
-        print(f"{name}: SCHEMA MISMATCH spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        ok = False
-    if len(s_rows) != len(d_rows):
-        print(f"{name}: ROWCOUNT MISMATCH spark={len(s_rows)} duck={len(d_rows)}")
-        ok = False
-    if ok:
-        sc = _rows_canonical(s_cols, s_rows)
-        dc = _rows_canonical(d_cols, d_rows)
-        if sc != dc:
-            ok = False
-            diffs = [(a, b) for a, b in zip(sc, dc) if a != b]
-            print(f"{name}: VALUE MISMATCH ({len(diffs)} differing rows)")
-            for a, b in diffs[:3]:
-                print(f"   spark: {a}\n   duck : {b}")
-    if ok and verbose:
-        print(f"{name}: OK ({len(s_rows)} rows)")
-    return ok
-
-
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    names = sys.argv[2:]
-    import torcharrow_spark as ts
-    from torcharrow_spark.queries import QUERIES
-
-    spark = ts.get_session()
-    con = duck_connect(sf_dir)
-    names = names or list(QUERIES)
-    failed = [n for n in names if not compare(n, spark, con, sf_dir)]
-    print(f"\n{len(names) - len(failed)}/{len(names)} queries match")
-    if failed:
-        print("FAILED:", ", ".join(failed))
-        sys.exit(1)
-
-
-if __name__ == "__main__":
-    main()

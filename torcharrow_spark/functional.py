@@ -43,12 +43,6 @@ __all__ = [
 ]
 
 
-def _unwrap(c) -> SC:
-    if isinstance(c, Column):
-        return c._resolve(None if c._owner is None else c._owner)[0]
-    return c
-
-
 def _owner(*cols):
     for c in cols:
         if isinstance(c, Column) and c._owner is not None:

@@ -62,10 +62,3 @@ def shuffle_payloads(sdf: SDF) -> _ty.List[_ty.Dict[str, _ty.Any]]:
         cols = [c.strip().split("#")[0] for c in m.group(1).split(",")]
         out.append({"columns": cols, "partitioning": m.group(2)})
     return out
-
-
-def assert_pushdown(sdf: SDF, column: str) -> bool:
-    """True iff a filter on `column` reached the parquet scan."""
-    text = formatted_plan(sdf)
-    m = re.search(r"PushedFilters: \[([^\]]*)\]", text)
-    return bool(m and column in m.group(1))
